@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import FILE_NAME, PARTITION_PATH, RECORD_KEY
+from .frames import local_frame
 
 K_HASHES = 5
 
@@ -164,8 +165,8 @@ def _probe(spark: SparkSession, keys: DataFrame, batch: list,
            is_global: bool) -> set:
     """One bounded broadcast-join probe round; returns surviving
     (partition, file_id) pairs (file_id only in global mode)."""
-    cand_df = F.broadcast(spark.createDataFrame(
-        [(pp, fid, m, hx) for pp, fid, m, hx, _sl in batch],
+    cand_df = F.broadcast(local_frame(
+        spark, [(pp, fid, m, hx) for pp, fid, m, hx, _sl in batch],
         f"{PARTITION_PATH} string, __fid string, __m long, __hex string"))
     joined = keys.crossJoin(cand_df.drop(PARTITION_PATH)) if is_global \
         else keys.join(cand_df, PARTITION_PATH)

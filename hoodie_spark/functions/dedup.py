@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from .text import char_ngrams, tokens
 
 __all__ = [
@@ -189,9 +190,10 @@ def bounded_self_pairs(keyed: DataFrame, key_cols: list[str], id_col: str,
         schema = T.StructType(
             [keyed.schema[c] for c in key_cols]
             + [T.StructField("__s", T.IntegerType())])
-        splits = spark.createDataFrame(
-            [tuple(r[c] for c in key_cols)
-             + (int(math.ceil(r["__n"] / max_group_rows)),) for r in hot],
+        splits = local_frame(
+            spark, [tuple(r[c] for c in key_cols)
+                    + (int(math.ceil(r["__n"] / max_group_rows)),)
+                    for r in hot],
             schema)
         keyed = (
             keyed.join(F.broadcast(splits), key_cols, "left")

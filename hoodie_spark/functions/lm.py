@@ -50,6 +50,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 __all__ = ["BigramLM", "train_bigram_lm", "bigram_perplexity",
            "excess_perplexity_select", "perplexity_buckets"]
 
@@ -163,10 +165,8 @@ def _pairs(df: DataFrame, id_col: str | None, text_col: str,
         .select(*([id_col] if id_col else []),
                 F.col("__p.w1").alias("__r1"),
                 F.col("__p.w2").alias("__r2"))
-    v1 = F.broadcast(spark.createDataFrame([(v,) for v in vocab],
-                                           "__v1 string"))
-    v2 = F.broadcast(spark.createDataFrame([(v,) for v in vocab],
-                                           "__v2 string"))
+    v1 = F.broadcast(local_frame(spark, [(v,) for v in vocab], "__v1 string"))
+    v2 = F.broadcast(local_frame(spark, [(v,) for v in vocab], "__v2 string"))
     return (ex.join(v1, ex["__r1"] == v1["__v1"], "left")
             .join(v2, ex["__r2"] == v2["__v2"], "left")
             .select(*([id_col] if id_col else []),
@@ -236,7 +236,7 @@ def train_bigram_lm(corpus: DataFrame, text_col: str,
     if n_pairs <= broadcast_model_rows:
         rows = cen.collect()
         cen.unpersist()
-        local = spark.createDataFrame(rows, cen.schema)
+        local = local_frame(spark, rows, cen.schema)
         # lp/unseen evaluated by Spark expressions over the LocalRelation
         # (ConvertToLocalRelation folds them) — same engine arithmetic as
         # the distributed path, so values are bit-identical to computing
@@ -246,8 +246,8 @@ def train_bigram_lm(corpus: DataFrame, text_col: str,
         # an Aggregate re-planned per scoring pass.
         pair_lp = local.select("w1", "w2", lp_col)
         ctx_rows = sorted({(r["w1"], r["cw"]) for r in rows})
-        ctx_lp = spark.createDataFrame(
-            ctx_rows, "w1 string, cw bigint").select("w1", unseen_col)
+        ctx_lp = local_frame(
+            spark, ctx_rows, "w1 string, cw bigint").select("w1", unseen_col)
         return BigramLM(vocab=vocab, pair_lp=pair_lp, ctx_lp=ctx_lp,
                         oov_lp=oov, broadcast=True)
     return BigramLM(vocab=vocab, pair_lp=cen.select("w1", "w2", lp_col),
@@ -446,8 +446,8 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     for b in sorted(counts):
         offsets[b] = acc
         acc += counts[b]
-    off_df = F.broadcast(df.sparkSession.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()],
+    off_df = F.broadcast(local_frame(
+        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
         "__bin int, __off long"))
     win = (Window.partitionBy("__bin").orderBy("ppl", id_col)
            .rowsBetween(Window.unboundedPreceding, -1))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from .text import char_ngrams
 
 __all__ = ["redact_pii", "pii_hits", "deterministic_sample", "sample_hash",
@@ -221,8 +222,8 @@ def pack_shards(df: DataFrame, weight_col: str, budget: float,
     for b in sorted(totals):
         offsets[b] = acc
         acc += totals[b]
-    off_df = F.broadcast(df.sparkSession.createDataFrame(
-        [(int(b), float(o)) for b, o in offsets.items()],
+    off_df = F.broadcast(local_frame(
+        df.sparkSession, [(int(b), float(o)) for b, o in offsets.items()],
         "__bkt int, __off double"))
     win = (Window.partitionBy("__bkt").orderBy(*order_cols)
            .rowsBetween(Window.unboundedPreceding, -1))
@@ -286,8 +287,8 @@ def pack_sequences(df: DataFrame, weight_col, seq_len: int,
     for b in sorted(totals):
         offsets[b] = acc
         acc += int(totals[b])
-    off_df = F.broadcast(df.sparkSession.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()],
+    off_df = F.broadcast(local_frame(
+        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
         "__bkt int, __boff long"))
     win = (Window.partitionBy("__bkt").orderBy(*order_cols)
            .rowsBetween(Window.unboundedPreceding, -1))
@@ -356,8 +357,8 @@ def token_budget_select(df: DataFrame, weight_col, budget: int,
     for b in sorted(totals):
         offsets[b] = acc
         acc += int(totals[b])
-    off_df = F.broadcast(df.sparkSession.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()],
+    off_df = F.broadcast(local_frame(
+        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
         "__bkt int, __off long"))
     win = (Window.partitionBy("__bkt").orderBy(*order_cols)
            .rowsBetween(Window.unboundedPreceding, -1))
@@ -707,8 +708,8 @@ def column_histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     lo_hi = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
     lo, hi = lo_hi[0], lo_hi[1]
     if lo is None:
-        return df.sparkSession.createDataFrame(
-            [], "bucket int, lo double, hi double, n long")
+        return local_frame(
+            df.sparkSession, [], "bucket int, lo double, hi double, n long")
     span = float(hi) - float(lo)
     x = F.col(col).cast("double")
     if span == 0.0:
@@ -802,8 +803,8 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
                  .select("term", F.round(
                      F.log((F.col("c") + F.lit(1.0)) / F.lit(denom)), 6)
                      .alias("__lp")))
-        vocab = vocab.sparkSession.createDataFrame(
-            vocab.collect(), vocab.schema)  # sever the lineage from tc
+        vocab = local_frame(  # sever the lineage from tc
+            vocab.sparkSession, vocab.collect(), vocab.schema)
     finally:
         tc.unpersist()
     oov = F.round(F.log(F.lit(1.0) / F.lit(denom)), 6)
@@ -878,8 +879,8 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame, id_col: str,
     # log-ratio computed as a Spark expression over the bounded literal
     # counts (exact ints): F.round is HALF_UP and F.log is the same libm
     # every other rounded-log oracle row already hash-matches with
-    cnt = spark.createDataFrame(
-        [(b, tgt.get(b, 0), c) for b, c in sorted(raw.items())],
+    cnt = local_frame(
+        spark, [(b, tgt.get(b, 0), c) for b, c in sorted(raw.items())],
         "b int, tc long, cc long")
     lr = cnt.select(
         "b",
@@ -1174,7 +1175,7 @@ def domain_mixture_weights(df: DataFrame, domain_col: str, id_col: str,
     # pattern): the totals/denominator folds below would otherwise each
     # re-evaluate the per-domain aggregate — i.e. re-run the full corpus
     # scoring pass 3-4× through the lineage
-    per = df.sparkSession.createDataFrame(per_df.collect(), per_df.schema)
+    per = local_frame(df.sparkSession, per_df.collect(), per_df.schema)
     totals = per.agg(F.min("nll").alias("__mn"),
                      F.sum("n_tokens").alias("__tt"))
     raw = (per.crossJoin(F.broadcast(totals))

@@ -29,6 +29,8 @@ import pandas as pd  # annotation resolution for the pandas UDF signature
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 __all__ = [
     "dot", "l2_norm", "cosine", "normalize", "random_projection",
     "sign_lsh_key",
@@ -330,8 +332,8 @@ def kmeans_centroids(corpus: DataFrame, id_col: str, vec_col: str,
                 c.orderBy("c_id").limit(n_centroids).select("c_v").collect()]
         cents: list[list[float]] = [list(v) for v in init]
         for _ in range(max(0, iters)):
-            cent_df = spark.createDataFrame(
-                [(i, v) for i, v in enumerate(cents)],
+            cent_df = local_frame(
+                spark, [(i, v) for i, v in enumerate(cents)],
                 "k_id int, k_v array<double>").withColumn("k_n", l2_norm("k_v"))
             stats = (_assign_centroids(c, F.broadcast(cent_df))
                      .select("centroid", F.posexplode("c_v").alias("pos", "x"))
@@ -348,8 +350,8 @@ def kmeans_centroids(corpus: DataFrame, id_col: str, vec_col: str,
             ]
     finally:
         c.unpersist()
-    return spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cents)],
+    return local_frame(
+        spark, [(i, v) for i, v in enumerate(cents)],
         f"{id_col} int, __v array<double>").withColumnRenamed("__v", vec_col)
 
 
@@ -762,7 +764,7 @@ def _pq_luts(queries: DataFrame, id_col: str, vec_col: str, books,
     from pyspark.sql.types import (ArrayType, DoubleType, StructField,
                                    StructType)
     id_type = queries.schema[id_col].dataType  # keep the caller's id dtype
-    return queries.sparkSession.createDataFrame(out, StructType([
+    return local_frame(queries.sparkSession, out, StructType([
         StructField("q_id", id_type), StructField("q_n", DoubleType()),
         StructField("lut", ArrayType(DoubleType()))]))
 
@@ -1011,7 +1013,7 @@ def ivfpq_topk_from_index(spark, index_path: str, centroids: DataFrame,
             probe_rows.append((qi, ki))
             wanted.add(ki)
     from pyspark.sql.types import StructField, StructType
-    probes = spark.createDataFrame(probe_rows, StructType([
+    probes = local_frame(spark, probe_rows, StructType([
         StructField("q_id", queries.schema[id_col].dataType),
         StructField("p_centroid", centroids.schema[id_col].dataType)]))
     index = spark.read.parquet(index_path) \

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .config import (COMMIT_TIME, FILE_NAME, PARTITION_PATH, RECORD_KEY,
                      IndexType)
+from .frames import local_frame
 
 def tag_location(spark: SparkSession, prepared: DataFrame, table,
                  view=None, force_global: bool = False) -> DataFrame:
@@ -50,14 +51,21 @@ def tag_location(spark: SparkSession, prepared: DataFrame, table,
         record_index.ensure_initialized(table, view)
         return _tag_from_record_index(prepared, table, view, is_global)
 
+    bloom_index = index_type in (IndexType.BLOOM, IndexType.GLOBAL_BLOOM)
+    bounds = None
     if is_global:
         slices = view.latest_slices()
+    elif bloom_index:
+        # one action yields both the partitions to list and the key bounds
+        # the range pruning below needs
+        bounds = _key_bounds(prepared, is_global)
+        slices = view.latest_slices(partitions=list(bounds))
     else:
         pps = [r[0] for r in prepared.select(PARTITION_PATH).distinct().collect()]
         slices = view.latest_slices(partitions=pps)
 
-    if index_type in (IndexType.BLOOM, IndexType.GLOBAL_BLOOM):
-        slices = _prune_by_key_range(prepared, slices, is_global)
+    if bloom_index:
+        slices = _prune_by_key_range(prepared, slices, is_global, bounds)
         # bloom membership pruning (SparkHoodieBloomIndex.java:256-266):
         # range pruning is useless for random/UUID keys, the key sketch
         # still cuts the candidate set to files that may contain a key
@@ -117,8 +125,8 @@ def _tag_bucket(spark: SparkSession, prepared: DataFrame, table,
                        if grp.is_live(None) and grp.latest_slice(None)})
     tagged = prepared.withColumn("__bucket_fid", fid)
     if existing:
-        ex_df = F.broadcast(spark.createDataFrame(
-            existing, "__ex_pp string, __ex_fid string"))
+        ex_df = F.broadcast(local_frame(
+            spark, existing, "__ex_pp string, __ex_fid string"))
         tagged = tagged.join(
             ex_df, (F.col(PARTITION_PATH) == F.col("__ex_pp")) &
             (F.col("__bucket_fid") == F.col("__ex_fid")), "left")
@@ -159,18 +167,26 @@ def _tag_from_record_index(prepared: DataFrame, table, view,
     return joined
 
 
-def _prune_by_key_range(prepared: DataFrame, slices, is_global: bool):
-    """IntervalTreeBasedIndexFileFilter / SparkHoodieBloomIndex.java:230-235:
-    drop candidate files whose [min_key, max_key] cannot intersect the
-    incoming batch's key range. One tiny agg action; effective whenever keys
-    are clustered (monotonic ids, time-prefixed keys, sorted bulk loads)."""
+def _key_bounds(prepared: DataFrame, is_global: bool) -> dict:
+    """Partition path (None when global) → (min key, max key) of the
+    incoming batch, in one tiny agg action."""
     if is_global:
         row = prepared.agg(F.min(RECORD_KEY), F.max(RECORD_KEY)).collect()[0]
-        bounds = {None: (row[0], row[1])}
-    else:
-        rows = prepared.groupBy(PARTITION_PATH).agg(
-            F.min(RECORD_KEY), F.max(RECORD_KEY)).collect()
-        bounds = {r[0]: (r[1], r[2]) for r in rows}
+        return {None: (row[0], row[1])}
+    rows = prepared.groupBy(PARTITION_PATH).agg(
+        F.min(RECORD_KEY), F.max(RECORD_KEY)).collect()
+    return {r[0]: (r[1], r[2]) for r in rows}
+
+
+def _prune_by_key_range(prepared: DataFrame, slices, is_global: bool,
+                        bounds: dict | None = None):
+    """IntervalTreeBasedIndexFileFilter / SparkHoodieBloomIndex.java:230-235:
+    drop candidate files whose [min_key, max_key] cannot intersect the
+    incoming batch's key range; effective whenever keys are clustered
+    (monotonic ids, time-prefixed keys, sorted bulk loads). ``bounds`` is
+    :func:`_key_bounds` of ``prepared`` when the caller already has it."""
+    if bounds is None:
+        bounds = _key_bounds(prepared, is_global)
     out = []
     for sl in slices:
         bf = sl.base_file

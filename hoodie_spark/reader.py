@@ -18,10 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import timeline as tl
 from .config import (COMMIT_TIME, OPERATION, PARTITION_PATH, RECORD_KEY,
                      IndexType, TableType)
+from .frames import local_frame
 from .keygen import record_key_expr
 
 
@@ -240,8 +242,8 @@ class ReadClient:
                      if not c.startswith("_hoodie")]
         key_cols = [PARTITION_PATH, RECORD_KEY]
         img = lambda cols: F.struct(*[F.col(c) for c in cols])  # noqa: E731
-        empty_events = self.spark.createDataFrame(
-            [], self.table.empty_df()
+        empty_events = local_frame(
+            self.spark, [], self.table.empty_df()
             .select(F.lit("i").alias("op"), F.lit("").alias("ts"),
                     *key_cols, img(data_cols).alias("before"),
                     img(data_cols).alias("after")).schema)
@@ -368,8 +370,9 @@ class ReadClient:
             return self.snapshot(as_of=as_of).filter(
                 F.col(column).isin(vals))
         view = self.table.view()
-        values_df = self.spark.createDataFrame([(v,) for v in vals],
-                                               ["value"])
+        # typed as the column, which is the type the index stores
+        values_df = local_frame(self.spark, [(v,) for v in vals], T.StructType(
+            [T.StructField("value", self.table.schema[column].dataType)]))
         groups = secondary_index.lookup_groups(self.table, column,
                                                values_df, view=view)
         if groups is None:

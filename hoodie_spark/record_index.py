@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import COMMIT_TIME, FILE_NAME, PARTITION_PATH, RECORD_KEY
+from .frames import local_frame
 
 INDEX_SCHEMA = (f"{RECORD_KEY} string, {PARTITION_PATH} string, "
                 "file_id string, op string, instant string")
@@ -277,7 +278,7 @@ def lookup(table, view=None) -> DataFrame:
     spark = table.spark
     if not _has_entry_files(table):
         # initialized-but-empty index (marker written on an empty table)
-        return spark.createDataFrame([], LOOKUP_SCHEMA)
+        return local_frame(spark, [], LOOKUP_SCHEMA)
     df = _read_entries(table)
     # entries written by rolled-back / restored-over instants never happened
     from . import timeline as tl
@@ -296,6 +297,6 @@ def lookup(table, view=None) -> DataFrame:
     live = {(sl.partition, sl.file_id) for sl in view.latest_slices()}
     if not live:
         return latest.limit(0)
-    live_df = F.broadcast(spark.createDataFrame(
-        sorted(live), f"{PARTITION_PATH} string, file_id string"))
+    live_df = F.broadcast(local_frame(
+        spark, sorted(live), f"{PARTITION_PATH} string, file_id string"))
     return latest.join(live_df, [PARTITION_PATH, "file_id"], "left_semi")

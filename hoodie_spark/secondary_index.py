@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import PARTITION_PATH
+from .frames import local_frame
 
 __all__ = ["create_index", "drop_index", "indexed_columns", "exists",
            "append_entries_for_stats", "lookup_groups", "compact"]
@@ -204,8 +205,8 @@ def compact(table, column: str) -> int:
         for p in stale:
             _rm_entry(fs, p)
         return 0
-    live_df = F.broadcast(table.spark.createDataFrame(
-        live, "pp string, file_id string"))
+    live_df = F.broadcast(local_frame(
+        table.spark, live, "pp string, file_id string"))
     kept = idx.join(live_df, ["pp", "file_id"], "left_semi").distinct()
     # write the fold FIRST, delete the superseded entries after — a crash
     # in between leaves duplicates, which the pruning contract absorbs

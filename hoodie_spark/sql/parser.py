@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import re
 
+from ..frames import local_frame
+
 _KEYWORDS = {
     "and", "or", "not", "in", "is", "null", "like", "between", "exists",
     "case", "when", "then", "else", "end", "cast", "as", "true", "false",
@@ -522,7 +524,7 @@ def _exec_create(spark, sql: str, tables: dict):
     if i_as >= 0 and re.match(r"\s*select\b", mask[i_as + 2:]):
         tbl.bulk_insert(spark.sql(sql[i_as + 2:]))
     elif cols_ddl:
-        tbl.evolve_schema(spark.createDataFrame([], cols_ddl))
+        tbl.evolve_schema(local_frame(spark, [], cols_ddl))
         tbl.save_properties()
     tables[name] = tbl
     return tbl
@@ -639,41 +641,40 @@ def _exec_call(spark, sql: str, tables: dict):
         sps = tbl.timeline.completed((SAVEPOINT,))
         rows = [(tbl.timeline.metadata(i)["savepointed_at"], i.timestamp)
                 for i in sps]
-        return spark.createDataFrame(
-            rows, "savepoint_time string, created_at string")
+        return local_frame(
+            spark, rows, "savepoint_time string, created_at string")
     if proc == "show_fsview_all":
         rows = [(sl.partition, sl.file_id, sl.base_instant,
                  sl.base_file.file_name if sl.base_file else None,
                  sl.base_file.size if sl.base_file else 0,
                  len(sl.log_files_as_of(None)))
                 for sl in tbl.view().latest_slices()]
-        return spark.createDataFrame(
-            rows, "partition string, file_id string, base_instant string, "
-                  "base_file string, base_size long, num_active_logs int")
+        return local_frame(
+            spark, rows, "partition string, file_id string, base_instant "
+            "string, base_file string, base_size long, num_active_logs int")
     if proc == "show_commits":
         insts = tbl.timeline.completed()
         limit = int(args.get("limit", 10))
         rows = [(i.timestamp, i.action, i.state)
                 for i in sorted(insts, key=lambda i: i.timestamp,
                                 reverse=True)[:limit]]
-        return spark.createDataFrame(
-            rows, "commit_time string, action string, state string")
+        return local_frame(
+            spark, rows, "commit_time string, action string, state string")
     if proc == "show_rollbacks":
         from .. import timeline as tl2
         rows = [(i.timestamp,
                  ",".join(tbl.timeline.metadata(i).get("targets", [])))
                 for i in tbl.timeline.completed((tl2.ROLLBACK, tl2.RESTORE))]
-        return spark.createDataFrame(
-            rows or [], "rollback_time string, rolled_back_instants string")
+        return local_frame(
+            spark, rows, "rollback_time string, rolled_back_instants string")
     if proc == "show_cleans":
         from .. import timeline as tl2
         rows = [(i.timestamp,
                  tbl.timeline.metadata(i).get("policy", ""),
                  len(tbl.timeline.metadata(i).get("deleted_slices", [])))
                 for i in tbl.timeline.completed((tl2.CLEAN,))]
-        return spark.createDataFrame(
-            rows or [], "clean_time string, policy string, "
-                        "deleted_slices int")
+        return local_frame(
+            spark, rows, "clean_time string, policy string, deleted_slices int")
     if proc in ("show_clustering", "show_compaction"):
         # both publish as ordinary data instants; filter on the recorded
         # operation (cluster -> replacecommit op 'cluster', compaction ->
@@ -692,13 +693,12 @@ def _exec_call(spark, sql: str, tables: dict):
                      and i.action == tl2.LOGCOMPACTION):
                 rows.append((i.timestamp, md.get("operation", i.action),
                              len(md.get("write_stats", []))))
-        return spark.createDataFrame(
-            rows or [], "instant string, operation string, files_written int")
+        return local_frame(
+            spark, rows, "instant string, operation string, files_written int")
     if proc == "show_archived_timeline":
         rows = [(rec["timestamp"], rec["action"])
                 for rec in tbl.timeline.archived_records()]
-        return spark.createDataFrame(
-            rows or [], "commit_time string, action string")
+        return local_frame(spark, rows, "commit_time string, action string")
     if proc == "show_stats_wa":
         # hudi-cli `stats wa` (StatsCommand.java:60-95): write
         # amplification = records written / records upserted, per commit
@@ -720,9 +720,9 @@ def _exec_call(spark, sql: str, tables: dict):
             tot_wr += wr
         rows.append(("Total", tot_upd, tot_wr,
                      round(tot_wr / tot_upd, 2) if tot_upd > 0 else 0.0))
-        return spark.createDataFrame(
-            rows, "commit_time string, total_upserted long, "
-                  "total_written long, write_amplification double")
+        return local_frame(
+            spark, rows, "commit_time string, total_upserted long, "
+            "total_written long, write_amplification double")
     if proc == "show_commit_files":
         # hudi-cli `commit showfiles` (CommitsCommand.java): the files one
         # commit wrote, from its metadata — no listing, no data IO
@@ -740,10 +740,9 @@ def _exec_call(spark, sql: str, tables: dict):
                 rows.append((i.timestamp, s.get("partition", ""),
                              s.get("file_name"), s.get("num_records", 0),
                              s.get("size", 0), bool(s.get("is_delta"))))
-        return spark.createDataFrame(
-            rows or [], "commit_time string, partition string, "
-                        "file_name string, num_records long, size long, "
-                        "is_delta boolean")
+        return local_frame(
+            spark, rows, "commit_time string, partition string, "
+            "file_name string, num_records long, size long, is_delta boolean")
     if proc == "show_table_properties":
         # hudi-cli `desc` (TableCommand.java): the table's persisted
         # configuration, one (key, value) row each
@@ -760,7 +759,7 @@ def _exec_call(spark, sql: str, tables: dict):
              str(cfg.bucket_index_num_buckets or "")),
             ("base_path", tbl.base_path),
         ]
-        return spark.createDataFrame(rows, "key string, value string")
+        return local_frame(spark, rows, "key string, value string")
     if proc == "show_stats_filesizes":
         # hudi-cli `stats filesizes` (StatsCommand.java:97-135): size
         # distribution of the LIVE base files, from the manifest fold
@@ -768,9 +767,9 @@ def _exec_call(spark, sql: str, tables: dict):
                        for sl in tbl.view().latest_slices()
                        if sl.base_file is not None)
         if not sizes:
-            return spark.createDataFrame(
-                [], "num_files long, min long, p10 long, p50 long, "
-                    "p90 long, max long, avg long, total long")
+            return local_frame(
+                spark, [], "num_files long, min long, p10 long, p50 long, "
+                "p90 long, max long, avg long, total long")
 
         def pct(p):
             # standard nearest-rank percentile: ceil(p*n)-th smallest
@@ -782,32 +781,33 @@ def _exec_call(spark, sql: str, tables: dict):
 
         row = (len(sizes), sizes[0], pct(0.1), pct(0.5), pct(0.9),
                sizes[-1], int(sum(sizes) / len(sizes)), sum(sizes))
-        return spark.createDataFrame(
-            [row], "num_files long, min long, p10 long, p50 long, "
-                   "p90 long, max long, avg long, total long")
+        return local_frame(
+            spark, [row], "num_files long, min long, p10 long, p50 long, "
+            "p90 long, max long, avg long, total long")
     if proc == "show_pending_instants":
         # hudi-cli `compactions show all` generalized to every pending
         # service/write instant, with heartbeat liveness
         from ..services.admin import pending_instants
         rows = [(p.timestamp, p.action, p.heartbeat_live)
                 for p in pending_instants(tbl)]
-        return spark.createDataFrame(
-            rows, "instant string, action string, heartbeat_live boolean")
+        return local_frame(
+            spark, rows,
+            "instant string, action string, heartbeat_live boolean")
     if proc == "validate_pending":
         # HoodieCompactionAdminTool VALIDATE
         from ..services.admin import validate_pending as _vp
         rows = [(r.timestamp, r.valid, "; ".join(r.issues))
                 for r in _vp(tbl)]
-        return spark.createDataFrame(
-            rows, "instant string, valid boolean, issues string")
+        return local_frame(
+            spark, rows, "instant string, valid boolean, issues string")
     if proc == "unschedule_pending":
         # HoodieCompactionAdminTool UNSCHEDULE_PLAN / REPAIR
         from ..services.admin import unschedule_pending as _up
         deleted = _up(tbl, str(args["instant"]),
                       force=bool(args.get("force", False)),
                       dry_run=bool(args.get("dry_run", False)))
-        return spark.createDataFrame(
-            [(p,) for p in deleted], "deleted_file string")
+        return local_frame(
+            spark, [(p,) for p in deleted], "deleted_file string")
     raise ValueError(f"unknown procedure {proc!r}")
 
 

@@ -24,6 +24,7 @@ import re
 
 from pyspark.sql.types import StructType
 
+from ..frames import local_frame
 from .parser import _mask, run_sql
 
 __all__ = ["enable", "disable", "register_table"]
@@ -134,7 +135,7 @@ def _route(spark, query: str, tables: dict):
 
 
 def _empty(spark):
-    return spark.createDataFrame([], StructType([]))
+    return local_frame(spark, [], StructType([]))
 
 
 def enable(spark, tables: dict | None = None) -> dict:

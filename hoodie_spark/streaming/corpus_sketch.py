@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.dedup import group_sketches, sketch_overlap
 from .maintainer import locked_fold
 
@@ -179,7 +180,7 @@ class CorpusSketchMaintainer:
         rows = [tuple([g] + sig) for g, sig in sorted(sk.items())]
         cols = "__g string, " + ", ".join(
             f"__h{i} string" for i in range(self.num_hashes))
-        sigs = spark.createDataFrame(rows, cols)
+        sigs = local_frame(spark, rows, cols)
         return sketch_overlap(sigs, self.num_hashes)
 
     def est_distinct(self) -> DataFrame:
@@ -198,7 +199,7 @@ class CorpusSketchMaintainer:
         rows = [tuple([g] + sig) for g, sig in sorted(st["sketches"].items())]
         cols = "__g string, " + ", ".join(
             f"__h{i} string" for i in range(self.num_hashes))
-        sigs = self.table.spark.createDataFrame(rows, cols)
+        sigs = local_frame(self.table.spark, rows, cols)
         return sigs.select(
             F.col("__g").alias(self.group_col),
             sketch_distinct_estimate(self.num_hashes)

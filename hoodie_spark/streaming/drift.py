@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.drift import _bucket_expr, shift_from_counts
 from .maintainer import locked_fold
 
@@ -185,8 +186,8 @@ class DriftMonitor:
 
     # --------------------------------------------------------- analytics
     def _hist_df(self, counts: list[int]) -> DataFrame:
-        return self.table.spark.createDataFrame(
-            [(b, int(c)) for b, c in enumerate(counts)],
+        return local_frame(
+            self.table.spark, [(b, int(c)) for b, c in enumerate(counts)],
             "bucket int, cnt long")
 
     def shift(self) -> DataFrame:

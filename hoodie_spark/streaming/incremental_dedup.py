@@ -71,6 +71,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.dedup import (bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
 from .maintainer import locked_fold
@@ -192,7 +193,7 @@ class IncrementalDeduper:
         spark = self.table.spark
         buckets = [e for e in self.fs.listdir(d) if e.startswith("bucket=")]
         if not buckets:
-            return spark.createDataFrame([], schema + ", bucket int")
+            return local_frame(spark, [], schema + ", bucket int")
         # read the bucket partition dirs EXPLICITLY (basePath keeps the
         # partition column) so stray entries — a crashed migration's
         # gen-000000 inside a legacy flat dir, _SUCCESS files — can never

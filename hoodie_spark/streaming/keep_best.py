@@ -67,6 +67,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.components import duplicate_groups
 from ..functions.dedup import (bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
@@ -167,7 +168,7 @@ class KeepBestDeduper:
         buckets = [] if not self.fs.exists(p) else \
             [e for e in self.fs.listdir(p) if e.startswith("bucket=")]
         if not buckets:
-            return spark.createDataFrame([], f"bucket int, {schema}")
+            return local_frame(spark, [], f"bucket int, {schema}")
         return (spark.read.schema(f"bucket int, {schema}")
                 .option("basePath", p)
                 .parquet(*[os.path.join(p, e) for e in buckets]))

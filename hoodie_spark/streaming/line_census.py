@@ -52,6 +52,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from .maintainer import locked_fold
 
 __all__ = ["LineCensusMaintainer"]
@@ -112,12 +113,12 @@ class LineCensusMaintainer:
         schema = "lhash string, n bigint"
         st = self._load()
         if st is None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         p = self._gen_path(st.get("gen", 0))
         entries = [] if not self.fs.exists(p) else self.fs.listdir(p)
         files = [e for e in entries if e.endswith(".parquet")]
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return (spark.read.schema(schema)
                 .parquet(*[os.path.join(p, e) for e in files]))
 
@@ -227,8 +228,8 @@ class LineCensusMaintainer:
         st = self._load()
         new_g = st.get("gen", 0) + 1 if st is not None else 0
         if last is None:
-            fresh = self.table.spark.createDataFrame(
-                [], "lhash string, n bigint")
+            fresh = local_frame(
+                self.table.spark, [], "lhash string, n bigint")
         else:
             fresh = self._batch_census(
                 self.table.snapshot(as_of=last.timestamp)

@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.pipeline import priority_hash
 from .maintainer import locked_fold
 
@@ -147,7 +148,7 @@ class ReservoirMaintainer:
         entries = [] if not self.fs.exists(p) else self.fs.listdir(p)
         files = [e for e in entries if e.endswith(".parquet")]
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return (spark.read.schema(schema)
                 .parquet(*[os.path.join(p, e) for e in files]))
 
@@ -224,8 +225,9 @@ class ReservoirMaintainer:
         self.fs.rmtree(self._gen_path(self._gen))
         if last is None:
             # publish an empty generation
-            self.table.spark.createDataFrame(
-                [], f"{self.key_col} {self._resolve_key_type()}, "
+            local_frame(
+                self.table.spark, [],
+                f"{self.key_col} {self._resolve_key_type()}, "
                 f"__pr {self._pr_type}").write.mode("overwrite") \
                 .parquet(self._gen_path(self._gen))
             self._publish(None)

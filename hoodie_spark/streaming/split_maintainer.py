@@ -68,6 +68,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.components import duplicate_groups
 from ..functions.dedup import (bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
@@ -196,13 +197,13 @@ class SplitMaintainer:
             # flat layout, which a bare directory read would trip over
             files = [e for e in entries if e.endswith(".parquet")]
             if not files:
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             return (spark.read.schema(schema)
                     .parquet(*[os.path.join(p, e) for e in files]))
         buckets = [] if not self.fs.exists(p) else \
             [e for e in self.fs.listdir(p) if e.startswith("bucket=")]
         if not buckets:
-            return spark.createDataFrame([], f"bucket int, {schema}")
+            return local_frame(spark, [], f"bucket int, {schema}")
         # explicit bucket dirs (basePath keeps the partition column) so a
         # crashed migration's gen-000000 inside a legacy flat dir or a
         # _SUCCESS file can never break partition discovery

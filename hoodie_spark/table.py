@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from .config import (COMMIT_SEQNO, COMMIT_TIME, FILE_NAME, META_COLUMNS,
                      OPERATION, PARTITION_PATH, RECORD_KEY, TableConfig,
                      TableType, WriteConfig, IndexType)
+from .frames import local_frame
 from .fsview import FileSystemView
 from .reader import ReadClient
 from .timeline import Timeline
@@ -218,7 +219,7 @@ class HoodieTable:
 
     def empty_df(self) -> DataFrame:
         s = self.schema or T.StructType()
-        return self.spark.createDataFrame([], s)
+        return local_frame(self.spark, [], s)
 
     # --------------------------------------------------------- ALTER TABLE
     def add_columns(self, cols: dict[str, str]) -> None:

@@ -19,6 +19,11 @@ Spark-first execution model (replaces the reference's RDD pipeline):
   * the driver only plans buckets (greedy bin packing over manifest stats) and
     renames tmp part-files to their final ``fileId_token_instant`` names —
     O(files touched) metadata ops, no data movement;
+  * the small frames the driver plans and joins against (the insert-bucket
+    plan, index candidates, live file groups) are JVM ``LocalRelation``s
+    built by :func:`~hoodie_spark.frames.local_frame`: a pickled Python
+    list would fork Python workers on every evaluation just to unpickle a
+    few rows, while a ``LocalRelation`` keeps the write path in the JVM;
   * per-file record counts and record-key min/max are harvested from parquet
     FOOTERS (pyarrow, no data scan) and recorded in commit metadata — that
     manifest is what makes upsert index pruning and clean/clustering planning
@@ -43,6 +48,7 @@ from .config import (COMMIT_SEQNO, COMMIT_TIME, FILE_NAME, IS_DELETED,
                      RECORD_KEY, BootstrapMode, IndexType, MergePolicy,
                      TableType, WriteConcurrencyMode, WriteConfig,
                      WriteOperation)
+from .frames import local_frame
 from .fsview import FileSystemView
 from .index import tag_location
 from .keygen import with_keys
@@ -120,7 +126,12 @@ class WriteClient:
         passes it deduplicates are column-pruned — the sizing count reads
         nothing (0.2 s) and only the write job reads full width, once.
         At 100 TB the no-cache shape is also the only one that fits:
-        ingest-sized inputs cannot live in executor storage."""
+        ingest-sized inputs cannot live in executor storage.
+
+        Without combine_before_insert the sizing count and the write job
+        each re-execute ``df``, so the source must be deterministic: a
+        source that yields other rows on its second evaluation writes files
+        sized for rows it no longer has."""
         wcfg = self.table.write_config
         self._ensure_index_ready()
         instant = self._begin(tl.COMMIT)
@@ -196,7 +207,12 @@ class WriteClient:
             raise
     def insert(self, df: DataFrame) -> WriteResult:
         """SparkRDDWriteClient.java:172 — insert with small-file packing, no
-        index lookup."""
+        index lookup.
+
+        Outside a bucket index the batch is not cached: the workload profile,
+        the packed-group lookup and the write job each re-execute ``df``, so
+        the source must be deterministic — otherwise the insert-bucket plan
+        is sized for rows the write job no longer sees."""
         return self._upsert_like(df, WriteOperation.INSERT)
 
     def upsert(self, df: DataFrame) -> WriteResult:
@@ -229,7 +245,12 @@ class WriteClient:
             raise
     def insert_overwrite(self, df: DataFrame) -> WriteResult:
         """SparkRDDWriteClient.java:198 — replace file groups in the
-        partitions touched by ``df`` (HoodieReplaceCommitMetadata)."""
+        partitions touched by ``df`` (HoodieReplaceCommitMetadata).
+
+        Without combine_before_insert the sizing count and the write job
+        each re-execute ``df``, so the source must be deterministic (as for
+        :meth:`bulk_insert`); the same holds for
+        :meth:`insert_overwrite_table`."""
         return self._overwrite(df, WriteOperation.INSERT_OVERWRITE)
 
     def insert_overwrite_table(self, df: DataFrame) -> WriteResult:
@@ -700,8 +721,9 @@ class WriteClient:
                 if plan is None:
                     pass  # bucket routing already assigned
                 elif plan:
-                    plan_df = F.broadcast(self.spark.createDataFrame(
-                        plan, "pp string, lo double, hi double, file_id string, is_new boolean"))
+                    plan_df = F.broadcast(local_frame(
+                        self.spark, plan,
+                        "pp string, lo double, hi double, file_id string, is_new boolean"))
                     u = (F.pmod(F.xxhash64(F.col(RECORD_KEY)), F.lit(1_000_000)) / 1_000_000.0)
                     inserts = (inserts.withColumn("__u", u)
                                .join(plan_df, (F.col(PARTITION_PATH) == F.col("pp")) &
@@ -787,12 +809,15 @@ class WriteClient:
     # ------------------------------------------------------------- COW merge
     def _write_cow(self, updates: DataFrame, inserts: DataFrame,
                    view: FileSystemView, instant: str,
-                   affected_updates: dict[tuple[str, str], int]) -> list[dict]:
+                   affected_updates: dict[tuple[str, str], int]
+                   ) -> tuple[list[dict], dict[str, list[str]]]:
         """HoodieMergeHandle.java:89 as a DataFrame program: affected file
         groups = update targets ∪ small-file insert targets; read their latest
         base files, union with incoming, resolve per-key winners (payload),
         rewrite each group as a new file slice. Untouched groups see zero IO.
-        ``affected_updates`` comes from the single profiling action."""
+        ``affected_updates`` comes from the single profiling action. Returns
+        ``(stats, emptied)``: the written files' stats, and partition → file
+        ids of affected groups whose rewrite kept no row."""
         packed = inserts.filter(~F.col("__is_new"))
         new_rows = inserts.filter(F.col("__is_new"))
 

@@ -9,8 +9,22 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # tier split (see pytest.ini): tests named in slow_tests.txt get the
 # 'slow' marker here, so the default run (-m "not slow") stays inside a
-# bounded verify budget while the deep tier remains one -m flag away
+# bounded verify budget while the deep tier remains one -m flag away. A
+# test named by node id on the command line is not marked, so
+# ``pytest tests/test_x.py::test_y`` runs it instead of deselecting it.
 _SLOW_FILE = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
+
+
+def _named_node_ids(config) -> set[str]:
+    """The ``path::name`` arguments of this run, as rootdir-relative node
+    ids."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), config.rootpath)
+            named.add(f"{rel}::{rest}")
+    return named
 
 
 def pytest_collection_modifyitems(config, items):
@@ -20,8 +34,10 @@ def pytest_collection_modifyitems(config, items):
                     if ln.strip() and not ln.startswith("#")}
     except OSError:
         return
+    named = _named_node_ids(config)
     for item in items:
-        if item.nodeid in slow:
+        if item.nodeid in slow and item.nodeid not in named \
+                and item.nodeid.split("[")[0] not in named:
             item.add_marker(pytest.mark.slow)
 
 
