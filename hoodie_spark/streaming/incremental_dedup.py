@@ -17,22 +17,12 @@ already seen in O(batch), never O(corpus):
   agreement ≥ threshold — an in-row zip, no text re-reads, no corpus scan.
 - ``state.json`` — watermark: the table instant state is synced through,
   plus the signature parameters (batches must agree on them), plus the
-  per-store GENERATION pointers (below).
+  per-store generation pointers.
 
-Object-store layout: every state directory is a VERSIONED GENERATION —
-``content/gen-000000/``, ``content/gen-000001/``, … — and ``state.json``
-(published through the :class:`~hoodie_spark.storage.AtomicStorage` seam)
-records which generation is live. Batches append parquet into the live
+State layout and crash contract: the generation store of
+:mod:`~hoodie_spark.streaming.maintainer` (batches append into the live
 generation; :meth:`IncrementalDeduper.compact_state` writes the folded
-copy into the NEXT generation and swaps the pointer with one atomic
-publish — no directory rename anywhere, so the same code runs on S3/GCS
-where rename does not exist. A crash leaves either the old pointer (the
-new generation is unreferenced garbage, overwritten by the next compact
-and swept after the next successful swap) or the new pointer (the old
-generation is garbage, same sweep) — never a torn state. All remaining
-file operations (existence probes, listings, sweeps) go through the
-:class:`~hoodie_spark.storage.Storage` seam (``table.storage``), the
-engine-wide FSUtils equivalent.
+copy into the next one and swaps the pointer).
 
 Semantics (the contract the driver oracle verifies): a doc is dropped iff
 ANY earlier-seen doc — previous batches, or a smaller id within its own
@@ -47,14 +37,13 @@ behind the table; the next batch detects the gap and backfills from the
 table's own incremental read (kept docs only — signatures of docs that were
 dropped in the lost window are gone, so a near-dup of such a doc may be
 re-admitted once: dedup degrades toward re-admission, never false drops).
-A ROLLBACK/RESTORE past the watermark breaks that direction — state would
+A rollback/restore past the watermark breaks that direction — state would
 still carry removed rows as "seen" and falsely drop their re-ingest — so
 catch_up detects it and rebuilds state from the table's current content.
 Row-level DELETEs deliberately do NOT invalidate seen-state: a deleted
 doc's content stays suppressed if it arrives again (takedown semantics —
 the usual reason corpus rows are deleted); an operator who wants deleted
-content re-admittable should rebuild state (delete the state dir and let
-catch_up reconstruct it from the table).
+content re-admittable should call :meth:`~IncrementalDeduper.rebuild`.
 
 Reference parity: the role DeltaStreamer's continuous mode plays in the
 reference (hudi-utilities .../deltastreamer/HoodieDeltaStreamer.java:354 —
@@ -65,21 +54,23 @@ table) — here generalized from key-identity to content/near-dup identity.
 
 from __future__ import annotations
 
-import json
+import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..frames import local_frame
 from ..functions.dedup import (bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
-from .maintainer import locked_fold
+from .maintainer import MaintainedState, bucket_of, locked_fold
 
 STATE_DIR = "dedup_state"
 
+logger = logging.getLogger(__name__)
 
-class IncrementalDeduper:
+
+class IncrementalDeduper(MaintainedState):
     """Filter arriving batches against everything the table has seen.
 
     Usage (or pass ``deduper=`` to :class:`~hoodie_spark.streaming.ingest.Ingestor`)::
@@ -90,12 +81,15 @@ class IncrementalDeduper:
         dd.advance(batch_df)               # register the WHOLE batch as seen
     """
 
+    SUBS = ("content", "bands")
+    KIND = "dedup"
+    PARAMS = ("num_hashes", "bands", "ngram", "n_buckets")
+
     def __init__(self, table, id_col: str, text_col: str,
                  threshold: float = 0.8, num_hashes: int = 16,
                  bands: int = 4, ngram: int = 5, n_buckets: int = 32,
                  max_band_rows: int | None = None,
                  warn_band_rows: int = 5000):
-        self.table = table
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
@@ -112,26 +106,11 @@ class IncrementalDeduper:
         # so the O(n^2) adversarial-batch hazard is visible in production
         self.warn_band_rows = warn_band_rows
         self.dir = os.path.join(table.base_path, ".hoodie", STATE_DIR)
-        self.fs = table.storage  # Storage seam: object-store swappable
-        self._lock_dir = self.dir  # single-maintainer fence (maintainer.py)
         # feature reuse between filter_batch(df) and the advance(df) that
         # follows it: instance state, valid because a deduper is a
         # single-writer object (one ingest pipeline per table by OCC)
         self._feat_cache: tuple[DataFrame, DataFrame, DataFrame] | None = None
-        st = self._load_state()
-        if st:
-            for k in ("num_hashes", "bands", "ngram", "n_buckets"):
-                if st[k] != getattr(self, k):
-                    raise ValueError(
-                        f"dedup state at {self.dir} was built with {k}="
-                        f"{st[k]}, got {getattr(self, k)} — signature "
-                        "parameters must match across batches")
-        # generation pointers: None = pre-gen LEGACY flat layout (data
-        # directly under content/ and bands/ — local-FS only; the next
-        # compact_state migrates it into gen-000000)
-        self._gens: dict[str, int | None] = (
-            st.get("gens", {"content": None, "bands": None}) if st
-            else {"content": 0, "bands": 0})
+        super().__init__(table, self.dir)
 
     def _release_pins(self) -> None:
         if self._feat_cache is not None:
@@ -141,66 +120,6 @@ class IncrementalDeduper:
                 except Exception:
                     pass
             self._feat_cache = None
-
-    # ------------------------------------------------------------ state io
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.dir, "state.json")
-
-    def _load_state(self) -> dict | None:
-        raw = self.fs.read_bytes(self._state_path)
-        return None if raw is None else json.loads(raw)
-
-    def _publish_state(self, instant: str | None) -> None:
-        from .. import storage
-
-        self.fs.makedirs(self.dir)
-        storage.ATOMIC.put_atomic(self._state_path, json.dumps({
-            "instant": instant, "num_hashes": self.num_hashes,
-            "bands": self.bands, "ngram": self.ngram,
-            "n_buckets": self.n_buckets, "gens": self._gens}).encode())
-
-    def _sub_path(self, sub: str) -> str:
-        """Live data directory for a state store: the generation the
-        pointer names, or the flat legacy dir (``gens[sub] is None``)."""
-        g = self._gens[sub]
-        base = os.path.join(self.dir, sub)
-        return base if g is None else os.path.join(base, f"gen-{g:06d}")
-
-    def _recover_legacy(self, sub: str) -> None:
-        """Repair a LEGACY-layout compact crash (pre-generation states,
-        local FS only): the old two-step directory swap could leave the
-        live dir missing with the complete folded copy at .compacting and
-        the pre-compaction data at .old. Generation layouts never need
-        this — a crashed compact leaves the pointer unswapped."""
-        if self._gens[sub] is not None:
-            return
-        d = os.path.join(self.dir, sub)
-        if self.fs.listdir(d):
-            return
-        if self.fs.listdir(d + ".compacting") and self.fs.listdir(d + ".old"):
-            # crash between the two swaps: .compacting is the fully-written
-            # folded state (only ever swapped in AFTER its write completed
-            # while the live dir still existed)
-            self.fs.rename(d + ".compacting", d)
-            self.fs.rmtree(d + ".old")
-        elif self.fs.listdir(d + ".old"):
-            self.fs.rename(d + ".old", d)
-
-    def _read_state(self, sub: str, schema: str) -> DataFrame:
-        self._recover_legacy(sub)
-        d = self._sub_path(sub)
-        spark = self.table.spark
-        buckets = [e for e in self.fs.listdir(d) if e.startswith("bucket=")]
-        if not buckets:
-            return local_frame(spark, [], schema + ", bucket int")
-        # read the bucket partition dirs EXPLICITLY (basePath keeps the
-        # partition column) so stray entries — a crashed migration's
-        # gen-000000 inside a legacy flat dir, _SUCCESS files — can never
-        # break partition discovery
-        return (spark.read.schema(schema + ", bucket int")
-                .option("basePath", d)
-                .parquet(*[os.path.join(d, e) for e in buckets]))
 
     # ------------------------------------------------------------ features
     def _features(self, df: DataFrame) -> DataFrame:
@@ -233,13 +152,10 @@ class IncrementalDeduper:
         # re-aggregated to a single row: the collect is two bounded
         # arrays (<= n_buckets ints each) plus one int, and this single
         # action is also the feats materialization point.
-        probe = feats.withColumn(
-            "bucket", F.pmod(F.xxhash64("chash"),
-                             F.lit(self.n_buckets)).cast("int"))
-        ex = (feats.select(
-                  F.pmod(F.xxhash64("chash"),
-                         F.lit(self.n_buckets)).cast("int").alias("cbk"),
-                  F.explode_outer("bands").alias("bk"))
+        probe = feats.withColumn("bucket",
+                                 bucket_of("chash", self.n_buckets))
+        ex = (feats.select(bucket_of("chash", self.n_buckets).alias("cbk"),
+                           F.explode_outer("bands").alias("bk"))
               .select("cbk", F.col("bk.band").alias("band"),
                       F.col("bk.bh").alias("bh")))
         census = (
@@ -250,8 +166,7 @@ class IncrementalDeduper:
                      F.flatten(F.collect_list("cbs"))).alias("cb"),
                  F.collect_set(F.when(
                      F.col("bh").isNotNull(),
-                     F.pmod(F.xxhash64("bh"),
-                            F.lit(self.n_buckets)).cast("int"))).alias("bb"),
+                     bucket_of("bh", self.n_buckets))).alias("bb"),
                  F.max(F.when(F.col("bh").isNotNull(),
                               F.col("gn"))).alias("maxg"))
             .first())
@@ -259,16 +174,14 @@ class IncrementalDeduper:
         bbuckets = list(census["bb"] or [])
         if self.max_band_rows is None and \
                 (census["maxg"] or 0) > self.warn_band_rows:
-            import logging
-
-            logging.getLogger(__name__).warning(
+            logger.warning(
                 "in-batch near-dup self-join: largest (band, bh) group has "
                 "%d rows (> warn_band_rows=%d) and max_band_rows is None — "
                 "candidate pairing is quadratic in that group. Set "
                 "max_band_rows for a hard O(n*cap) bound (trades exact "
                 "incremental==global equivalence).",
                 census["maxg"], self.warn_band_rows)
-        content = self._read_state("content", "chash string")
+        content = self.store.read("content", "chash string")
         if buckets:
             content = content.filter(F.col("bucket").isin(buckets))
         exact_state = (probe.join(content, ["bucket", "chash"], "left_semi")
@@ -284,9 +197,7 @@ class IncrementalDeduper:
         # duplicated hashes only: a singleton group can never drop a row
         # (its join-back row fails id != __keep), so the join's build
         # side shrinks from every-distinct-text to just the duplicated
-        # texts — the r14-verdict "broadcast exb_mins" intent, realized
-        # scale-safely (the filtered side is O(actual duplicates), and
-        # AQE broadcasts it when it fits instead of always)
+        # texts (O(actual duplicates); AQE broadcasts it when it fits)
         exb_mins = (exb.groupBy("chash")
                     .agg(F.min(id_col).alias("__keep"),
                          F.count(F.lit(1)).alias("__nh"))
@@ -298,10 +209,8 @@ class IncrementalDeduper:
         # near vs state: equi-join on (band, bh) against the pruned bucket
         # partitions (bbuckets from the shared census above); the batch
         # side is the small build side
-        bprobe = banded.withColumn(
-            "bucket", F.pmod(F.xxhash64("bh"),
-                             F.lit(self.n_buckets)).cast("int"))
-        sbands = self._read_state(
+        bprobe = banded.withColumn("bucket", bucket_of("bh", self.n_buckets))
+        sbands = self.store.read(
             "bands", "band int, bh string, minhash array<string>")
         if bbuckets:
             sbands = sbands.filter(F.col("bucket").isin(bbuckets))
@@ -346,8 +255,6 @@ class IncrementalDeduper:
             self._release_pins()
             feats = self._features(df).persist()
             own_pin = True
-        self._recover_legacy("content")
-        self._recover_legacy("bands")
         if instant is None:
             last = self.table.timeline.last_completed()
             instant = last.timestamp if last else None
@@ -356,147 +263,49 @@ class IncrementalDeduper:
         # window dedup); filter_batch reads with an explicit schema that
         # omits the column, so probes are unaffected
         seen = F.lit(instant).cast("string").alias("seen_at")
-
-        def _w_content():
-            (feats.filter(F.col("chash").isNotNull())  # NULL: never a dup
-             .select(
-                "chash",
-                F.pmod(F.xxhash64("chash"),
-                       F.lit(self.n_buckets)).cast("int").alias("bucket"))
-             .distinct()
-             .select("chash", "bucket", seen)
-             .write.partitionBy("bucket").mode("append")
-             .parquet(self._sub_path("content")))
-
-        def _w_bands():
-            (self._banded(feats)
-             .select("band", "bh", "minhash",
-                     F.pmod(F.xxhash64("bh"),
-                            F.lit(self.n_buckets)).cast("int").alias("bucket"),
-                     seen)
-             .write.partitionBy("bucket").mode("append")
-             .parquet(self._sub_path("bands")))
-
+        # NULL text: never a duplicate
+        content = (feats.filter(F.col("chash").isNotNull())
+                   .select("chash",
+                           bucket_of("chash", self.n_buckets).alias("bucket"))
+                   .distinct()
+                   .select("chash", "bucket", seen))
+        bands = (self._banded(feats)
+                 .select("band", "bh", "minhash",
+                         bucket_of("bh", self.n_buckets).alias("bucket"),
+                         seen))
         # the two state appends are independent jobs over the same cached
         # features and the watermark publish below is the only commit
         # point (partial appends are harmless duplicates under EXISTS
         # probes), so submit them concurrently instead of queueing the
         # bands write behind the content write
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fc, fb = pool.submit(_w_content), pool.submit(_w_bands)
-            fc.result()
-            fb.result()
+            for f in [pool.submit(self.store.append, "content", content),
+                      pool.submit(self.store.append, "bands", bands)]:
+                f.result()
         if own_pin:
             feats.unpersist()
         else:
             self._release_pins()  # feats + banded from the paired filter_batch
-        self._publish_state(instant)
+        self._publish(instant=instant)
 
     # ------------------------------------------------------------ catch-up
-    @locked_fold
-    def catch_up(self) -> int:
-        """Repair state that fell behind the table (crash between commit
-        and advance, or a pre-existing table): backfill features from the
-        table's OWN incremental read since the watermark. Returns rows
-        backfilled. Only kept docs are recoverable this way — see module
-        docstring for the (re-admission-only) degradation contract."""
-        st = self._load_state()
-        mark = st["instant"] if st else None
-        # a rollback/restore AFTER the watermark removed table rows whose
-        # signatures state still carries as "seen" — re-ingesting those
-        # docs would be FALSE DROPS, the one direction the contract
-        # forbids. Rebuild state from the table's current content
-        # (O(table), but rollback is a rare operator action).
-        if mark is not None:
-            from .. import timeline as tl
+    # catch_up (inherited) backfills from the table's OWN incremental read
+    # since the watermark — only kept docs are recoverable this way, see
+    # the module docstring for the (re-admission-only) degradation
+    # contract — and rebuilds after a rollback/restore past it.
+    def _columns(self) -> tuple[str, ...]:
+        return (self.id_col, self.text_col)
 
-            undone = [i for i in self.table.timeline.completed(
-                          (tl.ROLLBACK, tl.RESTORE))
-                      if i.timestamp > mark]
-            if undone:
-                return self._rebuild_from_table()
-        last = self.table.timeline.last_completed()
-        if last is None or (mark is not None and last.timestamp <= mark):
-            if st is None:
-                self._publish_state(None)
-            return 0
-        missed = self.table.incremental(begin=mark, end=last.timestamp)
-        n = missed.count()
-        if n:
-            self.advance(missed.select(self.id_col, self.text_col),
-                         instant=last.timestamp)
-        else:
-            self._publish_state(last.timestamp)
-        return n
-
-    def _rebuild_from_table(self) -> int:
-        """Point both stores at fresh (empty) generations, re-register the
-        table's CURRENT content as the seen set, then swap the pointer
-        (used after rollback/restore invalidated entries). Crash-safe by
-        the generation contract: until the publish lands, the pointer
-        still names the old state and the rebuild simply re-triggers."""
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "dedup state at %s invalidated by rollback/restore — "
-            "rebuilding from the current table content", self.dir)
-        for sub in ("content", "bands"):
-            g = self._gens[sub]
-            self._gens[sub] = 0 if g is None else g + 1
-            # the destination generation may hold a crashed compact's
-            # partial (or complete) folded copy of the PRE-rollback state
-            # — advance() appends, so clear it or rolled-back docs'
-            # signatures would survive the rebuild as false "seen"
-            self.fs.rmtree(self._sub_path(sub))
-        last = self.table.timeline.last_completed()
-        if last is None:
-            self._publish_state(None)
-            self._sweep_stale()
-            return 0
-        current = self.table.snapshot().select(self.id_col, self.text_col)
-        n = current.count()
-        if n:
-            self.advance(current, instant=last.timestamp)
-        else:
-            self._publish_state(last.timestamp)
-        self._sweep_stale()
-        return n
+    _fold = advance
 
     # ------------------------------------------------------------- compact
-    def _sweep_stale(self) -> None:
-        """Best-effort removal of unreferenced state: superseded
-        generations, legacy flat-layout bucket dirs, and legacy crash
-        siblings. Safe to skip or crash mid-sweep — only the generation
-        the pointer names is ever read."""
-        for sub in ("content", "bands"):
-            g = self._gens[sub]
-            if g is None:
-                continue  # legacy layout: the flat dir IS the live state
-            base = os.path.join(self.dir, sub)
-            keep = f"gen-{g:06d}"
-            for e in self.fs.listdir(base):
-                if e == keep:
-                    continue
-                p = os.path.join(base, e)
-                self.fs.rmtree(p)
-                if self.fs.exists(p):  # plain file (_SUCCESS etc.)
-                    try:
-                        self.fs.remove(p)
-                    except OSError:
-                        pass
-            for suffix in (".old", ".compacting"):  # legacy crash siblings
-                self.fs.rmtree(base + suffix)
-
     @locked_fold
     def compact_state(self, retain_after: str | None = None) -> int:
         """Fold per-batch appended files: one file per bucket, duplicates
         collapsed onto their LATEST sighting (EXISTS semantics make
-        duplicates harmless but they cost scan width). The folded copy
-        lands in the NEXT generation and one atomic ``state.json``
-        publish swaps the pointer — no rename, so this runs unchanged on
-        object stores. Returns rows retained.
+        duplicates harmless but they cost scan width), written as the next
+        generation and swapped in by one atomic pointer publish. Returns
+        rows retained.
 
         ``retain_after`` bounds the state for long-running pipelines
         (100 TB concern: corpus-identity state otherwise grows forever):
@@ -508,38 +317,18 @@ class IncrementalDeduper:
         written before ``seen_at`` existed, or advanced with no table
         instant) are conservatively RETAINED — they can only cause extra
         drops of true duplicates, never a false drop."""
-        st = self._load_state()
-        mark = st["instant"] if st else None
-        total = 0
+        folded = {}
         for sub, schema, keys in (
                 ("content", "chash string", ["chash"]),
                 ("bands", "band int, bh string, minhash array<string>",
                  ["band", "bh", "minhash"])):
             # schema-on-read: generations written before the seen_at
             # column existed surface it as NULL
-            cur = self._read_state(sub, schema + ", seen_at string")
-            folded = (cur.groupBy(*keys, "bucket")
-                      .agg(F.max("seen_at").alias("seen_at")))
+            f = (self.store.read(sub, schema + ", seen_at string")
+                 .groupBy(*keys, "bucket")
+                 .agg(F.max("seen_at").alias("seen_at")))
             if retain_after is not None:
-                folded = folded.filter(
-                    F.col("seen_at").isNull()
-                    | (F.col("seen_at") >= retain_after))
-            g = self._gens[sub]
-            new_g = 0 if g is None else g + 1
-            dst = os.path.join(self.dir, sub, f"gen-{new_g:06d}")
-            # overwrite: a crashed prior compact may have left a partial
-            # copy at this same generation (pointer never swapped to it)
-            # retained-row count observed INSIDE the write job (the fold
-            # runs exactly once per sub-store; a post-write count() would
-            # re-evaluate the whole groupBy over the old state)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            folded = folded.observe(obs, F.count(F.lit(1)).alias("n"))
-            (folded.repartition(F.col("bucket"))
-             .write.partitionBy("bucket").mode("overwrite").parquet(dst))
-            total += obs.get["n"]
-            self._gens[sub] = new_g
-        self._publish_state(mark)  # the atomic pointer swap
-        self._sweep_stale()
-        return total
+                f = f.filter(F.col("seen_at").isNull()
+                             | (F.col("seen_at") >= retain_after))
+            folded[sub] = f
+        return self._write_next(folded)

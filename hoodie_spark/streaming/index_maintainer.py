@@ -13,10 +13,10 @@ Consistency contract
 --------------------
 * The watermark (last indexed table instant) lives in
   ``_watermark.json`` INSIDE the index directory — the underscore
-  prefix makes it invisible to the parquet reader — and is published
-  with the same atomic single-PUT the table state uses.
-* ``catch_up()`` reads the table's OWN incremental view since the
-  watermark and folds the delta in as DELETE-then-APPEND: updated
+  prefix makes it invisible to the parquet reader — and follows
+  maintainer.py's catch-up protocol.
+* ``catch_up()`` folds the table's OWN incremental view since the
+  watermark in as DELETE-then-APPEND: updated
   vectors move lists instead of shadowing their stale version, and a
   crash between the fold and the watermark publish simply replays the
   same delta — the delete pass removes the half-applied copy first, so
@@ -24,7 +24,7 @@ Consistency contract
 * A rollback/restore newer than the watermark invalidates indexed rows
   the incremental view can no longer explain; the maintainer rebuilds
   the index from the table's current snapshot (O(table), rollback is a
-  rare operator action — same degradation contract as the deduper).
+  rare operator action).
 * Work per sync is delta-sized: one broadcast semi-join bounded by the
   delta's ids (the delete), one assignment map pass + append write.
   Small files fold via ``compact_every`` using the layout-agnostic
@@ -33,31 +33,30 @@ Consistency contract
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 from ..functions.similarity import (append_ivf_index, append_ivfpq_index,
                                     compact_ivf_index,
                                     delete_from_ivf_index, write_ivf_index,
                                     write_ivfpq_index)
-from .maintainer import locked_fold
+from .maintainer import MaintainedState
 
 __all__ = ["IvfIndexMaintainer"]
 
 
-class IvfIndexMaintainer:
+class IvfIndexMaintainer(MaintainedState):
     """Keeps a persisted IVF (or IVF-PQ when ``books`` is given) index in
     step with ``table``. Single-writer, like every table service: run it
     from the ingest pipeline (``Ingestor(index_maintainers=[...])``) or
     the async-services seat, never from two drivers at once."""
 
+    POINTER = "_watermark.json"
+    KIND = "ANN index"
+
     def __init__(self, table, index_path: str, centroids: DataFrame,
                  id_col: str, vec_col: str, books=None,
                  compact_every: int = 0, track_deletes: bool = False):
-        self.table = table
-        self.path = index_path
         self.centroids = centroids
         self.id_col = id_col
         self.vec_col = vec_col
@@ -72,72 +71,44 @@ class IvfIndexMaintainer:
         # constraint: the cleaner must still hold the pre-image slices
         # (loud failure otherwise, same as time travel).
         self.track_deletes = bool(track_deletes)
-        self.fs = table.storage  # Storage seam: object-store swappable
-        self._lock_dir = index_path  # single-maintainer fence (maintainer.py)
         self._syncs = 0
-
-    # ------------------------------------------------------------ watermark
-    @property
-    def _wm_path(self) -> str:
-        return os.path.join(self.path, "_watermark.json")
-
-    def _load_mark(self) -> str | None:
-        raw = self.fs.read_bytes(self._wm_path)
-        return None if raw is None else json.loads(raw).get("instant")
-
-    def _publish_mark(self, instant: str | None) -> None:
-        from .. import storage
-
-        self.fs.makedirs(self.path)
-        storage.ATOMIC.put_atomic(
-            self._wm_path, json.dumps({"instant": instant}).encode())
+        super().__init__(table, index_path)
 
     # --------------------------------------------------------------- folds
-    def _append(self, delta: DataFrame) -> None:
+    def _apply(self, touched: DataFrame, upserts: DataFrame) -> None:
+        """DELETE-then-APPEND: moves updated vectors to their new list and
+        makes crash replays of a delta converge."""
+        spark = self.table.spark
+        delete_from_ivf_index(spark, self.path, touched, self.id_col)
         if self.books is None:
-            append_ivf_index(delta, self.centroids, self.id_col,
+            append_ivf_index(upserts, self.centroids, self.id_col,
                              self.vec_col, self.path)
         else:
-            append_ivfpq_index(delta, self.centroids, self.books,
+            append_ivfpq_index(upserts, self.centroids, self.books,
                                self.id_col, self.vec_col, self.path)
+        self._syncs += 1
+        if self.compact_every and self._syncs % self.compact_every == 0:
+            compact_ivf_index(spark, self.path)
 
-    def _rebuild(self) -> int:
-        import logging
+    def _columns(self) -> tuple[str, ...]:
+        return (self.id_col, self.vec_col)
 
-        logging.getLogger(__name__).warning(
-            "ANN index at %s invalidated by rollback/restore — rebuilding "
-            "from the current table snapshot", self.path)
-        current = self.table.snapshot().select(self.id_col, self.vec_col)
-        if self.books is None:
-            write_ivf_index(current, self.centroids, self.id_col,
-                            self.vec_col, self.path)
-        else:
-            write_ivfpq_index(current, self.centroids, self.books,
-                              self.id_col, self.vec_col, self.path)
-        last = self.table.timeline.last_completed()
-        self._publish_mark(last.timestamp if last else None)
-        return current.count()
+    def _fold(self, delta: DataFrame, instant: str) -> None:
+        self._apply(delta.select(self.id_col), delta)
+        self._publish(instant=instant)
 
-    # ------------------------------------------------------------- catch-up
-    @locked_fold
-    def catch_up(self) -> int:
-        """Fold every table change since the watermark into the index.
-        Returns the number of delta rows applied (or snapshot rows on a
-        rebuild). Safe to call any time — a no-op when current."""
-        mark = self._load_mark()
-        if mark is not None:
-            from .. import timeline as tl
+    def _rebuild(self, snap, instant) -> int:
+        if snap is not None:
+            if self.books is None:
+                write_ivf_index(snap, self.centroids, self.id_col,
+                                self.vec_col, self.path)
+            else:
+                write_ivfpq_index(snap, self.centroids, self.books,
+                                  self.id_col, self.vec_col, self.path)
+        self._publish(instant=instant)
+        return 0 if snap is None else snap.count()
 
-            undone = [i for i in self.table.timeline.completed(
-                          (tl.ROLLBACK, tl.RESTORE))
-                      if i.timestamp > mark]
-            if undone:
-                return self._rebuild()
-        last = self.table.timeline.last_completed()
-        if last is None or (mark is not None and last.timestamp <= mark):
-            if mark is None:
-                self._publish_mark(None)
-            return 0
+    def _fold_since(self, mark: str | None, last: str) -> int:
         if not any(e.startswith("centroid=")
                    for e in self.fs.listdir(self.path)):
             # no inverted lists yet — first sync of a pre-existing table,
@@ -145,54 +116,25 @@ class IvfIndexMaintainer:
             # published (the dir holds only _watermark.json, which the
             # delta fold's index read could not even schema-infer):
             # build everything once from the snapshot
-            return self._rebuild()
-        spark = self.table.spark
-        if self.track_deletes:
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
-            ev = self.table.incremental_cdc(begin=mark, end=last.timestamp)
-            # a key touched by several in-range commits appears once per
-            # commit — only its LATEST event decides index membership
-            latest = Window.partitionBy("_hoodie_record_key").orderBy(
-                F.col("ts").desc())
-            ev = (ev.withColumn("__rn", F.row_number().over(latest))
-                  .filter(F.col("__rn") == 1))
-            gone = ev.filter(F.col("op") == "d").select(
-                F.col(f"before.{self.id_col}").alias(self.id_col))
-            upserts = (ev.filter(F.col("op") != "d")
-                       .select(F.col(f"after.{self.id_col}")
-                               .alias(self.id_col),
-                               F.col(f"after.{self.vec_col}")
-                               .alias(self.vec_col)))
-            touched = upserts.select(self.id_col).unionByName(gone)
-            n = touched.count()
-            if n:
-                delete_from_ivf_index(spark, self.path, touched,
-                                      self.id_col)
-                self._append(upserts)
-        else:
-            delta = (self.table.incremental(begin=mark,
-                                            end=last.timestamp)
-                     .select(self.id_col, self.vec_col))
-            n = delta.count()
-            if n:
-                # DELETE-then-APPEND: moves updated vectors to their new
-                # list and makes crash replays of this delta converge
-                delete_from_ivf_index(spark, self.path,
-                                      delta.select(self.id_col),
-                                      self.id_col)
-                self._append(delta)
+            return self.rebuild()
+        if not self.track_deletes:
+            return super()._fold_since(mark, last)
+        ev = self.table.incremental_cdc(begin=mark, end=last)
+        # a key touched by several in-range commits appears once per
+        # commit — only its LATEST event decides index membership
+        latest = Window.partitionBy("_hoodie_record_key").orderBy(
+            F.col("ts").desc())
+        ev = (ev.withColumn("__rn", F.row_number().over(latest))
+              .filter(F.col("__rn") == 1))
+        gone = ev.filter(F.col("op") == "d").select(
+            F.col(f"before.{self.id_col}").alias(self.id_col))
+        upserts = (ev.filter(F.col("op") != "d")
+                   .select(F.col(f"after.{self.id_col}").alias(self.id_col),
+                           F.col(f"after.{self.vec_col}")
+                           .alias(self.vec_col)))
+        touched = upserts.select(self.id_col).unionByName(gone)
+        n = touched.count()
         if n:
-            self._syncs += 1
-            if self.compact_every and self._syncs % self.compact_every == 0:
-                compact_ivf_index(spark, self.path)
-        self._publish_mark(last.timestamp)
+            self._apply(touched, upserts)
+        self._publish(instant=last)
         return n
-
-    # --------------------------------------------------------- ingest hook
-    def on_commit(self, batch: DataFrame | None = None,
-                  result=None) -> int:
-        """Ingestor post-commit hook; folds the just-committed delta (and
-        anything a previous crash left behind) into the index."""
-        return self.catch_up()

@@ -91,7 +91,7 @@ def test_monitor_track_changes_exact_under_upsert_delete(
                                             F.lit(" extra extra"))))
     tbl.delete(docs.filter("doc_id % 10 = 0").select("doc_id"))
     mon.catch_up()
-    st = mon._load()
+    st = mon.store.load()
     fresh = DriftMonitor(tbl, state + "2", "text", buckets=32)
     fresh_counts = fresh._census(tbl.snapshot().select("text"))
     assert st["counts"] == fresh_counts
@@ -109,9 +109,9 @@ def test_monitor_plain_mode_append_only_caveat(spark, tmp_table_path):
     tbl.upsert(docs.limit(10))  # same text rewritten
     mon.catch_up()
     snap_census = mon._census(tbl.snapshot().select("text"))
-    assert sum(mon._load()["counts"]) > sum(snap_census)  # double-counted
+    assert sum(mon.store.load()["counts"]) > sum(snap_census)  # double-counted
     mon.rebuild()
-    assert mon._load()["counts"] == snap_census
+    assert mon.store.load()["counts"] == snap_census
 
 
 def test_monitor_rollback_triggers_rebuild(spark, tmp_table_path):
@@ -126,7 +126,7 @@ def test_monitor_rollback_triggers_rebuild(spark, tmp_table_path):
     mon.catch_up()
     tbl.rollback(r2.instant)
     mon.catch_up()  # watermark is newer than the rollback point → rebuild
-    assert mon._load()["counts"] == mon._census(
+    assert mon.store.load()["counts"] == mon._census(
         tbl.snapshot().select("text"))
 
 
@@ -172,7 +172,7 @@ def test_monitor_through_ingestor_hook(spark, tmp_table_path):
     batches = [docs.filter(f"doc_id % 3 = {k}") for k in range(3)]
     Ingestor(tbl, _Batches(batches),
              index_maintainers=[mon]).run_continuous(3)
-    assert mon._load()["counts"] == mon._census(
+    assert mon.store.load()["counts"] == mon._census(
         tbl.snapshot().select("text"))
 
 
@@ -191,7 +191,7 @@ def test_monitor_through_writestream_sink(spark, tmp_table_path):
     fn(docs.filter("doc_id % 2 = 0"), 0)
     fn(docs.filter("doc_id % 2 = 1"), 1)
     fn(docs.filter("doc_id % 2 = 1"), 1)  # replay: no write, no re-fold
-    assert mon._load()["counts"] == mon._census(
+    assert mon.store.load()["counts"] == mon._census(
         tbl.snapshot().select("text"))
 
 

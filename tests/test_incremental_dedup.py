@@ -17,6 +17,7 @@ from hoodie_spark import HoodieTable
 from hoodie_spark import functions as HF
 from hoodie_spark.streaming import IncrementalDeduper, Ingestor
 from hoodie_spark.streaming.ingest import Source
+from hoodie_spark.streaming.maintainer import GenerationStore
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,6 +39,10 @@ def _batches(corpus):
     return [corpus.filter(F.col("doc_id") < 1000),
             corpus.filter((F.col("doc_id") >= 1000) & (F.col("doc_id") < 11000)),
             corpus.filter(F.col("doc_id") >= 11000)]
+
+
+def _crash_publish(store, payload):
+    raise RuntimeError("crash before pointer publish")
 
 
 def _global_keep(corpus):
@@ -137,7 +142,8 @@ def test_ingestor_with_deduper_three_microbatches(spark, corpus,
     assert got == _global_keep(corpus)
 
 
-def test_compact_state_crash_recovery(spark, corpus, tmp_table_path):
+def test_compact_state_crash_recovery(spark, corpus, tmp_table_path,
+                                      monkeypatch):
     """A compact that crashes BEFORE the pointer publish leaves the OLD
     generation live: decisions intact, the orphan generation is
     overwritten by the retried compact and swept after its publish —
@@ -150,20 +156,20 @@ def test_compact_state_crash_recovery(spark, corpus, tmp_table_path):
     b0, b1, _ = _batches(corpus)
     tbl.upsert(dd.filter_batch(b0))
     dd.advance(b0)
-    gens_before = dict(dd._gens)
+    gens_before = dict(dd.store.gens)
     # crash window: both folded generations written, pointer never swapped
-    dd._publish_state = lambda instant: (_ for _ in ()).throw(
-        RuntimeError("crash before pointer publish"))
+    monkeypatch.setattr(GenerationStore, "publish", _crash_publish)
     with pytest.raises(RuntimeError, match="pointer publish"):
         dd.compact_state()
+    monkeypatch.undo()
     dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    assert dd2._gens == gens_before      # pointer unswapped
+    assert dd2.store.gens == gens_before  # pointer unswapped
     assert dd2.filter_batch(b1).count() == 0  # exact copies still caught
     dd2.advance(b1)
     assert dd2.compact_state() > 0       # retry folds + sweeps the orphan
     for sub in ("content", "bands"):     # only the live generation remains
         entries = os.listdir(os.path.join(dd.dir, sub))
-        assert entries == [f"gen-{dd2._gens[sub]:06d}"]
+        assert entries == [f"gen-{dd2.store.gens[sub]:06d}"]
 
 
 def test_legacy_flat_layout_reads_recovers_and_migrates(
@@ -189,9 +195,9 @@ def test_legacy_flat_layout_reads_recovers_and_migrates(
         os.replace(os.path.join(base, "gen-000000"), flat)
         os.rmdir(base)
         os.replace(flat, base)
-    st = json.load(open(dd._state_path))
+    st = json.load(open(dd.store.pointer))
     st.pop("gens")
-    with open(dd._state_path, "w") as f:
+    with open(dd.store.pointer, "w") as f:
         json.dump(st, f)
     # plus a legacy compact-crash window on content: live dir moved away,
     # complete folded copy staged at .compacting
@@ -199,12 +205,12 @@ def test_legacy_flat_layout_reads_recovers_and_migrates(
     os.replace(d, d + ".old")
     shutil.copytree(d + ".old", d + ".compacting")
     dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    assert dd2._gens == {"content": None, "bands": None}
+    assert dd2.store.gens == {"content": None, "bands": None}
     assert dd2.filter_batch(b1).count() == 0  # recovered + consulted
     assert os.path.isdir(d) and not os.path.isdir(d + ".compacting")
     dd2.advance(b1)                     # appends into the flat layout
     assert dd2.compact_state() > 0      # migrates into gen-000000
-    assert dd2._load_state()["gens"] == {"content": 0, "bands": 0}
+    assert dd2.store.load()["gens"] == {"content": 0, "bands": 0}
     for sub in ("content", "bands"):    # flat bucket dirs swept
         assert os.listdir(os.path.join(dd.dir, sub)) == ["gen-000000"]
     tbl.upsert(dd2.filter_batch(b2))
@@ -484,7 +490,7 @@ def test_compact_state_retention_keeps_unknown_age(spark, tmp_table_path):
     for sub, schema in (("content", "chash string, bucket int"),
                         ("bands", "band int, bh string, "
                                   "minhash array<string>, bucket int")):
-        d = dd._sub_path(sub)
+        d = dd.store.live(sub)
         rows = spark.read.option("basePath", d).parquet(d) \
             .drop("seen_at").collect()
         dd.fs.rmtree(d)
@@ -521,7 +527,7 @@ def test_ingestor_state_retention_window(spark, tmp_table_path):
 
 def test_restore_across_retention_eviction_rebuilds(spark, tmp_table_path):
     """Restore to a savepoint taken BEFORE a compact_state(retain_after=)
-    eviction horizon: the restore re-runs _rebuild_from_table, and the
+    eviction horizon: the restore re-runs rebuild(), and the
     rebuilt state must match the RESTORED table content — the evicted
     batch-0 signatures come back (their docs are in the restored table, so
     their duplicates drop again) and the restored-away docs are re-admitted
@@ -584,3 +590,132 @@ def test_second_concurrent_maintainer_fails_cleanly(spark, corpus,
             rival.catch_up()
     # lock released — the legitimate maintainer proceeds normally
     assert dd.catch_up() >= 0
+
+
+# ----------------------------------------------- rebuild after a crash
+_BODIES = [
+    "the quick brown fox jumps over the lazy dog near the riverbank",
+    "pack my box with five dozen liquor jugs before the long journey",
+    "sphinx of black quartz judge my vow under the desert moonlight",
+    "how vexingly quick daft zebras jump across the frozen meadow",
+    "crazy fredrick bought many very exquisite opal jewels yesterday",
+    "we promptly judged antique ivory buckles for the next big prize",
+]
+
+_BODIES2 = [
+    "distributed query engines shuffle partitioned data between stages",
+    "columnar storage formats prune row groups with min max statistics",
+    "broadcast joins ship the small dimension to every executor core",
+    "watermarks bound state retention for late arriving event streams",
+    "vectorized readers decode parquet pages straight into arrow arrays",
+    "adaptive execution replans skewed joins at shuffle boundaries",
+]
+
+
+def _bodies(spark, bodies, start=0):
+    rows = [(start + i, b) for i, b in enumerate(bodies)]
+    return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def test_rebuild_clears_crashed_compact_generation(spark, tmp_table_path,
+                                                   monkeypatch):
+    """Crash a compact_state AFTER its gen-N+1 parquet write but BEFORE
+    the pointer publish, then roll back the table: the rebuild must not
+    append onto (and publish) the stale pre-rollback copy sitting at the
+    generation it bumps into — rolled-back docs must be re-admittable."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "rbgen", ["doc_id"], None)
+    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    b0 = _bodies(spark, _BODIES)
+    res = tbl.upsert(dd.filter_batch(b0))
+    dd.advance(b0)
+    monkeypatch.setattr(GenerationStore, "publish", _crash_publish)
+    with pytest.raises(RuntimeError):
+        dd.compact_state()  # gen-000001 parquet written, pointer still gen-0
+    monkeypatch.undo()
+
+    tbl.rollback(res.instant)  # invalidates every seen signature
+    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    kept = dd2.filter_batch(b0)  # catch_up -> rollback seen -> rebuild
+    # rebuild from an EMPTY table: nothing is "seen", all docs re-admitted
+    assert kept.count() == b0.count()
+
+
+def test_uncapped_band_group_warns(spark, tmp_table_path, caplog):
+    """The uncapped in-batch near-dup self-join logs a warning when a
+    (band, bh) group exceeds warn_band_rows."""
+    import logging
+
+    tbl = HoodieTable.create(spark, tmp_table_path, "warn", ["doc_id"], None)
+    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8,
+                            warn_band_rows=3)
+    same = spark.createDataFrame(
+        [(i, "identical body text long enough to produce minhash bands")
+         for i in range(8)], "doc_id int, text string")
+    with caplog.at_level(logging.WARNING,
+                         logger="hoodie_spark.streaming.incremental_dedup"):
+        kept = dd.filter_batch(same)
+        n = kept.count()
+    assert n == 1  # correctness unchanged: one survivor
+    assert any("max_band_rows" in r.message for r in caplog.records)
+    dd._release_pins()
+    # capped deduper: no warning (the hazard is bounded)
+    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8,
+                             warn_band_rows=3, max_band_rows=4)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING,
+                         logger="hoodie_spark.streaming.incremental_dedup"):
+        dd2.filter_batch(same).count()
+    assert not any("max_band_rows" in r.message for r in caplog.records)
+    dd2._release_pins()
+
+
+def test_compact_state_counts_inside_write(spark, tmp_table_path,
+                                           monkeypatch):
+    """The retained-row count comes from an Observation on the write job
+    — compact_state never re-evaluates the fold via DataFrame.count()."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "cs12", ["doc_id"], None)
+    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    b0 = _bodies(spark, _BODIES)
+    tbl.insert(dd.filter_batch(b0))
+    dd.advance(b0)
+    calls = []
+    # patch the concrete class: pyspark.sql.DataFrame is its abstract base
+    frame_cls = type(b0)
+    orig = frame_cls.count
+    monkeypatch.setattr(
+        frame_cls, "count",
+        lambda self: (calls.append(1), orig(self))[1])
+    n = dd.compact_state()
+    assert calls == [], "compact_state re-evaluated the fold via count()"
+    content = spark.read.parquet(dd.store.live("content")).count()
+    bands = spark.read.parquet(dd.store.live("bands")).count()
+    assert n == content + bands > 0
+
+
+def test_restore_past_eviction_horizon_rebuilds_to_table(
+        spark, tmp_table_path):
+    """restore() to a savepoint BEFORE a retention-evicted batch must
+    rebuild dedup state to match the restored table: duplicates of
+    restored docs still drop, duplicates of rolled-back docs re-admit."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "rr12", ["doc_id"], None)
+    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    b0 = _bodies(spark, _BODIES, 0)
+    r0 = tbl.upsert(dd.filter_batch(b0))
+    dd.advance(b0)
+    tbl.savepoint(r0.instant)
+    b1 = _bodies(spark, _BODIES2, 100)
+    r1 = tbl.upsert(dd.filter_batch(b1))
+    dd.advance(b1)
+    # evict every signature last seen before r1 (i.e. all of b0's)
+    dd.compact_state(retain_after=r1.instant)
+    tbl.restore(r0.instant)  # table content back to b0 only
+
+    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    probe = (_bodies(spark, _BODIES, 500)  # dups of restored content
+             .unionByName(_bodies(spark, _BODIES2, 600)))  # dups of undone b1
+    kept = {r.doc_id for r in dd2.filter_batch(probe).collect()}
+    assert kept == {600 + i for i in range(len(_BODIES2))}, (
+        "rebuilt state diverges from restored table content")
+    # and the rebuilt snapshot really is b0-only
+    assert {r.doc_id for r in tbl.snapshot().select("doc_id").collect()} \
+        == {i for i in range(len(_BODIES))}

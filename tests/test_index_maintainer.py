@@ -288,3 +288,57 @@ def test_sketch_param_mismatch_raises(spark, docs, tmp_table_path):
     with pytest.raises(ValueError):
         CorpusSketchMaintainer(tbl, f"{tmp_table_path}/sk", "source",
                                "text", num_hashes=16)
+
+
+# ------------------------------------- rebuild watermark before snapshot
+def _race_setup(kind, spark, emb, docs, path):
+    """(table, maintainer, late batch, rebuild trigger, late-rows-folded
+    check) for a maintainer whose state starts from a table snapshot."""
+    from hoodie_spark.streaming import CorpusSketchMaintainer
+
+    if kind == "sketch":
+        tbl = HoodieTable.create(spark, f"{path}/t", "race_sk",
+                                 ["doc_id"], None)
+        m = CorpusSketchMaintainer(tbl, f"{path}/sk", "source", "text",
+                                   num_hashes=16)
+        tbl.insert(docs)
+        m.catch_up()
+        late = (docs.limit(20)
+                .withColumn("doc_id", F.col("doc_id") + 1_000_000)
+                .withColumn("source", F.lit("late")))
+        return tbl, m, late, m.rebuild, lambda: "late" in {
+            r.source for r in m.est_distinct().collect()}
+    tbl = HoodieTable.create(spark, f"{path}/t", "race_ivf",
+                             ["vec_id"], None)
+    m = IvfIndexMaintainer(tbl, f"{path}/idx", emb.filter(
+        F.col("vec_id") < 16), "vec_id", "embedding")
+    tbl.insert(emb.filter(F.col("vec_id") % 2 == 0))
+    # the first sync builds the index from the snapshot
+    return (tbl, m, emb.filter(F.col("vec_id") % 2 == 1), m.catch_up,
+            lambda: spark.read.parquet(f"{path}/idx").count()
+            == emb.count())
+
+
+@pytest.mark.parametrize("kind", ["sketch", "ivf"])
+def test_commit_between_snapshot_and_watermark_is_folded(
+        spark, emb, docs, tmp_table_path, monkeypatch, kind):
+    """A commit landing right after a rebuild resolved its snapshot must
+    be the next catch_up's delta — a watermark read after the snapshot
+    would claim it and lose its rows for good."""
+    tbl, m, late, trigger, late_folded = _race_setup(
+        kind, spark, emb, docs, tmp_table_path)
+    snapshot, fired = tbl.snapshot, []
+
+    def snapshot_then_commit(*args, **kwargs):
+        out = snapshot(*args, **kwargs)
+        if not fired:
+            fired.append(1)
+            tbl.insert(late)
+        return out
+
+    monkeypatch.setattr(tbl, "snapshot", snapshot_then_commit)
+    trigger()
+    assert fired
+    monkeypatch.undo()
+    assert m.catch_up() == late.count()
+    assert late_folded()

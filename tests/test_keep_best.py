@@ -151,6 +151,31 @@ def test_param_guards(spark, tmp_table_path):
 def test_no_window_in_resolution_plan(spark, tmp_table_path):
     tbl = _table(spark, tmp_table_path)
     kb = _kb(spark, tbl, tmp_table_path)
-    out = kb._roots(_docs(spark, n=50))
+    out = kb._cluster(_docs(spark, n=50))[0]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_process_batch_releases_every_frame_it_persists(
+        spark, tmp_table_path, monkeypatch):
+    """Every frame process_batch persists is unpersisted before it
+    returns (tracked per frame: duplicate_groups' local checkpoints also
+    show up among the context's persistent RDDs)."""
+    tbl = _table(spark, tmp_table_path)
+    kb = _kb(spark, tbl, tmp_table_path)
+    docs = _docs(spark, n=40)
+    persisted = []
+    frame_cls = type(docs)
+    persist = frame_cls.persist
+
+    def tracked(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", tracked)
+    for k in range(2):
+        kb.process_batch(docs.withColumn("doc_id",
+                                         F.col("doc_id") + k * 10_000))
+        assert persisted
+        assert not [f for f in persisted if f.is_cached]
+        persisted.clear()

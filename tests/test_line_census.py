@@ -144,7 +144,7 @@ def test_later_fold_crash_replay_does_not_double_count(spark,
     m = LineCensusMaintainer(tbl, state, "doc_id", "text")
     b1, b2 = _lined(spark, 10), _lined(spark, 10, start=10)
     m.fold(b1)
-    g = m._gen
+    g = m.store.gens["census"]
     # crashed second fold: partial merge output at the next generation
     (b2.limit(3).select(F.explode(F.split("text", "\n")).alias("l"))
      .groupBy(F.md5("l").alias("lhash"))

@@ -79,7 +79,7 @@ def test_full_curation_pipeline(spark, tmp_table_path):
     assert len(ids) > n_src // 3
 
     # maintained drift state == fresh census of the final table
-    assert mon._load()["counts"] == mon._census(snap.select("text"))
+    assert mon.store.load()["counts"] == mon._census(snap.select("text"))
     # maintained sketches -> overlap identical to one-pass batch sketching
     got = sorted(map(tuple, sk.overlap().collect()))
     want = sorted(map(tuple, HF.corpus_overlap_minhash(

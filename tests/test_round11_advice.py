@@ -1,7 +1,5 @@
 """Round-11 verdict/advice regression tests.
 
-- ADVICE: _rebuild_from_table must clear the destination generation a
-  crashed compact left behind (false-drop hazard after rollback).
 - ADVICE: GCSStorage.remove maps 404 to FileNotFoundError so the
   Storage.remove missing-file contract is backend-agnostic.
 - ADVICE: LocalAtomicStorage.put_atomic fsyncs before the rename so the
@@ -15,11 +13,8 @@
 - VERDICT 5: JdbcBasedSchemaProvider (ref JdbcbasedSchemaProvider.java).
 - VERDICT 6: JdbcSource scans the source once per round (cache serves
   the write job).
-- VERDICT 8: uncapped in-batch near-dup self-join logs a warning when a
-  (band, bh) group exceeds warn_band_rows.
 """
 
-import logging
 import os
 import shutil
 
@@ -30,16 +25,11 @@ from hoodie_spark import HoodieTable, custom_partition_expr
 from hoodie_spark import storage as st
 from hoodie_spark.functions.dedup import lsh_plan
 from hoodie_spark.storage_gcs import GCSStorage
-from hoodie_spark.streaming.incremental_dedup import IncrementalDeduper
 from hoodie_spark.streaming.ingest import JdbcSource
 from hoodie_spark.streaming.schema import (JdbcBasedSchemaProvider,
                                            resolve_schema)
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------- rebuild
-
 
 _BODIES = [
     "the quick brown fox jumps over the lazy dog near the riverbank",
@@ -54,31 +44,6 @@ _BODIES = [
 def _docs(spark, n=6):
     rows = [(i, _BODIES[i % len(_BODIES)]) for i in range(n)]
     return spark.createDataFrame(rows, "doc_id int, text string")
-
-
-def test_rebuild_clears_crashed_compact_generation(spark, tmp_table_path):
-    """Crash a compact_state AFTER its gen-N+1 parquet write but BEFORE
-    the pointer publish, then roll back the table: the rebuild must not
-    append onto (and publish) the stale pre-rollback copy sitting at the
-    generation it bumps into — rolled-back docs must be re-admittable."""
-    tbl = HoodieTable.create(spark, tmp_table_path, "rbgen", ["doc_id"], None)
-    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    b0 = _docs(spark)
-    res = tbl.upsert(dd.filter_batch(b0))
-    dd.advance(b0)
-
-    def boom(instant):
-        raise RuntimeError("crash before pointer publish")
-
-    dd._publish_state = boom
-    with pytest.raises(RuntimeError):
-        dd.compact_state()  # gen-000001 parquet written, pointer still gen-0
-
-    tbl.rollback(res.instant)  # invalidates every seen signature
-    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    kept = dd2.filter_batch(b0)  # catch_up -> rollback seen -> rebuild
-    # rebuild from an EMPTY table: nothing is "seen", all docs re-admitted
-    assert kept.count() == b0.count()
 
 
 # ------------------------------------------------------------- gcs remove
@@ -262,34 +227,6 @@ def test_jdbc_source_single_scan_and_checkpoint(spark, tmp_table_path):
     # empty round: checkpoint unchanged, nothing pinned
     got = src.fetch(spark, ck2)
     assert got == (None, ck2)
-
-
-# -------------------------------------------------------- band-group warn
-
-
-def test_uncapped_band_group_warns(spark, tmp_table_path, caplog):
-    tbl = HoodieTable.create(spark, tmp_table_path, "warn", ["doc_id"], None)
-    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8,
-                            warn_band_rows=3)
-    same = spark.createDataFrame(
-        [(i, "identical body text long enough to produce minhash bands")
-         for i in range(8)], "doc_id int, text string")
-    with caplog.at_level(logging.WARNING,
-                         logger="hoodie_spark.streaming.incremental_dedup"):
-        kept = dd.filter_batch(same)
-        n = kept.count()
-    assert n == 1  # correctness unchanged: one survivor
-    assert any("max_band_rows" in r.message for r in caplog.records)
-    dd._release_pins()
-    # capped deduper: no warning (the hazard is bounded)
-    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8,
-                             warn_band_rows=3, max_band_rows=4)
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="hoodie_spark.streaming.incremental_dedup"):
-        dd2.filter_batch(same).count()
-    assert not any("max_band_rows" in r.message for r in caplog.records)
-    dd2._release_pins()
 
 
 # --------------------------------------------- service plan/begin ordering

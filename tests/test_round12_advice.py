@@ -10,19 +10,12 @@
 - ADVICE: show_stats_filesizes percentiles use the standard
   nearest-rank index (StatsCommand.java's Snapshot percentile), not the
   one-rank-high int(p*n).
-- VERDICT 3: compact_state derives the retained-row count from inside
-  the write job (Observation) — the fold is evaluated exactly once per
-  sub-store, never re-run by a post-write count().
 - VERDICT 4: dsir_logweights persists the exploded corpus grams across
   the census and scoring passes — the corpus text is tokenized+hashed
   exactly ONCE per run.
-- VERDICT 6: a restore past a compact_state(retain_after=...) eviction
-  horizon rebuilds dedup state that matches the RESTORED table content
-  (drops dups of restored docs, re-admits dups of rolled-back docs).
 """
 
 import pytest
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoodie_spark import HoodieTable, custom_partition_expr
@@ -139,28 +132,6 @@ def test_filesizes_percentile_nearest_rank(spark, orders, tmp_table_path):
         (10, sizes[0], sizes[-1], sum(sizes))
 
 
-# ------------------------------------------------- compact_state one pass
-def test_compact_state_counts_inside_write(spark, tmp_table_path,
-                                           monkeypatch):
-    """The retained-row count comes from an Observation on the write job
-    — compact_state never re-evaluates the fold via DataFrame.count()."""
-    tbl = HoodieTable.create(spark, tmp_table_path, "cs12", ["doc_id"], None)
-    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    b0 = _docs(spark, _BODIES)
-    tbl.insert(dd.filter_batch(b0))
-    dd.advance(b0)
-    calls = []
-    orig = DataFrame.count
-    monkeypatch.setattr(
-        DataFrame, "count",
-        lambda self: (calls.append(1), orig(self))[1])
-    n = dd.compact_state()
-    assert calls == [], "compact_state re-evaluated the fold via count()"
-    content = spark.read.parquet(dd._sub_path("content")).count()
-    bands = spark.read.parquet(dd._sub_path("bands")).count()
-    assert n == content + bands > 0
-
-
 # ------------------------------------------------- DSIR single tokenize
 def test_dsir_tokenizes_corpus_exactly_once(spark):
     """The exploded corpus grams are persisted across the census and
@@ -184,33 +155,3 @@ def test_dsir_tokenizes_corpus_exactly_once(spark):
     assert taps.value == n, (
         f"corpus text evaluated {taps.value} times for {n} rows — the "
         "census and scoring passes are not sharing the grams frame")
-
-
-# ------------------------------------------------- restore x retention
-def test_restore_past_eviction_horizon_rebuilds_to_table(
-        spark, tmp_table_path):
-    """restore() to a savepoint BEFORE a retention-evicted batch must
-    rebuild dedup state to match the restored table: duplicates of
-    restored docs still drop, duplicates of rolled-back docs re-admit."""
-    tbl = HoodieTable.create(spark, tmp_table_path, "rr12", ["doc_id"], None)
-    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    b0 = _docs(spark, _BODIES, 0)
-    r0 = tbl.upsert(dd.filter_batch(b0))
-    dd.advance(b0)
-    tbl.savepoint(r0.instant)
-    b1 = _docs(spark, _BODIES2, 100)
-    r1 = tbl.upsert(dd.filter_batch(b1))
-    dd.advance(b1)
-    # evict every signature last seen before r1 (i.e. all of b0's)
-    dd.compact_state(retain_after=r1.instant)
-    tbl.restore(r0.instant)  # table content back to b0 only
-
-    dd2 = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
-    probe = (_docs(spark, _BODIES, 500)  # dups of restored content
-             .unionByName(_docs(spark, _BODIES2, 600)))  # dups of undone b1
-    kept = {r.doc_id for r in dd2.filter_batch(probe).collect()}
-    assert kept == {600 + i for i in range(len(_BODIES2))}, (
-        "rebuilt state diverges from restored table content")
-    # and the rebuilt snapshot really is b0-only
-    assert {r.doc_id for r in tbl.snapshot().select("doc_id").collect()} \
-        == {i for i in range(len(_BODIES))}

@@ -177,3 +177,173 @@ def test_crash_between_register_and_watermark_recovers(spark,
     fresh.catch_up()
     want = {r["doc_id"]: r["split"] for r in fresh.assignments().collect()}
     assert {r["doc_id"]: r["split"] for r in got} == want
+
+
+def test_split_maintainer_assign_no_window(spark, tmp_table_path):
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS)
+    out = sm._assign(_docs(spark))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, \
+        "maintained split's in-batch exact edges regressed to a window"
+
+
+# --------------------------------------------------- bridge counter
+def test_bridge_counter_increments_and_rebuild_resets(
+        spark, tmp_table_path):
+    """A doc whose matches span two already-assigned components is the
+    documented online limitation — the counter makes it OBSERVABLE so an
+    operator can decide when rebuild() is warranted."""
+    # construction searched offline against the EXACT md5 MinHash plane
+    # (deterministic forever): C = A+" "+B shares one full LSH band and
+    # ≥4/16 signature positions with EACH of A and B, while A and B share
+    # zero positions and zero bands — so at threshold 0.25 (mm=4) doc 3
+    # bridges the two already-assigned components
+    a = "nu tau delta pi lam eta alpha rho " * 3
+    b = "two four eight three fifteen six one eleven " * 3
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS, threshold=0.25)
+    sm.assign_and_register(spark.createDataFrame(
+        [(1, a), (2, b)], "doc_id long, text string"))
+    assert sm.bridge_count() == 0
+    out = sm.assign_and_register(spark.createDataFrame(
+        [(3, a + " " + b)], "doc_id long, text string"))
+    r3 = out.select("__root").collect()[0]["__root"]
+    assert r3 == 1, "bridge doc must inherit the smallest matched root"
+    assert sm.bridge_count() == 1, "bridge fold did not count"
+    # counter survives a maintainer restart (persisted in state.json)
+    sm2 = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                          "doc_id", "text", SPLITS, threshold=0.25)
+    assert sm2.bridge_count() == 1
+    # rebuild re-derives batch-exact assignments → drift counter resets
+    tbl.insert(spark.createDataFrame(
+        [(1, a), (2, b), (3, a + " " + b)], "doc_id long, text string"))
+    sm.rebuild()
+    assert sm.bridge_count() == 0
+
+
+def test_non_bridge_folds_do_not_count(spark, tmp_table_path):
+    docs = _docs(spark, n=100)
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS)
+    sm.assign_and_register(docs)
+    # exact copies match exactly ONE state root each — never a bridge
+    sm.assign_and_register(docs.withColumn("doc_id",
+                                           F.col("doc_id") + 10_000))
+    assert sm.bridge_count() == 0
+
+
+# --------------------------------------------------- state compaction
+def test_compact_state_folds_replays_and_preserves_assignments(
+        spark, tmp_table_path):
+    docs = _docs(spark, n=120)
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS)
+    sm.assign_and_register(docs)
+    sm.assign_and_register(docs)  # crash replay: byte-identical appends
+    sm.assign_and_register(docs.withColumn("doc_id",
+                                           F.col("doc_id") + 10_000))
+    before = {r["doc_id"]: (r["root"], r["split"])
+              for r in sm.assignments().collect()}
+    raw = spark.read.parquet(
+        os.path.join(tmp_table_path, "_split", "assignments",
+                     "gen-000000")).count()
+    assert raw > len(before), "replay should have appended duplicates"
+    sm.compact_state()
+    after = {r["doc_id"]: (r["root"], r["split"])
+             for r in sm.assignments().collect()}
+    assert after == before
+    compacted = spark.read.parquet(
+        sm.store.live("assignments")).count()
+    assert compacted == len(before), "compaction left duplicate rows"
+    # inheritance still works against the compacted generations
+    out = sm.assign_and_register(
+        docs.withColumn("doc_id", F.col("doc_id") + 20_000))
+    for r in out.select("doc_id", "split").collect():
+        assert r["split"] == before[r["doc_id"] - 20_000][1], \
+            "post-compact copy escaped its original's split"
+    # a restarted maintainer reads the compacted pointer
+    sm2 = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                          "doc_id", "text", SPLITS)
+    assert sm2.store.gens["content"] == sm.store.gens["content"]
+    assert sm2.assignments().count() == len(before) + docs.count()
+
+
+# ------------------------------------------------ id-type agnosticism
+def test_string_ids_supported_and_type_mismatch_rejected(
+        spark, tmp_table_path):
+    docs = _docs(spark, n=80).select(
+        F.concat(F.lit("doc-"), F.format_string("%05d", "doc_id"))
+        .alias("doc_id"), "text")
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS)
+    out = sm.assign_and_register(docs)
+    assert out.count() == 80
+    # id-ordered arrival (the documented contract): copy ids must sort
+    # AFTER their originals, or the copy's own id would become the new
+    # component root and re-hash the split — suffix, not prefix
+    copies = docs.withColumn(
+        "doc_id", F.concat(F.col("doc_id"), F.lit("-copy")))
+    got = {r["doc_id"]: r["split"]
+           for r in sm.assign_and_register(copies)
+           .select("doc_id", "split").collect()}
+    first = {r["doc_id"]: r["split"] for r in sm.assignments()
+             .filter(~F.col("doc_id").endswith("-copy")).collect()}
+    for k, split in got.items():
+        assert split == first[k.removesuffix("-copy")]
+    # a long-id batch against string-id state fails loudly, not silently
+    with pytest.raises(ValueError, match="ids"):
+        sm.assign_and_register(spark.createDataFrame(
+            [(1, "x")], "doc_id long, text string"))
+    # the captured type survives restart via state.json
+    sm2 = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                          "doc_id", "text", SPLITS)
+    assert sm2.store.load()["id_type"] == "string"
+
+
+# ------------------------------------------------- hot-group knob
+def test_max_band_rows_knob_keeps_components_connected(
+        spark, tmp_table_path):
+    """Capped band groups stay connected through bounded_self_pairs'
+    pivot rows, so the ASSIGNMENT is identical to the exact join."""
+    docs = _docs(spark, n=150)
+    tbl = _table(spark, tmp_table_path)
+    exact = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_a"),
+                            "doc_id", "text", SPLITS)
+    capped = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_b"),
+                             "doc_id", "text", SPLITS, max_band_rows=4)
+    a = {r["doc_id"]: r["split"] for r in
+         exact.assign_and_register(docs).select("doc_id",
+                                                "split").collect()}
+    b = {r["doc_id"]: r["split"] for r in
+         capped.assign_and_register(docs).select("doc_id",
+                                                 "split").collect()}
+    assert a == b
+
+
+# ------------------------------------------------- persist contract
+def test_assign_and_register_returns_pinned_frame(spark, tmp_table_path):
+    docs = _docs(spark, n=40)
+    tbl = _table(spark, tmp_table_path)
+    sm = SplitMaintainer(tbl, os.path.join(tmp_table_path, "_split"),
+                         "doc_id", "text", SPLITS)
+    out = sm.assign_and_register(docs)
+    assert sm._pin is not None and sm._pin.is_cached, \
+        "returned frame's parent must stay persisted for the caller"
+    assert out.count() == 40  # cheap re-read off the pin
+    sm.release()
+    assert sm._pin is None
+    # next fold releases the previous pin automatically
+    out2 = sm.assign_and_register(
+        docs.withColumn("doc_id", F.col("doc_id") + 1000))
+    pin2 = sm._pin
+    sm.assign_and_register(
+        docs.withColumn("doc_id", F.col("doc_id") + 2000))
+    assert not pin2.is_cached
+    assert out2 is not None
+    sm.release()
