@@ -22,8 +22,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from .timeline import (CLEAN, DATA_ACTIONS, LOGCOMPACTION, REPLACECOMMIT,
-                       RESTORE, ROLLBACK, Timeline)
+from .timeline import CLEAN, DATA_ACTIONS, LOGCOMPACTION, Timeline
 
 
 @dataclass
@@ -128,10 +127,7 @@ class FileSystemView:
     # ------------------------------------------------------------------ fold
     def _build(self) -> None:
         tl = self.timeline
-        rolled_back: set[str] = set()
-        for inst in tl.completed((ROLLBACK, RESTORE)):
-            md = tl.metadata(inst)
-            rolled_back.update(md.get("targets", []))
+        rolled_back = tl.rolled_back()
 
         deleted_slices: set[tuple[str, str, str]] = set()
         deleted_logs: set[str] = set()

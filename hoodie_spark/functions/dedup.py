@@ -27,11 +27,16 @@ corpus-wide.
 
 from __future__ import annotations
 
+import logging
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..frames import local_frame
 from .text import char_ngrams, tokens
+
+logger = logging.getLogger(__name__)
 
 __all__ = [
     "exact_dedup", "with_minhash", "minhash_candidate_pairs",
@@ -66,6 +71,13 @@ def _pin(df: DataFrame) -> DataFrame:
     """
     return df.persist()
 
+
+
+def _check_threshold(threshold: float) -> None:
+    """Pair operators take a similarity fraction in (0, 1]: above 1 no pair
+    can qualify, at or below 0 every pair would."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
     """Keep one row per distinct content (the one with the smallest id).
@@ -171,15 +183,12 @@ def bounded_self_pairs(keyed: DataFrame, key_cols: list[str], id_col: str,
     frame; only groups ABOVE the cap are collected (≤ n/cap rows).
     ``max_group_rows=None`` disables the guard entirely.
     """
-    import logging
-    import math
-
     hot = []
     if max_group_rows is not None:
         hot = (keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n"))
                .filter(F.col("__n") > max_group_rows).collect())
     if hot:
-        logging.getLogger(__name__).warning(
+        logger.warning(
             "bounded_self_pairs: splitting %d hot group(s) on %s "
             "(largest %d rows > cap %d) into salted sub-groups; cross-salt "
             "non-pivot pairs within those groups are skipped",
@@ -226,8 +235,6 @@ def min_sig_matches(threshold: float, num_hashes: int) -> int:
     """Smallest number of agreeing MinHash positions whose agreement
     fraction reaches ``threshold`` — integer compare on both engines, so a
     knife-edge float ratio can never flip the oracle gate."""
-    import math
-
     return int(math.ceil(threshold * num_hashes - 1e-9))
 
 
@@ -517,6 +524,7 @@ def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     where they are produced, the same discipline as sig_near_pairs'
     agreement gate.
     """
+    _check_threshold(threshold)
     rows_per_band = num_hashes // bands
     sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram,
                        with_size=True)
@@ -653,6 +661,7 @@ def edit_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     the moment the distance budget ``⌊(1-t)·max_len⌋`` is exhausted —
     O(budget·len) instead of O(len²) per verify.
     """
+    _check_threshold(threshold)
     rows_per_band = num_hashes // bands
     sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram)
     lens = df.select(F.col(id_col), F.length(text_col).alias("__tlen"))
@@ -1321,7 +1330,7 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     exact path going quadratic on the synthetic template corpus (PLANS
     round 10), which is precisely when the cap is worth paying.
     """
-    from .text import char_ngrams
+    _check_threshold(threshold)
 
     # Distinct-text grain (the same md5-as-content-identity convention as
     # jaccard_dedup_pairs): shingling, prefix selection, the posting join
@@ -1334,8 +1343,9 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     # shingle sets) without touching the arrays. Shingle DOCUMENT
     # frequency is preserved exactly — each distinct text's shingles
     # count with weight __n (its exact-copy count) — so prefix ordering
-    # and the max_prefix_df guard decide identically to the per-doc
-    # shape, and the pair set is bit-for-bit unchanged.
+    # and the max_prefix_df guard decide as in the per-doc shape. The
+    # pair set is unchanged, except that exact-copy pairs now bypass
+    # max_prefix_df: they come from the membership, not the posting join.
     members = _pin(df.select(F.col(id_col), F.md5(F.col(text_col)).alias("__ch"))
                    .filter(F.col("__ch").isNotNull()))
     grouped = (df.select(F.md5(F.col(text_col)).alias("__ch"),

@@ -168,13 +168,6 @@ def append_entries(table, entries: DataFrame) -> None:
     _write(table, entries, "precomputed")
 
 
-def append_from_written_files(table, stats: list[dict], instant: str) -> None:
-    """Register every key present in the commit's new BASE files."""
-    entries = entries_from_written_files(table, stats, instant)
-    if entries is not None:
-        _write(table, entries, instant)
-
-
 def append_removals(table, keys_df: DataFrame, instant: str) -> None:
     """Register 'R' entries for a delete batch (keys_df carries RECORD_KEY
     and PARTITION_PATH — partition may be null for global deletes)."""
@@ -230,9 +223,7 @@ def compact(table, retain_commits: int | None = None) -> int:
         if df is None:
             return 0
 
-        rolled_back: set[str] = set()
-        for inst in table.timeline.completed((tl.ROLLBACK, tl.RESTORE)):
-            rolled_back.update(table.timeline.metadata(inst).get("targets", []))
+        rolled_back = table.timeline.rolled_back()
         if rolled_back:
             df = df.filter(~F.col("instant").isin(*sorted(rolled_back)))
 
@@ -281,11 +272,7 @@ def lookup(table, view=None) -> DataFrame:
         return local_frame(spark, [], LOOKUP_SCHEMA)
     df = _read_entries(table)
     # entries written by rolled-back / restored-over instants never happened
-    from . import timeline as tl
-
-    rolled_back: set[str] = set()
-    for inst in table.timeline.completed((tl.ROLLBACK, tl.RESTORE)):
-        rolled_back.update(table.timeline.metadata(inst).get("targets", []))
+    rolled_back = table.timeline.rolled_back()
     if rolled_back:
         df = df.filter(~F.col("instant").isin(*sorted(rolled_back)))
     w = Window.partitionBy(RECORD_KEY, PARTITION_PATH).orderBy(

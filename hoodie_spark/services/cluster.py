@@ -17,12 +17,10 @@ so incremental semantics survive clustering."""
 from __future__ import annotations
 
 import math
-import uuid
-
-from pyspark.sql import functions as F
 
 from .. import timeline as tl
-from ..config import FILE_NAME, PARTITION_PATH, RECORD_KEY
+from ..config import RECORD_KEY
+from ..writer import CURVE
 
 
 def recent_partitions(table, target_partitions: int | None = None) -> list[str]:
@@ -96,74 +94,39 @@ def cluster(table, sort_cols: list[str] | None = None, partitions=None,
     them. Public layout-optimization design — beyond this reference
     snapshot, which only ships the linear sort.
 
-    The transaction BEGINS before the plan snapshot (writer._begin's
-    contract, same rule as compact()): a concurrent commit landing
-    between planning and begin would otherwise escape the conflict
-    baseline while being absent from the rewrite — its file group would
-    be marked replaced and the committed rows silently dropped."""
+    New files take the writer's one base-file layout: on a bucket-index
+    table each planned group is rewritten 1:1 onto its own bucket fid,
+    sorted ("sort within buckets", as in Hudi's bucket-index clustering —
+    merging groups would strand keys outside their hash bucket), so the
+    win there is layout, not small-file merging. Plans inside the writer's
+    transaction (see :meth:`~hoodie_spark.writer.WriteClient.transaction`)."""
     writer = table._writer
-    instant = writer._begin(tl.REPLACECOMMIT)
-    try:
+    with writer.transaction(tl.REPLACECOMMIT) as instant:
         plan = plan_clustering(table, partitions, small_file_limit,
                                plan_strategy, target_partitions)
         if len(plan) >= 2:
             plan = [sl for grp in pack_groups(table, plan) for sl in grp]
         if len(plan) < 2:
-            writer._abort_write(instant, [])
             return None
         target = (target_file_size
                   or table.write_config.clustering_target_file_size)
-        sort_cols = sort_cols or [RECORD_KEY]
+        order_cols = sort_cols or [RECORD_KEY]
         df = table.read_slices_base(plan)
-        total_bytes = sum(sl.base_file.size for sl in plan)
-        num_files = max(1, math.ceil(total_bytes / target))
-        prefix = uuid.uuid4().hex[:13]
-        from ..writer import BUCKET, KIND, base_file_name
         if layout != "linear":
             from .layout import with_curve_key
-            df = with_curve_key(df, sort_cols, layout, bits=curve_bits)
-            order_cols = ["__curve"]
-        else:
-            order_cols = list(sort_cols)
-        from ..config import IndexType
-        if table.write_config.index_type == IndexType.BUCKET:
-            # "sort within buckets": a bucket table's key→file-group hash IS the
-            # index, so clustering must never merge groups or mint planner
-            # uuids (that would strand every key outside its hash bucket and
-            # the next upsert would duplicate it — same rule as Hudi's
-            # bucket-index clustering). Each planned group rewrites 1:1 onto
-            # its own fid, sorted; the win is layout + delta folding, not
-            # small-file merging.
-            from ..index import bucket_fid_expr
-            fid = bucket_fid_expr(table.write_config.bucket_index_num_buckets)
-            arranged = (df.repartition(F.col(PARTITION_PATH), fid)
-                        .sortWithinPartitions(PARTITION_PATH, *order_cols)
-                        .drop("__curve")
-                        .withColumn(BUCKET, fid)
-                        .withColumn(FILE_NAME, base_file_name(F.col(BUCKET), instant))
-                        .withColumn(KIND, F.lit("base")))
-        else:
-            arranged = (df.repartitionByRange(num_files, F.col(PARTITION_PATH),
-                                              *[F.col(c) for c in order_cols])
-                        .sortWithinPartitions(PARTITION_PATH, *order_cols)
-                        .drop("__curve")
-                        .withColumn(BUCKET, F.concat(F.lit(prefix + "-"),
-                                                     F.spark_partition_id().cast("string")))
-                        .withColumn(FILE_NAME, base_file_name(F.col(BUCKET), instant))
-                        .withColumn(KIND, F.lit("base")))
-        write_df = writer._finalize_cols(arranged)
-        stats = writer._write_files(write_df, instant, already_partitioned=True)
-        writer._index_written(stats, instant)  # keys moved to new file groups
+            df = with_curve_key(df, order_cols, layout, bits=curve_bits,
+                                key_col=CURVE)
+            order_cols = [CURVE]
+        total_bytes = sum(sl.base_file.size for sl in plan)
+        stats = writer._write_new_base_files(
+            df, instant, max(1, math.ceil(total_bytes / target)),
+            order_cols=order_cols, restamp=False)
         replaced: dict[str, list[str]] = {}
         for sl in plan:
             replaced.setdefault(sl.partition, []).append(sl.file_id)
         return writer._commit(instant, tl.REPLACECOMMIT, "cluster", stats,
-                              replaced=replaced).instant
-
-
-    except BaseException:
-        writer._hb_abandon(instant)
-        raise
+                              replaced=replaced,
+                              index_fn=writer._index_fn(stats, instant)).instant
 
 
 def rescale_buckets(table, new_num_buckets: int):

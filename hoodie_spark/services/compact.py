@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import timeline as tl
-from ..config import FILE_NAME, OPERATION, PARTITION_PATH
+from ..config import OPERATION
+from ..writer import KIND, emptied_groups
 
 
 class CompactionStrategy:
@@ -81,20 +82,12 @@ def schedule_compaction(table, strategy=None, **kw) -> list:
 
 def compact(table, strategy=None, **kw):
     """Plan + execute. Returns the commit instant or None if nothing to do.
-
-    The transaction BEGINS before the plan snapshot (writer._begin's
-    contract): a concurrent delta commit landing between planning and
-    begin would otherwise sort at-or-below the conflict baseline while
-    being absent from the planned merge — the compacted base would then
-    shadow that committed delta (its base_instant names the old slice),
-    silently dropping it. Begun-first, any such commit is > baseline on
-    the same file group and the conflict check aborts this compaction."""
+    Plans inside the writer's transaction (see
+    :meth:`~hoodie_spark.writer.WriteClient.transaction`)."""
     writer = table._writer
-    instant = writer._begin(tl.COMMIT)
-    try:
+    with writer.transaction(tl.COMMIT) as instant:
         plan = schedule_compaction(table, strategy, **kw)
         if not plan:
-            writer._abort_write(instant, [])
             return None
         view = table.view()
         base = table.read_slices_base(plan).withColumn(OPERATION, F.lit("I"))
@@ -102,28 +95,15 @@ def compact(table, strategy=None, **kw):
                        for lf in sl.log_files_as_of(None)]
         merged = table._reader._resolve(base.unionByName(
             table.read_delta_files(delta_paths))).drop(OPERATION)
-        from ..writer import BUCKET, KIND, base_file_name
-        write_df = (merged
-                    .withColumn(BUCKET, F.split(F.col(FILE_NAME), "_").getItem(0))
-                    .withColumn(FILE_NAME, base_file_name(
-                        F.split(F.col(FILE_NAME), "_").getItem(0), instant))
-                    .withColumn(KIND, F.lit("base")))
-        write_df = writer._finalize_cols(write_df)
+        write_df = writer._finalize_cols(
+            writer._keep_file_group(merged, instant)
+            .withColumn(KIND, F.lit("base")))
         stats = writer._write_files(write_df, instant, sort_cols=None)
-        # a slice whose deltas deleted every row compacts to nothing — mark the
-        # group replaced or the old (pre-delete) base would stay latest
-        written = {(s["partition"], s["file_id"]) for s in stats}
-        emptied: dict[str, list[str]] = {}
-        for sl in plan:
-            if (sl.partition, sl.file_id) not in written:
-                emptied.setdefault(sl.partition, []).append(sl.file_id)
+        # a slice whose deltas deleted every row compacts to nothing
+        emptied = emptied_groups([(sl.partition, sl.file_id) for sl in plan],
+                                 stats)
         return writer._commit(instant, tl.COMMIT, "compact", stats,
                               replaced=emptied or None).instant
-
-
-    except BaseException:
-        writer._hb_abandon(instant)
-        raise
 
 
 def logcompact(table, min_log_files: int = 3, partitions=None):
@@ -140,32 +120,23 @@ def logcompact(table, min_log_files: int = 3, partitions=None):
     this instant skip them via the manifest (``LogFile.compacted_at``).
 
     Returns the logcompaction instant, or None if no slice qualifies.
-    Begins the transaction BEFORE the plan snapshot — same
-    plan-after-begin rule as full compaction (see compact()).
+    Plans inside the writer's transaction, like :func:`compact`.
     """
     writer = table._writer
-    instant = writer._begin(tl.LOGCOMPACTION)
-    try:
+    with writer.transaction(tl.LOGCOMPACTION) as instant:
         view = table.view()
         plan = [sl for sl in view.latest_slices(partitions=partitions)
                 if sl.base_file is not None
                 and len(sl.log_files_as_of(None)) >= min_log_files]
         if not plan:
-            writer._abort_write(instant, [])
             return None
         targets = {(sl.partition, sl.file_id): sl for sl in plan}
         delta_paths = [view.abs(lf.path) for sl in plan
                        for lf in sl.log_files_as_of(None)]
         deltas = table.read_delta_files(delta_paths)
-        from ..writer import BUCKET, KIND
-        fid_col = F.split(F.col(FILE_NAME), "_").getItem(0)
-        write_df = (deltas
-                    .withColumn(BUCKET, fid_col)
-                    .withColumn(FILE_NAME,
-                                F.concat(fid_col,
-                                         F.lit(f"_{instant}.delta.parquet")))
-                    .withColumn(KIND, F.lit("delta")))
-        write_df = writer._finalize_cols(write_df)
+        write_df = writer._finalize_cols(
+            writer._keep_file_group(deltas, instant, delta=True)
+            .withColumn(KIND, F.lit("delta")))
         stats = writer._write_files(write_df, instant, sort_cols=None)
         for s in stats:
             sl = targets.get((s["partition"], s["file_id"]))
@@ -174,6 +145,3 @@ def logcompact(table, min_log_files: int = 3, partitions=None):
         return writer._commit(
             instant, tl.LOGCOMPACTION, "logcompact", stats,
             extra={"compacted_log_files": compacted}).instant
-    except BaseException:
-        writer._hb_abandon(instant)
-        raise

@@ -140,8 +140,7 @@ def rollback(table, instant_ts: str):
     equally restricts rollback of non-latest commits unless cascading —
     use restore() for that."""
     timeline = table.timeline
-    already = {t for i in timeline.completed((tl.ROLLBACK, tl.RESTORE))
-               for t in timeline.metadata(i).get("targets", [])}
+    already = timeline.rolled_back()
     if instant_ts in already:
         raise ValueError(f"instant {instant_ts} was already rolled back")
     pending = [i for i in timeline.pending() if i.timestamp == instant_ts]

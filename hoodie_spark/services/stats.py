@@ -20,7 +20,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from pyspark.sql import functions as F
+
+from ..writer import expr_min_max
 
 
 def _dir(table) -> str:
@@ -75,26 +76,8 @@ def analyze(table, columns: list[str] | None = None,
             targets.append(bf.path)
     if not targets:
         return 0
-    df = (table.spark.read
-          .parquet(*[os.path.join(table.base_path, p) for p in targets])
-          .withColumn("__f", F.input_file_name()))
-    aggs = []
-    for alias, expr in want.items():
-        aggs += [F.min(F.expr(expr)).alias(f"mn_{alias}"),
-                 F.max(F.expr(expr)).alias(f"mx_{alias}")]
-    from ..storage import relpath_from_uri
-    base = table.base_path
-    out: dict[str, dict] = {}
-    for r in df.groupBy("__f").agg(*aggs).collect():
-        cs = {}
-        for alias in want:
-            mn, mx = r[f"mn_{alias}"], r[f"mx_{alias}"]
-            if mn is None or isinstance(mn, bool) or \
-                    not isinstance(mn, (int, float, str)):
-                continue
-            cs[alias] = [mn, mx]
-        if cs:
-            out[relpath_from_uri(r["__f"], base)] = cs
+    out = {p: cs for p, cs in expr_min_max(table, targets, want).items()
+           if cs}
     if not out:
         return 0
     from .. import storage

@@ -22,10 +22,13 @@ FSUtils-equivalent boundary an object-store deployment swaps.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
 from dataclasses import dataclass
+
+logger = logging.getLogger(__name__)
 
 # Actions (HoodieTimeline.java:46-57)
 COMMIT = "commit"
@@ -196,6 +199,12 @@ class Timeline:
             if rec["timestamp"] == instant.timestamp and rec["action"] == instant.action:
                 return rec["metadata"]
         raise FileNotFoundError(f"no metadata for {instant}")
+
+    def rolled_back(self) -> set[str]:
+        """Instants undone by a completed rollback or restored over by a
+        completed restore: their writes never happened."""
+        return {t for i in self.completed((ROLLBACK, RESTORE))
+                for t in self.metadata(i).get("targets", [])}
 
     def last_completed(self, actions: tuple[str, ...] = DATA_ACTIONS) -> Instant | None:
         insts = self.completed(actions)
@@ -428,9 +437,7 @@ class LockProvider:
         try:
             storage.ATOMIC.delete_if_exists(self.path)
         except Exception as e:  # pragma: no cover - transient store errors
-            import logging
-
-            logging.getLogger(__name__).warning(
+            logger.warning(
                 "lock release failed for %s (%s); lock left for expiry reclamation",
                 self.path, e)
         return False

@@ -32,11 +32,12 @@ Spark-first execution model (replaces the reference's RDD pipeline):
 
 from __future__ import annotations
 
+import logging
 import math
 import os
-import shutil
 import urllib.parse
 import uuid
+from contextlib import contextmanager
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
@@ -46,12 +47,13 @@ from . import timeline as tl
 from .config import (COMMIT_SEQNO, COMMIT_TIME, FILE_NAME, IS_DELETED,
                      META_COLUMNS, NO_PARTITION, OPERATION, PARTITION_PATH,
                      RECORD_KEY, BootstrapMode, IndexType, MergePolicy,
-                     TableType, WriteConcurrencyMode, WriteConfig,
-                     WriteOperation)
+                     TableType, WriteConcurrencyMode, WriteOperation)
 from .frames import local_frame
 from .fsview import FileSystemView
 from .index import tag_location
 from .keygen import with_keys
+
+logger = logging.getLogger(__name__)
 
 # internal shuffle/bucketing columns — never stored
 PP = "__pp"
@@ -61,6 +63,7 @@ OP = "__op"
 ORD = "__ord"
 INCOMING = "__incoming"
 HARD = "__hard"  # hard delete: EmptyHoodieRecordPayload.java — wins regardless of ordering
+CURVE = "__curve"  # clustering's space-filling-curve key: orders rows, never stored
 WRITE_TOKEN = "0-0-0"
 
 
@@ -134,8 +137,7 @@ class WriteClient:
         sized for rows it no longer has."""
         wcfg = self.table.write_config
         self._ensure_index_ready()
-        instant = self._begin(tl.COMMIT)
-        try:
+        with self.transaction(tl.COMMIT) as instant:
             prepared = self._prepare(df)
             pinned = wcfg.combine_before_insert
             if pinned:
@@ -145,10 +147,6 @@ class WriteClient:
                 if n == 0:
                     return self._commit(instant, tl.COMMIT, WriteOperation.BULK_INSERT, [])
                 if wcfg.index_type == IndexType.BUCKET:
-                    # bucket-index tables are bucketed from the FIRST write:
-                    # later tag-free upserts rely on every key living in its
-                    # hash bucket's file group.
-                    #
                     # Initial-load-only guard (Hudi restricts bucket bulk_insert
                     # the same way): bucket fids are deterministic, so a second
                     # bulk_insert into a partition with live groups would write
@@ -169,42 +167,15 @@ class WriteClient:
                             "have live file groups that deterministic bucket "
                             "fids would shadow — use upsert()/insert() for "
                             "follow-on batches")
-                    from .index import bucket_fid_expr
-                    fid = bucket_fid_expr(wcfg.bucket_index_num_buckets)
-                    arranged = (prepared
-                                .repartition(F.col(PARTITION_PATH), fid)
-                                .withColumn(BUCKET, fid))
-                    write_df = self._stamp_meta(arranged, instant) \
-                                   .withColumn(KIND, F.lit("base"))
-                    stats = self._write_files(write_df, instant,
-                                              already_partitioned=True,
-                                              sort_cols=[RECORD_KEY])
-                    return self._commit(instant, tl.COMMIT,
-                                        WriteOperation.BULK_INSERT, stats,
-                                        index_fn=self._index_fn(stats, instant))
-                rpf = wcfg.records_per_file()
-                num_files = max(1, math.ceil(n / rpf))
-                prefix = uuid.uuid4().hex[:13]
-                if sort_mode == SortMode.GLOBAL_SORT:
-                    arranged = prepared.repartitionByRange(num_files, F.col(PARTITION_PATH), F.col(RECORD_KEY))
-                elif sort_mode == SortMode.PARTITION_SORT:
-                    arranged = prepared.repartition(num_files, F.col(PARTITION_PATH))
-                else:
-                    arranged = prepared.repartition(num_files)
-                arranged = arranged.withColumn(
-                    BUCKET, F.concat(F.lit(prefix + "-"), F.spark_partition_id().cast("string")))
-                write_df = self._stamp_meta(arranged, instant).withColumn(KIND, F.lit("base"))
-                sort_cols = [RECORD_KEY] if sort_mode != SortMode.NONE else None
-                stats = self._write_files(write_df, instant, already_partitioned=True, sort_cols=sort_cols)
+                num_files = max(1, math.ceil(n / wcfg.records_per_file()))
+                stats = self._write_new_base_files(prepared, instant, num_files,
+                                                   sort_mode=sort_mode)
                 return self._commit(instant, tl.COMMIT, WriteOperation.BULK_INSERT,
                                     stats, index_fn=self._index_fn(stats, instant))
             finally:
                 if pinned:
                     prepared.unpersist()
 
-        except BaseException:
-            self._hb_abandon(instant)
-            raise
     def insert(self, df: DataFrame) -> WriteResult:
         """SparkRDDWriteClient.java:172 — insert with small-file packing, no
         index lookup.
@@ -233,16 +204,11 @@ class WriteClient:
 
     def delete_partitions(self, partitions: list[str]) -> WriteResult:
         """SparkRDDWriteClient.java:255 — replacecommit, metadata-only."""
-        instant = self._begin(tl.REPLACECOMMIT)
-        try:
-            view = self.table.view()
-            replaced = view.live_group_ids(partitions=partitions)
+        with self.transaction(tl.REPLACECOMMIT) as instant:
+            replaced = self.table.view().live_group_ids(partitions=partitions)
             return self._commit(instant, tl.REPLACECOMMIT, WriteOperation.DELETE_PARTITION,
                                 [], replaced=replaced)
 
-        except BaseException:
-            self._hb_abandon(instant)
-            raise
     def insert_overwrite(self, df: DataFrame) -> WriteResult:
         """SparkRDDWriteClient.java:198 — replace file groups in the
         partitions touched by ``df`` (HoodieReplaceCommitMetadata).
@@ -279,8 +245,7 @@ class WriteClient:
             res.operation = WriteOperation.BOOTSTRAP
             return res
 
-        instant = self._begin(tl.COMMIT)
-        try:
+        with self.transaction(tl.COMMIT) as instant:
             stats: list[dict] = []
             for root, _dirs, files in os.walk(source_dir):
                 for fn in sorted(files):
@@ -302,45 +267,67 @@ class WriteClient:
                                 extra={"bootstrap_mode": mode,
                                        "source_dir": os.path.abspath(source_dir)})
 
+    # ------------------------------------------------------------- internals
+    @contextmanager
+    def transaction(self, action: str):
+        """The one write lifecycle every operation and table service runs
+        (the reference's TransactionManager around a commit action
+        executor): begin → plan → write → check conflicts → validate →
+        index → publish, or abandon. Yields the instant.
+
+        * **Begin before the plan snapshot.** The instant and its conflict
+          baseline are taken on entry, so the block snapshots the view,
+          tags, profiles or plans its table service AFTER the baseline: a
+          commit that completes while the block plans sorts above it and
+          :meth:`_check_conflicts` sees it. Planned first, such a commit
+          would escape the check — compaction would shadow a delta it
+          never merged, clustering would replace a group and drop rows it
+          never read.
+        * **Abandon on failure.** Any exception leaving the block cancels
+          the heartbeat refresher and re-raises; the beat then goes stale
+          and reclamation (lazy or eager) rolls the pending instant and its
+          partial files back. After :meth:`_abort_write` (a conflict, a
+          failed validator) this is a no-op. A block that returns without
+          publishing (a table service with nothing to do) wrote nothing:
+          its instant is removed on the spot.
+        * **Index only after the conflict check.** Record-index entries
+          reach storage only through ``_commit(index_fn=...)``, after the
+          conflict check and the pre-commit validators, so an aborted
+          instant never leaves entries that would make live keys look
+          moved or removed."""
+        instant = self._begin(action)
+        try:
+            yield instant
         except BaseException:
             self._hb_abandon(instant)
             raise
-    # ------------------------------------------------------------- internals
+        if instant in self._hb_cancel:  # publish and abort both stop the beat
+            self._abort_write(instant, [])
+
     def _begin(self, action: str) -> str:
-        """Start the transaction. MUST run before the file-system view
-        snapshot / index tagging / workload profiling: the baseline recorded
-        here is what _check_conflicts compares against, so any commit that
-        completes after planning starts must sort above it (the reference's
-        TransactionManager begins the transaction before the write is
-        planned for the same reason)."""
+        """Start the transaction (see :meth:`transaction`): the conflict
+        baseline, a fresh beat, the requested/inflight instant, then the
+        background refresher."""
         if self.table.write_config.failed_writes_policy == "eager":
             from .services.rollback import rollback_failed_writes
             rollback_failed_writes(self.table)
         instant = self.table.timeline.new_instant_time()
         last = self.table.timeline.last_completed()
         self._txn_baseline[instant] = last.timestamp if last else ""
-        # heartbeat FIRST: a pending instant must never be visible without
-        # a live beat, or a concurrent eager reclaimer in the gap would
-        # treat this brand-new write as a dead one and roll it back. A
-        # background refresher then keeps it live for the write's whole
-        # duration — Spark jobs routinely outlast the expiry on a loaded
-        # cluster, and a stale beat mid-write is a reclaimable-looking
-        # LIVE write (HoodieHeartbeatClient does the same)
+        # beat FIRST: a pending instant must never be visible without a
+        # live beat, or a concurrent eager reclaimer in the gap would treat
+        # this brand-new write as a dead one and roll it back. The
+        # refresher (HoodieHeartbeatClient's timer: Spark jobs routinely
+        # outlast the expiry) starts only once the instant exists, so a
+        # failed transition leaves a beat that goes stale, never a
+        # refresher keeping a half-created instant live
         hb = tl.Heartbeat(self.table.base_path)
         hb.refresh(instant)
+        self.table.timeline.create_requested(action, instant)
+        self.table.timeline.transition_inflight(action, instant)
         expiry = self.table.write_config.heartbeat_expiry_s
         self._hb_cancel[instant] = hb.auto_refresh(
             instant, max(0.05, expiry / 4))
-        try:
-            self.table.timeline.create_requested(action, instant)
-            self.table.timeline.transition_inflight(action, instant)
-        except BaseException:
-            # the instant never escapes _begin, so no caller's except
-            # block will _hb_abandon it — without this, the refresher
-            # keeps a possibly-created pending instant heartbeat-live
-            # (unreclaimable) for the driver's lifetime
-            self._hb_abandon(instant)
-            raise
         return instant
 
     def _hb_abandon(self, instant: str) -> None:
@@ -358,9 +345,7 @@ class WriteClient:
         """Cancel the background refresher, THEN remove the beat file —
         the other order lets a late beat resurrect a published/aborted
         instant's heartbeat and block reclamation forever."""
-        cancel = self._hb_cancel.pop(instant, None)
-        if cancel is not None:
-            cancel()
+        self._hb_abandon(instant)
         tl.Heartbeat(self.table.base_path).stop(instant)
 
     def _ensure_index_ready(self) -> None:
@@ -372,16 +357,14 @@ class WriteClient:
             record_index.ensure_initialized(self.table)
 
     def _index_fn(self, stats: list[dict], instant: str, dels=None):
-        """Record-index maintenance closure, run by _commit AFTER the OCC
-        conflict check (inside the lock): an aborted instant must never
-        leave index entries behind — its 'R' rows would make still-live keys
-        look removed and re-tag as inserts (duplicates).
-
-        The entry DataFrame is computed AND materialized here, before the
-        lock is taken: the expensive Spark jobs (reading the just-written
-        base files, probing the delete batch) run lock-free; inside the lock
-        only the parquet append remains, keeping lock hold time short for
-        concurrent writers (lock_timeout_s)."""
+        """Record-index upkeep for ``_commit(index_fn=...)``: entries for
+        the keys in this commit's new base files, plus 'R' entries for
+        ``dels``. The entry DataFrame is computed AND materialized here,
+        before the lock is taken: the expensive Spark jobs (reading the
+        just-written base files, probing the delete batch) run lock-free;
+        inside the lock only the parquet append remains, keeping lock hold
+        time short for concurrent writers (lock_timeout_s). ``_commit``
+        releases the cached entries on every way out."""
         if not self.table.write_config.record_index:
             return None
         from . import record_index
@@ -394,50 +377,41 @@ class WriteClient:
         has_dels = dels is not None and bool(dels.limit(1).count())
 
         def fn():
-            try:
-                if entries is not None:
-                    record_index.append_entries(self.table, entries)
-            finally:
-                if entries is not None:
-                    entries.unpersist()
+            if entries is not None:
+                record_index.append_entries(self.table, entries)
             if has_dels:
                 record_index.append_removals(self.table, dels, instant)
 
-        fn.cleanup = (entries.unpersist if entries is not None else None)
+        fn.cleanup = entries.unpersist if entries is not None else None
         return fn
 
     def _commit(self, instant: str, action: str, operation: str, stats: list[dict],
                 replaced: dict[str, list[str]] | None = None,
                 extra: dict | None = None, index_fn=None) -> WriteResult:
+        """Check conflicts (inside the table lock under OCC), then
+        validate, index and publish (:meth:`_do_commit`)."""
         # re-arm before the commit critical section: the Spark jobs between
         # _begin and here can outlast the expiry on a loaded cluster, and a
         # stale beat would make this LIVE write look reclaimable
         tl.Heartbeat(self.table.base_path).refresh(instant)
-        if self.table.write_config.concurrency_mode == WriteConcurrencyMode.OPTIMISTIC:
-            from .timeline import LockProvider
+        try:
+            if self.table.write_config.concurrency_mode == WriteConcurrencyMode.OPTIMISTIC:
+                from .timeline import LockProvider
 
-            # any exit before index_fn() ran (conflict abort, lock timeout,
-            # commit error) must release the pre-lock-materialized index
-            # entries or the cached DataFrame leaks for the session lifetime
-            invoked = False
-            try:
                 with LockProvider(self.table.base_path,
                                   self.table.write_config.lock_timeout_s,
                                   self.table.write_config.lock_expiry_s):
                     self._check_conflicts(instant, stats, replaced)
-                    if index_fn is not None:
-                        invoked = True
-                        index_fn()
                     return self._do_commit(instant, action, operation, stats,
-                                           replaced, extra)
-            except BaseException:
-                cleanup = getattr(index_fn, "cleanup", None)
-                if not invoked and cleanup is not None:
-                    cleanup()
-                raise
-        if index_fn is not None:
-            index_fn()
-        return self._do_commit(instant, action, operation, stats, replaced, extra)
+                                           replaced, extra, index_fn)
+            return self._do_commit(instant, action, operation, stats,
+                                   replaced, extra, index_fn)
+        finally:
+            # any way out (published, conflict abort, lock timeout, failed
+            # validator) releases the pre-lock-materialized index entries,
+            # or the cached DataFrame leaks for the session lifetime
+            if getattr(index_fn, "cleanup", None) is not None:
+                index_fn.cleanup()
 
     def _check_conflicts(self, instant: str, stats: list[dict],
                          replaced: dict[str, list[str]] | None) -> None:
@@ -489,7 +463,7 @@ class WriteClient:
     def _do_commit(self, instant: str, action: str, operation: str,
                    stats: list[dict],
                    replaced: dict[str, list[str]] | None = None,
-                   extra: dict | None = None) -> WriteResult:
+                   extra: dict | None = None, index_fn=None) -> WriteResult:
         total_bytes = sum(s.get("size", 0) for s in stats)
         total_recs = sum(s.get("num_records", 0) for s in stats)
         merged_extra = dict(self.commit_extra)
@@ -518,6 +492,8 @@ class WriteClient:
             except BaseException:
                 self._abort_write(instant, stats)
                 raise
+        if index_fn is not None:
+            index_fn()
         self.table.timeline.complete(action, instant, meta)
         self._stop_heartbeat(instant)
         self.table.save_properties()
@@ -542,10 +518,9 @@ class WriteClient:
             secondary_index.append_entries_for_stats(self.table, stats,
                                                      instant)
         except Exception as e:  # noqa: BLE001
-            import logging
             for c in cols:
                 secondary_index.drop_index(self.table, c)
-            logging.getLogger(__name__).warning(
+            logger.warning(
                 "secondary index maintenance failed (%s); dropped indexes "
                 "%s — recreate with create_index()", e, cols)
 
@@ -567,8 +542,7 @@ class WriteClient:
             except Exception:
                 if self.table.write_config.callback_on_commit_error == "raise":
                     raise
-                import logging
-                logging.getLogger(__name__).warning(
+                logger.warning(
                     "commit callback %r failed for %s", cb, instant,
                     exc_info=True)
 
@@ -627,7 +601,8 @@ class WriteClient:
     def _finalize_cols(self, df: DataFrame) -> DataFrame:
         data_cols = [n for n, _ in self.table.data_columns()]
         keep = META_COLUMNS + data_cols + [c for c in (OPERATION,) if c in df.columns]
-        extras = [c for c in (KIND, BUCKET, OP, ORD, INCOMING, HARD) if c in df.columns]
+        extras = [c for c in (KIND, BUCKET, OP, ORD, INCOMING, HARD, CURVE)
+                  if c in df.columns]
         out = df.select(*keep, *extras)
         return out.withColumn(
             PP, F.when(F.col(PARTITION_PATH) == "", F.lit(NO_PARTITION))
@@ -644,11 +619,8 @@ class WriteClient:
         force_global = (operation == WriteOperation.DELETE
                         and not partition_resolvable(df, cfg))
         self._ensure_index_ready()
-        # begin the txn BEFORE the view snapshot + tagging + profiling: a
-        # commit landing during planning must be above the OCC baseline
         action = tl.DELTACOMMIT if is_mor else tl.COMMIT
-        instant = self._begin(action)
-        try:
+        with self.transaction(action) as instant:
             prepared = self._prepare(df).withColumn(ORD, self._ord_col(df))
             if operation == WriteOperation.DELETE:
                 prepared = prepared.withColumn(OP, F.lit("D")).withColumn(HARD, F.lit(1))
@@ -756,9 +728,6 @@ class WriteClient:
                 if pinned:
                     tagged.unpersist()
 
-        except BaseException:
-            self._hb_abandon(instant)
-            raise
     def _dedup_keep_op(self, df: DataFrame) -> DataFrame:
         keys = [RECORD_KEY] if self.table.global_index else [PARTITION_PATH, RECORD_KEY]
         w = Window.partitionBy(*keys).orderBy(F.desc_nulls_last(ORD), F.desc("__mono"))
@@ -826,7 +795,7 @@ class WriteClient:
                      packed.select(PARTITION_PATH, BUCKET).distinct().collect()]
         slices = view.slices_for_groups(set(affected))
         old = self.table.read_slices_base(slices)
-        old = (old.withColumn(BUCKET, F.split(F.col(FILE_NAME), "_").getItem(0))
+        old = (self._keep_file_group(old, instant)
                   .withColumn(ORD, self._ord_col(old))
                   .withColumn(OP, F.lit("O"))
                   .withColumn(INCOMING, F.lit(0))
@@ -835,8 +804,7 @@ class WriteClient:
                           .drop("_target_file_id", "_target_pp", "_target_base_instant",
                                 "__is_new")
         incoming = self._stamp_meta(incoming.withColumn(INCOMING, F.lit(1)), instant)
-        old = self._finalize_cols(old).withColumn(
-            FILE_NAME, base_file_name(F.col(BUCKET), instant))
+        old = self._finalize_cols(old)
 
         merged = self._merge(old, incoming)
         new_stamped = self._stamp_meta(new_rows.filter(F.col(OP) != "D"), instant)
@@ -846,14 +814,7 @@ class WriteClient:
         for s in stats:
             s["num_updates"] = affected_updates.get(
                 (s["partition"], s["file_id"]), 0)
-        # a rewrite that produced no rows leaves no file — mark the group
-        # replaced so the old slice doesn't stay latest (full-group delete)
-        written = {(s["partition"], s["file_id"]) for s in stats}
-        emptied: dict[str, list[str]] = {}
-        for pp, fid in affected:
-            if (pp, fid) not in written:
-                emptied.setdefault(pp, []).append(fid)
-        return stats, emptied
+        return stats, emptied_groups(affected, stats)
 
     def _merge(self, old: DataFrame, incoming: DataFrame) -> DataFrame:
         """Payload resolution (HoodieRecordPayload.combineAndGetUpdateValue).
@@ -932,49 +893,29 @@ class WriteClient:
 
     # ------------------------------------------------------------- overwrite
     def _overwrite(self, df: DataFrame, operation: str) -> WriteResult:
+        wcfg = self.table.write_config
         self._ensure_index_ready()
-        instant = self._begin(tl.REPLACECOMMIT)
-        try:
+        with self.transaction(tl.REPLACECOMMIT) as instant:
             prepared = self._prepare(df)
             # cached across the sizing count and the write only when the
             # combine dedup ran (same measured trade as bulk_insert: the
             # cache build costs more than the column-pruned count it saves
             # on the plain projection shape)
-            pinned = self.table.write_config.combine_before_insert
+            pinned = wcfg.combine_before_insert
             if pinned:
                 prepared = self._dedup(prepared).persist()
             try:
                 n = prepared.count()
                 view = self.table.view()
                 stats: list[dict] = []
-                touched: list[str] = []
                 if n > 0:
-                    if self.table.write_config.index_type == IndexType.BUCKET:
-                        # overwrites must stay on the bucket layout: the key→
-                        # file-group hash IS the index, so replacement groups
-                        # carry bucket fids, never planner uuids
-                        from .index import bucket_fid_expr
-                        fid = bucket_fid_expr(
-                            self.table.write_config.bucket_index_num_buckets)
-                        arranged = (prepared
-                                    .repartition(F.col(PARTITION_PATH), fid)
-                                    .withColumn(BUCKET, fid))
-                    else:
-                        rpf = self.table.write_config.records_per_file()
-                        num_files = max(1, math.ceil(n / rpf))
-                        prefix = uuid.uuid4().hex[:13]
-                        arranged = (prepared
-                                    .repartitionByRange(num_files, F.col(PARTITION_PATH), F.col(RECORD_KEY))
-                                    .withColumn(BUCKET, F.concat(F.lit(prefix + "-"),
-                                                                 F.spark_partition_id().cast("string"))))
-                    write_df = self._stamp_meta(arranged, instant).withColumn(KIND, F.lit("base"))
-                    stats = self._write_files(write_df, instant, already_partitioned=True,
-                                              sort_cols=[RECORD_KEY])
-                    touched = sorted({s["partition"] for s in stats})
+                    num_files = max(1, math.ceil(n / wcfg.records_per_file()))
+                    stats = self._write_new_base_files(prepared, instant, num_files)
                 if operation == WriteOperation.INSERT_OVERWRITE_TABLE:
                     replaced = view.live_group_ids()
                 else:
-                    replaced = view.live_group_ids(partitions=touched)
+                    replaced = view.live_group_ids(
+                        partitions=sorted({s["partition"] for s in stats}))
                 return self._commit(instant, tl.REPLACECOMMIT, operation, stats,
                                     replaced=replaced,
                                     index_fn=self._index_fn(stats, instant))
@@ -982,17 +923,64 @@ class WriteClient:
                 if pinned:
                     prepared.unpersist()
 
-        except BaseException:
-            self._hb_abandon(instant)
-            raise
-    # ------------------------------------------------------- record index
-    def _index_written(self, stats: list[dict], instant: str) -> None:
-        """Maintain the record-level index from the just-written base files
-        (opt-in). Ground truth comes from storage, so the index can't drift."""
-        if not self.table.write_config.record_index:
-            return
-        from . import record_index
-        record_index.append_from_written_files(self.table, stats, instant)
+    # ------------------------------------------------------- new file layout
+    def _write_new_base_files(self, df: DataFrame, instant: str, num_files: int,
+                              order_cols=(RECORD_KEY,),
+                              sort_mode: str = SortMode.GLOBAL_SORT,
+                              restamp: bool = True) -> list[dict]:
+        """The one layout for new base files (bulk_insert, overwrites,
+        clustering), sorted by ``order_cols`` within each file.
+
+        With a bucket index: one file per (partition, hash bucket), named by
+        the bucket fid — the key → file-group hash IS the index, so every
+        write, from the first, keeps each key in its hash bucket's group
+        (tag-free upserts rely on it) and never mints planner ids.
+        Otherwise ``num_files`` Spark partitions, range-partitioned by
+        (partition, *order_cols) under GLOBAL_SORT (hash by partition under
+        PARTITION_SORT, round-robin and unsorted under NONE), each written
+        as one file named by a fresh prefix plus its Spark partition id.
+
+        ``restamp=False`` keeps each row's commit meta columns: clustering
+        moves records, it does not re-commit them, so incremental reads
+        are unaffected."""
+        wcfg = self.table.write_config
+        bucketed = wcfg.index_type == IndexType.BUCKET
+        if bucketed:
+            from .index import bucket_fid_expr
+            fid = bucket_fid_expr(wcfg.bucket_index_num_buckets)
+            arranged = (df.repartition(F.col(PARTITION_PATH), fid)
+                        .withColumn(BUCKET, fid))
+        else:
+            if sort_mode == SortMode.GLOBAL_SORT:
+                spread = df.repartitionByRange(
+                    num_files, F.col(PARTITION_PATH),
+                    *[F.col(c) for c in order_cols])
+            elif sort_mode == SortMode.PARTITION_SORT:
+                spread = df.repartition(num_files, F.col(PARTITION_PATH))
+            else:
+                spread = df.repartition(num_files)
+            prefix = uuid.uuid4().hex[:13]
+            arranged = spread.withColumn(BUCKET, F.concat(
+                F.lit(prefix + "-"), F.spark_partition_id().cast("string")))
+        if restamp:
+            write_df = self._stamp_meta(arranged, instant)
+        else:
+            write_df = self._finalize_cols(arranged.withColumn(
+                FILE_NAME, base_file_name(F.col(BUCKET), instant)))
+        sort_cols = list(order_cols) \
+            if bucketed or sort_mode != SortMode.NONE else None
+        return self._write_files(write_df.withColumn(KIND, F.lit("base")),
+                                 instant, already_partitioned=True,
+                                 sort_cols=sort_cols)
+
+    def _keep_file_group(self, df: DataFrame, instant: str,
+                         delta: bool = False) -> DataFrame:
+        """In-place rewrite (COW merge, compaction, log compaction): each
+        row keeps the file group its current file belongs to and is named
+        for ``instant``."""
+        df = df.withColumn(BUCKET, F.split(F.col(FILE_NAME), "_").getItem(0))
+        name = delta_file_name if delta else base_file_name
+        return df.withColumn(FILE_NAME, name(F.col(BUCKET), instant))
 
     # ----------------------------------------------------------- file writer
     def _write_files(self, df: DataFrame, instant: str, *, already_partitioned=False,
@@ -1011,6 +999,8 @@ class WriteClient:
             w = w.repartition(F.col(PP), F.col(BUCKET))
         if sort_cols:
             w = w.sortWithinPartitions(PP, BUCKET, *sort_cols)
+        if CURVE in w.columns:
+            w = w.drop(CURVE)
         w.write.partitionBy(PP, KIND, BUCKET).mode("overwrite").parquet(tmp)
 
         # all directory mutations below go through the Storage seam
@@ -1076,48 +1066,68 @@ class WriteClient:
             from . import bloom
             bloom.harvest(self.table, stats, instant)
         if wc.stats_exprs:
-            self._harvest_expr_stats(stats, wc.stats_exprs)
+            # expression-index equivalent (public Hudi-1.0 design; beyond
+            # this reference snapshot): the manifest carries each configured
+            # expression's per-file min/max under its alias, so
+            # ``skip_filters=[(alias, op, v)]`` prunes files
+            found = expr_min_max(
+                self.table, [s["path"] for s in stats if not s["is_delta"]],
+                wc.stats_exprs)
+            for s in stats:
+                if s["path"] in found:
+                    s.setdefault("col_stats", {}).update(found[s["path"]])
         return stats
 
-    def _harvest_expr_stats(self, stats: list[dict], exprs: dict) -> None:
-        """Functional-index equivalent (public Hudi-1.0 expression-index
-        design; beyond this reference snapshot): per-file min/max of each
-        configured SQL expression over this commit's BASE files, folded
-        into the manifest ``col_stats`` under the alias so
-        ``skip_filters=[(alias, op, v)]`` prunes files. One column-pruned
-        Spark job per commit — opt-in via ``WriteConfig.stats_exprs``.
-        Driver data is bounded: one row per written file."""
-        paths = [os.path.join(self.table.base_path, s["path"])
-                 for s in stats if not s["is_delta"]]
-        if not paths:
-            return
-        df = self.spark.read.parquet(*paths).withColumn(
-            "__f", F.input_file_name())
-        aggs = []
-        for alias, expr in exprs.items():
-            aggs += [F.min(F.expr(expr)).alias(f"mn_{alias}"),
-                     F.max(F.expr(expr)).alias(f"mx_{alias}")]
-        # key by the partition-qualified relative path, NOT the basename:
-        # bucket-index tables write identically named base files
-        # (fid_token_instant.parquet) in several partitions within one
-        # commit, and a basename key would record one partition's min/max
-        # as every same-named file's col_stats (skip_filters could then
-        # prune a file that does contain matching rows)
-        from .storage import relpath_from_uri
-        base = self.table.base_path
-        by_path = {relpath_from_uri(r["__f"], base): r
-                   for r in df.groupBy("__f").agg(*aggs).collect()}
-        for s in stats:
-            r = by_path.get(s["path"])
-            if r is None:
-                continue
-            cs = s.setdefault("col_stats", {})
-            for alias in exprs:
-                mn, mx = r[f"mn_{alias}"], r[f"mx_{alias}"]
-                if mn is None or isinstance(mn, bool) or \
-                        not isinstance(mn, (int, float, str)):
-                    continue
-                cs[alias] = [mn, mx]
+
+def emptied_groups(affected, stats: list[dict]) -> dict[str, list[str]]:
+    """partition → file ids of the ``affected`` (partition, file id) groups
+    whose rewrite wrote no file. A rewrite that kept no row leaves no new
+    slice, so the group is marked replaced, or its old slice would stay
+    latest and the deleted rows would come back."""
+    written = {(s["partition"], s["file_id"]) for s in stats}
+    emptied: dict[str, list[str]] = {}
+    for pp, fid in affected:
+        if (pp, fid) not in written:
+            emptied.setdefault(pp, []).append(fid)
+    return emptied
+
+
+def _json_safe(v) -> bool:
+    """A min/max the manifest can hold: a JSON number or string."""
+    return isinstance(v, (int, float, str)) and not isinstance(v, bool)
+
+
+def expr_min_max(table, paths: list[str], exprs: dict[str, str]
+                 ) -> dict[str, dict[str, list]]:
+    """Per-file min/max of each SQL expression ``{alias: expr}`` over the
+    base files at ``paths`` (relative to the table), in one column-pruned
+    Spark job; driver data is one row per file. Returns path →
+    ``{alias: [min, max]}``, keeping only JSON-safe values.
+
+    Keyed by the partition-qualified relative path, NOT the basename:
+    bucket-index tables write identically named base files
+    (fid_token_instant.parquet) in several partitions within one commit,
+    and a basename key would record one partition's min/max as every
+    same-named file's stats (skip_filters could then prune a file that
+    does contain matching rows)."""
+    if not paths:
+        return {}
+    from .storage import relpath_from_uri
+
+    base = table.base_path
+    df = table.spark.read.parquet(
+        *[os.path.join(base, p) for p in paths]).withColumn(
+        "__f", F.input_file_name())
+    aggs = []
+    for alias, expr in exprs.items():
+        aggs += [F.min(F.expr(expr)).alias(f"mn_{alias}"),
+                 F.max(F.expr(expr)).alias(f"mx_{alias}")]
+    out: dict[str, dict[str, list]] = {}
+    for r in df.groupBy("__f").agg(*aggs).collect():
+        out[relpath_from_uri(r["__f"], base)] = {
+            alias: [r[f"mn_{alias}"], r[f"mx_{alias}"]] for alias in exprs
+            if _json_safe(r[f"mn_{alias}"])}
+    return out
 
 
 COMMIT_SEQNO_TIEBREAK = "__seqno_tb"
@@ -1154,7 +1164,7 @@ def _footer_stats(path: str, stats_columns: list[str] | None = None) -> dict:
             if name == RECORD_KEY:
                 min_k = mn if min_k is None else min(min_k, mn)
                 max_k = mx if max_k is None else max(max_k, mx)
-            elif isinstance(mn, (int, float, str)) and not isinstance(mn, bool):
+            elif _json_safe(mn):
                 mins[name] = mn if name not in mins else min(mins[name], mn)
                 maxs[name] = mx if name not in maxs else max(maxs[name], mx)
     out = {"num_records": md.num_rows, "min_key": min_k, "max_key": max_k}

@@ -921,3 +921,15 @@ def test_duplicate_groups_hub_star_graph(spark):
     got = duplicate_groups(pairs)
     assert got.count() == n
     assert got.filter(F.col("group_id") != 0).count() == 0
+
+
+@pytest.mark.parametrize("threshold", [0.0, 1.5])
+@pytest.mark.parametrize("op", ["jaccard_dedup_pairs", "edit_dedup_pairs",
+                                "containment_dedup_pairs"])
+def test_pair_operators_reject_out_of_range_threshold(spark, op, threshold):
+    """A similarity threshold outside (0, 1] is an error, not an empty (or,
+    for containment's exact copies, a non-empty) pair set."""
+    df = spark.createDataFrame([(1, "the same text"), (2, "the same text")],
+                               "doc_id long, text string")
+    with pytest.raises(ValueError, match="threshold"):
+        getattr(HF, op)(df, "doc_id", "text", threshold=threshold)

@@ -135,3 +135,35 @@ def test_index_compaction(spark, tmp_table_path):
     assert snap.count() == orders.count()
     assert snap.filter("o_orderstatus = 'Z'").count() == \
         orders.filter("o_orderkey % 4 = 1").count()
+
+
+def test_aborted_cluster_leaves_index_untouched(spark, tmp_table_path):
+    """A cluster aborted at commit (here by a pre-commit validator) must
+    leave no index entries behind: entries naming its deleted files would
+    be the latest for each key, lookup would drop the key, and the next
+    upsert would tag it as an insert and duplicate the row."""
+    from hoodie_spark.validators import PreCommitValidationError
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "ri6", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)",
+        write_config=WriteConfig(record_index=True,
+                                 parquet_small_file_limit=0))
+    tbl.bulk_insert(orders)
+    n = orders.count()
+    assert record_index.lookup(tbl).count() == n
+
+    def reject(ctx):
+        raise PreCommitValidationError("cluster rejected")
+
+    tbl.write_config.pre_commit_validators = [reject]
+    with pytest.raises(PreCommitValidationError):
+        tbl.cluster()
+    tbl.write_config.pre_commit_validators = []
+    assert record_index.lookup(tbl).count() == n
+
+    tbl.upsert(orders.withColumn("o_orderstatus", F.lit("U")))
+    snap = tbl.snapshot()
+    assert snap.count() == n
+    assert snap.select("o_orderkey").distinct().count() == n

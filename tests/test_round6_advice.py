@@ -165,29 +165,6 @@ def test_clean_sweeps_compacted_logs_in_superseded_slices(
     assert got == expected
 
 
-def test_failed_write_abandons_heartbeat(spark, orders, tmp_table_path):
-    """A write that dies between _begin and publish must stop its
-    background refresher — otherwise the zombie pending instant beats
-    forever and reclamation never fires."""
-    tbl = HoodieTable.create(
-        spark, tmp_table_path, "hbfail", ["o_orderkey"], "o_orderdate",
-        write_config=WriteConfig(heartbeat_expiry_s=0.6))
-    tbl.bulk_insert(orders.limit(100))
-    wc = tbl._writer
-    poison = orders.limit(10).withColumn(
-        "o_orderkey",
-        F.when(F.raise_error("boom").isNull(), F.col("o_orderkey")))
-    with pytest.raises(Exception, match="boom"):
-        tbl.upsert(poison)
-    assert wc._hb_cancel == {}  # no leaked refresher threads
-    pend = sorted({i.timestamp for i in tbl.timeline.pending()})
-    assert len(pend) == 1
-    time.sleep(0.9)  # the abandoned beat goes stale
-    from hoodie_spark.services.rollback import rollback_failed_writes
-    assert rollback_failed_writes(tbl) == pend
-    assert tbl.snapshot().count() == 100
-
-
 def test_datasource_overwrite_replaces_whole_table(spark, orders,
                                                    tmp_table_path):
     """SaveMode.Overwrite = full-table overwrite (Hudi's DefaultSource

@@ -1,7 +1,6 @@
 """Round-7 advisor regression tests: sidecar load order after stats
-compaction, heartbeat abandon when _begin's timeline transition fails,
-stale-staging sweep in the DataSource writer, pq_codebooks short-corpus
-guard, and Debezium all-null tombstone deletes."""
+compaction, stale-staging sweep in the DataSource writer, pq_codebooks
+short-corpus guard, and Debezium all-null tombstone deletes."""
 
 import os
 import time
@@ -36,33 +35,6 @@ def test_sidecar_written_after_compaction_wins(spark, tmp_table_path):
         if "yr" in cs:
             assert cs["yr"][0] >= 2900, \
                 "stale compacted.json entry overrode the newer sidecar"
-
-
-def test_begin_failure_cancels_heartbeat_refresher(spark, orders,
-                                                   tmp_table_path):
-    """If create_requested raises inside _begin, the already-started
-    background heartbeat refresher must be cancelled — otherwise a
-    possibly-created pending instant stays heartbeat-live (unreclaimable)
-    for the driver's lifetime."""
-    tbl = HoodieTable.create(
-        spark, tmp_table_path, "hb_begin", ["o_orderkey"], "o_orderdate")
-    tbl.bulk_insert(orders.limit(50))
-    w = tbl._writer
-
-    boom = RuntimeError("disk full")
-
-    def raise_create(action, instant):
-        raise boom
-
-    orig = tbl.timeline.create_requested
-    tbl.timeline.create_requested = raise_create
-    try:
-        with pytest.raises(RuntimeError, match="disk full"):
-            w._begin("commit")
-    finally:
-        tbl.timeline.create_requested = orig
-    # no live refresher left behind for the failed instant
-    assert w._hb_cancel == {}
 
 
 def test_datasource_commit_sweeps_stale_staging(spark, orders,
