@@ -153,23 +153,31 @@ class ReadClient:
             return resolved
         return self.table.read_slices_base(clean).unionByName(resolved)
 
-    def _resolve(self, df: DataFrame) -> DataFrame:
+    def _resolve(self, df: DataFrame,
+                 grain: tuple[str, ...] = (PARTITION_PATH,)) -> DataFrame:
         """Equivalent of the log-scanner fold (HoodieMergedLogRecordScanner
         .java:55-82): delete blocks clear the key, records committed AFTER
         the latest delete re-add it, and among surviving records the payload
         picks the max ordering value (ties: latest commit). Expressed as two
-        windows over one shuffle-by-key instead of a per-slice spillable map."""
+        windows keyed (``grain``, record key) instead of a per-slice
+        spillable map; both share one sort. The snapshot reader resolves
+        per (partition, key); compaction passes (partition, file group) as
+        the grain, so the windows reuse its partitioning by file group. The
+        two differ only for a key stored in two file groups that both have
+        deltas: the snapshot folds the copies into one row, compaction
+        keeps one per group."""
         pre = self.table.config.precombine_field
         ordc = F.col(pre) if pre and pre in df.columns else F.lit(0)
-        wk = Window.partitionBy(PARTITION_PATH, RECORD_KEY)
-        last_del = F.max(F.when(F.col(OPERATION) == "D", F.col(COMMIT_TIME))).over(wk)
-        w = wk.orderBy(F.desc_nulls_last("__ord"), F.desc(COMMIT_TIME))
+        wk = Window.partitionBy(*grain, RECORD_KEY).orderBy(
+            F.desc_nulls_last("__ord"), F.desc(COMMIT_TIME))
+        last_del = F.max(F.when(F.col(OPERATION) == "D", F.col(COMMIT_TIME))).over(
+            wk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
         return (df.withColumn("__ord", ordc)
                 .withColumn("__last_del", last_del)
                 .filter((F.col(OPERATION) != "D") &
                         (F.col("__last_del").isNull() |
                          (F.col(COMMIT_TIME) > F.col("__last_del"))))
-                .withColumn("__rn", F.row_number().over(w))
+                .withColumn("__rn", F.row_number().over(wk))
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", "__ord", "__last_del"))
 

@@ -8,19 +8,23 @@ BoundedIOCompactionStrategy, DayBasedCompactionStrategy) and the merged log
 scanner HoodieMergedLogRecordScanner.java:55-82.
 
 Spark-first: the plan is a driver-side filter over manifest stats; execution
-is ONE DataFrame job — read base+delta files of the selected slices, resolve
-winners per key with the same fold the snapshot reader uses, and rewrite each
-file group (same file_id, new base instant) via the shared partitioned-write
-path. Record meta columns (commit time / seqno) are preserved, so
-incremental queries stay correct across compaction."""
+is ONE DataFrame job that merges per file group, as the reference compacts
+one file slice at a time: the base+delta rows of the selected slices are
+repartitioned once by (partition, file group), the snapshot reader's fold
+(``ReadClient._resolve``) resolves winners at the grain (partition, file
+group, record key), which that partitioning already satisfies, and each
+group is rewritten (same file_id, new base instant) by the shared write
+path, key-sorted by the fold's own sort. Record meta columns (commit time /
+seqno) are preserved, so incremental queries stay correct across
+compaction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from .. import timeline as tl
-from ..config import OPERATION
-from ..writer import KIND, emptied_groups
+from ..config import OPERATION, RECORD_KEY
+from ..writer import BUCKET, PP, emptied_groups
 
 
 class CompactionStrategy:
@@ -93,12 +97,12 @@ def compact(table, strategy=None, **kw):
         base = table.read_slices_base(plan).withColumn(OPERATION, F.lit("I"))
         delta_paths = [view.abs(lf.path) for sl in plan
                        for lf in sl.log_files_as_of(None)]
-        merged = table._reader._resolve(base.unionByName(
-            table.read_delta_files(delta_paths))).drop(OPERATION)
-        write_df = writer._finalize_cols(
-            writer._keep_file_group(merged, instant)
-            .withColumn(KIND, F.lit("base")))
-        stats = writer._write_files(write_df, instant, sort_cols=None)
+        rows = writer._finalize_cols(writer._keep_file_group(
+            base.unionByName(table.read_delta_files(delta_paths)), instant), "base")
+        merged = table._reader._resolve(rows.repartition(PP, BUCKET),
+                                        grain=(PP, BUCKET)).drop(OPERATION)
+        stats = writer._write_files(merged, instant, already_partitioned=True,
+                                    sort_cols=[RECORD_KEY])
         # a slice whose deltas deleted every row compacts to nothing
         emptied = emptied_groups([(sl.partition, sl.file_id) for sl in plan],
                                  stats)
@@ -135,8 +139,7 @@ def logcompact(table, min_log_files: int = 3, partitions=None):
                        for lf in sl.log_files_as_of(None)]
         deltas = table.read_delta_files(delta_paths)
         write_df = writer._finalize_cols(
-            writer._keep_file_group(deltas, instant, delta=True)
-            .withColumn(KIND, F.lit("delta")))
+            writer._keep_file_group(deltas, instant, delta=True), "delta")
         stats = writer._write_files(write_df, instant, sort_cols=None)
         for s in stats:
             sl = targets.get((s["partition"], s["file_id"]))

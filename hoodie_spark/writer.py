@@ -13,9 +13,18 @@ Spark-first execution model (replaces the reference's RDD pipeline):
     ``write.partitionBy(partition, kind, bucket).parquet(tmp)`` — the
     repartition by bucket guarantees exactly one file per (partition, bucket),
     so "write handles" collapse into the shuffle;
-  * dedup(preCombine) = window row_number, index tagging = a join against the
-    manifest-pruned key index, merge = union + window (or full-outer join for
-    partial-update payloads) — all JVM-side, whole-stage-codegen'd;
+  * index tagging = a join against the manifest-pruned key index, run on the
+    batch as it arrives; dedup(preCombine) = a window row_number over the
+    tagged batch per (key, target file group), so the index's key-bounds
+    and partition-list scans run no window — all JVM-side,
+    whole-stage-codegen'd;
+  * the COW merge works per file group, as HoodieMergeHandle does: stored
+    rows of the candidate groups, updates and inserts are unioned and
+    repartitioned ONCE by (partition, file group); the payload resolution is
+    a window keyed (partition, file group, record key) (a full-outer join
+    over the same partitioning for partial-update payloads) and its sort is
+    the write's sort, so each rewrite shuffles every row once. Compaction
+    folds its slices the same way;
   * the driver only plans buckets (greedy bin packing over manifest stats) and
     renames tmp part-files to their final ``fileId_token_instant`` names —
     O(files touched) metadata ops, no data movement;
@@ -63,6 +72,8 @@ OP = "__op"
 ORD = "__ord"
 INCOMING = "__incoming"
 HARD = "__hard"  # hard delete: EmptyHoodieRecordPayload.java — wins regardless of ordering
+ARRIVAL = "__arrival"  # source order: the preCombine tie-break among equal orderings
+IS_NEW = "__is_new"  # insert row opening a new file group
 CURVE = "__curve"  # clustering's space-filling-curve key: orders rows, never stored
 WRITE_TOKEN = "0-0-0"
 
@@ -180,10 +191,10 @@ class WriteClient:
         """SparkRDDWriteClient.java:172 — insert with small-file packing, no
         index lookup.
 
-        Outside a bucket index the batch is not cached: the workload profile,
-        the packed-group lookup and the write job each re-execute ``df``, so
-        the source must be deterministic — otherwise the insert-bucket plan
-        is sized for rows the write job no longer sees."""
+        Outside a bucket index the batch is not cached: the workload profile
+        and the write job each re-execute ``df``, so the source must be
+        deterministic — otherwise the insert-bucket plan is sized for rows
+        the write job no longer sees."""
         return self._upsert_like(df, WriteOperation.INSERT)
 
     def upsert(self, df: DataFrame) -> WriteResult:
@@ -200,7 +211,7 @@ class WriteClient:
         prepared = self._prepare(df)
         tagged = tag_location(self.spark, prepared, self.table)
         return tagged.filter(F.col("_target_file_id").isNull()).drop(
-            "_target_file_id", "_target_pp", "_target_base_instant")
+            "_target_file_id", "_target_pp")
 
     def delete_partitions(self, partitions: list[str]) -> WriteResult:
         """SparkRDDWriteClient.java:255 — replacecommit, metadata-only."""
@@ -547,30 +558,37 @@ class WriteClient:
                     exc_info=True)
 
     def _prepare(self, df: DataFrame) -> DataFrame:
-        """Key generation + schema evolution + column alignment."""
+        """Key generation + schema evolution + column alignment, in one
+        select."""
         df = with_keys(df, self.table.config)
         self.table.evolve_schema(df)
-        data_cols = self.table.data_columns()
-        aligned = []
-        for name, dtype in data_cols:
-            if name in df.columns:
-                aligned.append(F.col(name).cast(dtype).alias(name))
-            else:
-                aligned.append(F.lit(None).cast(dtype).alias(name))
+        aligned = [(F.col(name) if name in df.columns else F.lit(None)).cast(dtype).alias(name)
+                   for name, dtype in self.table.data_columns()]
         return df.select(F.col(RECORD_KEY), F.col(PARTITION_PATH), *aligned)
 
+    def _merge_cols(self, prepared: DataFrame, operation: str) -> dict:
+        """The merge columns of an upsert-like batch, added in one
+        projection: ORD (:meth:`_ord_col`), OP ('U'/'D'), HARD (1 for a
+        hard delete) and ARRIVAL (the preCombine tie-break: the later
+        source row wins among equal orderings)."""
+        if operation == WriteOperation.DELETE:
+            op, hard = F.lit("D"), F.lit(1)
+        elif IS_DELETED in prepared.columns:
+            op = F.when(F.col(IS_DELETED) == True, F.lit("D")).otherwise(F.lit("U"))  # noqa: E712
+            hard = F.lit(0)
+        else:
+            op, hard = F.lit("U"), F.lit(0)
+        return {ORD: self._ord_col(prepared), OP: op, HARD: hard,
+                ARRIVAL: F.monotonically_increasing_id()}
+
     def _ord_col(self, df: DataFrame):
+        """ORD, the preCombine ordering: the precombine field, or 0 without
+        one. Frames arrive aligned to the table schema (:meth:`_prepare`,
+        stored rows), so a batch that lacks the field (a key-only delete)
+        carries its typed null and unions against stored rows line up;
+        HARD ranks above ORD, so deletes still win."""
         pre = self.table.config.precombine_field
-        if not pre:
-            return F.lit(0)
-        if pre in df.columns:
-            return F.col(pre)
-        # precombine column absent (key-only delete): typed null so unions
-        # against stored rows line up; HARD ranks above ORD so deletes win
-        schema = self.table.schema
-        if schema is not None and pre in schema.fieldNames():
-            return F.lit(None).cast(schema[pre].dataType)
-        return F.lit(0)
+        return F.col(pre) if pre and pre in df.columns else F.lit(0)
 
     def _dedup(self, df: DataFrame, global_index: bool | None = None) -> DataFrame:
         """preCombine (SparkWriteHelper.java:50): keep max-ordering row per
@@ -585,28 +603,42 @@ class WriteClient:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", ORD, COMMIT_SEQNO_TIEBREAK))
 
-    def _stamp_meta(self, df: DataFrame, instant: str, kind: str = "base") -> DataFrame:
-        """Attach the five meta columns (HoodieRecord.java:37-41) and the
-        physical __pp dir column; FILE_NAME derives from BUCKET."""
+    def _stamp_meta(self, df: DataFrame, instant: str, kind: str = "base",
+                    set_cols: dict | None = None) -> DataFrame:
+        """:meth:`_finalize_cols` with the meta columns stamped for
+        ``instant`` (HoodieRecord.java:37-41); FILE_NAME derives from
+        BUCKET."""
         name = base_file_name(F.col(BUCKET), instant) if kind == "base" \
             else delta_file_name(F.col(BUCKET), instant)
-        out = (df.withColumn(COMMIT_TIME, F.lit(instant))
-               .withColumn(COMMIT_SEQNO,
-                           F.concat_ws("_", F.lit(instant),
-                                       F.spark_partition_id().cast("string"),
-                                       F.monotonically_increasing_id().cast("string")))
-               .withColumn(FILE_NAME, name))
-        return self._finalize_cols(out)
+        return self._finalize_cols(df, kind, {
+            **(set_cols or {}),
+            COMMIT_TIME: F.lit(instant),
+            COMMIT_SEQNO: F.concat_ws("_", F.lit(instant),
+                                      F.spark_partition_id().cast("string"),
+                                      F.monotonically_increasing_id().cast("string")),
+            FILE_NAME: name})
 
-    def _finalize_cols(self, df: DataFrame) -> DataFrame:
+    def _finalize_cols(self, df: DataFrame, kind: str | None = None,
+                       set_cols: dict | None = None) -> DataFrame:
+        """The one projection to the write layout: the meta and data
+        columns, OPERATION and the internal columns ``df`` carries, KIND
+        (``kind`` when given) and the physical __pp dir column.
+        ``set_cols`` maps a meta column or OPERATION to the expression that
+        replaces (or adds) it."""
+        set_cols = set_cols or {}
         data_cols = [n for n, _ in self.table.data_columns()]
-        keep = META_COLUMNS + data_cols + [c for c in (OPERATION,) if c in df.columns]
-        extras = [c for c in (KIND, BUCKET, OP, ORD, INCOMING, HARD, CURVE)
+        keep = META_COLUMNS + data_cols + [
+            c for c in (OPERATION,) if c in df.columns or c in set_cols]
+        extras = [c for c in (BUCKET, OP, ORD, INCOMING, HARD, IS_NEW, CURVE)
                   if c in df.columns]
-        out = df.select(*keep, *extras)
-        return out.withColumn(
-            PP, F.when(F.col(PARTITION_PATH) == "", F.lit(NO_PARTITION))
-                 .otherwise(F.col(PARTITION_PATH)))
+        if kind is not None:
+            extras.append(F.lit(kind).alias(KIND))
+        elif KIND in df.columns:
+            extras.append(KIND)
+        pp = F.when(F.col(PARTITION_PATH) == "", F.lit(NO_PARTITION)) \
+              .otherwise(F.col(PARTITION_PATH))
+        return df.select(*[set_cols[c].alias(c) if c in set_cols else c for c in keep],
+                         *extras, pp.alias(PP))
 
     # --------------------------------------------------- upsert/insert/delete
     def _upsert_like(self, df: DataFrame, operation: str) -> WriteResult:
@@ -621,32 +653,24 @@ class WriteClient:
         self._ensure_index_ready()
         action = tl.DELTACOMMIT if is_mor else tl.COMMIT
         with self.transaction(action) as instant:
-            prepared = self._prepare(df).withColumn(ORD, self._ord_col(df))
-            if operation == WriteOperation.DELETE:
-                prepared = prepared.withColumn(OP, F.lit("D")).withColumn(HARD, F.lit(1))
-            elif IS_DELETED in df.columns:
-                prepared = prepared.withColumn(
-                    OP, F.when(F.col(IS_DELETED) == True, F.lit("D")).otherwise(F.lit("U")))  # noqa: E712
-                prepared = prepared.withColumn(HARD, F.lit(0))
-            else:
-                prepared = prepared.withColumn(OP, F.lit("U")).withColumn(HARD, F.lit(0))
-            if wcfg.combine_before_upsert and operation != WriteOperation.INSERT:
-                prepared = self._dedup_keep_op(prepared)
-
+            prepared = self._prepare(df)
+            prepared = prepared.withColumns(self._merge_cols(prepared, operation))
             view = self.table.view()
             use_bucket = wcfg.index_type == IndexType.BUCKET
             if operation == WriteOperation.INSERT and not use_bucket:
-                tagged = prepared.withColumn("_target_file_id", F.lit(None).cast("string")) \
-                                 .withColumn("_target_pp", F.lit(None).cast("string")) \
-                                 .withColumn("_target_base_instant", F.lit(None).cast("string"))
+                null_s = F.lit(None).cast("string")
+                tagged = prepared.withColumns({"_target_file_id": null_s,
+                                               "_target_pp": null_s})
                 # pure projection over the source (no index join to save):
-                # caching it materializes every column while the profile /
-                # packed-group passes are column-pruned — same measured
-                # trade as bulk_insert; only the write job needs full width
+                # caching it materializes every column while the profile
+                # pass is column-pruned — same measured trade as
+                # bulk_insert; only the write job needs full width
                 pinned = False
             else:
                 # bucket index tags INSERTs too: rows for an existing bucket
-                # group must merge into it (the group IS the index)
+                # group must merge into it (the group IS the index). The
+                # index reads the batch before any dedup: its key bounds and
+                # partition list are the same with or without duplicates
                 tagged = tag_location(self.spark, prepared, self.table, view=view,
                                       force_global=force_global)
                 # the tagging join against the table index is worth running
@@ -655,6 +679,8 @@ class WriteClient:
             # global index: update the record in its existing partition
             tagged = tagged.withColumn(
                 PARTITION_PATH, F.coalesce(F.col("_target_pp"), F.col(PARTITION_PATH)))
+            if wcfg.combine_before_upsert and operation != WriteOperation.INSERT:
+                tagged = self._dedup_keep_op(tagged)
             if pinned:
                 tagged = tagged.persist()
             try:
@@ -684,36 +710,19 @@ class WriteClient:
                 if use_bucket and "__bucket_fid" in tagged.columns:
                     # fixed routing: each insert creates (or joins) its bucket's
                     # file group; no small-file packing, no planner
-                    plan = None
-                    inserts = inserts.withColumn(BUCKET, F.col("__bucket_fid")) \
-                                     .withColumn("__is_new", F.lit(True))
+                    plan = []
+                    inserts = inserts.withColumns({BUCKET: F.col("__bucket_fid"),
+                                                   IS_NEW: F.lit(True)})
                 else:
-                    plan, _n_new = self._plan_insert_buckets(
-                        view, insert_counts, pack_small)
-                if plan is None:
-                    pass  # bucket routing already assigned
-                elif plan:
-                    plan_df = F.broadcast(local_frame(
-                        self.spark, plan,
-                        "pp string, lo double, hi double, file_id string, is_new boolean"))
-                    u = (F.pmod(F.xxhash64(F.col(RECORD_KEY)), F.lit(1_000_000)) / 1_000_000.0)
-                    inserts = (inserts.withColumn("__u", u)
-                               .join(plan_df, (F.col(PARTITION_PATH) == F.col("pp")) &
-                                     (F.col("__u") >= F.col("lo")) & (F.col("__u") < F.col("hi")),
-                                     "left")
-                               .withColumn(BUCKET, F.col("file_id"))
-                               .withColumn("__is_new", F.coalesce(F.col("is_new"), F.lit(True)))
-                               .drop("pp", "lo", "hi", "file_id", "is_new", "__u"))
-                else:
-                    inserts = inserts.withColumn(BUCKET, F.lit(None).cast("string")) \
-                                     .withColumn("__is_new", F.lit(True))
+                    plan = self._plan_insert_buckets(view, insert_counts, pack_small)
+                    inserts = self._route_inserts(inserts, plan)
 
                 emptied: dict[str, list[str]] = {}
                 if is_mor:
                     stats = self._write_mor(updates, inserts, view, instant)
                 else:
-                    stats, emptied = self._write_cow(updates, inserts, view,
-                                                     instant, affected_updates)
+                    stats, emptied = self._write_cow(updates, inserts, view, instant,
+                                                     affected_updates, plan)
                 dels = None
                 if wcfg.record_index:
                     dels = tagged.filter((F.col(OP) == "D") &
@@ -729,104 +738,120 @@ class WriteClient:
                     tagged.unpersist()
 
     def _dedup_keep_op(self, df: DataFrame) -> DataFrame:
+        """preCombine of the tagged batch: one row per key (per partition
+        unless the index is global) and target file group, the max ORD
+        winning and the later arrival breaking ties. A key stored in two
+        groups is tagged to both, and each group keeps its own copy of
+        the winner, as a dedup before tagging would."""
         keys = [RECORD_KEY] if self.table.global_index else [PARTITION_PATH, RECORD_KEY]
-        w = Window.partitionBy(*keys).orderBy(F.desc_nulls_last(ORD), F.desc("__mono"))
-        return (df.withColumn("__mono", F.monotonically_increasing_id())
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1).drop("__rn", "__mono"))
+        w = Window.partitionBy(*keys, "_target_file_id").orderBy(
+            F.desc_nulls_last(ORD), F.desc(ARRIVAL))
+        return (df.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1).drop("__rn", ARRIVAL))
+
+    def _route_inserts(self, inserts: DataFrame, plan: list) -> DataFrame:
+        """BUCKET and IS_NEW of each insert row from the insert-bucket
+        plan: a broadcast range join on the key's hash."""
+        if not plan:
+            return inserts.withColumns({BUCKET: F.lit(None).cast("string"),
+                                        IS_NEW: F.lit(True)})
+        plan_df = F.broadcast(local_frame(
+            self.spark, plan,
+            "pp string, lo double, hi double, file_id string, is_new boolean"))
+        u = (F.pmod(F.xxhash64(F.col(RECORD_KEY)), F.lit(1_000_000)) / 1_000_000.0)
+        return (inserts.withColumn("__u", u)
+                .join(plan_df, (F.col(PARTITION_PATH) == F.col("pp")) &
+                      (F.col("__u") >= F.col("lo")) & (F.col("__u") < F.col("hi")),
+                      "left")
+                .withColumns({BUCKET: F.col("file_id"),
+                              IS_NEW: F.coalesce(F.col("is_new"), F.lit(True))})
+                .drop("pp", "lo", "hi", "file_id", "is_new", "__u"))
 
     def _plan_insert_buckets(self, view: FileSystemView, insert_counts: dict[str, int],
-                             pack_small: bool):
+                             pack_small: bool) -> list[tuple]:
         """Greedy small-file bin packing on the driver from manifest stats
-        (UpsertPartitioner.java:157-214). Returns ([(pp, lo, hi, file_id,
-        is_new)], n_new_files): capacity-weighted hash ranges so record→bucket
-        assignment is a pure function of the record key (deterministic, no
-        extra shuffle beyond the final bucket repartition)."""
+        (UpsertPartitioner.java:157-214). Returns [(pp, lo, hi, file_id,
+        is_new)]: capacity-weighted hash ranges so record→bucket assignment
+        is a pure function of the record key (deterministic, no extra
+        shuffle beyond the final bucket repartition). The candidate small
+        files come from one fold over the partitions with inserts."""
         wcfg = self.table.write_config
         rpf = wcfg.records_per_file()
         rec_size = max(8, wcfg.record_size_estimate)
+        pps = sorted(pp for pp, n in insert_counts.items() if n)
+        small: dict[str, list[tuple[str, int, bool]]] = {}  # pp -> (file_id, capacity, is_new)
+        if pack_small and pps:
+            for sl in view.latest_slices(partitions=pps):
+                bf = sl.base_file
+                if bf is not None and not sl.log_files and \
+                        0 < bf.size < wcfg.parquet_small_file_limit:
+                    cap = int((wcfg.parquet_max_file_size - bf.size) / rec_size)
+                    if cap > 0:
+                        small.setdefault(sl.partition, []).append((sl.file_id, cap, False))
         plan = []
-        n_new_total = 0
-        for pp, n in sorted(insert_counts.items()):
-            if n == 0:
-                continue
-            buckets: list[tuple[str, int, bool]] = []  # (file_id, capacity, is_new)
-            if pack_small:
-                for sl in view.latest_slices(partitions=[pp]):
-                    bf = sl.base_file
-                    if bf is not None and not sl.log_files and \
-                            bf.size < wcfg.parquet_small_file_limit and bf.size > 0:
-                        cap = int((wcfg.parquet_max_file_size - bf.size) / rec_size)
-                        if cap > 0:
-                            buckets.append((sl.file_id, cap, False))
-            small_cap = sum(c for _, c, _ in buckets)
-            remaining = max(0, n - small_cap)
+        for pp in pps:
+            buckets = small.get(pp, [])
+            remaining = max(0, insert_counts[pp] - sum(c for _, c, _ in buckets))
             n_new = math.ceil(remaining / rpf) if remaining > 0 else 0
             if not buckets and n_new == 0:
                 n_new = 1
-            for _ in range(n_new):
-                buckets.append((uuid.uuid4().hex[:13] + "-0", rpf, True))
-            n_new_total += n_new
+            buckets += [(uuid.uuid4().hex[:13] + "-0", rpf, True) for _ in range(n_new)]
             total = sum(c for _, c, _ in buckets)
             acc = 0.0
             for i, (fid, cap, is_new) in enumerate(buckets):
                 lo = acc
                 acc = 1.0 if i == len(buckets) - 1 else acc + cap / total
                 plan.append((pp, lo, acc, fid, is_new))
-        return plan, n_new_total
+        return plan
 
     # ------------------------------------------------------------- COW merge
     def _write_cow(self, updates: DataFrame, inserts: DataFrame,
                    view: FileSystemView, instant: str,
-                   affected_updates: dict[tuple[str, str], int]
+                   affected_updates: dict[tuple[str, str], int], plan: list
                    ) -> tuple[list[dict], dict[str, list[str]]]:
-        """HoodieMergeHandle.java:89 as a DataFrame program: affected file
-        groups = update targets ∪ small-file insert targets; read their latest
-        base files, union with incoming, resolve per-key winners (payload),
-        rewrite each group as a new file slice. Untouched groups see zero IO.
-        ``affected_updates`` comes from the single profiling action. Returns
-        ``(stats, emptied)``: the written files' stats, and partition → file
-        ids of affected groups whose rewrite kept no row."""
-        packed = inserts.filter(~F.col("__is_new"))
-        new_rows = inserts.filter(F.col("__is_new"))
-
-        affected = list(affected_updates)
-        affected += [tuple(r) for r in
-                     packed.select(PARTITION_PATH, BUCKET).distinct().collect()]
-        slices = view.slices_for_groups(set(affected))
-        old = self.table.read_slices_base(slices)
-        old = (self._keep_file_group(old, instant)
-                  .withColumn(ORD, self._ord_col(old))
-                  .withColumn(OP, F.lit("O"))
-                  .withColumn(INCOMING, F.lit(0))
-                  .withColumn(HARD, F.lit(0)))
-        incoming = updates.unionByName(packed.drop("__is_new"), allowMissingColumns=True) \
-                          .drop("_target_file_id", "_target_pp", "_target_base_instant",
-                                "__is_new")
-        incoming = self._stamp_meta(incoming.withColumn(INCOMING, F.lit(1)), instant)
-        old = self._finalize_cols(old)
-
+        """HoodieMergeHandle.java:89 as one DataFrame job: the candidate
+        file groups are the update targets plus every small file in the
+        insert ``plan``; their latest base files, the updates and all
+        inserts are merged per file group (:meth:`_merge`) and each
+        group that received a row is rewritten as a new file slice. A
+        planned small file whose hash range drew no insert keeps its
+        slice: a broadcast semi join against the batch's (partition, file
+        group) pairs drops its stored rows as they are scanned, before the
+        shuffle (a window over the group would hold all of its rows).
+        Groups outside the plan see zero IO.
+        ``affected_updates`` comes from the single profiling action.
+        Returns ``(stats, emptied)``: the written files' stats, and
+        partition → file ids of update groups whose rewrite kept no row."""
+        small = {(pp, fid) for pp, _lo, _hi, fid, is_new in plan if not is_new}
+        old = self.table.read_slices_base(
+            view.slices_for_groups(set(affected_updates) | small))
+        old = self._finalize_cols(self._keep_file_group(old, instant, extra={
+            ORD: self._ord_col(old), OP: F.lit("O"), INCOMING: F.lit(0),
+            HARD: F.lit(0), IS_NEW: F.lit(False)}), "base")
+        incoming = updates.unionByName(inserts, allowMissingColumns=True)
+        incoming = self._stamp_meta(incoming.withColumns({
+            INCOMING: F.lit(1), IS_NEW: F.coalesce(F.col(IS_NEW), F.lit(False))}), instant)
+        if small - affected_updates.keys():
+            old = old.join(F.broadcast(incoming.select(PP, BUCKET)), [PP, BUCKET],
+                           "left_semi")
         merged = self._merge(old, incoming)
-        new_stamped = self._stamp_meta(new_rows.filter(F.col(OP) != "D"), instant)
-        write_df = merged.unionByName(new_stamped.select(*merged.columns)) \
-                         .withColumn(KIND, F.lit("base"))
-        stats = self._write_files(write_df, instant, sort_cols=[RECORD_KEY])
+        stats = self._write_files(merged, instant, already_partitioned=True,
+                                  sort_cols=[RECORD_KEY])
         for s in stats:
             s["num_updates"] = affected_updates.get(
                 (s["partition"], s["file_id"]), 0)
-        return stats, emptied_groups(affected, stats)
+        return stats, emptied_groups(affected_updates, stats)
 
     def _merge(self, old: DataFrame, incoming: DataFrame) -> DataFrame:
-        """Payload resolution (HoodieRecordPayload.combineAndGetUpdateValue).
-        old/incoming both carry META + data + PP/BUCKET/OP/ORD/INCOMING."""
+        """Payload resolution (HoodieRecordPayload.combineAndGetUpdateValue)
+        per file group, as HoodieMergeHandle merges each group on its own.
+        old/incoming both carry META + data + PP/BUCKET/KIND/OP/ORD/INCOMING/
+        HARD/IS_NEW. The union is repartitioned ONCE by (PP, BUCKET) and
+        sorted once; the merge, keyed (PP, BUCKET, key), needs neither again,
+        and the caller writes the result as it stands. Rows opening a new
+        group bypass the key merge, so a batch written without preCombine
+        keeps its duplicates there, as the create handle does."""
         policy = self.table.write_config.merge_policy or self.table.config.payload
-        cols = [c for c in old.columns]
-        incoming = incoming.withColumn(ORD, self._ord_col(incoming)) \
-            if ORD not in incoming.columns else incoming
-        inc = incoming.select(*cols)
-        if policy == MergePolicy.PARTIAL_UPDATE:
-            return self._merge_partial(old, inc)
-        unioned = old.unionByName(inc)
         if policy == MergePolicy.DEFAULT:
             # DefaultHoodieRecordPayload: incoming must beat the STORED
             # record's ordering too (needUpdatingPersistedRecord:93)
@@ -835,36 +860,52 @@ class WriteClient:
             # OverwriteWithLatestAvroPayload.java:50-52: ordering only dedups
             # within the batch; vs storage, incoming always wins
             order = [F.desc(HARD), F.desc(INCOMING), F.desc_nulls_last(ORD)]
-        w = Window.partitionBy(PP, RECORD_KEY).orderBy(*order)
-        return (unioned.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .filter(F.col(OP) != "D")
-                .drop("__rn", OP, ORD, INCOMING, HARD))
+        grouped = (old.unionByName(incoming.select(*old.columns))
+                   .repartition(PP, BUCKET)
+                   .sortWithinPartitions(PP, BUCKET, RECORD_KEY, *order))
+        if policy == MergePolicy.PARTIAL_UPDATE:
+            return self._merge_partial(grouped)
+        w = Window.partitionBy(PP, BUCKET, RECORD_KEY).orderBy(*order)
+        return (grouped.withColumn("__rn", F.row_number().over(w))
+                .filter(((F.col("__rn") == 1) | F.col(IS_NEW)) & (F.col(OP) != "D"))
+                .drop("__rn", OP, ORD, INCOMING, HARD, IS_NEW))
 
-    def _merge_partial(self, old: DataFrame, inc: DataFrame) -> DataFrame:
+    def _merge_partial(self, grouped: DataFrame) -> DataFrame:
         """OverwriteNonDefaultsWithLatestAvroPayload.java: null incoming
-        fields keep the stored value; full-outer join + per-column coalesce."""
-        o = old.alias("o")
-        i = inc.alias("i")
-        cond = (F.col(f"o.{PP}") == F.col(f"i.{PP}")) & \
-               (F.col(f"o.{RECORD_KEY}") == F.col(f"i.{RECORD_KEY}"))
-        j = o.join(i, cond, "full_outer")
-        inc_wins = F.col(f"i.{RECORD_KEY}").isNotNull() & (
-            (F.col(f"i.{HARD}") == 1) | F.col(f"o.{RECORD_KEY}").isNull() |
-            (F.col(f"i.{ORD}") >= F.col(f"o.{ORD}")) | F.col(f"o.{ORD}").isNull())
-        data_cols = [n for n, _ in self.table.data_columns()]
+        fields keep the stored value. The full outer join of stored and
+        incoming rows on (PP, BUCKET, key), done on the partitioning and
+        sort ``grouped`` already has (a join operator would shuffle both
+        sides again by all three keys): full-frame windows per key show
+        each incoming row its stored row. A winning incoming row takes
+        coalesce(incoming, stored) per column, a losing one carries the
+        stored row, a stored row no incoming row matched passes as it is,
+        and a new key (no stored row) always wins."""
+        kw = Window.partitionBy(PP, BUCKET, RECORD_KEY)
+        inc = F.col(INCOMING) == 1
+        # PP/BUCKET/key/KIND/FILE_NAME are equal on both sides of a match
+        merged = [c for c in grouped.columns if c not in
+                  (PP, BUCKET, RECORD_KEY, KIND, FILE_NAME, OP, ORD, INCOMING, HARD, IS_NEW)]
+        g = grouped.withColumns({
+            **{f"__o_{c}": F.first(F.when(~inc, F.col(c)), ignorenulls=True).over(kw)
+               for c in merged + [ORD]},
+            "__has_old": F.min(INCOMING).over(kw) == 0,
+            "__matched": F.max(INCOMING).over(kw) == 1})
+        inc_wins = inc & ((F.col(HARD) == 1) | ~F.col("__has_old") |
+                          (F.col(ORD) >= F.col(f"__o_{ORD}")) | F.col(f"__o_{ORD}").isNull())
+        keep = (inc & ~(inc_wins & (F.col(OP) == "D"))) | (~inc & ~F.col("__matched"))
+        data_cols = {n for n, _ in self.table.data_columns()}
         sel = []
-        for c in old.columns:
-            if c in (OP, ORD, INCOMING, HARD):
+        for c in grouped.columns:
+            if c in (OP, ORD, INCOMING, HARD, IS_NEW):
                 continue
-            if c in data_cols:
-                sel.append(F.when(inc_wins, F.coalesce(F.col(f"i.{c}"), F.col(f"o.{c}")))
-                           .otherwise(F.col(f"o.{c}")).alias(c))
-            else:
-                sel.append(F.when(inc_wins, F.coalesce(F.col(f"i.{c}"), F.col(f"o.{c}")))
-                           .otherwise(F.coalesce(F.col(f"o.{c}"), F.col(f"i.{c}"))).alias(c))
-        deleted = inc_wins & (F.col(f"i.{OP}") == "D")
-        return j.filter(~deleted).select(*sel)
+            if c not in merged:
+                sel.append(c)
+                continue
+            o = F.col(f"__o_{c}")
+            lose = o if c in data_cols else F.coalesce(o, F.col(c))
+            sel.append(F.when(inc_wins, F.coalesce(F.col(c), o))
+                       .when(inc, lose).otherwise(F.col(c)).alias(c))
+        return g.filter(keep).select(*sel)
 
     # ------------------------------------------------------------- MOR write
     def _write_mor(self, updates: DataFrame, inserts: DataFrame,
@@ -873,22 +914,19 @@ class WriteClient:
         files to their file slice (Avro log blocks replaced with small Parquet
         deltas — columnar, splittable, idiomatic); inserts create new base
         files. One job writes both via the KIND partition column."""
-        upd = updates.drop("_target_file_id", "_target_pp", "_target_base_instant")
-        upd = self._stamp_meta(upd.withColumn(OPERATION, F.col(OP)), instant, kind="delta") \
-                  .withColumn(KIND, F.lit("delta"))
-        new_rows = inserts.filter(F.col(OP) != "D") \
-            .drop("_target_file_id", "_target_pp", "_target_base_instant", "__is_new")
-        new_rows = self._stamp_meta(new_rows.withColumn(OPERATION, F.lit("I")), instant) \
-                       .withColumn(KIND, F.lit("base"))
+        upd = self._stamp_meta(updates, instant, "delta", {OPERATION: F.col(OP)})
+        new_rows = self._stamp_meta(inserts, instant, set_cols={OPERATION: F.lit("I")})
         write_df = upd.unionByName(new_rows.select(*upd.columns))
         stats = self._write_files(write_df, instant, sort_cols=[RECORD_KEY])
+        # base instants of the groups this commit appended to, not a fold
+        # of every group in the table
+        deltas = [s for s in stats if s["is_delta"]]
         base_of = {(sl.partition, sl.file_id): sl.base_instant
-                   for sl in view.latest_slices()}
-        for s in stats:
-            if s["is_delta"]:
-                s["base_instant"] = base_of.get((s["partition"], s["file_id"]),
-                                                instant)
-                s["num_updates"] = s["num_records"]
+                   for sl in view.slices_for_groups(
+                       {(s["partition"], s["file_id"]) for s in deltas})}
+        for s in deltas:
+            s["base_instant"] = base_of.get((s["partition"], s["file_id"]), instant)
+            s["num_updates"] = s["num_records"]
         return stats
 
     # ------------------------------------------------------------- overwrite
@@ -965,22 +1003,22 @@ class WriteClient:
         if restamp:
             write_df = self._stamp_meta(arranged, instant)
         else:
-            write_df = self._finalize_cols(arranged.withColumn(
-                FILE_NAME, base_file_name(F.col(BUCKET), instant)))
+            write_df = self._finalize_cols(arranged, "base", {
+                FILE_NAME: base_file_name(F.col(BUCKET), instant)})
         sort_cols = list(order_cols) \
             if bucketed or sort_mode != SortMode.NONE else None
-        return self._write_files(write_df.withColumn(KIND, F.lit("base")),
-                                 instant, already_partitioned=True,
+        return self._write_files(write_df, instant, already_partitioned=True,
                                  sort_cols=sort_cols)
 
     def _keep_file_group(self, df: DataFrame, instant: str,
-                         delta: bool = False) -> DataFrame:
+                         delta: bool = False, extra: dict | None = None) -> DataFrame:
         """In-place rewrite (COW merge, compaction, log compaction): each
         row keeps the file group its current file belongs to and is named
-        for ``instant``."""
-        df = df.withColumn(BUCKET, F.split(F.col(FILE_NAME), "_").getItem(0))
+        for ``instant``; ``extra`` columns ride in the same projection."""
+        fid = F.split(F.col(FILE_NAME), "_").getItem(0)
         name = delta_file_name if delta else base_file_name
-        return df.withColumn(FILE_NAME, name(F.col(BUCKET), instant))
+        return df.withColumns({BUCKET: fid, FILE_NAME: name(fid, instant),
+                               **(extra or {})})
 
     # ----------------------------------------------------------- file writer
     def _write_files(self, df: DataFrame, instant: str, *, already_partitioned=False,
@@ -991,9 +1029,7 @@ class WriteClient:
         harvests footer stats. Exactly one part-file per bucket because the
         bucket column is the (only) repartition key."""
         tmp = os.path.join(self.table.base_path, ".hoodie", ".temp", instant)
-        internal = [c for c in df.columns
-                    if c in (OP, ORD, INCOMING, HARD, "__is_new", "__u") or
-                    c.startswith("_target_")]
+        internal = [c for c in (OP, ORD, INCOMING, HARD, IS_NEW) if c in df.columns]
         w = df.drop(*internal)
         if not already_partitioned:
             w = w.repartition(F.col(PP), F.col(BUCKET))

@@ -2,6 +2,9 @@
 (public HoodieSimpleBucketIndex design; extension beyond this reference
 snapshot)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from hoodie_spark import HoodieTable, TableType
@@ -284,3 +287,64 @@ def test_bucket_clustering_sorts_within_buckets(spark, orders,
     snap = tbl.snapshot()
     assert snap.count() == n  # no duplicates
     assert snap.filter("o_orderstatus='C'").count() == n
+
+
+def test_bucket_bulk_insert_refuses_live_partitions(spark, orders,
+                                                    tmp_table_path):
+    """A second bucket bulk_insert into occupied partitions would write a
+    newer base slice at the same deterministic fid containing only the new
+    batch, silently shadowing committed rows — it must raise instead."""
+    tbl = _table(spark, tmp_table_path)
+    tbl.bulk_insert(orders)
+    n = tbl.snapshot().count()
+    with pytest.raises(ValueError, match="initial-load"):
+        tbl.bulk_insert(orders.limit(50))
+    # nothing lost, nothing half-written, timeline has no dangling pending
+    assert tbl.snapshot().count() == n
+    assert not [i for i in tbl.timeline.pending()]
+    # the documented follow-on path still works
+    tbl.upsert(orders.limit(50).withColumn("o_orderstatus", F.lit("Z")))
+    assert tbl.snapshot().count() == n
+
+
+def test_bucket_bulk_insert_new_partitions_ok(spark, orders, tmp_table_path):
+    """Loading a brand-new partition is still an initial load — allowed."""
+    tbl = _table(spark, tmp_table_path)
+    early = orders.filter("year(o_orderdate) < 1995")
+    late = orders.filter("year(o_orderdate) >= 1995")
+    tbl.bulk_insert(early)
+    tbl.bulk_insert(late)  # disjoint partitions: no shadowing possible
+    assert tbl.snapshot().count() == orders.count()
+
+
+def test_bucket_expr_stats_keyed_by_partition(spark, orders, tmp_table_path):
+    """Bucket tables write identically named base files in several
+    partitions within one commit; expression stats must be keyed by the
+    partition-qualified path or one partition's min/max is recorded for
+    every same-named file (and skip_filters then prune files that DO
+    contain matching rows)."""
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "orders", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)",
+        write_config=WriteConfig(index_type=IndexType.BUCKET,
+                                 bucket_index_num_buckets=4,
+                                 stats_exprs={"yr": "year(o_orderdate)"}))
+    tbl.bulk_insert(orders)
+    slices = tbl.view().latest_slices()
+    # same basename appears in >1 partition — the collision the fix guards
+    by_name = {}
+    for sl in slices:
+        by_name.setdefault(os.path.basename(sl.base_file.path),
+                           set()).add(sl.partition)
+    assert any(len(pps) > 1 for pps in by_name.values())
+    # every file's harvested yr range must equal its own partition's year
+    for sl in slices:
+        cs = sl.base_file.col_stats
+        assert cs and "yr" in cs, sl.base_file.path
+        yr = int(sl.partition)
+        assert cs["yr"] == [yr, yr], (sl.partition, cs["yr"])
+    # end-to-end: pruning by the expression alias loses no rows
+    exp = orders.filter("year(o_orderdate) = 1996").count()
+    got = tbl.snapshot(skip_filters=[("yr", "=", 1996)]) \
+        .filter("year(o_orderdate) = 1996").count()
+    assert got == exp

@@ -155,6 +155,72 @@ def test_partial_update_payload(spark, customer, tmp_table_path):
     assert hit.filter("c_name is null").count() == 0  # untouched fields kept
 
 
+def test_partial_update_opens_new_file_groups(spark, customer, tmp_table_path):
+    """A partial-update batch mixing updates with new keys: with small-file
+    packing off the new keys open new file groups, and the per-group merge
+    must write them (they have no stored row to join) while keeping the
+    untouched fields of the updated rows."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "customer",
+                             recordkey_fields=["c_custkey"],
+                             payload=MergePolicy.PARTIAL_UPDATE,
+                             write_config=WriteConfig(parquet_small_file_limit=0))
+    tbl.bulk_insert(customer.filter("c_custkey < 100"))
+    pu = customer.filter("c_custkey % 3 = 0 and c_custkey < 200").select(
+        "c_custkey", F.lit(999.0).alias("c_acctbal"))
+    tbl.upsert(pu)
+    snap = tbl.snapshot()
+    assert snap.count() == 116
+    assert snap.filter("c_acctbal = 999.0").count() == pu.count()
+    # updated rows keep their stored fields; new keys carry only c_acctbal
+    assert snap.filter("c_custkey < 100 and c_name is null").count() == 0
+    assert snap.filter("c_custkey >= 100 and c_name is null").count() == 16
+
+
+def test_untouched_small_file_keeps_its_slice(spark, customer, tmp_table_path):
+    """A small file in the insert plan whose hash range draws no insert is
+    read by the merge job but not rewritten: only the group that got the
+    new key has a new slice, and nothing is marked replaced."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "customer",
+                             recordkey_fields=["c_custkey"])
+    tbl.bulk_insert(customer.filter("c_custkey < 50"))
+    tbl.bulk_insert(customer.filter("c_custkey >= 50 and c_custkey < 100"))
+    before = {sl.file_id: sl.base_file.file_name for sl in tbl.view().latest_slices()}
+    assert len(before) >= 2  # one partition, two small base files
+    res = tbl.upsert(customer.filter("c_custkey = 120"))
+    after = {sl.file_id: sl.base_file.file_name for sl in tbl.view().latest_slices()}
+    assert set(after) == set(before)  # packed, no new group
+    changed = [fid for fid in before if after[fid] != before[fid]]
+    assert len(changed) == 1
+    assert [s["file_id"] for s in res.stats] == changed
+    md = tbl.timeline.metadata(tbl.timeline.completed()[-1])
+    assert md["replaced"] == {}
+    assert tbl.snapshot().count() == 101
+
+
+def test_key_in_two_file_groups_is_updated_and_deleted_in_both(
+        spark, customer, tmp_table_path):
+    """``insert`` skips the index, so re-inserting a stored key with
+    packing off puts a second copy in a new file group. The index tags an
+    upsert or delete of that key to both groups, and each group's merge
+    must apply it: an update rewrites both copies, a delete removes
+    both."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "customer",
+                             recordkey_fields=["c_custkey"],
+                             write_config=WriteConfig(parquet_small_file_limit=0))
+    tbl.bulk_insert(customer.filter("c_custkey < 100"))
+    tbl.insert(customer.filter("c_custkey in (5, 6)"))
+    assert len(tbl.view().latest_slices()) == 2
+    assert tbl.snapshot().filter("c_custkey = 5").count() == 2
+    tbl.upsert(customer.filter("c_custkey = 6").withColumn("c_acctbal", F.lit(999.0)))
+    six = tbl.snapshot().filter("c_custkey = 6")
+    assert six.count() == 2
+    assert six.filter("c_acctbal != 999.0").count() == 0  # no stale copy
+    tbl.delete(customer.filter("c_custkey = 5"))
+    snap = tbl.snapshot()
+    assert snap.filter("c_custkey = 5").count() == 0
+    assert snap.filter("c_custkey < 100 and c_custkey != 6").count() == 98
+
+
 def test_filter_exists_and_read_keys(spark, customer, tmp_table_path):
     tbl = HoodieTable.create(spark, tmp_table_path, "customer",
                              recordkey_fields=["c_custkey"])

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hoodie_spark import HoodieTable, TableType
+from hoodie_spark import timeline as tl
 from hoodie_spark.config import WriteConfig
 from hoodie_spark.services.rollback import rollback_failed_writes
 from hoodie_spark.writer import WriteClient
@@ -226,3 +227,28 @@ def test_write_lifecycle_lives_in_the_writer():
     """Operations and table services run through WriteClient.transaction
     instead of carrying their own begin/abandon blocks."""
     assert lifecycle_violations(os.path.join(REPO, "hoodie_spark")) == []
+
+
+def test_heartbeat_auto_refresh_blocks_reclaim(spark, orders,
+                                               tmp_table_path):
+    """A live write whose jobs outlast heartbeat_expiry_s must keep
+    beating (background refresher) so lazy reclamation never rolls it
+    back mid-flight; once the writer stops beating it becomes
+    reclaimable."""
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "hb", ["o_orderkey"], "o_orderdate",
+        write_config=WriteConfig(heartbeat_expiry_s=0.6))
+    tbl.bulk_insert(orders.limit(100))
+    wc = tbl._writer
+    instant = wc._begin(tl.COMMIT)  # in-flight write, refresher armed
+    try:
+        time.sleep(1.8)  # 3x the expiry: a single-shot beat would be stale
+        assert rollback_failed_writes(tbl) == []
+        assert [i for i in tbl.timeline.pending()
+                if i.timestamp == instant]
+    finally:
+        wc._stop_heartbeat(instant)
+    time.sleep(0.8)  # beat gone and stale -> now genuinely dead
+    assert rollback_failed_writes(tbl) == [instant]
+    assert not [i for i in tbl.timeline.pending()
+                if i.timestamp == instant]

@@ -202,3 +202,20 @@ def test_writestream_format_exactly_once(spark, orders, tmp_table_path,
     tbl = HoodieTable.load(spark, tpath)
     assert tbl.snapshot().count() == n1
     assert len(tbl.timeline.completed()) == commits1
+
+
+def test_datasource_overwrite_replaces_whole_table(spark, orders,
+                                                   tmp_table_path):
+    """SaveMode.Overwrite = full-table overwrite (Hudi's DefaultSource
+    maps it to INSERT_OVERWRITE_TABLE), not partition-scoped."""
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "owds", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)")
+    tbl.bulk_insert(orders)
+    only_1995 = orders.filter("year(o_orderdate) = 1995").limit(20)
+    (only_1995.write.format("hoodie_spark").mode("overwrite")
+     .save(tmp_table_path))
+    snap = HoodieTable.load(spark, tmp_table_path).snapshot()
+    # every other year's rows are gone — whole-table semantics
+    assert snap.count() == 20
+    assert snap.filter("year(o_orderdate) != 1995").count() == 0

@@ -154,3 +154,28 @@ def test_mor_schema_evolution_across_base_and_delta(spark, orders,
     snap2 = tbl.snapshot()
     assert snap2.count() == n
     assert snap2.filter("loyalty = 7").count() == 60
+
+
+def test_mor_key_in_two_file_groups_is_updated_and_deleted_in_both(
+        spark, customer, tmp_table_path):
+    """A key stored in two file groups (``insert`` skips the index) gets a
+    delta in each group for an update or a delete: no copy is stale or
+    left behind, before compaction or after it. The snapshot folds the
+    updated copies into one row; compaction, which merges per file
+    group, keeps one per group."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "customer",
+                             recordkey_fields=["c_custkey"],
+                             table_type=TableType.MERGE_ON_READ)
+    tbl.bulk_insert(customer.filter("c_custkey < 100"))
+    tbl.insert(customer.filter("c_custkey in (5, 6)"))
+    assert len(tbl.view().latest_slices()) == 2
+    tbl.upsert(customer.filter("c_custkey = 6").withColumn("c_acctbal", F.lit(999.0)))
+    tbl.delete(customer.filter("c_custkey = 5"))
+    for compacted in (False, True):
+        if compacted:
+            assert tbl.compact() is not None
+        snap = tbl.snapshot()
+        assert snap.filter("c_custkey = 5").count() == 0
+        six = snap.filter("c_custkey = 6")
+        assert six.count() == (2 if compacted else 1)
+        assert six.filter("c_acctbal != 999.0").count() == 0  # no stale copy

@@ -461,3 +461,41 @@ def test_file_versions_clean_sets_readability_horizon(spark, orders,
     # the latest version is complete and readable
     assert tbl.snapshot(as_of=r3.instant).count() == 300
     assert tbl.snapshot().filter("o_orderstatus='B'").count() == 300
+
+
+def test_clean_sweeps_compacted_logs_in_superseded_slices(
+        spark, orders, tmp_table_path):
+    """logcompaction then FULL compaction leaves the compacted originals in
+    a superseded slice; the cleaner must still delete them once they fall
+    behind the retention horizon (storage leak otherwise)."""
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "sweep", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)",
+        table_type=TableType.MERGE_ON_READ)
+    tbl.bulk_insert(orders)
+    for i in range(3):
+        tbl.upsert(orders.filter(F.col("o_orderkey") % 3 == i)
+                   .withColumn("o_orderstatus", F.lit(f"S{i}")))
+    assert tbl.logcompact(min_log_files=3) is not None
+    originals = [lf.path for sl in tbl.view().latest_slices()
+                 for lf in sl.log_files if lf.compacted_at is not None]
+    assert originals
+    # full compaction supersedes those slices entirely
+    assert tbl.compact() is not None
+    expected = {r.o_orderkey: r.o_orderstatus
+                for r in tbl.snapshot()
+                .select("o_orderkey", "o_orderstatus").collect()}
+    # push the retention horizon, then clean (the P-upserts carry the
+    # ORIGINAL status for their 5 keys, legitimately winning)
+    touched = orders.limit(5).select("o_orderkey", "o_orderstatus").collect()
+    expected.update({r.o_orderkey: r.o_orderstatus for r in touched})
+    for i in range(3):
+        tbl.upsert(orders.limit(5)
+                   .withColumn("o_orderpriority", F.lit(f"P{i}")))
+    assert tbl.clean(retained=2) is not None
+    for p in originals:
+        assert not os.path.exists(os.path.join(tbl.base_path, p)), p
+    got = {r.o_orderkey: r.o_orderstatus
+           for r in tbl.snapshot()
+           .select("o_orderkey", "o_orderstatus").collect()}
+    assert got == expected
