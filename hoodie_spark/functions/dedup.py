@@ -23,6 +23,15 @@ Reference parity: the reference engine has no dedup surface; these extend it
 per the north-star (BASELINE.json). Exact dedup mirrors the reference's
 in-batch ``deduplicateRecords`` semantics (SparkWriteHelper.java:50) applied
 corpus-wide.
+
+Pinned intermediates have one owner, :class:`StageCache`. An operator that
+persists a frame (a signature pass its self-join reads twice, the
+representatives its verifier joins twice) pins it in a StageCache attached
+to its result as ``result._stage_cache``. The frames unpersist when the
+caller drops the result or calls ``result._stage_cache.release()``. Hold the
+result across the action: a frame derived from it (``.select``,
+``.groupBy``) lets the result go, and that derived frame's action pays one
+re-evaluation of the pinned stages. Releasing early never changes a result.
 """
 
 from __future__ import annotations
@@ -61,16 +70,36 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Persist an intermediate that a self-join consumes twice.
+class StageCache:
+    """The owner of an operator's persisted frames (see the module
+    docstring for the contract): one handle per result, no module-global
+    state."""
 
-    Without the materialization boundary Catalyst inlines the signature
-    expression tree into BOTH join branches — the dominant cost (md5 over
-    every shingle × hash seed) would run twice, plus once more per
-    downstream verification join.
-    """
-    return df.persist()
+    def __init__(self):
+        self._frames: list = []
 
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` until this cache is released. Pin a frame that
+        several consumers read — a self-join's two sides, an eager census
+        plus the final action — so its upstream runs once."""
+        self._frames.append(df.persist())
+        return df
+
+    def attach(self, result: DataFrame) -> DataFrame:
+        """Tie the pinned frames' lifetime to ``result``."""
+        result._stage_cache = self
+        return result
+
+    def release(self) -> None:
+        for f in self._frames:
+            try:
+                f.unpersist()
+            except Exception:  # Spark session may already be stopped
+                pass
+        self._frames.clear()
+
+    def __del__(self):  # pragma: no cover - GC timing
+        self.release()
 
 
 def _check_threshold(threshold: float) -> None:
@@ -281,7 +310,9 @@ def seen_dedup(df: DataFrame, id_col: str, text_col: str,
     signature agreement is an in-row zip — no text re-reads.
     """
     mm = min_sig_matches(threshold, num_hashes)
-    feats = _pin(doc_features(df, id_col, text_col, num_hashes, bands, ngram))
+    cache = StageCache()
+    feats = cache.pin(doc_features(df, id_col, text_col, num_hashes, bands,
+                                   ngram))
     # NULL text has no content hash: such rows are never exact duplicates
     # of anything (grouping would otherwise collect all NULL chashes into
     # one bogus duplicate class, while any equi-join probe on chash never
@@ -296,20 +327,15 @@ def seen_dedup(df: DataFrame, id_col: str, text_col: str,
     exact_dropped = (ex.join(exact_mins, "chash")
                      .filter(F.col(id_col) != F.col("__keep"))
                      .select(F.col(id_col)))
-    banded = _pin(
-        feats.filter(F.col("bands").isNotNull())
-        .select(F.col(id_col), F.col("minhash"),
-                F.explode("bands").alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"),
-                F.col("bk.bh").alias("bh"), "minhash"))
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = cache.pin(band_rows(feats.filter(F.col("bands").isNotNull()),
+                                 [id_col, "minhash"]))
     near_dropped = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .filter(sig_agreement(F.col("a.minhash"), F.col("b.minhash")) >= mm)
-        .select(F.col(f"b.{id_col}").alias(id_col)))
+        bounded_self_pairs(banded, ["band", "bh"], id_col, None,
+                           carry=("minhash",))
+        .filter(sig_agreement(F.col("minhash_a"), F.col("minhash_b")) >= mm)
+        .select(F.col("id_b").alias(id_col)))
     dropped = exact_dropped.unionByName(near_dropped).distinct()
-    return df.join(dropped, id_col, "left_anti")
+    return cache.attach(df.join(dropped, id_col, "left_anti"))
 
 
 def sig_agreement(sig_a, sig_b) -> Column:
@@ -331,6 +357,21 @@ def band_keys(sig_col, bands: int, rows_per_band: int) -> Column:
     )
 
 
+def band_rows(df: DataFrame, keep: list, bands="bands",
+              outer: bool = False) -> DataFrame:
+    """One row per LSH band of each document: ``(*keep, band, bh)``.
+
+    ``bands`` is a :func:`band_keys` array, by column name or expression;
+    ``keep`` are the columns (names or expressions) each band row
+    carries. A document without bands drops out, or with ``outer=True``
+    stays as one row whose band and bh are NULL."""
+    explode = F.explode_outer if outer else F.explode
+    return (df.select(*keep, explode(bands).alias("__bk"))
+            .select("*", F.col("__bk.band").alias("band"),
+                    F.col("__bk.bh").alias("bh"))
+            .drop("__bk"))
+
+
 def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                             num_hashes: int = 16, bands: int = 4,
                             ngram: int = 5,
@@ -344,14 +385,12 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     split by :func:`bounded_self_pairs` so the join stays O(n·cap) per
     group instead of quadratic.
     """
-    rows_per_band = num_hashes // bands
     sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram)
-    exploded = _pin(
-        sig.select(F.col(id_col), F.explode(band_keys("minhash", bands, rows_per_band)).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    )
-    return bounded_self_pairs(exploded, ["band", "bh"], id_col,
-                              max_band_rows).distinct()
+    cache = StageCache()
+    banded = cache.pin(band_rows(
+        sig, [id_col], band_keys("minhash", bands, num_hashes // bands)))
+    return cache.attach(bounded_self_pairs(banded, ["band", "bh"], id_col,
+                                           max_band_rows).distinct())
 
 
 def sig_near_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -377,20 +416,17 @@ def sig_near_pairs(df: DataFrame, id_col: str, text_col: str,
     not the exact-threshold one — the right trade wherever the
     downstream op needs a consistent duplicate RELATION rather than a
     calibrated similarity (splits, incremental dedup)."""
-    rows_per_band = num_hashes // bands
     mm = min_sig_matches(threshold, num_hashes)
     sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram)
-    exploded = _pin(
-        sig.select(F.col(id_col), F.col("minhash"),
-                   F.explode(band_keys("minhash", bands,
-                                       rows_per_band)).alias("bk"))
-        .select(id_col, "minhash", F.col("bk.band").alias("band"),
-                F.col("bk.bh").alias("bh")))
-    return (bounded_self_pairs(exploded, ["band", "bh"], id_col,
-                               max_band_rows, carry=("minhash",))
-            .filter(sig_agreement(F.col("minhash_a"),
-                                  F.col("minhash_b")) >= mm)
-            .select("id_a", "id_b").distinct())
+    cache = StageCache()
+    banded = cache.pin(band_rows(
+        sig, [id_col, "minhash"],
+        band_keys("minhash", bands, num_hashes // bands)))
+    return cache.attach(
+        bounded_self_pairs(banded, ["band", "bh"], id_col, max_band_rows,
+                           carry=("minhash",))
+        .filter(sig_agreement(F.col("minhash_a"), F.col("minhash_b")) >= mm)
+        .select("id_a", "id_b").distinct())
 
 
 def exact_text_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -459,15 +495,16 @@ def dedup_keep_best(df: DataFrame, id_col: str, text_col: str,
     ids."""
     from .components import duplicate_groups
 
-    pairs = (sig_near_pairs(df, id_col, text_col, threshold, num_hashes,
-                            bands, ngram, max_band_rows)
-             .unionByName(exact_text_pairs(df, id_col, text_col)))
+    near = sig_near_pairs(df, id_col, text_col, threshold, num_hashes,
+                          bands, ngram, max_band_rows)
+    pairs = near.unionByName(exact_text_pairs(df, id_col, text_col))
     groups = duplicate_groups(pairs).select(
         F.col("id").alias("__mid"), F.col("group_id").alias("__g"))
-    keyed = _pin(df.join(groups, df[id_col] == F.col("__mid"), "left")
-                 .drop("__mid")
-                 .withColumn("__g", F.coalesce(F.col("__g"),
-                                               F.col(id_col))))
+    # duplicate_groups checkpointed the pairs: nothing reads near's pin
+    near._stage_cache.release()
+    keyed = (df.join(groups, df[id_col] == F.col("__mid"), "left")
+             .drop("__mid")
+             .withColumn("__g", F.coalesce(F.col("__g"), F.col(id_col))))
     s = F.coalesce(F.col(score_col).cast("double"),
                    F.lit(float("-inf")))
     best = keyed.groupBy("__g").agg(F.max(s).alias("__smax"),
@@ -475,9 +512,6 @@ def dedup_keep_best(df: DataFrame, id_col: str, text_col: str,
     tied = (keyed.join(best, "__g")
             .filter(s == F.col("__smax")))
     winner = tied.groupBy("__g").agg(F.min(id_col).alias("__wid"))
-    # keyed stays pinned (the house _pin contract: consumers above;
-    # unpersisting here would re-run the pair derivation per consumer on
-    # the caller's first action — LRU eviction reclaims it).
     # Winner rows come from `tied` (which already carries every df column
     # plus n_dups from the `best` join) instead of a fresh
     # keyed⋈best⋈winner chain — one corpus-sized shuffle join instead of
@@ -486,6 +520,95 @@ def dedup_keep_best(df: DataFrame, id_col: str, text_col: str,
     return (tied.join(winner, "__g")
             .filter(F.col(id_col) == F.col("__wid"))
             .drop("__g", "__wid", "__smax"))
+
+
+def _verify_hash_pairs(hp: DataFrame, reps: DataFrame, gate, score,
+                       name: str) -> DataFrame:
+    """Verify each distinct-text pair once. ``hp`` holds ``(__h1, __h2)``
+    content-hash pairs of two different texts; ``reps`` holds one
+    ``(__ch, __p, __sz)`` row per distinct text (its md5, the payload the
+    verifier reads and the payload's size). ``gate(sz1, sz2)`` prunes on
+    sizes alone, before any payload is joined (None: no gate);
+    ``score(p1, p2, sz1, sz2)`` returns ``(value, keep)``. Returns
+    ``(__h1, __h2, <name>)`` for the kept pairs."""
+    def side(i, cols):
+        return reps.select(F.col("__ch").alias(f"__h{i}"),
+                           *[F.col(c).alias(f"{c}{i}") for c in cols])
+
+    cols = ["__p", "__sz"]
+    if gate is not None:
+        hp = (hp.join(side(1, ["__sz"]), "__h1")
+              .join(side(2, ["__sz"]), "__h2")
+              .filter(gate(F.col("__sz1"), F.col("__sz2"))))
+        cols = ["__p"]
+    value, keep = score(F.col("__p1"), F.col("__p2"),
+                        F.col("__sz1"), F.col("__sz2"))
+    return (hp.join(side(1, cols), "__h1").join(side(2, cols), "__h2")
+            .filter(keep).select("__h1", "__h2", value.alias(name)))
+
+
+def _verify_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
+                      sig: DataFrame, num_hashes: int, bands: int,
+                      max_band_rows: int | None, payload, size, gate, score,
+                      name: str, same_when=None) -> DataFrame:
+    """LSH candidate pairs verified at the distinct-text grain.
+
+    ``sig`` holds ``(id, minhash, __sz)``, ``__sz`` being the document's
+    ``size(payload(text))``. Candidates are the id pairs sharing a band,
+    pruned by ``gate(sz_a, sz_b)`` in-row, before the ``.distinct()``
+    that consolidates them. Each id then maps to its text's md5; each
+    distinct hash pair is verified once by :func:`_verify_hash_pairs`
+    against one representative per distinct text, and the verdicts join
+    back to the id pairs. Two copies of one text score 1.0 without a
+    verify, where ``same_when(size)`` holds (always when None). Returns
+    ``(id_a, id_b, <name>)``, its pinned frames owned by the result.
+
+    A template-heavy corpus, the population that makes candidate pairs
+    explode, collapses: N byte-identical docs contribute ONE hash, and
+    cross-template pairs verify once per template pair. The earlier
+    per-id-pair verify join spilled >36 GB of shuffle on a ×100 template
+    corpus; this shape ships each distinct payload once per distinct
+    counterpart instead."""
+    cache = StageCache()
+    banded = cache.pin(band_rows(
+        sig, [id_col, "__sz"],
+        band_keys("minhash", bands, num_hashes // bands)))
+    cands = (bounded_self_pairs(banded, ["band", "bh"], id_col,
+                                max_band_rows, carry=("__sz",))
+             .filter(gate(F.col("__sz_a"), F.col("__sz_b")))
+             .select("id_a", "id_b").distinct())
+    docs = cache.pin(df.select(F.col(id_col),
+                               F.md5(F.col(text_col)).alias("__ch")))
+    # one representative per distinct text: same hash ⇒ same bytes ⇒ same
+    # payload, so which row wins the dropDuplicates race is irrelevant,
+    # and the payload is computed once per distinct text
+    reps = cache.pin(
+        _spread(df.select(F.md5(F.col(text_col)).alias("__ch"),
+                          F.col(text_col).alias("__t"))
+                .filter(F.col("__ch").isNotNull())
+                .dropDuplicates(["__ch"]))
+        .select("__ch", payload(F.col("__t")).alias("__p"))
+        .withColumn("__sz", size(F.col("__p"))))
+    pc = cache.pin(
+        cands
+        .join(docs.select(F.col(id_col).alias("id_a"),
+                          F.col("__ch").alias("__ha")), "id_a")
+        .join(docs.select(F.col(id_col).alias("id_b"),
+                          F.col("__ch").alias("__hb")), "id_b")
+        .withColumn("__h1", F.least("__ha", "__hb"))
+        .withColumn("__h2", F.greatest("__ha", "__hb")))
+    hp = pc.select("__h1", "__h2").distinct()
+    same = hp.filter(F.col("__h1") == F.col("__h2"))
+    if same_when is not None:
+        same = (same.join(reps.select(F.col("__ch").alias("__h1"), "__sz"),
+                          "__h1")
+                .filter(same_when(F.col("__sz"))))
+    verdicts = (_verify_hash_pairs(hp.filter(F.col("__h1") != F.col("__h2")),
+                                   reps, gate, score, name)
+                .unionByName(same.select("__h1", "__h2",
+                                         F.lit(1.0).alias(name))))
+    return cache.attach(pc.join(verdicts, ["__h1", "__h2"])
+                        .select("id_a", "id_b", name))
 
 
 def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -497,19 +620,12 @@ def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     LSH candidates first (cheap), exact |∩|/|∪| verification on candidates
     only. Returns (id_a, id_b, jaccard).
 
-    Verification runs at the DISTINCT-TEXT grain, not the id-pair grain:
-    Jaccard depends only on the two texts, so candidate id-pairs map to
-    content-hash pairs, each distinct (hash_a, hash_b) is verified ONCE
-    against one representative shingle array per hash, and the scalar
-    verdict joins back to the id-pairs. A template-heavy corpus — the
-    population that makes candidate pairs explode — collapses: N
-    byte-identical docs contribute ONE hash, identical-hash pairs skip
-    the array verify entirely (Jaccard is exactly 1.0 when the shingle
-    set is non-empty, matching the n/n the formula would compute), and
-    cross-template pairs verify once per template pair. The earlier
-    per-id-pair verify join measurably spilled >36 GB of shuffle on a
-    ×100 template corpus; this shape ships each distinct text's array
-    once per distinct counterpart instead.
+    Verification runs at the DISTINCT-TEXT grain
+    (:func:`_verify_lsh_pairs`): Jaccard depends only on the two texts, so
+    each distinct (hash_a, hash_b) is verified ONCE against one
+    representative shingle array per hash. Identical-hash pairs skip the
+    array verify (Jaccard is exactly 1.0 when the shingle set is
+    non-empty, matching the n/n the formula would compute).
 
     A size gate prunes candidate pairs IN-ROW, before the ``.distinct()``
     that consolidates them and again before the arrays are joined:
@@ -525,69 +641,23 @@ def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     agreement gate.
     """
     _check_threshold(threshold)
-    rows_per_band = num_hashes // bands
-    sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram,
-                       with_size=True)
-    exploded = _pin(
-        sig.select(F.col(id_col), F.col("__nsh"),
-                   F.explode(band_keys("minhash", bands,
-                                       rows_per_band)).alias("bk"))
-        .select(id_col, "__nsh", F.col("bk.band").alias("band"),
-                F.col("bk.bh").alias("bh")))
-    size_ok = (F.least("__nsh_a", "__nsh_b").cast("double")
-               / F.greatest("__nsh_a", "__nsh_b").cast("double")
-               >= F.lit(float(threshold)) - F.lit(1e-9))
-    cands = (bounded_self_pairs(exploded, ["band", "bh"], id_col,
-                                max_band_rows, carry=("__nsh",))
-             .filter(size_ok)
-             .select("id_a", "id_b").distinct())
-    docs = _pin(df.select(F.col(id_col), F.md5(F.col(text_col)).alias("__ch")))
-    # one representative per distinct text: same hash ⇒ same bytes ⇒ same
-    # shingle set, so which row wins the partial-aggregate race is
-    # irrelevant; shingling itself also runs once per distinct text
-    reps = _pin(_spread(df.select(F.md5(F.col(text_col)).alias("__ch"),
-                                  F.col(text_col))
-                        .filter(F.col("__ch").isNotNull())
-                        .dropDuplicates(["__ch"]))
-                .select("__ch",
-                        char_ngrams(F.col(text_col), ngram).alias("sh"))
-                .withColumn("n", F.size("sh")))
-    pc = _pin(
-        cands
-        .join(docs.select(F.col(id_col).alias("id_a"),
-                          F.col("__ch").alias("__ha")), "id_a")
-        .join(docs.select(F.col(id_col).alias("id_b"),
-                          F.col("__ch").alias("__hb")), "id_b")
-        .withColumn("__h1", F.least("__ha", "__hb"))
-        .withColumn("__h2", F.greatest("__ha", "__hb")))
-    hp = pc.select("__h1", "__h2").distinct()
-    sizes = reps.select("__ch", "n")
-    arrays = reps.select("__ch", "sh")
-    same = (hp.filter(F.col("__h1") == F.col("__h2"))
-            .join(sizes.select(F.col("__ch").alias("__h1"),
-                               F.col("n").alias("__n")), "__h1")
-            .filter(F.col("__n") > 0)
-            .select("__h1", "__h2", F.lit(1.0).alias("jaccard")))
-    gated = (hp.filter(F.col("__h1") != F.col("__h2"))
-             .join(sizes.select(F.col("__ch").alias("__h1"),
-                                F.col("n").alias("__n1")), "__h1")
-             .join(sizes.select(F.col("__ch").alias("__h2"),
-                                F.col("n").alias("__n2")), "__h2")
-             .filter(F.least("__n1", "__n2").cast("double")
-                     / F.greatest("__n1", "__n2").cast("double")
-                     >= F.lit(float(threshold)) - F.lit(1e-9))
-             .select("__h1", "__h2"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    verified = (gated
-                .join(arrays.select(F.col("__ch").alias("__h1"),
-                                    F.col("sh").alias("sh_a")), "__h1")
-                .join(arrays.select(F.col("__ch").alias("__h2"),
-                                    F.col("sh").alias("sh_b")), "__h2")
-                .select("__h1", "__h2", (inter / union).alias("jaccard")))
-    hj = (verified.unionByName(same)
-          .filter(F.col("jaccard") >= threshold))
-    return pc.join(hj, ["__h1", "__h2"]).select("id_a", "id_b", "jaccard")
+
+    def size_ok(n1, n2):
+        return (F.least(n1, n2).cast("double")
+                / F.greatest(n1, n2).cast("double")
+                >= F.lit(float(threshold)) - F.lit(1e-9))
+
+    def jaccard(sh1, sh2, n1, n2):
+        j = (F.size(F.array_intersect(sh1, sh2)).cast("double")
+             / F.size(F.array_union(sh1, sh2)).cast("double"))
+        return j, j >= threshold
+
+    sig = (minhash_sigs(df, id_col, text_col, num_hashes, ngram,
+                        with_size=True).withColumnRenamed("__nsh", "__sz"))
+    return _verify_lsh_pairs(
+        df, id_col, text_col, sig, num_hashes, bands, max_band_rows,
+        lambda t: char_ngrams(t, ngram), F.size, size_ok, jaccard,
+        "jaccard", same_when=lambda n: n > 0)
 
 
 def line_dedup(df: DataFrame, id_col: str, text_col: str,
@@ -645,13 +715,11 @@ def edit_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     k character edits". Candidates come from the shared banded-LSH shape
     (normalized-text shingles); verification compares the RAW texts.
 
-    Scale shape — born with the distinct-text discipline of
-    :func:`jaccard_dedup_pairs`: candidate id-pairs map to content-hash
-    pairs; byte-identical pairs short-circuit to similarity 1.0 with no
-    text comparison; each distinct (hash_a, hash_b) is verified ONCE and
-    the scalar joins back to id-pairs, so a template cluster never ships
-    O(copies²) text payloads. The length gate (``lev ≥ |len_a - len_b|``
-    ⇒ similarity ≤ 1 - |Δlen|/max_len) runs IN-ROW on the banded
+    Scale shape — the distinct-text verify of :func:`_verify_lsh_pairs`:
+    byte-identical pairs short-circuit to similarity 1.0 with no text
+    comparison and each distinct (hash_a, hash_b) is verified ONCE, so a
+    template cluster never ships O(copies²) text payloads. The length
+    gate (``lev ≥ |len_a - len_b|`` ⇒ similarity ≤ 1 - |Δlen|/max_len) runs IN-ROW on the banded
     self-join, BEFORE the ``.distinct()`` that consolidates candidates —
     sub-cap hot band groups produce quadratically many raw pairs and
     consolidating them ungated is itself a scale-killer (measured at a
@@ -662,76 +730,28 @@ def edit_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     O(budget·len) instead of O(len²) per verify.
     """
     _check_threshold(threshold)
-    rows_per_band = num_hashes // bands
-    sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram)
-    lens = df.select(F.col(id_col), F.length(text_col).alias("__tlen"))
-    exploded = _pin(
-        sig.join(lens, id_col)
-        .select(F.col(id_col), F.col("__tlen"),
-                F.explode(band_keys("minhash", bands,
-                                    rows_per_band)).alias("bk"))
-        .select(id_col, "__tlen", F.col("bk.band").alias("band"),
-                F.col("bk.bh").alias("bh")))
-    len_ok = ((F.lit(1.0)
-               - F.abs(F.col("__tlen_a") - F.col("__tlen_b"))
-               .cast("double")
-               / F.greatest("__tlen_a", "__tlen_b").cast("double"))
-              >= F.lit(float(threshold)) - F.lit(1e-9))
-    cands = (bounded_self_pairs(exploded, ["band", "bh"], id_col,
-                                max_band_rows, carry=("__tlen",))
-             .filter(len_ok)
-             .select("id_a", "id_b").distinct())
-    docs = _pin(df.select(F.col(id_col),
-                          F.md5(F.col(text_col)).alias("__ch")))
-    reps = _pin(df.select(F.md5(F.col(text_col)).alias("__ch"),
-                          F.col(text_col).alias("__t"))
-                .filter(F.col("__ch").isNotNull())
-                .dropDuplicates(["__ch"])
-                .withColumn("__len", F.length("__t")))
-    pc = _pin(
-        cands
-        .join(docs.select(F.col(id_col).alias("id_a"),
-                          F.col("__ch").alias("__ha")), "id_a")
-        .join(docs.select(F.col(id_col).alias("id_b"),
-                          F.col("__ch").alias("__hb")), "id_b")
-        .withColumn("__h1", F.least("__ha", "__hb"))
-        .withColumn("__h2", F.greatest("__ha", "__hb")))
-    hp = pc.select("__h1", "__h2").distinct()
-    sizes = reps.select("__ch", "__len")
-    same = (hp.filter(F.col("__h1") == F.col("__h2"))
-            .select("__h1", "__h2", F.lit(1.0).alias("similarity")))
-    gated = (hp.filter(F.col("__h1") != F.col("__h2"))
-             .join(sizes.select(F.col("__ch").alias("__h1"),
-                                F.col("__len").alias("__l1")), "__h1")
-             .join(sizes.select(F.col("__ch").alias("__h2"),
-                                F.col("__len").alias("__l2")), "__h2")
-             .withColumn("__lmax", F.greatest("__l1", "__l2"))
-             .filter((F.lit(1.0) - F.abs(F.col("__l1") - F.col("__l2"))
-                      .cast("double") / F.col("__lmax").cast("double"))
-                     >= F.lit(float(threshold)) - F.lit(1e-9)))
-    texts = reps.select("__ch", "__t")
-    # distance budget: sim ≥ t ⇔ lev ≤ (1-t)·max_len; the bounded
-    # levenshtein returns -1 past the budget, which maps to sim < t
-    # (SQL form — the Python wrapper only takes a literal threshold)
-    budget = F.floor((F.lit(1.0) - F.lit(float(threshold)) + F.lit(1e-9))
-                     * F.col("__lmax").cast("double")).cast("int")
-    verified = (gated
-                .join(texts.select(F.col("__ch").alias("__h1"),
-                                   F.col("__t").alias("__ta")), "__h1")
-                .join(texts.select(F.col("__ch").alias("__h2"),
-                                   F.col("__t").alias("__tb")), "__h2")
-                .withColumn("__budget", budget)
-                .withColumn("__lev",
-                            F.expr("levenshtein(__ta, __tb, __budget)"))
-                .filter(F.col("__lev") >= 0)
-                .select("__h1", "__h2",
-                        (F.lit(1.0) - F.col("__lev").cast("double")
-                         / F.col("__lmax").cast("double"))
-                        .alias("similarity")))
-    hj = (verified.unionByName(same)
-          .filter(F.col("similarity") >= threshold))
-    return (pc.join(hj, ["__h1", "__h2"])
-            .select("id_a", "id_b", "similarity"))
+
+    def len_ok(l1, l2):
+        return ((F.lit(1.0) - F.abs(l1 - l2).cast("double")
+                 / F.greatest(l1, l2).cast("double"))
+                >= F.lit(float(threshold)) - F.lit(1e-9))
+
+    def similarity(t1, t2, l1, l2):
+        lmax = F.greatest(l1, l2).cast("double")
+        # distance budget: sim ≥ t ⇔ lev ≤ (1-t)·max_len; the bounded
+        # levenshtein returns -1 past the budget
+        budget = F.floor((F.lit(1.0) - F.lit(float(threshold))
+                          + F.lit(1e-9)) * lmax).cast("int")
+        lev = F.call_function("levenshtein", t1, t2, budget)
+        sim = F.lit(1.0) - lev.cast("double") / lmax
+        return sim, (lev >= 0) & (sim >= threshold)
+
+    sig = (minhash_sigs(df, id_col, text_col, num_hashes, ngram)
+           .join(df.select(F.col(id_col), F.length(text_col).alias("__sz")),
+                 id_col))
+    return _verify_lsh_pairs(
+        df, id_col, text_col, sig, num_hashes, bands, max_band_rows,
+        lambda t: t, F.length, len_ok, similarity, "similarity")
 
 
 def corpus_overlap(df: DataFrame, group_col: str, text_col: str,
@@ -1027,7 +1047,8 @@ def simhash_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     # in-row signature (one row per input row; ids are the caller's dedup
     # unit). The explode+groupBy form (simhash_sigs) measured ~10× slower
     # at sf0.1 — see its docstring — and pair generation needs no id-merge.
-    sh = _pin(_spread(df).select(
+    cache = StageCache()
+    sh = cache.pin(_spread(df).select(
         F.col(id_col),
         simhash_signature(F.col(text_col), bits).alias("simhash")))
     segments = [
@@ -1042,7 +1063,7 @@ def simhash_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     # value onto one block key — bounded_self_pairs keeps it O(n·cap)
     cand = bounded_self_pairs(blocked, ["block"], id_col, max_block_rows,
                               carry=("simhash",)).distinct()
-    return (
+    return cache.attach(
         # cast to long: DuckDB's list_sum yields HUGEINT — both engines must
         # present the distance as int64 for the value-hash gate to agree
         cand.select("id_a", "id_b",
@@ -1076,10 +1097,11 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
     """
     from .similarity import cosine, sign_lsh_key
 
-    keyed = _pin(
+    cache = StageCache()
+    keyed = cache.pin(
         _spread(df).select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
         .withColumn("bucket", sign_lsh_key(F.col("v"), planes, dim)))
-    return (
+    return cache.attach(
         bounded_self_pairs(keyed, ["bucket"], id_col, max_bucket_rows,
                            carry=("v",))
         .select("id_a", "id_b", cosine(F.col("v_a"), F.col("v_b")).alias("cos"))
@@ -1125,7 +1147,8 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     # pin: the self-join consumes the assignment twice (three times with
     # the census) — without the boundary the broadcast-centroid argmax
     # pass would re-run per branch
-    assigned = _pin(
+    cache = StageCache()
+    assigned = cache.pin(
         _assign_centroids(c, cent).withColumnRenamed("c_id", "__sid"))
     pairs = (
         bounded_self_pairs(assigned, ["centroid"], "__sid",
@@ -1133,7 +1156,9 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
         .filter((dot("c_v_a", "c_v_b")
                  / (F.col("c_n_a") * F.col("c_n_b"))) >= threshold)
         .select(F.col("id_a"), F.col("id_b")))
-    return dedup_by_groups(df, id_col, pairs)
+    kept = dedup_by_groups(df, id_col, pairs)
+    cache.release()  # duplicate_groups checkpointed the pairs
+    return kept
 
 
 def dedup_spans(df: DataFrame, id_col: str, text_col: str,
@@ -1346,25 +1371,27 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     # and the max_prefix_df guard decide as in the per-doc shape. The
     # pair set is unchanged, except that exact-copy pairs now bypass
     # max_prefix_df: they come from the membership, not the posting join.
-    members = _pin(df.select(F.col(id_col), F.md5(F.col(text_col)).alias("__ch"))
-                   .filter(F.col("__ch").isNotNull()))
+    cache = StageCache()
+    members = cache.pin(df.select(F.col(id_col),
+                                  F.md5(F.col(text_col)).alias("__ch"))
+                        .filter(F.col("__ch").isNotNull()))
     grouped = (df.select(F.md5(F.col(text_col)).alias("__ch"),
                          F.col(text_col).alias("__t"))
                .filter(F.col("__ch").isNotNull())
                .groupBy("__ch")
                .agg(F.first("__t").alias("__t"),  # same hash => same bytes
                     F.count(F.lit(1)).alias("__n")))
-    sh = _pin(grouped.select(
-        "__ch", "__n", char_ngrams(F.col("__t"), ngram).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .withColumn("m", F.size("sh")))
-    ex = sh.select("__ch", "__n", "m", F.explode("sh").alias("t"))
+    sh = cache.pin(grouped.select(
+        "__ch", "__n", char_ngrams(F.col("__t"), ngram).alias("__p"))
+        .filter(F.size("__p") > 0)
+        .withColumn("__sz", F.size("__p")))
+    ex = sh.select("__ch", "__n", "__sz", F.explode("__p").alias("t"))
     dfreq = ex.groupBy("t").agg(F.sum("__n").alias("__df"))
     w = Window.partitionBy("__ch").orderBy("__df", "t")
-    req = F.ceil(F.lit(threshold) * F.col("m") - F.lit(1e-9)).cast("int")
+    req = F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9)).cast("int")
     prefix = (ex.join(dfreq, "t")
               .withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") <= F.col("m") - req + 1))
+              .filter(F.col("__rn") <= F.col("__sz") - req + 1))
     if max_prefix_df is not None:
         prefix = prefix.filter(F.col("__df") <= max_prefix_df)
     prefix = prefix.select(F.col("__ch").alias("__pch"), "t")
@@ -1373,18 +1400,14 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
              .select(F.least("__pch", "__cch").alias("__h1"),
                      F.greatest("__pch", "__cch").alias("__h2"))
              .distinct())
-    a = sh.select(F.col("__ch").alias("__h1"), F.col("sh").alias("sh_a"),
-                  F.col("m").alias("m_a"))
-    b = sh.select(F.col("__ch").alias("__h2"), F.col("sh").alias("sh_b"),
-                  F.col("m").alias("m_b"))
-    mn = F.least("m_a", "m_b")
-    need = F.ceil(F.lit(threshold) * mn - F.lit(1e-9)).cast("int")
-    verified = (cands.join(a, "__h1").join(b, "__h2")
-                .withColumn("__i", F.size(F.array_intersect("sh_a", "sh_b")))
-                .filter(F.col("__i") >= need)
-                .select("__h1", "__h2",
-                        F.round(F.col("__i").cast("double")
-                                / mn.cast("double"), 6).alias("containment")))
+
+    def containment(sh1, sh2, m1, m2):
+        i = F.size(F.array_intersect(sh1, sh2))
+        mn = F.least(m1, m2)
+        need = F.ceil(F.lit(threshold) * mn - F.lit(1e-9)).cast("int")
+        return F.round(i.cast("double") / mn.cast("double"), 6), i >= need
+
+    verified = _verify_hash_pairs(cands, sh, None, containment, "containment")
     cross = (verified
              .join(members.select(F.col("__ch").alias("__h1"),
                                   F.col(id_col).alias("__ida")), "__h1")
@@ -1403,7 +1426,7 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
              .select(F.col("__id").alias("id_a"),
                      F.col("__id2").alias("id_b"),
                      F.lit(1.0).alias("containment")))
-    return cross.unionByName(intra)
+    return cache.attach(cross.unionByName(intra))
 
 
 def lsh_plan(threshold: float, num_hashes: int = 16,

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..frames import local_frame
+from .dedup import StageCache
 
 __all__ = ["BigramLM", "train_bigram_lm", "bigram_perplexity",
            "excess_perplexity_select", "perplexity_buckets"]
@@ -418,17 +419,17 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     """
     from pyspark.sql import Window
 
-    # persist: the doc-grain scored frame (one row per document — model-
+    # pinned: the doc-grain scored frame (one row per document — model-
     # sized, never corpus-row-sized) feeds THREE actions below (min/max,
     # bin census, the caller's final action); without the pin each one
-    # re-runs the whole explode + model-join scoring pass. House _pin
-    # contract: stays persisted for the caller's action, LRU-reclaimed.
-    scored = bigram_perplexity(df, id_col, text_col, lm=lm,
-                               vocab_size=vocab_size).persist()
+    # re-runs the whole explode + model-join scoring pass
+    cache = StageCache()
+    scored = cache.pin(bigram_perplexity(df, id_col, text_col, lm=lm,
+                                         vocab_size=vocab_size))
     lo, hi = scored.agg(F.min("ppl"), F.max("ppl")).first()
     if lo is None:
-        return scored.select(id_col, "ppl",
-                             F.lit(None).cast("long").alias("bucket"))
+        return cache.attach(scored.select(
+            id_col, "ppl", F.lit(None).cast("long").alias("bucket")))
     span = float(hi) - float(lo)
     if span <= 0 or num_bins <= 1:
         binc = F.lit(0)
@@ -453,9 +454,9 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
            .rowsBetween(Window.unboundedPreceding, -1))
     rank = F.col("__off") + F.coalesce(
         F.count(F.lit(1)).over(win), F.lit(0))
-    return (staged.join(off_df, "__bin")
-            .withColumn("__rank", rank)
-            .withColumn("bucket", F.expr(
-                f"CAST(__rank * {int(n_buckets)} DIV {int(total)} "
-                f"AS BIGINT)"))
-            .select(id_col, "ppl", "bucket"))
+    return cache.attach(
+        staged.join(off_df, "__bin")
+        .withColumn("__rank", rank)
+        .withColumn("bucket", F.expr(
+            f"CAST(__rank * {int(n_buckets)} DIV {int(total)} AS BIGINT)"))
+        .select(id_col, "ppl", "bucket"))

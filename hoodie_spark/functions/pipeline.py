@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..frames import local_frame
+from .dedup import StageCache
 from .text import char_ngrams
 
 __all__ = ["redact_pii", "pii_hits", "deterministic_sample", "sample_hash",
@@ -520,28 +521,19 @@ def decontaminate_near(corpus: DataFrame, test_set: DataFrame,
     list back to corpus shingles (one shuffle keyed on the corpus id)
     and the final drop is a left-anti join on the contaminated-id set.
     """
-    from .dedup import band_keys, minhash_sigs
-
-    rows_per_band = num_hashes // bands
-    from .text import char_ngrams
+    from .dedup import band_keys, band_rows, minhash_sigs
 
     def _bands(df, alias):
         sig = minhash_sigs(df, id_col, text_col, num_hashes, ngram)
-        return (sig.select(
-            F.col(id_col).alias(alias),
-            F.explode(band_keys("minhash", bands, rows_per_band))
-            .alias("bk"))
-            .select(alias, F.col("bk.band").alias("band"),
-                    F.col("bk.bh").alias("bh")))
+        return band_rows(sig, [F.col(id_col).alias(alias)],
+                         band_keys("minhash", bands, num_hashes // bands))
 
-    from .dedup import _pin
-
-    # pinned: consumed by the verify join AND the semi-join below — the
-    # corpus signature pass behind it must run once, not once per use
-    cand = _pin(_bands(corpus, "__cid")
-                .join(F.broadcast(_bands(test_set, "__eid")),
-                      ["band", "bh"])
-                .select("__cid", "__eid").distinct())
+    # consumed by the verify join AND the semi-join below; both read the
+    # distinct's one exchange (a ReusedExchange), so the corpus signature
+    # pass behind it runs once without a persist
+    cand = (_bands(corpus, "__cid")
+            .join(F.broadcast(_bands(test_set, "__eid")), ["band", "bh"])
+            .select("__cid", "__eid").distinct())
     # shingle the VERIFY side only for candidate corpus docs: without the
     # semi-join the char_ngrams projection sits below the candidate join
     # and evaluates for every corpus row — a second full shingle pass over
@@ -858,11 +850,10 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame, id_col: str,
     driver-side from those bounded rows (<= 2*buckets, never corpus-
     scaled) and broadcast into a single map+agg scoring pass. No
     corpus-sized shuffle except the final groupBy(id) with partial
-    aggregation. The exploded corpus grams are PERSISTED across the
-    census and scoring passes (the :class:`StageCache` pattern, handle
-    on the result's ``_stage_cache``), so the corpus is tokenized and
-    hashed exactly ONCE — at 100 TB the tokenize+hash scan dominates
-    both passes."""
+    aggregation. The exploded corpus grams are PINNED across the census
+    and scoring passes (a :class:`~hoodie_spark.functions.dedup.StageCache`
+    on the result), so the corpus is tokenized and hashed exactly ONCE —
+    at 100 TB the tokenize+hash scan dominates both passes."""
     cache = StageCache()
     ex = cache.pin(corpus.select(F.col(id_col), F.explode(
         _hashed_gram_buckets(text_col, buckets)).alias("b")))
@@ -893,8 +884,7 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame, id_col: str,
            .agg(F.count(F.lit(1)).alias("n_grams"),
                 F.sum(F.col("lr").cast("decimal(18,6)"))
                 .cast("double").alias("log_weight")))
-    out._stage_cache = cache  # grams stay pinned while a caller can act
-    return out
+    return cache.attach(out)
 
 
 def dsir_select(corpus: DataFrame, target: DataFrame, id_col: str,
@@ -905,47 +895,9 @@ def dsir_select(corpus: DataFrame, target: DataFrame, id_col: str,
     The global top-k is a TakeOrderedAndProject (per-partition heaps +
     one k-row merge), never a full sort."""
     w = dsir_logweights(corpus, target, id_col, text_col, buckets)
-    out = w.orderBy(F.desc("log_weight"), F.asc(id_col)).limit(k)
     # carry the grams pin onto the frame the caller actually acts on
-    out._stage_cache = w._stage_cache
-    return out
-
-
-class StageCache:
-    """Caller-scoped persist handle for a pipeline's stage boundaries.
-
-    The pipeline pins intermediates here and attaches the handle to its
-    result DataFrame (``result._stage_cache``), so the persisted frames
-    live exactly as long as some caller can still run an action on the
-    result: when the result is garbage-collected (or ``release()`` is
-    called explicitly — e.g. per micro-batch in a streaming loop), the
-    frames unpersist. Releasing early only ever costs a recompute, never
-    correctness — and a bounded one: two of pack_shards' three passes run
-    EAGERLY inside corpus_pipeline (range bounds + bucket totals) while
-    the cache is pinned, so a caller that keeps only a DERIVED frame
-    (``corpus_pipeline(...).select(...)``) and lets the original result GC
-    pays at most ONE re-evaluation of the upstream chain on its final
-    action. Hold the result (or its ``_stage_cache``) across the action
-    to avoid even that. Replaces the former thread-unsafe module-global
-    cache."""
-
-    def __init__(self):
-        self._frames: list = []
-
-    def pin(self, df: DataFrame) -> DataFrame:
-        self._frames.append(df.persist())
-        return df
-
-    def release(self) -> None:
-        for f in self._frames:
-            try:
-                f.unpersist()
-            except Exception:  # Spark session may already be stopped
-                pass
-        self._frames.clear()
-
-    def __del__(self):  # pragma: no cover - GC timing
-        self.release()
+    return w._stage_cache.attach(
+        w.orderBy(F.desc("log_weight"), F.asc(id_col)).limit(k))
 
 
 def corpus_pipeline(corpus: DataFrame, test_set: DataFrame,
@@ -989,19 +941,16 @@ def corpus_pipeline(corpus: DataFrame, test_set: DataFrame,
     # pack_shards makes three passes over its input (range bounds, bucket
     # totals, final window); persist the post-quota frame so the full
     # gate/dedup/decontaminate chain evaluates ONCE — bounded memory:
-    # per_group x n_groups rows, whatever the corpus size. The persist is
-    # held by a caller-scoped StageCache tied to the result's lifetime.
+    # per_group x n_groups rows, whatever the corpus size.
     cache = StageCache()
     w = cache.pin(kept.select(
         F.col(id_col), F.col(group_col),
         token_count(text_col).cast("double").alias("n_tokens")))
     packed = pack_shards(w, "n_tokens", shard_budget, [id_col],
                          num_buckets=8)
-    result = packed.select(F.col(id_col), F.col(group_col),
-                           F.col("n_tokens").cast("long").alias("n_tokens"),
-                           "shard_id")
-    result._stage_cache = cache
-    return result
+    return cache.attach(packed.select(
+        F.col(id_col), F.col(group_col),
+        F.col("n_tokens").cast("long").alias("n_tokens"), "shard_id"))
 
 
 def tfidf_terms(df: DataFrame, id_col: str, text_col: str,

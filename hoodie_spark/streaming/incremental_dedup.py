@@ -61,7 +61,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dedup import (bounded_self_pairs, doc_features,
+from ..functions.dedup import (band_rows, bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
 from .maintainer import MaintainedState, bucket_of, locked_fold
 
@@ -127,11 +127,8 @@ class IncrementalDeduper(MaintainedState):
                             self.num_hashes, self.bands, self.ngram)
 
     def _banded(self, feats: DataFrame) -> DataFrame:
-        return (feats.filter(F.col("bands").isNotNull())
-                .select(F.col(self.id_col), F.col("minhash"),
-                        F.explode("bands").alias("bk"))
-                .select(self.id_col, F.col("bk.band").alias("band"),
-                        F.col("bk.bh").alias("bh"), "minhash"))
+        return band_rows(feats.filter(F.col("bands").isNotNull()),
+                         [self.id_col, "minhash"])
 
     # ------------------------------------------------------------- filter
     def filter_batch(self, df: DataFrame) -> DataFrame:
@@ -154,10 +151,9 @@ class IncrementalDeduper(MaintainedState):
         # action is also the feats materialization point.
         probe = feats.withColumn("bucket",
                                  bucket_of("chash", self.n_buckets))
-        ex = (feats.select(bucket_of("chash", self.n_buckets).alias("cbk"),
-                           F.explode_outer("bands").alias("bk"))
-              .select("cbk", F.col("bk.band").alias("band"),
-                      F.col("bk.bh").alias("bh")))
+        ex = band_rows(feats,
+                       [bucket_of("chash", self.n_buckets).alias("cbk")],
+                       outer=True)
         census = (
             ex.groupBy("band", "bh")
             .agg(F.collect_set("cbk").alias("cbs"),

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.components import duplicate_groups
-from ..functions.dedup import (bounded_self_pairs, doc_features,
+from ..functions.dedup import (band_rows, bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
 from ..functions.pipeline import sample_hash
 from .maintainer import MaintainedState, bucket_of, locked_fold
@@ -100,11 +100,7 @@ class ClusterRootState(MaintainedState):
         feats = doc_features(df, id_col, self.text_col,
                              self.num_hashes, self.bands,
                              self.ngram).persist()
-        banded = feats.select(
-            id_col, "minhash", F.explode_outer("bands").alias("bk")) \
-            .select(id_col, "minhash",
-                    F.col("bk.band").alias("band"),
-                    F.col("bk.bh").alias("bh"))
+        banded = band_rows(feats, [id_col, "minhash"], outer=True)
 
         # --- state matches → per-doc smallest matched root
         schemas = self._feature_schemas()
@@ -194,12 +190,10 @@ class ClusterRootState(MaintainedState):
                     "chash", "root"))
         self.store.append(
             "bands",
-            feats.filter(F.col("minhash").isNotNull())
-            .select(self.id_col, "minhash", "root",
-                    F.explode("bands").alias("bk"))
-            .select(bucket_of("bk.bh", self.n_buckets).alias("bucket"),
-                    F.col("bk.band").alias("band"),
-                    F.col("bk.bh").alias("bh"), "minhash", "root"))
+            band_rows(feats.filter(F.col("minhash").isNotNull()),
+                      ["minhash", "root"])
+            .select(bucket_of("bh", self.n_buckets).alias("bucket"),
+                    "band", "bh", "minhash", "root"))
 
     def _folded_features(self) -> dict[str, DataFrame]:
         """The feature stores folded to min(root) per key — semantics-

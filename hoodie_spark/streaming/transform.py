@@ -132,10 +132,8 @@ class CorpusPipelineTransformer(Transformer):
         self.pipeline_kw = pipeline_kw
 
     def apply(self, spark, df: DataFrame) -> DataFrame:
-        # the result carries a caller-scoped StageCache (_stage_cache):
-        # a long-running ingest that drops each micro-batch's result after
-        # writing it releases that batch's cached frame via GC, so at most
-        # the live batches' frames are ever pinned
+        # the result owns its pinned frame (functions.dedup.StageCache):
+        # an ingest loop pins at most the micro-batches it still holds
         from ..functions.pipeline import corpus_pipeline
         test = spark.read.parquet(self.test_path)
         return corpus_pipeline(df, test, id_col=self.id_col,

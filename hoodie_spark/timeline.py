@@ -93,9 +93,14 @@ class Timeline:
     # ------------------------------------------------------------------ ids
     def new_instant_time(self) -> str:
         """Millisecond commit times (HoodieActiveTimeline.java:61 format,
-        extended to millis), strictly monotonic per process."""
-        ts = time.strftime("%Y%m%d%H%M%S") + f"{int(time.time_ns() // 1_000_000) % 1000:03d}"
-        existing = max((i.timestamp for i in self.instants()), default="")
+        extended to millis), strictly monotonic per process and above
+        every instant on the timeline, pending ones included: a second
+        writer never mints a time at or below an instant in flight."""
+        ms = time.time_ns() // 1_000_000  # one clock read: seconds and millis agree
+        ts = time.strftime("%Y%m%d%H%M%S", time.localtime(ms // 1000)) + f"{ms % 1000:03d}"
+        existing = max((i.timestamp for i in
+                        self.instants((REQUESTED, INFLIGHT, COMPLETED))),
+                       default="")
         floor = max(self._last_ts, existing)
         if ts <= floor:
             ts = str(int(floor) + 1)

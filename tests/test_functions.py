@@ -1,11 +1,15 @@
 """Tests for the training-data pipeline operators (functions package)."""
 
 import hashlib
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from hoodie_spark import functions as HF
+from hoodie_spark.functions.components import (_is_star_forest,
+                                               duplicate_groups)
+from hoodie_spark.functions.dedup import exact_text_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -933,3 +937,341 @@ def test_pair_operators_reject_out_of_range_threshold(spark, op, threshold):
                                "doc_id long, text string")
     with pytest.raises(ValueError, match="threshold"):
         getattr(HF, op)(df, "doc_id", "text", threshold=threshold)
+
+
+# ------------------------------------- LSH pair operators vs brute force
+# A pure-Python model of the whole LSH pipeline (the same md5 minhash,
+# band hashes, size gates and verifiers), so the expected pair set is
+# exact, not a recall bound. The corpus mixes byte-identical copies,
+# near copies on both sides of each threshold, integer-boundary size
+# ratios, texts shorter than the n-gram, empty and NULL texts.
+_LSH_BASE = [
+    "the quick brown fox jumps over the lazy dog while the cat sleeps",
+    "spark plans joins by shuffling both sides on the key then merging",
+    "an unrelated sentence about growing tomatoes and peppers in summer",
+]
+_LSH_CORPUS = [
+    (1, _LSH_BASE[0]), (2, _LSH_BASE[0]), (3, _LSH_BASE[0]),
+    (4, _LSH_BASE[0] + " ok"),
+    (5, _LSH_BASE[0].replace("lazy", "sleepy").replace("cat", "owl")),
+    (6, _LSH_BASE[0][:52]),
+    (7, _LSH_BASE[1]), (8, _LSH_BASE[1] + "!"),
+    (9, _LSH_BASE[1].upper()), (10, _LSH_BASE[1].replace(" ", "  ")),
+    (11, _LSH_BASE[2]), (12, _LSH_BASE[2] + " and beans"),
+    # shingle counts 4 vs 5 and 8 vs 10: Jaccard exactly 0.8
+    (13, "abcdefgh"), (14, "abcdefghi"),
+    (15, "abcdefghijkl"), (16, "abcdefghijklmn"),
+    # lengths 9 vs 10 with one edit: similarity exactly 0.9
+    (17, "0123456789"), (18, "012345678"),
+    (19, "klmnopqrst"), (20, "klmnopqrsX"),
+    # shorter than the n-gram, empty, NULL — no shingles, no candidates
+    (21, "abc"), (22, "abc"), (23, "ab"), (24, ""), (25, ""), (26, None),
+]
+
+
+def _lsh_model_candidates(corpus, num_hashes=16, bands=4, n=5):
+    import itertools
+    import re
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    def shingles(t):
+        t = re.sub(r"\s+", " ", t.lower()).strip(" ")
+        return ({t[i:i + n] for i in range(len(t) - n + 1)}
+                if len(t) >= n else set())
+
+    sh = {i: shingles(t) for i, t in corpus if t is not None}
+    rpb = num_hashes // bands
+    bandset = {}
+    for i, s in sh.items():
+        if not s:
+            continue  # no shingles: no signature, never a candidate
+        sig = [min(md5(f"h{h}:{x}") for x in s) for h in range(num_hashes)]
+        bandset[i] = {(b, md5("".join(sig[b * rpb:(b + 1) * rpb])))
+                      for b in range(bands)}
+    cands = {(a, b) for a, b in itertools.combinations(sorted(bandset), 2)
+             if bandset[a] & bandset[b]}
+    return sh, cands
+
+
+@pytest.mark.parametrize("threshold", [0.8, 0.9])
+def test_jaccard_dedup_pairs_match_bruteforce(spark, threshold):
+    sh, cands = _lsh_model_candidates(_LSH_CORPUS)
+    expect, rejected = {}, 0
+    for a, b in cands:
+        na, nb = len(sh[a]), len(sh[b])
+        if min(na, nb) / max(na, nb) < threshold - 1e-9:
+            rejected += 1
+            continue
+        j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        if j >= threshold:
+            expect[(a, b)] = j
+        else:
+            rejected += 1
+    # the corpus exercises both verdicts and the exact 0.8 boundary
+    assert rejected and expect
+    if threshold == 0.8:
+        assert any(j == 0.8 for j in expect.values())
+    df = spark.createDataFrame(_LSH_CORPUS, "doc_id long, text string")
+    rows = HF.jaccard_dedup_pairs(df, "doc_id", "text",
+                                  threshold=threshold).collect()
+    got = {(r.id_a, r.id_b): r.jaccard for r in rows}
+    assert len(got) == len(rows)  # one row per pair
+    assert got == expect
+
+
+@pytest.mark.parametrize("threshold", [0.9, 0.7])
+def test_edit_dedup_pairs_match_bruteforce(spark, threshold):
+    def lev(x, y):
+        prev = list(range(len(y) + 1))
+        for i, cx in enumerate(x, 1):
+            cur = [i]
+            for j, cy in enumerate(y, 1):
+                cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                               prev[j - 1] + (cx != cy)))
+            prev = cur
+        return prev[-1]
+
+    texts = dict(_LSH_CORPUS)
+    _, cands = _lsh_model_candidates(_LSH_CORPUS)
+    expect, rejected = {}, 0
+    for a, b in cands:
+        ta, tb = texts[a], texts[b]
+        lmax = max(len(ta), len(tb))
+        if 1.0 - abs(len(ta) - len(tb)) / lmax < threshold - 1e-9:
+            rejected += 1
+            continue
+        s = 1.0 - lev(ta, tb) / lmax
+        if s >= threshold:
+            expect[(a, b)] = s
+        else:
+            rejected += 1
+    assert rejected and expect
+    if threshold == 0.9:
+        assert any(s == 0.9 for s in expect.values())
+    df = spark.createDataFrame(_LSH_CORPUS, "doc_id long, text string")
+    rows = HF.edit_dedup_pairs(df, "doc_id", "text",
+                               threshold=threshold).collect()
+    got = {(r.id_a, r.id_b): r.similarity for r in rows}
+    assert len(got) == len(rows)
+    assert got == expect
+
+
+# ---------------------------------------------------- sketch monoids
+def test_sketch_distinct_survives_in_plan(spark):
+    """The pre-hash distinct is duplicate-agnostic-min bait for
+    RemoveRedundantAggregates; the repartition barrier must keep it.
+    Without it the 64-way md5 partial agg runs over every occurrence
+    again (measured 7.3 s vs 0.2 s at sf0.1)."""
+    df = spark.createDataFrame(
+        [("a", "x"), ("a", "x"), ("b", "y")], "g string, v string")
+    sk = HF.group_distinct_sketch(df, "g", "v", num_hashes=4)
+    opt = sk._jdf.queryExecution().optimizedPlan().toString()
+    # two logical Aggregates: the distinct and the per-group mins
+    assert opt.count("Aggregate [") >= 2, opt
+    assert "RoundRobinPartitioning" in \
+        sk._jdf.queryExecution().executedPlan().toString()
+
+
+def test_sketch_duplication_invariant(spark):
+    """min over a multiset == min over its support: the estimate must be
+    bit-identical however many times each (group, value) repeats."""
+    rows = [("s1", f"tok{i % 5}") for i in range(50)] + \
+           [("s2", f"tok{i}") for i in range(7)]
+    df = spark.createDataFrame(rows, "g string, v string")
+    once = sorted(map(tuple, HF.group_distinct_sketch(
+        df.distinct(), "g", "v", num_hashes=8).collect()))
+    many = sorted(map(tuple, HF.group_distinct_sketch(
+        df.unionAll(df), "g", "v", num_hashes=8).collect()))
+    assert once == many
+
+
+def test_group_sketches_duplication_invariant(spark):
+    df = spark.createDataFrame(
+        [("s1", "the quick brown fox jumps"),
+         ("s2", "the quick brown fox jumps"),
+         ("s2", "a different body of text")], "g string, t string")
+    a = sorted(map(tuple, HF.group_sketches(
+        df, "g", "t", num_hashes=4).collect()))
+    b = sorted(map(tuple, HF.group_sketches(
+        df.unionAll(df), "g", "t", num_hashes=4).collect()))
+    assert a == b
+
+
+# ----------------------------- exact pairs, seen and keep-best dedup
+def test_exact_text_pairs_singletons_emit_nothing(spark):
+    rows = [(1, "dup body"), (2, "dup body"), (3, "dup body"),
+            (4, "unique one"), (5, "unique two"), (6, None)]
+    df = spark.createDataFrame(rows, "id long, text string")
+    got = sorted(map(tuple,
+                     exact_text_pairs(df, "id", "text").collect()))
+    assert got == [(1, 2), (1, 3)]
+
+
+def test_seen_dedup_with_singletons_and_nulls(spark):
+    rows = [(1, "same"), (2, "same"), (3, "only"), (4, None), (5, None)]
+    df = spark.createDataFrame(rows, "id long, text string")
+    kept = sorted(r["id"] for r in
+                  HF.seen_dedup(df, "id", "text").collect())
+    # NULL texts are never duplicates; singleton survives; later copy drops
+    assert kept == [1, 3, 4, 5]
+
+
+def test_keep_best_column_surface_unchanged(spark):
+    """The tied-frame rewrite must not leak internal columns."""
+    rows = [(1, "same text here", 1.0), (2, "same text here", 2.0),
+            (3, "unrelated body", 5.0)]
+    out = HF.dedup_keep_best(
+        spark.createDataFrame(rows, "id long, text string, score double"),
+        "id", "text", "score")
+    assert out.columns == ["id", "text", "score", "n_dups"]
+    assert {r["id"]: r["n_dups"] for r in out.collect()} == {2: 2, 3: 1}
+
+
+# ---------------------------------------- duplicate_groups star fold
+def test_duplicate_groups_chain_multiround(spark):
+    """A 40-node path graph forces multiple large/small-star rounds over
+    the checkpointed edge set; every node must land in component 0."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    got = duplicate_groups(pairs).collect()
+    assert len(got) == 41
+    assert {r["group_id"] for r in got} == {0}
+
+
+def _edges(spark, rows):
+    return spark.createDataFrame(rows, "hi long, lo long")
+
+
+def test_star_forest_detects_forest(spark):
+    # two stars: {1,2,3 -> 0} and {7 -> 5}; roots never appear as hi
+    assert _is_star_forest(_edges(spark, [(1, 0), (2, 0), (3, 0), (7, 5)]))
+
+
+def test_star_forest_empty_is_forest(spark):
+    assert _is_star_forest(_edges(spark, []))
+
+
+def test_star_forest_rejects_path(spark):
+    # 2 -> 1 -> 0: node 1 is both member and root
+    assert not _is_star_forest(_edges(spark, [(2, 1), (1, 0)]))
+
+
+def test_star_forest_rejects_multi_root(spark):
+    # member 5 points at two roots
+    assert not _is_star_forest(_edges(spark, [(5, 0), (5, 1)]))
+
+
+def test_duplicate_groups_zero_rounds_on_star_input(spark):
+    """exact_text_pairs-style input is already a min-rooted star forest:
+    the fold must stop immediately with the input as the answer."""
+    pairs = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 3), (9, 11)], "id_a long, id_b long")
+    got = {r["id"]: r["group_id"] for r in duplicate_groups(pairs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 9: 9, 11: 9}
+
+
+def test_duplicate_groups_two_components_merge(spark):
+    """A graph whose first star round does NOT yet yield the forest."""
+    pairs = spark.createDataFrame(
+        [(3, 4), (2, 3), (1, 2), (10, 12), (12, 14)],
+        "id_a long, id_b long")
+    got = {r["id"]: r["group_id"] for r in duplicate_groups(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 12: 10, 14: 10}
+
+
+def test_duplicate_groups_reliable_checkpoint(spark, tmp_table_path):
+    """With a checkpoint dir configured the fold must use reliable
+    checkpoints (cluster fault tolerance) and produce the same answer."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(tmp_table_path)
+    try:
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3)], "id_a long, id_b long")
+        got = {r["id"]: r["group_id"]
+               for r in duplicate_groups(pairs).collect()}
+        assert got == {1: 1, 2: 1, 3: 1}
+    finally:
+        # reset: checkpointDir is a plain var on the Scala SparkContext
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+# ---------------------------- containment at the distinct-text grain
+def _brute_containment(texts, threshold, ngram=5):
+    """O(n^2) reference: containment over distinct char-ngram sets."""
+    import itertools
+
+    shs = {i: {t[k:k + ngram] for k in range(len(t) - ngram + 1)}
+           for i, t in texts.items()}
+    out = {}
+    for a, b in itertools.combinations(sorted(shs), 2):
+        sa, sb = shs[a], shs[b]
+        if not sa or not sb:
+            continue
+        mn = min(len(sa), len(sb))
+        inter = len(sa & sb)
+        if inter >= math.ceil(threshold * mn - 1e-9):
+            out[(a, b)] = round(inter / mn, 6)
+    return out
+
+
+def test_containment_dup_heavy_matches_bruteforce(spark):
+    """Exact copies collapse to one verify row per distinct text; the
+    expanded id-pair set must still equal the O(n^2) model, intra-copy
+    pairs at exactly 1.0."""
+    base = {
+        0: "the quick brown fox jumps over the lazy dog again and again",
+        1: "the quick brown fox jumps over the lazy dog again and again!!",
+        2: "a completely different document about spark query planning",
+    }
+    texts = {}
+    for rep in range(25):           # 25 exact copies of each distinct text
+        for i, t in base.items():
+            texts[100 * rep + i] = t
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {(r.id_a, r.id_b): r.containment
+           for r in HF.containment_dedup_pairs(
+               df, "doc_id", "text", threshold=0.9).collect()}
+    assert got == _brute_containment(texts, 0.9)
+    # every intra-copy pair is present and exactly 1.0
+    copies0 = sorted(k for k in texts if k % 100 == 0)
+    for i in range(len(copies0) - 1):
+        assert got[(copies0[i], copies0[i + 1])] == 1.0
+
+
+def test_containment_plan_runs_verify_at_hash_grain(spark):
+    """The optimized plan must shingle and verify above the distinct-text
+    aggregate (grouping on the md5 content hash), not per document."""
+    df = spark.createDataFrame(
+        [(i, f"document number {i % 3} with shared boilerplate text")
+         for i in range(30)], "doc_id long, text string")
+    out = HF.containment_dedup_pairs(df, "doc_id", "text", threshold=0.9)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "__ch" in plan and "array_intersect" in plan
+    # document frequency keeps doc weights: the census sums __n
+    assert "sum(__n" in plan
+
+
+def test_containment_df_guard_unchanged_on_dup_heavy(spark):
+    """max_prefix_df decides on SUMMED copy counts (document frequency),
+    so a shingle common only through exact copies still trips the cap."""
+    # one distinct boilerplate text copied 40x + one unique doc embedded
+    rows = [(i, "boilerplate header shared by every copy of this doc")
+            for i in range(40)]
+    rows.append((99, "boilerplate header shared by ever"))  # contained prefix
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    loose = {(r.id_a, r.id_b) for r in HF.containment_dedup_pairs(
+        df, "doc_id", "text", threshold=0.9, max_prefix_df=100).collect()}
+    tight = {(r.id_a, r.id_b) for r in HF.containment_dedup_pairs(
+        df, "doc_id", "text", threshold=0.9, max_prefix_df=5).collect()}
+    # the 40-copy group's shingles have df=40 > 5: doc 99's every prefix
+    # shingle is capped out, so its cross pairs disappear under the tight
+    # cap while the intra-copy pairs (no prefix probe needed) remain
+    assert {(a, b) for a, b in loose if a != 99 and b != 99} <= loose
+    assert all(99 not in p for p in tight)
+    assert {(a, b) for (a, b) in tight} == \
+        {(a, b) for (a, b) in loose if 99 not in (a, b)}

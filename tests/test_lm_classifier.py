@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hoodie_spark import functions as HF
-from hoodie_spark.functions.lm import UNK, train_bigram_lm
+from hoodie_spark.functions.lm import UNK, _pairs, train_bigram_lm
 
 
 def _docs(spark, rows):
@@ -289,3 +289,129 @@ def test_domain_mixture_partitioning_invariant(spark):
         df.repartition(13, "doc_id"), "src", "doc_id", "text",
         vocab_size=32).collect()))
     assert a == b
+
+
+# --------------------------------------- one-pass dual-model scoring
+def test_excess_select_one_pass_equals_two_pass(spark):
+    from hoodie_spark.functions.lm import (bigram_perplexity,
+                                           train_bigram_lm)
+
+    rows = [(i, f"alpha beta gamma delta tok{i % 3} beta alpha end")
+            for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = df.filter(F.col("doc_id") % 5 == 0)
+    got = HF.excess_perplexity_select(df, "doc_id", "text", ref, k=10,
+                                      vocab_size=8)
+    # replay the pre-r15 two-pass shape verbatim
+    ref_lm = train_bigram_lm(ref, "text", vocab_size=8)
+    self_lm = train_bigram_lm(df, "text", vocab_size=8)
+    s = (bigram_perplexity(df, "doc_id", "text", lm=self_lm)
+         .select("doc_id", "n_bigrams",
+                 F.col("logprob").alias("__lp_self")))
+    r = (bigram_perplexity(df, "doc_id", "text", lm=ref_lm)
+         .select("doc_id", F.col("logprob").alias("__lp_ref")))
+    want = (s.join(r, "doc_id")
+            .withColumn("nll_self",
+                        F.round(-F.col("__lp_self") / F.col("n_bigrams"), 6))
+            .withColumn("nll_ref",
+                        F.round(-F.col("__lp_ref") / F.col("n_bigrams"), 6))
+            .withColumn("excess",
+                        F.round(F.col("nll_self") - F.col("nll_ref"), 6))
+            .drop("__lp_self", "__lp_ref")
+            .orderBy(F.desc("excess"), F.asc("doc_id")).limit(10))
+    cols = ["doc_id", "n_bigrams", "nll_self", "nll_ref", "excess"]
+    assert [tuple(row) for row in got.select(*cols).collect()] == \
+        [tuple(row) for row in want.select(*cols).collect()]
+
+
+# ----------------------------------------- single-census LM training
+def _old_shape_model(corpus, text_col, vocab, vocab_size):
+    """The pre-r16 training tail verbatim: separate lp and unseen
+    computations, each its own census run."""
+    denom_slots = float(vocab_size + 1)
+    pc = (_pairs(corpus, None, text_col, vocab)
+          .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb")))
+    ctx = pc.groupBy("w1").agg(F.sum("cb").alias("cw"))
+    lp = (pc.join(ctx, "w1")
+          .select("w1", "w2",
+                  F.round(F.log((F.col("cb") + F.lit(1.0))
+                                / (F.col("cw") + F.lit(denom_slots))), 6)
+                  .alias("lp")))
+    unseen = ctx.select(
+        "w1",
+        F.round(F.log(F.lit(1.0) / (F.col("cw") + F.lit(denom_slots))), 6)
+        .alias("unseen_lp"))
+    return lp, unseen
+
+
+def test_train_bigram_lm_matches_old_shape(spark):
+    rows = [(f"alpha beta gamma tok{i % 4} beta alpha end",)
+            for i in range(40)] + [("",), (None,), ("single",)]
+    df = spark.createDataFrame(rows, "text string")
+    lm = train_bigram_lm(df, "text", vocab_size=6)
+    assert lm.broadcast
+    old_lp, old_unseen = _old_shape_model(df, "text", lm.vocab, 6)
+    assert sorted(map(tuple, lm.pair_lp.collect())) == \
+        sorted(map(tuple, old_lp.collect()))
+    assert sorted(map(tuple, lm.ctx_lp.collect())) == \
+        sorted(map(tuple, old_unseen.collect()))
+    assert lm.oov_lp == round(math.log(1.0 / 7.0), 6)
+
+
+def test_train_bigram_lm_broadcast_tables_are_local(spark):
+    """Broadcast-model tables must be driver-local (lineage severed —
+    LogicalRDD/LocalRelation over collected rows, the same shape the
+    pre-r16 code produced): scoring plans embed values, never re-run
+    the census."""
+    df = spark.createDataFrame(
+        [("a b c a b",), ("b c d",)], "text string")
+    lm = train_bigram_lm(df, "text", vocab_size=4)
+    for t in (lm.pair_lp, lm.ctx_lp):
+        opt = t._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in opt or "LocalRelation" in opt, opt
+        assert "Aggregate" not in opt and "Join" not in opt, opt
+
+
+def test_train_bigram_lm_empty_corpus(spark):
+    df = spark.createDataFrame([("",), (None,)], "text string")
+    lm = train_bigram_lm(df, "text", vocab_size=4)
+    assert lm.pair_lp.count() == 0
+    assert lm.ctx_lp.count() == 0
+
+
+def test_train_bigram_lm_non_broadcast_path(spark):
+    """Force the distributed-model path (broadcast_model_rows=0) and
+    check values + that unpersist releases the census pin."""
+    rows = [(f"alpha beta tok{i % 3} gamma",) for i in range(20)]
+    df = spark.createDataFrame(rows, "text string")
+    lm = train_bigram_lm(df, "text", vocab_size=5,
+                         broadcast_model_rows=0)
+    assert not lm.broadcast
+    bc = train_bigram_lm(df, "text", vocab_size=5)
+    assert sorted(map(tuple, lm.pair_lp.collect())) == \
+        sorted(map(tuple, bc.pair_lp.collect()))
+    assert sorted(map(tuple, lm.ctx_lp.collect())) == \
+        sorted(map(tuple, bc.ctx_lp.collect()))
+    assert lm._census is not None and lm._census.is_cached
+    lm.unpersist()
+    assert not lm._census.is_cached
+
+
+def test_perplexity_buckets_values_stable(spark):
+    """End-to-end: the bucket assignment over a self-trained LM is
+    unchanged by the single-census training."""
+    rows = [(i, f"alpha beta gamma tok{i % 7} delta beta alpha")
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: (r["ppl"], r["bucket"])
+           for r in HF.perplexity_buckets(df, "doc_id", "text",
+                                          n_buckets=3,
+                                          vocab_size=8).collect()}
+    assert len(out) == 60
+    assert {b for _, b in out.values()} == {0, 1, 2}
+    # deterministic: same inputs, same buckets on a second run
+    out2 = {r["doc_id"]: (r["ppl"], r["bucket"])
+            for r in HF.perplexity_buckets(df, "doc_id", "text",
+                                           n_buckets=3,
+                                           vocab_size=8).collect()}
+    assert out == out2

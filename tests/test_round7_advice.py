@@ -165,40 +165,6 @@ def test_publish_orphan_tmp_swept_by_reclamation(spark, orders,
     assert tbl.snapshot().count() == 50  # listing still clean
 
 
-def test_corpus_pipeline_cache_is_caller_scoped(spark, tmp_table_path):
-    """The stage-boundary persist is held by a StageCache tied to the
-    RESULT's lifetime (no module-global state): explicit release()
-    unpersists, and dropping the result releases via GC."""
-    import gc
-
-    from hoodie_spark.functions import pipeline as P
-    from hoodie_spark.streaming.transform import CorpusPipelineTransformer
-
-    assert not hasattr(P, "_last_pipeline_cache")  # global is gone
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    test = docs.filter("doc_id % 20 = 0")
-    corpus = docs.filter("doc_id % 20 != 0")
-    tp = os.path.join(tmp_table_path, "eval")
-    test.write.parquet(tp)
-    t = CorpusPipelineTransformer(tp)
-    r1 = t.apply(spark, corpus)
-    r1.count()  # the batch action materializes it
-    cache1 = r1._stage_cache
-    frames1 = list(cache1._frames)
-    assert frames1 and all(f.is_cached for f in frames1)
-    # a second concurrent result holds its OWN cache, both stay live
-    r2 = t.apply(spark, corpus)
-    r2.count()
-    assert r2._stage_cache is not cache1
-    assert all(f.is_cached for f in frames1)
-    cache1.release()
-    assert not any(f.is_cached for f in frames1)
-    frames2 = list(r2._stage_cache._frames)
-    del r2
-    gc.collect()
-    assert not any(f.is_cached for f in frames2)  # GC released the handle
-
-
 def test_ivfpq_probe_string_ids(spark, tmp_table_path):
     """The probe builds its LUT/probe frames from the caller's id dtype —
     string ids must work end to end (the old hardcoded 'q_id long'

@@ -13,6 +13,7 @@ from hoodie_spark import HoodieTable
 from hoodie_spark import storage as st
 from hoodie_spark import timeline as tl
 from hoodie_spark.storage_s3 import S3AtomicStorage
+from test_storage_gcs import gcs_seams  # noqa: F401  (the mock-GCS seam)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -503,12 +504,12 @@ def _crash_reference(spark, spec, name, path):
     return _CRASH_REFERENCE[name]
 
 
-@pytest.mark.parametrize("seam", ["local", "s3"])
+@pytest.mark.parametrize("seam", ["local", "s3", "gcs"])
 @pytest.mark.parametrize("name,point", _CRASH_CASES)
 def test_maintainer_crash_matrix(spark, tmp_table_path, request,
                                  monkeypatch, seam, name, point):
     """Each generation-store maintainer survives a crash at each publish
-    point on both storage seams: after a fold's appends/new generation
+    point on every storage seam (local, mock S3, mock GCS): after a fold's appends/new generation
     but before its publish, inside compact_state between the new
     generation and the pointer swap, and mid-sweep. A fresh instance
     reads the last published pointer (appends past it are visible
@@ -519,8 +520,8 @@ def test_maintainer_crash_matrix(spark, tmp_table_path, request,
     spec = _maintained()[name]
     ref = _crash_reference(spark, spec, name,
                            os.path.join(tmp_table_path, "ref"))
-    if seam == "s3":
-        request.getfixturevalue("s3_seams")
+    if seam != "local":
+        request.getfixturevalue(f"{seam}_seams")
     b1, b2 = _crash_batches(spark)
     tbl = _new_table(spark, os.path.join(tmp_table_path, "t"))
     state = os.path.join(tmp_table_path, "state")

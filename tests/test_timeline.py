@@ -91,3 +91,67 @@ def test_archive_chunk_crash_between_publish_and_delete(tmp_table_path):
     assert [i.timestamp for i in tl.completed()] == times
     active = tl.instants((COMPLETED,), include_archived=False)
     assert [i.timestamp for i in active] == times[3:]
+
+
+def test_instant_time_reads_the_clock_once(tmp_table_path, monkeypatch):
+    """A second boundary between reading the seconds and the millis must
+    not mint a time ~1 s in the past: the instant lies between the first
+    and the last clock reading."""
+    import time as real_time
+
+    from hoodie_spark import timeline as T
+
+    base = 1_700_000_000  # a whole second
+    readings = iter([base * 1_000_000_000 + 999_000_000,  # xx:59.999
+                     (base + 1) * 1_000_000_000])          # next second
+
+    class Clock:
+        def __init__(self):
+            self.last = None
+
+        def _read(self):
+            self.last = next(readings, self.last)
+            return self.last
+
+        def time_ns(self):
+            return self._read()
+
+        def time(self):
+            return self._read() / 1e9
+
+        def localtime(self, secs=None):
+            return real_time.localtime(self.time() if secs is None else secs)
+
+        def strftime(self, fmt, t=None):
+            return real_time.strftime(fmt, self.localtime() if t is None else t)
+
+    monkeypatch.setattr(T, "time", Clock())
+    tl = Timeline(tmp_table_path)
+    tl.init()
+    ts = tl.new_instant_time()
+
+    def fmt(ns):
+        ms = ns // 1_000_000
+        return (real_time.strftime("%Y%m%d%H%M%S",
+                                   real_time.localtime(ms // 1000))
+                + f"{ms % 1000:03d}")
+
+    assert fmt(base * 1_000_000_000 + 999_000_000) <= ts \
+        <= fmt((base + 1) * 1_000_000_000)
+
+
+def test_instant_time_above_pending_instants(tmp_table_path):
+    """A pending instant ahead of this writer's clock (another writer's
+    requested or inflight commit) still bounds the next instant time."""
+    from hoodie_spark.timeline import INFLIGHT, REQUESTED
+
+    for state, ahead in ((REQUESTED, "99990101000000000"),
+                         (INFLIGHT, "99990101000000005")):
+        tl = Timeline(tmp_table_path)
+        tl.init()
+        if state == REQUESTED:
+            tl.create_requested(COMMIT, ahead)
+        else:
+            tl.transition_inflight(COMMIT, ahead)
+        fresh = Timeline(tmp_table_path)  # a second writer: no local floor
+        assert fresh.new_instant_time() > ahead
