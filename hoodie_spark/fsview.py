@@ -22,7 +22,15 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from pyspark.sql import functions as F
+
 from .timeline import CLEAN, DATA_ACTIONS, LOGCOMPACTION, Timeline
+
+
+def file_id_of(name):
+    """The file-group id a data file's name (a column name or Column)
+    carries: the part before the first ``_`` (FSUtils.getFileId)."""
+    return F.split(name, "_").getItem(0)
 
 
 @dataclass
@@ -243,17 +251,20 @@ class FileSystemView:
                     out.append(sl)
         return out
 
+    def live_groups(self, as_of: str | None = None) -> list[tuple[str, str]]:
+        """Sorted (partition, file_id) of every file group that is live and
+        has a slice as of ``as_of`` — the one live-group rule."""
+        return [key for key, grp in sorted(self.groups.items())
+                if grp.is_live(as_of) and grp.latest_slice(as_of) is not None]
+
     def partitions(self, as_of: str | None = None) -> list[str]:
-        return sorted({pp for (pp, _f), g in self.groups.items()
-                       if g.is_live(as_of) and g.latest_slice(as_of)})
+        return sorted({pp for pp, _f in self.live_groups(as_of)})
 
     def live_group_ids(self, partitions: list[str] | None = None,
                        as_of: str | None = None) -> dict[str, list[str]]:
         out: dict[str, list[str]] = {}
-        for (pp, fid), grp in sorted(self.groups.items()):
-            if partitions is not None and pp not in partitions:
-                continue
-            if grp.is_live(as_of) and grp.latest_slice(as_of) is not None:
+        for pp, fid in self.live_groups(as_of):
+            if partitions is None or pp in partitions:
                 out.setdefault(pp, []).append(fid)
         return out
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .config import (COMMIT_TIME, FILE_NAME, PARTITION_PATH, RECORD_KEY,
                      IndexType)
 from .frames import local_frame
+from .fsview import file_id_of
 
 def tag_location(spark: SparkSession, prepared: DataFrame, table,
                  view=None, force_global: bool = False) -> DataFrame:
@@ -84,7 +85,7 @@ def tag_location(spark: SparkSession, prepared: DataFrame, table,
     existing = (table.read_slices_base(slices)
                 .select(F.col(RECORD_KEY).alias("__ex_key"),
                         F.col(PARTITION_PATH).alias("_target_pp"),
-                        F.split(F.col(FILE_NAME), "_").getItem(0).alias("_target_file_id"),
+                        file_id_of(FILE_NAME).alias("_target_file_id"),
                         F.col(COMMIT_TIME).alias("__ex_commit")))
     if is_global:
         # a record key may exist in several partitions; keep the latest
@@ -121,8 +122,7 @@ def _tag_bucket(spark: SparkSession, prepared: DataFrame, table,
     manifest fold — zero data-file I/O however large the table, which is
     the entire point of the bucket index at 100 TB."""
     fid = bucket_fid_expr(table.write_config.bucket_index_num_buckets)
-    existing = sorted({(pp, f) for (pp, f), grp in view.groups.items()
-                       if grp.is_live(None) and grp.latest_slice(None)})
+    existing = view.live_groups()
     tagged = prepared.withColumn("__bucket_fid", fid)
     if existing:
         ex_df = F.broadcast(local_frame(

@@ -318,7 +318,7 @@ class ReadClient:
         is_mor = self.table.config.table_type == TableType.MERGE_ON_READ
         if self.table.write_config.record_index and as_of is None:
             from . import record_index
-            if record_index.is_initialized(self.table):
+            if record_index.exists(self.table):
                 loc = record_index.lookup(self.table, view)
                 groups = {(r[0], r[1]) for r in
                           loc.join(F.broadcast(keyed), RECORD_KEY, "left_semi")

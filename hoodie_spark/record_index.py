@@ -7,10 +7,14 @@ tagging joins the incoming batch against a compact 3-column parquet index —
 at 100 TB that is the difference between scanning terabytes and scanning
 the index (gigabytes, dictionary-encoded keys).
 
-Layout: ``<base>/.hoodie/record_index/bucket=<n>/<instant>[-<seq>].parquet``
-— append-only per commit, hash-bucketed by key so point lookups read one
-bucket. Entries carry (key, partition, file_id, op A/R, instant); the
-lookup folds them latest-wins and drops 'R' (removed) entries.
+Layout: one bucketed sub-store ``record_index`` of a
+:class:`~hoodie_spark.generation_store.GenerationStore` under
+``<base>/.hoodie`` with the pointer ``record_index.gen`` (the store's
+docstring gives the generation layout and the crash contract). Each
+commit appends one file per bucket, hash-bucketed by key so point lookups
+read one bucket. Entries carry (key, partition, file_id, op A/R,
+instant); the lookup folds them latest-wins and drops 'R' (removed)
+entries.
 
 Consistency model (why stale entries are safe):
   * rewrites (COW merge, compaction) KEEP the file_id — entries stay valid;
@@ -39,16 +43,17 @@ from pyspark.sql import functions as F
 
 from .config import COMMIT_TIME, FILE_NAME, PARTITION_PATH, RECORD_KEY
 from .frames import local_frame
+from .fsview import BaseFile, FileSlice, file_id_of
+from .generation_store import GenerationStore, bucket_of
 
 INDEX_SCHEMA = (f"{RECORD_KEY} string, {PARTITION_PATH} string, "
                 "file_id string, op string, instant string")
 
-LOOKUP_SCHEMA = (f"{RECORD_KEY} string, {PARTITION_PATH} string, "
-                 "file_id string, instant string")
+_SUB = "record_index"
 
 
 def index_dir(table) -> str:
-    return os.path.join(table.base_path, ".hoodie", "record_index")
+    return os.path.join(table.base_path, ".hoodie", _SUB)
 
 
 def _marker_path(table) -> str:
@@ -57,19 +62,12 @@ def _marker_path(table) -> str:
     return index_dir(table) + ".init"
 
 
-def _gen_path(table) -> str:
-    return index_dir(table) + ".gen"
-
-
-def _live_dir(table) -> str:
-    """The generation the pointer names, or the flat legacy dir when no
-    pointer exists yet (fresh tables append flat until the first compact
-    migrates them — same object-store-safe design as the dedup state:
-    write-once generations + an atomic pointer publish, no renames)."""
-    raw = table.storage.read_bytes(_gen_path(table))
-    if raw is None:
-        return index_dir(table)
-    return os.path.join(index_dir(table), f"gen-{int(raw):06d}")
+def _store(table) -> GenerationStore:
+    store = GenerationStore(table.spark, table.storage,
+                            os.path.dirname(index_dir(table)),
+                            _SUB + ".gen", (_SUB,))
+    store.open()
+    return store
 
 
 def exists(table) -> bool:
@@ -77,31 +75,6 @@ def exists(table) -> bool:
     alone are not enough: a pre-existing table that enables the flag gets
     entries for touched file groups only until the backfill has run."""
     return table.storage.exists(_marker_path(table))
-
-
-def _bucket_dirs(table) -> list[str]:
-    d = _live_dir(table)
-    fs = table.storage
-    return [os.path.join(d, e) for e in fs.listdir(d)
-            if e.startswith("bucket=")]
-
-
-def _has_entry_files(table) -> bool:
-    fs = table.storage
-    return any(any(f.endswith(".parquet") for f in fs.listdir(b))
-               for b in _bucket_dirs(table))
-
-
-def _read_entries(table):
-    """Schema-pinned read of the live generation's bucket dirs, listed
-    EXPLICITLY (basePath keeps the partition column) so a crashed
-    migration's orphan gen dir inside a legacy flat layout can never
-    break partition discovery."""
-    buckets = _bucket_dirs(table)
-    if not buckets:
-        return None
-    return (table.spark.read.schema(INDEX_SCHEMA + ", bucket int")
-            .option("basePath", _live_dir(table)).parquet(*buckets))
 
 
 def ensure_initialized(table, view=None) -> None:
@@ -127,13 +100,12 @@ def ensure_initialized(table, view=None) -> None:
         if slices:
             entries = (table.read_slices_base(slices)
                        .select(F.col(RECORD_KEY), F.col(PARTITION_PATH),
-                               F.split(F.col(FILE_NAME), "_").getItem(0)
-                                .alias("file_id"),
+                               file_id_of(FILE_NAME).alias("file_id"),
                                F.lit("A").alias("op"),
                                # index under the commit that wrote each file,
                                # so future appends order correctly against it
                                F.col(COMMIT_TIME).alias("instant")))
-            _write(table, entries, "backfill")
+            append_entries(table, entries)
         from . import storage
 
         fs.makedirs(os.path.dirname(marker))
@@ -147,8 +119,6 @@ def entries_from_written_files(table, stats: list[dict], instant: str):
     no base files); the caller decides when to append it (the write path
     materializes it BEFORE taking the table lock so only the parquet append
     holds the lock)."""
-    from .fsview import BaseFile, FileSlice
-
     base_stats = [s for s in stats if not s.get("is_delta")]
     if not base_stats:
         return None
@@ -158,14 +128,17 @@ def entries_from_written_files(table, stats: list[dict], instant: str):
               for s in base_stats]
     return (table.read_slices_base(slices)
             .select(F.col(RECORD_KEY), F.col(PARTITION_PATH),
-                    F.split(F.col(FILE_NAME), "_").getItem(0).alias("file_id"),
+                    file_id_of(FILE_NAME).alias("file_id"),
                     F.lit("A").alias("op"), F.lit(instant).alias("instant")))
 
 
 def append_entries(table, entries: DataFrame) -> None:
-    """Append precomputed entries (see :func:`entries_from_written_files`).
-    Rewritten groups re-append their keys; lookup dedups latest-wins."""
-    _write(table, entries, "precomputed")
+    """Append entries (see :func:`entries_from_written_files`) to the live
+    generation, one file per bucket. Rewritten groups re-append their
+    keys; lookup dedups latest-wins."""
+    out = entries.withColumn("bucket", bucket_of(
+        RECORD_KEY, table.write_config.record_index_buckets))
+    _store(table).append(_SUB, out.repartition(F.col("bucket")))
 
 
 def append_removals(table, keys_df: DataFrame, instant: str) -> None:
@@ -175,16 +148,27 @@ def append_removals(table, keys_df: DataFrame, instant: str) -> None:
         F.col(RECORD_KEY), F.col(PARTITION_PATH),
         F.lit(None).cast("string").alias("file_id"),
         F.lit("R").alias("op"), F.lit(instant).alias("instant"))
-    _write(table, entries, instant)
+    append_entries(table, entries)
 
 
-def _write(table, entries: DataFrame, instant: str) -> None:
-    n_buckets = table.write_config.record_index_buckets
-    out = entries.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(RECORD_KEY)), F.lit(n_buckets)))
-    # one file per bucket per write; append mode keeps history
-    (out.repartition(F.col("bucket"))
-        .write.partitionBy("bucket").mode("append").parquet(_live_dir(table)))
+def _entries(table, store: GenerationStore) -> DataFrame:
+    """The live generation's entries, less those written by rolled-back /
+    restored-over instants (they never happened)."""
+    df = store.read(_SUB, INDEX_SCHEMA)
+    rolled_back = table.timeline.rolled_back()
+    if rolled_back:
+        df = df.filter(~F.col("instant").isin(*sorted(rolled_back)))
+    return df
+
+
+def _latest(df: DataFrame) -> DataFrame:
+    """The latest entry per (key, partition), kept only when it is an 'A'
+    (same instant: 'R' sorts above 'A')."""
+    w = Window.partitionBy(RECORD_KEY, PARTITION_PATH).orderBy(
+        F.desc("instant"), F.desc("op"))
+    return (df.withColumn("__rn", F.row_number().over(w))
+            .filter((F.col("__rn") == 1) & (F.col("op") == "A"))
+            .drop("__rn"))
 
 
 def compact(table, retain_commits: int | None = None) -> int:
@@ -194,96 +178,40 @@ def compact(table, retain_commits: int | None = None) -> int:
     cleaner retention) are kept RAW: a future rollback/restore can still
     exclude them by instant. Older entries fold latest-wins — safe because
     restore past the clean horizon is impossible anyway (the data files are
-    gone). Returns the number of entries in the folded portion.
-
-    Object-store-safe: the fold lands in the NEXT write-once generation
-    and one atomic pointer publish supersedes the old one — no directory
-    rename (same design as the dedup state); superseded generations and
-    legacy flat bucket dirs are swept best-effort after the swap.
+    gone). The result is the store's next generation, published in one
+    pointer swap. Returns the number of entries it holds.
     """
-    from . import storage
     from . import timeline as tl
     from .timeline import LockProvider
 
-    spark = table.spark
     retain = retain_commits if retain_commits is not None \
         else table.write_config.cleaner_commits_retained
     commits = table.timeline.completed(tl.DATA_ACTIONS)
     if len(commits) <= retain:
         return 0
     horizon = commits[-retain].timestamp
-    d = index_dir(table)
 
     # the lock covers read → fold → write → swap: a writer appending between
     # an unguarded read and the swap would have its entries silently
     # discarded by the overwrite (reverting those keys' locations)
     with LockProvider(table.base_path, table.write_config.lock_timeout_s,
                       table.write_config.lock_expiry_s):
-        df = _read_entries(table)
-        if df is None:
-            return 0
-
-        rolled_back = table.timeline.rolled_back()
-        if rolled_back:
-            df = df.filter(~F.col("instant").isin(*sorted(rolled_back)))
-
-        old = df.filter(F.col("instant") < horizon)
-        recent = df.filter(F.col("instant") >= horizon)
-        w = Window.partitionBy(RECORD_KEY, PARTITION_PATH).orderBy(
-            F.desc("instant"), F.desc("op"))
-        folded = (old.withColumn("__rn", F.row_number().over(w))
-                  .filter((F.col("__rn") == 1) & (F.col("op") == "A"))
-                  .drop("__rn"))
-        out = folded.unionByName(recent)
-
-        raw = table.storage.read_bytes(_gen_path(table))
-        new_g = 0 if raw is None else int(raw) + 1
-        dst = os.path.join(d, f"gen-{new_g:06d}")
-        # overwrite: a crashed prior compact may have left a partial copy
-        # at this generation (its pointer publish never ran)
-        (out.repartition(F.col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(dst))
-        n = folded.count()
-        storage.ATOMIC.put_atomic(_gen_path(table), str(new_g).encode())
-        fsb = table.storage
-        keep = f"gen-{new_g:06d}"
-        for e in fsb.listdir(d):
-            if e == keep:
-                continue
-            p = os.path.join(d, e)
-            fsb.rmtree(p)
-            if fsb.exists(p):  # flat legacy file (_SUCCESS etc.)
-                try:
-                    fsb.remove(p)
-                except OSError:
-                    pass
-        for suffix in (".compacting", ".old"):  # legacy crash siblings
-            fsb.rmtree(d + suffix)
-    return n
+        store = _store(table)
+        df = _entries(table, store)
+        folded = _latest(df.filter(F.col("instant") < horizon))
+        out = folded.unionByName(df.filter(F.col("instant") >= horizon))
+        return store.replace({_SUB: out}, {})
 
 
 def lookup(table, view=None) -> DataFrame:
     """Current key → (partition, file_id, instant) map: fold entries
     latest-wins, drop removals, and keep only locations whose file group is
     still live."""
-    spark = table.spark
-    if not _has_entry_files(table):
-        # initialized-but-empty index (marker written on an empty table)
-        return local_frame(spark, [], LOOKUP_SCHEMA)
-    df = _read_entries(table)
-    # entries written by rolled-back / restored-over instants never happened
-    rolled_back = table.timeline.rolled_back()
-    if rolled_back:
-        df = df.filter(~F.col("instant").isin(*sorted(rolled_back)))
-    w = Window.partitionBy(RECORD_KEY, PARTITION_PATH).orderBy(
-        F.desc("instant"), F.desc("op"))  # same instant: 'R' sorts above 'A'
-    latest = (df.withColumn("__rn", F.row_number().over(w))
-              .filter((F.col("__rn") == 1) & (F.col("op") == "A"))
-              .drop("__rn", "op", "bucket"))
+    latest = _latest(_entries(table, _store(table))).drop("op", "bucket")
     view = view or table.view()
-    live = {(sl.partition, sl.file_id) for sl in view.latest_slices()}
+    live = view.live_groups()
     if not live:
         return latest.limit(0)
     live_df = F.broadcast(local_frame(
-        spark, sorted(live), f"{PARTITION_PATH} string, file_id string"))
+        table.spark, live, f"{PARTITION_PATH} string, file_id string"))
     return latest.join(live_df, [PARTITION_PATH, "file_id"], "left_semi")

@@ -20,37 +20,58 @@ negatives never):
   * :func:`compact` rewrites the index keeping only entries whose file
     group is still live.
 
-Layout: ``<base>/.hoodie/secondary_index/<column>/add-<instant>-<rand>/``
-Spark-written parquet dirs, one per append, plus ``compacted-<rand>/``
-folds (value kept in its native parquet type). Write-once dirs + a
-write-fold-then-delete compact order mean NO renames anywhere, so the
-index runs unchanged on object stores; the legacy flat
-``<instant>.parquet`` files of the pre-round-10 layout are still read.
-All file ops go through the ``storage.Storage`` seam.
+Layout: one flat sub-store ``<column>`` of a
+:class:`~hoodie_spark.generation_store.GenerationStore` under
+``<base>/.hoodie/secondary_index`` with the pointer ``<column>.gen`` (the
+store's docstring gives the generation layout and the crash contract).
+Each commit appends one file per indexed column to the live generation
+(value kept in its native parquet type). An index written before the
+store (``add-*``/``compacted-*`` dirs and flat ``*.parquet`` files under
+``<column>/``) is that column's legacy generation until its first
+:func:`compact`. Appends and compaction run under the table lock in a
+multi-writer setup (:func:`compact` takes it; the writer appends inside
+its commit section).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import PARTITION_PATH
 from .frames import local_frame
+from .fsview import file_id_of
+from .generation_store import GenerationStore
 
 __all__ = ["create_index", "drop_index", "indexed_columns", "exists",
            "append_entries_for_stats", "lookup_groups", "compact"]
 
 
-def _dir(table, column: str) -> str:
-    return os.path.join(table.base_path, ".hoodie", "secondary_index", column)
+def _root(table) -> str:
+    return os.path.join(table.base_path, ".hoodie", "secondary_index")
 
 
 def _marker(table, column: str) -> str:
-    return _dir(table, column) + ".init"
+    return os.path.join(_root(table), column + ".init")
+
+
+def _store(table, column: str) -> GenerationStore:
+    store = GenerationStore(table.spark, table.storage, _root(table),
+                            column + ".gen", (column,), flat=(column,))
+    store.open()
+    return store
+
+
+def _read(table, column: str, store: GenerationStore) -> DataFrame:
+    """The column's entries, typed as the table column."""
+    t = table.schema[column].dataType.simpleString()
+    return store.read(column, f"value {t}, pp string, file_id string")
+
+
+def _append(table, column: str, entries: DataFrame) -> None:
+    _store(table, column).append(column, entries.coalesce(1))
 
 
 def exists(table, column: str) -> bool:
@@ -58,9 +79,8 @@ def exists(table, column: str) -> bool:
 
 
 def indexed_columns(table) -> list[str]:
-    root = os.path.join(table.base_path, ".hoodie", "secondary_index")
-    return sorted(c for c in table.storage.listdir(root)
-                  if not c.endswith(".init") and exists(table, c))
+    return sorted(c for c in table.storage.listdir(_root(table))
+                  if not c.endswith((".init", ".gen")) and exists(table, c))
 
 
 def _harvest(table, slices, column: str) -> DataFrame | None:
@@ -83,21 +103,18 @@ def _harvest(table, slices, column: str) -> DataFrame | None:
     df = table.spark.read.option("mergeSchema", "true").parquet(*paths)
     if column not in df.columns:
         return None
+    return _entries(df, column)
+
+
+def _entries(df: DataFrame, column: str) -> DataFrame:
+    """Distinct (value, pp, file_id) of ``df``'s rows, the file id taken
+    from the name of the file each row was read from."""
     return (df.select(F.col(column).alias("value"),
                       F.col(PARTITION_PATH).alias("pp"),
                       F.element_at(F.split(F.input_file_name(), "/"), -1)
                       .alias("__f"))
-            .withColumn("file_id",
-                        F.element_at(F.split(F.col("__f"), "_"), 1))
+            .withColumn("file_id", file_id_of(F.col("__f")))
             .drop("__f").distinct())
-
-
-def _append(table, column: str, entries: DataFrame, instant: str) -> None:
-    # one write-once Spark dir per append: no rename, object-store native
-    d = _dir(table, column)
-    table.storage.makedirs(d)
-    out = os.path.join(d, f"add-{instant}-{uuid.uuid4().hex[:6]}")
-    entries.coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def create_index(table, column: str) -> None:
@@ -109,19 +126,23 @@ def create_index(table, column: str) -> None:
     view = table.view()
     entries = _harvest(table, view.latest_slices(), column)
     if entries is not None:
-        _append(table, column, entries, "00000000000000000")
+        _append(table, column, entries)
     from . import storage
 
-    table.storage.makedirs(_dir(table, column))
+    table.storage.makedirs(_root(table))
     storage.ATOMIC.put_atomic(_marker(table, column), column.encode())
 
 
 def drop_index(table, column: str) -> None:
-    table.storage.rmtree(_dir(table, column))
-    try:
-        table.storage.remove(_marker(table, column))
-    except OSError:
-        pass
+    """Remove the marker first: a crash part-way leaves an uninitialized
+    index (lookups fall back to the scan), never a marked, emptied one."""
+    store = _store(table, column)
+    for p in (_marker(table, column), store.pointer):
+        try:
+            table.storage.remove(p)
+        except OSError:
+            pass
+    table.storage.rmtree(os.path.join(store.path, column))
 
 
 def append_entries_for_stats(table, stats: list[dict], instant: str) -> None:
@@ -137,38 +158,8 @@ def append_entries_for_stats(table, stats: list[dict], instant: str) -> None:
         return
     df = table.spark.read.parquet(*paths)
     for column in cols:
-        if column not in df.columns:
-            continue
-        entries = (df.select(F.col(column).alias("value"),
-                             F.col(PARTITION_PATH).alias("pp"),
-                             F.lit(None).cast("string").alias("file_id"),
-                             F.element_at(F.split(F.input_file_name(), "/"),
-                                          -1).alias("__f"))
-                   .withColumn("file_id",
-                               F.element_at(F.split(F.col("__f"), "_"), 1))
-                   .drop("__f").distinct())
-        _append(table, column, entries, instant)
-
-
-def _index_paths(table, column: str) -> list[str]:
-    d = _dir(table, column)
-    fs = table.storage
-    paths = []
-    for e in fs.listdir(d):
-        if e.endswith(".parquet"):  # legacy flat layout: still readable
-            paths.append(os.path.join(d, e))
-        elif e.startswith(("add-", "compacted-")):
-            sub = os.path.join(d, e)
-            if any(f.endswith(".parquet") for f in fs.listdir(sub)):
-                paths.append(sub)
-    return paths
-
-
-def _read_index(table, column: str) -> DataFrame | None:
-    paths = _index_paths(table, column)
-    if not paths:
-        return None
-    return table.spark.read.parquet(*paths)
+        if column in df.columns:
+            _append(table, column, _entries(df, column))
 
 
 def lookup_groups(table, column: str, values_df: DataFrame,
@@ -177,52 +168,28 @@ def lookup_groups(table, column: str, values_df: DataFrame,
     ``value``). None = index unusable (caller falls back to stats/scan)."""
     if not exists(table, column):
         return None
-    idx = _read_index(table, column)
-    if idx is None:
-        return set()
+    idx = _read(table, column, _store(table, column))
     view = view or table.view()
-    live = {(pp, fid) for (pp, fid), grp in view.groups.items()
-            if grp.is_live(None) and grp.latest_slice(None)}
     hit = (idx.join(F.broadcast(values_df.select("value").distinct()),
                     "value", "left_semi")
            .select("pp", "file_id").distinct().collect())
-    return {(r.pp, r.file_id) for r in hit} & live
+    return {(r.pp, r.file_id) for r in hit} & set(view.live_groups())
 
 
 def compact(table, column: str) -> int:
-    """Rewrite the index keeping only entries for live file groups.
-    Returns the number of entries kept."""
-    idx = _read_index(table, column)
-    if idx is None:
-        return 0
-    view = table.view()
-    live = sorted({(pp, fid) for (pp, fid), grp in view.groups.items()
-                   if grp.is_live(None) and grp.latest_slice(None)})
-    d = _dir(table, column)
-    fs = table.storage
-    stale = _index_paths(table, column)
-    if not live:
-        for p in stale:
-            _rm_entry(fs, p)
-        return 0
-    live_df = F.broadcast(local_frame(
-        table.spark, live, "pp string, file_id string"))
-    kept = idx.join(live_df, ["pp", "file_id"], "left_semi").distinct()
-    # write the fold FIRST, delete the superseded entries after — a crash
-    # in between leaves duplicates, which the pruning contract absorbs
-    # (distinct lookup, false positives allowed); never a lost index
-    dst = os.path.join(d, f"compacted-{uuid.uuid4().hex[:8]}")
-    kept.coalesce(1).write.mode("overwrite").parquet(dst)
-    n = table.spark.read.parquet(dst).count()
-    for p in stale:
-        _rm_entry(fs, p)
-    return n
+    """Rewrite the index as its next generation, keeping only entries for
+    live file groups. Returns the number of entries kept.
 
+    Takes the table lock: a commit appending between the read and the
+    pointer swap would otherwise lose its entries (a false negative)."""
+    from .timeline import LockProvider
 
-def _rm_entry(fs, path: str) -> None:
-    fs.rmtree(path)
-    if fs.exists(path):  # a flat legacy file, not a dir
-        try:
-            fs.remove(path)
-        except OSError:
-            pass
+    with LockProvider(table.base_path, table.write_config.lock_timeout_s,
+                      table.write_config.lock_expiry_s):
+        store = _store(table, column)
+        live = table.view().live_groups()
+        live_df = F.broadcast(local_frame(
+            table.spark, live, "pp string, file_id string"))
+        kept = (_read(table, column, store)
+                .join(live_df, ["pp", "file_id"], "left_semi").distinct())
+        return store.replace({column: kept.coalesce(1)}, {})

@@ -139,19 +139,10 @@ def unschedule_pending(table, instant_ts: str, *, force: bool = False,
         raise RuntimeError(
             f"instant {instant_ts} has a LIVE heartbeat (an owner is "
             f"working); pass force=True to unschedule it anyway")
-    from .rollback import _listing_rollback_files
+    from .rollback import _listing_rollback_files, _pending_instant_files
 
     if dry_run:
-        import os
-        suffixes = (f"_{instant_ts}.parquet",
-                    f"_{instant_ts}.delta.parquet")
-        found = []
-        for root, dirs, files in os.walk(table.base_path):
-            dirs[:] = [d for d in dirs if d != ".hoodie"]
-            found += [os.path.relpath(os.path.join(root, fn),
-                                      table.base_path)
-                      for fn in files if fn.endswith(suffixes)]
-        return found
+        return _pending_instant_files(table, instant_ts)
     with tl.LockProvider(table.base_path,
                          table.write_config.lock_timeout_s,
                          table.write_config.lock_expiry_s):

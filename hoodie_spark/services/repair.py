@@ -68,9 +68,10 @@ def find_orphan_files(table, max_age_s: float = 3600) -> list[str]:
     covering the window where a writer has produced files but not yet the
     requested instant. Readers never see orphans (manifest-based
     visibility), so this is purely a storage-cost repair."""
-    import json
     import os
     import time
+
+    from .. import storage
 
     tl_ = table.timeline
     referenced: set[str] = set()
@@ -99,27 +100,20 @@ def find_orphan_files(table, max_age_s: float = 3600) -> list[str]:
     pending_ts = {i.timestamp for i in tl_.pending()}
     now = time.time()
     orphans: list[str] = []
-    import os
-    for root, dirs, files in os.walk(table.base_path):
-        dirs[:] = [d for d in dirs if d != ".hoodie"]
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            p = os.path.join(root, fn)
-            rel = os.path.relpath(p, table.base_path)
-            if rel in referenced:
-                continue
-            # fileId_token_instant[.delta].parquet → instant timestamp
-            stem = fn.rsplit("_", 1)[-1].split(".", 1)[0]
-            if stem in pending_ts:
-                continue
-            try:
-                if now - os.path.getmtime(p) < max_age_s:
-                    continue
-            except OSError:
-                continue
+    for rel in table.storage.walk(table.base_path, ".hoodie"):
+        if not rel.endswith(".parquet") or rel in referenced:
+            continue
+        # fileId_token_instant[.delta].parquet → instant timestamp
+        stem = os.path.basename(rel).rsplit("_", 1)[-1].split(".", 1)[0]
+        if stem in pending_ts:
+            continue
+        try:
+            mt = storage.ATOMIC.mtime(os.path.join(table.base_path, rel))
+        except NotImplementedError:
+            mt = None  # no mtime on this store: age unknown, never an orphan
+        if mt is not None and now - mt >= max_age_s:
             orphans.append(rel)
-    return sorted(orphans)
+    return orphans
 
 
 def repair_orphan_files(table, dry_run: bool = True,

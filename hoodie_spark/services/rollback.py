@@ -37,22 +37,24 @@ def _delete_instant_files(table, ts: str) -> list[str]:
     return deleted
 
 
-def _listing_rollback_files(table, instant_ts: str) -> list[str]:
+def _pending_instant_files(table, instant_ts: str) -> list[str]:
     """ListingBasedRollbackHelper.java:252 equivalent for PENDING instants:
     a writer that died before publishing left no commit metadata, but every
     file it wrote embeds its instant time in the name (FSUtils.java:131
-    ``fileId_token_instant.parquet`` / delta naming), so a directory walk
-    finds exactly its output. This is the rare crash-recovery path — normal
-    rollback of a completed instant stays manifest-driven and never lists."""
+    ``fileId_token_instant.parquet`` / delta naming), so a listing of the
+    table finds exactly its output (relative paths). This is the rare
+    crash-recovery path — normal rollback of a completed instant stays
+    manifest-driven and never lists."""
     suffixes = (f"_{instant_ts}.parquet", f"_{instant_ts}.delta.parquet")
-    deleted = []
-    for root, dirs, files in os.walk(table.base_path):
-        dirs[:] = [d for d in dirs if d != ".hoodie"]
-        for fn in files:
-            if fn.endswith(suffixes):
-                p = os.path.join(root, fn)
-                table.storage.remove(p)
-                deleted.append(os.path.relpath(p, table.base_path))
+    return [rel for rel in table.storage.walk(table.base_path, ".hoodie")
+            if rel.endswith(suffixes)]
+
+
+def _listing_rollback_files(table, instant_ts: str) -> list[str]:
+    """Delete a pending instant's files (:func:`_pending_instant_files`)."""
+    deleted = _pending_instant_files(table, instant_ts)
+    for rel in deleted:
+        table.storage.remove(os.path.join(table.base_path, rel))
     return deleted
 
 

@@ -304,12 +304,19 @@ def parse_merge(sql: str) -> dict:
             "on": on, "clauses": clauses}
 
 
+def _resolve_table(tables: dict, name: str):
+    """The registered hoodie table ``name`` names, looked up as given and
+    then by its last dotted part without backticks (``db.t`` → ``t``)."""
+    tbl = tables.get(name) or tables.get(name.split(".")[-1].strip("`"))
+    if tbl is None:
+        raise ValueError(f"unknown hoodie table {name!r}")
+    return tbl
+
+
 def _exec_merge(spark, sql: str, tables: dict) -> object:
     p = parse_merge(sql)
     tname = p["target"].split(".")[-1].strip("`")
-    tbl = tables.get(p["target"]) or tables.get(tname)
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {p['target']!r}")
+    tbl = _resolve_table(tables, p["target"])
     src = spark.sql(p["source"]) if p["source_is_query"] \
         else spark.table(p["source"])
     target_cols = [n for n, _ in tbl.data_columns()]
@@ -344,9 +351,7 @@ def _exec_update(spark, sql: str, tables: dict) -> object:
     i_set = _find_kw(mask, "set", m.end())
     i_where = _find_kw(mask, "where", i_set)
     tname = sql[m.end():i_set].strip()
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     assigns_text = sql[i_set + len("set"):i_where if i_where >= 0 else len(sql)]
     sets = {}
     for a_txt in _split_top(assigns_text):
@@ -361,9 +366,7 @@ def _exec_delete(spark, sql: str, tables: dict) -> object:
     m = re.match(r"\s*delete\s+from\b", mask)
     i_where = _find_kw(mask, "where", m.end())
     tname = sql[m.end():i_where if i_where >= 0 else len(sql)].strip()
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     cond = sql[i_where + len("where"):].strip() if i_where >= 0 else "true"
     return tbl.delete_where(cond)
 
@@ -372,9 +375,7 @@ def _exec_truncate(spark, sql: str, tables: dict) -> object:
     mask = _mask(sql)
     m = re.match(r"\s*truncate\s+table\b", mask)
     tname = sql[m.end():].strip()
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     return tbl.truncate()
 
 
@@ -389,9 +390,7 @@ def _exec_alter(spark, sql: str, tables: dict) -> None:
     if not mm:
         raise ValueError(f"unsupported ALTER TABLE statement: {sql!r}")
     tname = sql[m.end():mm.start()].strip()
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     verb = mm.group(1).split()[0]
     rest = sql[mm.end():].strip()
     if verb == "add":
@@ -539,9 +538,7 @@ def _exec_insert(spark, sql: str, tables: dict):
     overwrite = m.group(1) == "overwrite"
     body = re.search(r"\b(select|values)\b", mask[m.end():])
     tname = sql[m.end():m.end() + body.start()].strip()
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     df = spark.sql(sql[m.end() + body.start():])
     if body.group(1) == "values":
         data = [n for n, _ in tbl.data_columns()]
@@ -586,9 +583,7 @@ def _exec_call(spark, sql: str, tables: dict):
         k, v = part.split("=>", 1)
         args[k.strip().lower()] = _call_lit(v)
     tname = str(args.pop("table", ""))
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
 
     if proc == "run_compaction":
         return tbl.compact(strategy=args.get("strategy"))
@@ -827,9 +822,7 @@ def _exec_create_index(spark, sql: str, tables: dict) -> None:
     if not m:
         raise ValueError(f"cannot parse CREATE INDEX statement: {sql!r}")
     tname = m.group(1)
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     tbl.create_secondary_index(m.group(2))
 
 
@@ -839,9 +832,7 @@ def _exec_drop_index(spark, sql: str, tables: dict) -> None:
     if not m:
         raise ValueError(f"cannot parse DROP INDEX statement: {sql!r}")
     tname = m.group(2)
-    tbl = tables.get(tname) or tables.get(tname.split(".")[-1].strip("`"))
-    if tbl is None:
-        raise ValueError(f"unknown hoodie table {tname!r}")
+    tbl = _resolve_table(tables, tname)
     tbl.drop_secondary_index(m.group(1))
 
 

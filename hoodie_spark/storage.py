@@ -34,6 +34,11 @@ class Storage:
         """Immediate children of ``path`` (sorted); [] when missing."""
         raise NotImplementedError
 
+    def walk(self, path: str, skip: str) -> list[str]:
+        """Every file below ``path`` as sorted paths relative to it, not
+        descending into directories named ``skip``; [] when missing."""
+        raise NotImplementedError
+
     def makedirs(self, path: str) -> None:
         raise NotImplementedError
 
@@ -63,7 +68,7 @@ class Storage:
     def read_bytes(self, path: str) -> bytes | None:
         """Whole-object read; None when the path does not exist. The
         read-side companion of ``AtomicStorage.put_atomic`` for small
-        control files (dedup-state watermarks) that must be readable on
+        control files (generation-store pointers) that must be readable on
         the same backend their writes target."""
         raise NotImplementedError
 
@@ -77,6 +82,14 @@ class LocalStorage(Storage):
             return sorted(os.listdir(path))
         except FileNotFoundError:
             return []
+
+    def walk(self, path: str, skip: str) -> list[str]:
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if d != skip]
+            out += [os.path.relpath(os.path.join(root, f), path)
+                    for f in files]
+        return sorted(out)
 
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -126,9 +139,9 @@ class AtomicStorage:
     the same all-or-nothing need: **archive chunks** (the chunk must be
     fully visible before the moved active instants are deleted —
     ``Timeline.archive``), **table properties** (a torn properties file
-    would break every future load), and the **dedup-state watermark**
-    (``streaming/incremental_dedup.py`` — the generation pointer swap IS
-    the state commit). Heartbeat touches also go through
+    would break every future load), and the **generation-store pointer**
+    (``generation_store.py`` — the pointer swap IS the commit of every
+    maintained state and table index). Heartbeat touches also go through
     :meth:`put_atomic`, not for atomicity but because a PUT is the only
     way to bump a store mtime on S3/GCS. The original two:
 

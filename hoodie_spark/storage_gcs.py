@@ -146,6 +146,15 @@ class GCSStorage(_GCSPaths, Storage):
                   for p in getattr(it, "prefixes", set())}
         return sorted(n for n in names if n)
 
+    def walk(self, path: str, skip: str) -> list[str]:
+        bucket, key = self.path_to_key(path)
+        prefix = key.rstrip("/") + "/"
+        rels = [b.name[len(prefix):]
+                for b in self.client.list_blobs(bucket, prefix=prefix)]
+        # a key ending in "/" is a directory marker, not a file
+        return sorted(r for r in rels if r and not r.endswith("/")
+                      and skip not in r.split("/")[:-1])
+
     def makedirs(self, path: str) -> None:
         pass  # prefixes need no creation
 

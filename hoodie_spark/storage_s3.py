@@ -189,6 +189,14 @@ class S3Storage(Storage):
                 return keys
             token = resp.get("NextContinuationToken")
 
+    def walk(self, path: str, skip: str) -> list[str]:
+        bucket, key = self.path_to_key(path)
+        prefix = key.rstrip("/") + "/"
+        rels = [k[len(prefix):] for k in self._keys_under(bucket, prefix)]
+        # a key ending in "/" is a directory marker, not a file
+        return sorted(r for r in rels if r and not r.endswith("/")
+                      and skip not in r.split("/")[:-1])
+
     # ------------------------------------------------------------ mutation
     def makedirs(self, path: str) -> None:
         pass  # prefixes need no creation

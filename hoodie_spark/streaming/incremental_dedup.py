@@ -63,7 +63,8 @@ from pyspark.sql import functions as F
 
 from ..functions.dedup import (band_rows, bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
-from .maintainer import MaintainedState, bucket_of, locked_fold
+from ..generation_store import bucket_of
+from .maintainer import MaintainedState, locked_fold
 
 STATE_DIR = "dedup_state"
 

@@ -66,7 +66,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .maintainer import bucket_of, locked_fold
+from ..generation_store import bucket_of
+from .maintainer import locked_fold
 from .split_maintainer import ClusterRootState
 
 __all__ = ["KeepBestDeduper"]

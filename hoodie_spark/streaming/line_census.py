@@ -21,7 +21,7 @@ is always exact.)
 
 State is the census: one ``(lhash, n)`` parquet per generation —
 md5 of the raw line, not the line text, so state rows are fixed-width
-regardless of line length — in maintainer.py's generation store. Each
+regardless of line length — in the generation store. Each
 fold writes the merged census as the NEXT generation, and the generation
 pointer and the watermark publish in ONE atomic write: a crash mid-fold
 leaves the old census AND the old watermark, so the refold recomputes

@@ -17,7 +17,7 @@ nor mergeable. That equivalence is the oracle contract
 (q:reservoir_incremental).
 
 State is the current reservoir itself — one (key, priority) parquet of
-at most ``k`` rows per generation in maintainer.py's generation store.
+at most ``k`` rows per generation in the generation store.
 A replayed batch is harmless (its (key, priority) rows are already in
 or below the reservoir — distinct-fold idempotence); rollback/restore
 past the watermark rebuilds from the table's current content, since a

@@ -35,7 +35,7 @@ the count in ``state.json`` (:meth:`bridge_count`), so an operator can
 see drift building up and decide when a ``rebuild()`` is warranted
 instead of flying blind.
 
-Crash safety is the generation store's (maintainer.py): features and
+Crash safety is the generation store's (generation_store.py): features and
 assignments append, then the watermark publishes; a replayed batch
 re-derives the same roots (matching its own persisted features yields
 its own root — idempotent).
@@ -66,7 +66,8 @@ from ..functions.components import duplicate_groups
 from ..functions.dedup import (band_rows, bounded_self_pairs, doc_features,
                                min_sig_matches, sig_agreement)
 from ..functions.pipeline import sample_hash
-from .maintainer import MaintainedState, bucket_of, locked_fold
+from ..generation_store import bucket_of
+from .maintainer import MaintainedState, locked_fold
 
 __all__ = ["SplitMaintainer"]
 

@@ -58,7 +58,7 @@ from .config import (COMMIT_SEQNO, COMMIT_TIME, FILE_NAME, IS_DELETED,
                      RECORD_KEY, BootstrapMode, IndexType, MergePolicy,
                      TableType, WriteConcurrencyMode, WriteOperation)
 from .frames import local_frame
-from .fsview import FileSystemView
+from .fsview import FileSystemView, file_id_of
 from .index import tag_location
 from .keygen import with_keys
 
@@ -1015,7 +1015,7 @@ class WriteClient:
         """In-place rewrite (COW merge, compaction, log compaction): each
         row keeps the file group its current file belongs to and is named
         for ``instant``; ``extra`` columns ride in the same projection."""
-        fid = F.split(F.col(FILE_NAME), "_").getItem(0)
+        fid = file_id_of(FILE_NAME)
         name = delta_file_name if delta else base_file_name
         return df.withColumns({BUCKET: fid, FILE_NAME: name(fid, instant),
                                **(extra or {})})

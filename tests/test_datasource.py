@@ -7,6 +7,7 @@ replaying every micro-batch with upsert semantics reconstructs the
 snapshot."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -219,3 +220,38 @@ def test_datasource_overwrite_replaces_whole_table(spark, orders,
     # every other year's rows are gone — whole-table semantics
     assert snap.count() == 20
     assert snap.filter("year(o_orderdate) != 1995").count() == 0
+
+
+def test_datasource_commit_sweeps_stale_staging(spark, orders,
+                                                tmp_table_path):
+    """Staged parquet from failed/speculative task attempts never appears
+    in a commit message; commit() must sweep aged leftovers instead of
+    leaking them in .hoodie/.staging forever. Fresh files (a concurrent
+    writer's in-flight tasks) must survive."""
+    from hoodie_spark.sources import HoodieDataSource
+
+    spark.dataSource.register(HoodieDataSource)
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "sweep", ["o_orderkey"], "o_orderdate")
+    tbl.bulk_insert(orders.limit(100))
+
+    stage = os.path.join(tmp_table_path, ".hoodie", ".staging")
+    os.makedirs(stage, exist_ok=True)
+    stale = os.path.join(stage, "part-deadbeef.parquet")
+    fresh = os.path.join(stage, "part-cafebabe.parquet")
+    for f in (stale, fresh):
+        with open(f, "wb") as fh:
+            fh.write(b"x")
+    old = time.time() - 7200
+    os.utime(stale, (old, old))
+
+    upd = orders.limit(20).withColumn("o_orderstatus", F.lit("S"))
+    (upd.write.format("hoodie_spark").mode("append")
+     .option("operation", "upsert")
+     .option("stagingTTL", "3600")  # default is 24h; route via the option
+     .save(tmp_table_path))
+
+    assert not os.path.exists(stale), "aged orphan staging file leaked"
+    assert os.path.exists(fresh), "fresh (possibly in-flight) file removed"
+    snap = HoodieTable.load(spark, tmp_table_path).snapshot()
+    assert snap.filter("o_orderstatus = 'S'").count() == 20

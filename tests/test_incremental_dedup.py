@@ -17,7 +17,7 @@ from hoodie_spark import HoodieTable
 from hoodie_spark import functions as HF
 from hoodie_spark.streaming import IncrementalDeduper, Ingestor
 from hoodie_spark.streaming.ingest import Source
-from hoodie_spark.streaming.maintainer import GenerationStore
+from hoodie_spark.generation_store import GenerationStore
 
 SF_DIR = "/root/testdata/sf0.001"
 

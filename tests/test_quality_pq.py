@@ -635,3 +635,78 @@ def test_ivfpq_append_equals_full_rebuild(spark, emb, tmp_table_path):
     HF.write_ivfpq_index(emb.join(dels, "vec_id", "left_anti"), cents,
                          books, "vec_id", "embedding", fresh)
     assert probe(inc) == probe(fresh)
+
+
+def test_pq_codebooks_short_corpus_raises(spark):
+    """k codes need k corpus rows — a short book would IndexError deep in
+    pq_codebooks_trained with no hint of the cause."""
+    from hoodie_spark.functions.similarity import pq_codebooks
+
+    emb = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+           .limit(5))
+    with pytest.raises(ValueError, match="only 5 rows"):
+        pq_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+
+
+def test_pq_encode_null_and_ragged_vectors(spark):
+    """Dirty corpora must encode to null codes, not crash the task (the
+    Column expression this UDF replaced tolerated them)."""
+    from hoodie_spark.functions.similarity import pq_codebooks, pq_encode
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    books = pq_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+    dirty = spark.createDataFrame(
+        [(1, None), (2, [0.5] * 64), (3, [1.0] * 10)],
+        "vec_id int, embedding array<double>")
+    rows = {r["vec_id"]: r["codes"] for r in dirty.select(
+        "vec_id", pq_encode(F.col("embedding"), books).alias("codes"))
+        .collect()}
+    assert rows[1] is None and rows[3] is None
+    assert rows[2] is not None and len(rows[2]) == 8
+
+
+def test_ivfpq_probe_legacy_index_without_rnorm(spark, tmp_table_path):
+    """Indexes persisted before the encode-time __rnorm column must still
+    probe (norm recomputed from codes), like pq_topk's legacy branch."""
+    from hoodie_spark.functions import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    books = S.pq_codebooks(emb, "vec_id", "embedding")
+    cents = S.kmeans_centroids(emb, "vec_id", "embedding",
+                               n_centroids=4, iters=1)
+    S.write_ivfpq_index(emb, cents, books, "vec_id", "embedding",
+                        tmp_table_path)
+    legacy_path = tmp_table_path + "_legacy"
+    (spark.read.parquet(tmp_table_path).drop("__rnorm")
+     .write.partitionBy("centroid").parquet(legacy_path))
+    qs = emb.filter("vec_id < 5")
+    new = {(r[0], r[1], r[2]) for r in S.ivfpq_topk_from_index(
+        spark, tmp_table_path, cents, books, qs, "vec_id", "embedding",
+        k=5, n_probe=2).collect()}
+    old = {(r[0], r[1], r[2]) for r in S.ivfpq_topk_from_index(
+        spark, legacy_path, cents, books, qs, "vec_id", "embedding",
+        k=5, n_probe=2).collect()}
+    assert new == old and len(new) == 25
+
+
+def test_ivfpq_probe_string_ids(spark, tmp_table_path):
+    """The probe builds its LUT/probe frames from the caller's id dtype —
+    string ids must work end to end (the old hardcoded 'q_id long'
+    schema raised TypeError)."""
+    from hoodie_spark.functions import similarity as S
+
+    emb = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+           .select(F.concat(F.lit("doc-"), F.lpad(
+               F.col("vec_id").cast("string"), 4, "0")).alias("vec_id"),
+               "embedding"))
+    books = S.pq_codebooks(emb, "vec_id", "embedding")
+    cents = emb.orderBy("vec_id").limit(4)
+    S.write_ivfpq_index(emb, cents, books, "vec_id", "embedding",
+                        tmp_table_path)
+    qs = emb.orderBy("vec_id").limit(3)
+    out = S.ivfpq_topk_from_index(spark, tmp_table_path, cents, books,
+                                  qs, "vec_id", "embedding",
+                                  k=5, n_probe=2).collect()
+    assert len(out) == 15
+    assert all(isinstance(r["query_id"], str) and
+               isinstance(r["neighbor_id"], str) for r in out)

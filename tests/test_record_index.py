@@ -167,3 +167,107 @@ def test_aborted_cluster_leaves_index_untouched(spark, tmp_table_path):
     snap = tbl.snapshot()
     assert snap.count() == n
     assert snap.select("o_orderkey").distinct().count() == n
+
+
+def test_read_and_exists_keys_use_the_index(spark, tmp_table_path):
+    """read_keys / exists_keys on a record-index table prune through the
+    index and answer exactly as the index-less path does."""
+    import os
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    keys = (orders.filter(F.col("o_orderkey") % 9 == 2).select("o_orderkey")
+            .unionByName(spark.range(10_000_000, 10_000_005)
+                         .withColumnRenamed("id", "o_orderkey")))
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    answers = []
+    for use_index in (True, False):
+        tbl = HoodieTable.create(
+            spark, os.path.join(tmp_table_path, str(use_index)), "rk",
+            ["o_orderkey"], "o_orderdate",
+            partition_expr="cast(year(o_orderdate) as string)",
+            write_config=WriteConfig(record_index=use_index))
+        tbl.bulk_insert(orders)
+        tbl.upsert(orders.filter(F.col("o_orderkey") % 4 == 2)
+                   .withColumn("o_orderstatus", F.lit("K")))
+        assert record_index.exists(tbl) == use_index
+        answers.append((
+            sorted(map(tuple, tbl.read_keys(keys).select(*cols).collect())),
+            sorted(r[0] for r in tbl.exists_keys(keys).collect())))
+    assert answers[0] == answers[1]
+    assert len(answers[0][1]) == orders.filter("o_orderkey % 9 = 2").count()
+
+
+@pytest.mark.parametrize("layout", ["flat", "bare_pointer"])
+def test_legacy_layouts_answer_and_move_into_the_store(spark, tmp_table_path,
+                                                       layout):
+    """Indexes written before the generation store keep answering exactly
+    as before: the flat pre-generation bucket dirs, and a ``.gen`` pointer
+    holding a bare generation number (with a stale flat bucket dir and a
+    stale generation beside it, as a crashed sweep left them). The first
+    compact moves each into the store's next generation."""
+    import json
+    import os
+
+    from hoodie_spark.config import (COMMIT_TIME, FILE_NAME, PARTITION_PATH,
+                                     RECORD_KEY)
+    from hoodie_spark.fsview import file_id_of
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "ril", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)")
+    tbl.bulk_insert(orders)
+    tbl.upsert(orders.filter(F.col("o_orderkey") % 3 == 0)
+               .withColumn("o_orderstatus", F.lit("L")))
+    located = tbl.snapshot().select(
+        RECORD_KEY, PARTITION_PATH, file_id_of(FILE_NAME).alias("file_id"),
+        F.col(COMMIT_TIME).alias("instant"))
+    expected = sorted(map(tuple, located.collect()))
+    # each key's location, plus an older entry naming a stale group for
+    # every fifth key: latest-wins must ignore it
+    entries = (located.withColumn("op", F.lit("A"))
+               .unionByName(located.filter(F.col(RECORD_KEY) % 5 == 0)
+                            .withColumn("file_id", F.lit("stale"))
+                            .withColumn("instant", F.lit("0"))
+                            .withColumn("op", F.lit("A"))))
+
+    def write_buckets(df, path):
+        (df.withColumn("bucket", F.pmod(F.xxhash64(RECORD_KEY), F.lit(4)))
+         .write.partitionBy("bucket").parquet(path))
+
+    d = record_index.index_dir(tbl)
+    if layout == "flat":
+        write_buckets(entries, d)
+        moved_to = 0
+    else:
+        write_buckets(entries, os.path.join(d, "gen-000002"))
+        bogus = located.withColumn("file_id", F.lit("bogus")) \
+            .withColumn("instant", F.lit("9")).withColumn("op", F.lit("R"))
+        write_buckets(bogus, os.path.join(d, "gen-000001"))
+        write_buckets(bogus.limit(10), os.path.join(d, "flat"))
+        os.rename(os.path.join(d, "flat", "bucket=0"),
+                  os.path.join(d, "bucket=0"))
+        with open(d + ".gen", "w") as f:
+            f.write("2")
+        moved_to = 3
+    with open(d + ".init", "wb") as f:
+        f.write(b"initialized")
+
+    tbl = HoodieTable.load(spark, tmp_table_path, write_config=WriteConfig(
+        record_index=True, cleaner_commits_retained=1))
+
+    def answer():
+        return sorted(map(tuple, record_index.lookup(tbl).select(
+            *located.columns).collect()))
+
+    assert answer() == expected
+    assert record_index.compact(tbl) > 0
+    assert os.listdir(d) == [f"gen-{moved_to:06d}"]
+    with open(d + ".gen") as f:
+        assert json.load(f) == {"gen": moved_to}
+    assert answer() == expected
+    # tagging reads the moved index: updates stay updates
+    tbl.upsert(orders.withColumn("o_orderpriority", F.lit("M")))
+    snap = tbl.snapshot()
+    assert snap.count() == orders.count()
+    assert snap.select("o_orderkey").distinct().count() == orders.count()

@@ -85,3 +85,70 @@ def test_secondary_index_backfill_includes_log_values(spark, orders,
     assert set(r.o_orderpriority
                for r in got.select("o_orderpriority").distinct()
                .collect()) == {"ZZ-DELTA-ONLY"}
+
+
+def test_legacy_layout_answers_and_moves_into_the_store(spark, orders,
+                                                        tmp_table_path):
+    """An index written before the generation store — write-once
+    ``add-*``/``compacted-*`` dirs (one left by a crashed append) and flat
+    ``*.parquet`` files under the column dir — answers as before, with no
+    false negatives, takes appends, and its first compact moves it into
+    ``gen-000000``."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hoodie_spark.config import FILE_NAME, PARTITION_PATH
+    from hoodie_spark.fsview import file_id_of
+
+    tbl = _table(spark, tmp_table_path)
+    tbl.bulk_insert(orders)
+    snap = tbl.snapshot()
+    entries = snap.select(F.col("o_custkey").alias("value"),
+                          F.col(PARTITION_PATH).alias("pp"),
+                          file_id_of(FILE_NAME).alias("file_id")).distinct()
+    part = F.pmod(F.xxhash64("value"), F.lit(3))
+    d = os.path.join(tmp_table_path, ".hoodie", "secondary_index",
+                     "o_custkey")
+    entries.filter(part == 0).write.parquet(
+        os.path.join(d, "add-20200101000000000-ab12cd"))
+    entries.filter(part == 1).coalesce(1).write.parquet(
+        os.path.join(d, "compacted-0badc0de"))
+    rows = [r.asDict() for r in entries.filter(part == 2).collect()]
+    pq.write_table(pa.Table.from_pylist(rows, schema=pa.schema(
+        [("value", pa.int64()), ("pp", pa.string()),
+         ("file_id", pa.string())])), os.path.join(d, "20200101.parquet"))
+    os.makedirs(os.path.join(d, "add-20200102000000000-ef34ab",
+                             "_temporary", "0"))
+    with open(d + ".init", "w") as f:
+        f.write("o_custkey")
+
+    values = [r.o_custkey for r in
+              snap.select("o_custkey").distinct().limit(6).collect()]
+    expected = [snap.filter(F.col("o_custkey") == v).count() for v in values]
+
+    def answers():
+        """Per-value reads, after checking that a lookup of every stored
+        value names exactly the file groups holding rows."""
+        now = tbl.snapshot()
+        held = {tuple(r) for r in now.select(
+            PARTITION_PATH, file_id_of(FILE_NAME)).distinct().collect()}
+        assert si.lookup_groups(
+            tbl, "o_custkey",
+            now.select(F.col("o_custkey").alias("value"))) == held
+        return [tbl.read_by_column("o_custkey", [v]).count() for v in values]
+
+    assert answers() == expected
+    fresh = (orders.limit(3)
+             .withColumn("o_orderkey", F.col("o_orderkey") + 9_000_000)
+             .withColumn("o_custkey", F.lit(987654321).cast("long")))
+    tbl.upsert(fresh)  # appended into the legacy generation
+    assert tbl.read_by_column("o_custkey", [987654321]).count() == 3
+    assert si.compact(tbl, "o_custkey") > 0
+    assert os.listdir(d) == ["gen-000000"]
+    with open(d + ".gen") as f:
+        assert json.load(f) == {"gen": 0}
+    assert answers() == expected
+    assert tbl.read_by_column("o_custkey", [987654321]).count() == 3

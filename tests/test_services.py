@@ -3,12 +3,15 @@ compaction, archival (TestCleaner.java / TestHoodieTimelineArchiveLog.java /
 rollback invariants of TestHoodieClientOnCopyOnWriteStorage.java)."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
 from hoodie_spark import HoodieTable, TableType, WriteConfig
 from hoodie_spark.services.clean import CleaningPolicy
 from hoodie_spark.services.compact import CompactionStrategy
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def make_orders(spark, path, **kw):
@@ -499,3 +502,73 @@ def test_clean_sweeps_compacted_logs_in_superseded_slices(
            for r in tbl.snapshot()
            .select("o_orderkey", "o_orderstatus").collect()}
     assert got == expected
+
+
+def test_sidecar_written_after_compaction_wins(spark, tmp_table_path):
+    """compacted.json sorts AFTER timestamp-named sidecars (digits < 'c'),
+    so without explicit ordering a stale compacted entry overrides any
+    re-ANALYZE written after compaction."""
+    from hoodie_spark.services.stats import _load_sidecars, compact_sidecars
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "sidecar_order", ["o_orderkey"],
+        "o_orderdate")
+    tbl.bulk_insert(orders.limit(200))
+    assert tbl.analyze(exprs={"yr": "year(o_orderdate)"}) > 0
+    assert compact_sidecars(tbl) > 0
+    # redefine the alias and force a re-analyze AFTER compaction
+    assert tbl.analyze(exprs={"yr": "year(o_orderdate) + 1000"},
+                       force=True) > 0
+    merged = _load_sidecars(tbl.base_path)
+    for cs in merged.values():
+        if "yr" in cs:
+            assert cs["yr"][0] >= 2900, \
+                "stale compacted.json entry overrode the newer sidecar"
+
+
+def test_repair_orphan_files(spark, orders, tmp_table_path):
+    """Never-referenced data files (crashed pre-commit writers, manual
+    copies) are found and removed; referenced, pending-instant, and fresh
+    files all survive; the snapshot is untouched."""
+    from hoodie_spark.services.repair import (find_orphan_files,
+                                              repair_orphan_files)
+
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "orphfix", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)")
+    tbl.bulk_insert(orders.limit(200))
+    n = tbl.snapshot().count()
+
+    part = next(p for p in os.listdir(tmp_table_path)
+                if not p.startswith("."))
+    pdir = os.path.join(tmp_table_path, part)
+    old = time.time() - 7200
+    # (a) aged never-referenced file -> orphan
+    orphan = os.path.join(pdir, "deadf00d-0_0-0-0_19990101000000.parquet")
+    # (b) aged file naming a PENDING instant -> in-flight, protected
+    tbl.timeline.create_requested("commit", "29990101000000")
+    inflight = os.path.join(pdir, "cafe0000-0_0-0-0_29990101000000.parquet")
+    # (c) fresh never-referenced file -> age-guarded
+    fresh = os.path.join(pdir, "beef0000-0_0-0-0_19990101000001.parquet")
+    for f in (orphan, inflight, fresh):
+        with open(f, "wb") as fh:
+            fh.write(b"x")
+    os.utime(orphan, (old, old))
+    os.utime(inflight, (old, old))
+
+    found = find_orphan_files(tbl)
+    assert [os.path.basename(p) for p in found] == \
+        [os.path.basename(orphan)]
+    # dry run (default) deletes nothing
+    listed = repair_orphan_files(tbl)
+    assert os.path.exists(orphan) and listed == found
+    # destructive run through the CALL procedure surface
+    from hoodie_spark.sql.parser import run_sql
+    removed = run_sql(
+        spark, "CALL repair_orphans(table => 'orphfix', "
+               "dry_run => false)", {"orphfix": tbl})
+    assert removed == found
+    assert not os.path.exists(orphan)
+    assert os.path.exists(inflight) and os.path.exists(fresh)
+    assert tbl.snapshot().count() == n

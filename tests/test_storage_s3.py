@@ -366,6 +366,59 @@ def test_control_plane_services_through_s3_seam(spark, orders,
                for (op, k, *_) in s3_seams.calls)
 
 
+@pytest.mark.parametrize("seam", ["s3", "gcs"])
+def test_table_listings_go_through_the_storage_seam(spark, orders,
+                                                    tmp_table_path, request,
+                                                    seam):
+    """Reclaiming a crashed writer, the unschedule dry run and orphan
+    repair list the table's files through the Storage seam (a local
+    directory walk finds nothing on an object store). The mock clients
+    are backed by local files, so the proof is the recursive listing of
+    the table root reaching the client."""
+    import time
+
+    from hoodie_spark.config import WriteConfig
+    from hoodie_spark.services import unschedule_pending
+    from hoodie_spark.services.repair import find_orphan_files
+    from hoodie_spark.services.rollback import rollback_failed_writes
+
+    client = request.getfixturevalue(f"{seam}_seams")
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "walk", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)",
+        write_config=WriteConfig(heartbeat_expiry_s=0.2,
+                                 failed_writes_policy="lazy"))
+    tbl.bulk_insert(orders.limit(100))
+    ts = tbl.timeline.new_instant_time()  # a writer that dies mid-write
+    tl.Heartbeat(tbl.base_path).refresh(ts)
+    tbl.timeline.create_requested(tl.COMMIT, ts)
+    tbl.timeline.transition_inflight(tl.COMMIT, ts)
+    part = tbl.view().partitions()[0]
+    partial = os.path.join(part, f"f0-0_0_{ts}.parquet")
+    orphan = os.path.join(part, "deadf00d-0_0-0-0_19990101000000.parquet")
+    for rel in (partial, orphan):
+        with open(os.path.join(tmp_table_path, rel), "wb") as f:
+            f.write(b"x")
+    old = time.time() - 7200
+    os.utime(os.path.join(tmp_table_path, orphan), (old, old))
+    time.sleep(0.25)
+    root_listing = ("list", tmp_table_path + "/")
+
+    del client.calls[:]
+    assert unschedule_pending(tbl, ts, dry_run=True) == [partial]
+    assert root_listing in client.calls
+    del client.calls[:]
+    assert find_orphan_files(tbl) == [orphan]
+    assert root_listing in client.calls
+    if seam == "s3":  # the file's age came from the object store
+        assert ("head", os.path.join(tmp_table_path, orphan)) in client.calls
+    del client.calls[:]
+    assert rollback_failed_writes(tbl) == [ts]
+    assert root_listing in client.calls
+    assert not os.path.exists(os.path.join(tmp_table_path, partial))
+    assert tbl.snapshot().count() == 100
+
+
 def test_s3storage_listdir_paginates():
     """listdir must follow ContinuationToken pages — a 1000-key archive
     dir on real S3 truncates."""
@@ -400,16 +453,81 @@ class _Maintained:
     """How one generation-store maintainer is built, fed, compacted and
     observed by the crash matrix."""
 
-    def __init__(self, make, apply, observe, compacts, commits=True):
+    def __init__(self, make, apply, observe, compacts, commits=True,
+                 folds=True):
         self.make = make          # (table, state path) -> maintainer
         self.apply = apply        # (maintainer, batch): fold a batch
         self.observe = observe    # maintainer -> comparable state content
         self.compacts = compacts  # has compact_state
         self.commits = commits    # the batch is committed to the table first
+        self.folds = folds        # apply publishes (a crash point)
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+class _TableIndex:
+    """A table index as the crash matrix drives a maintainer: the table's
+    commits append its entries, ``compact_state`` is its compaction."""
+
+    def __init__(self, table, kind):
+        self.table, self.kind, self.fs = table, kind, table.storage
+        if kind == "record_index":
+            table.write_config.record_index = True
+        else:
+            table.create_secondary_index("score")
+
+    @property
+    def store(self):
+        from hoodie_spark import record_index, secondary_index
+
+        if self.kind == "record_index":
+            return record_index._store(self.table)
+        return secondary_index._store(self.table, "score")
+
+    def compact_state(self):
+        from hoodie_spark import record_index, secondary_index
+
+        if self.kind == "record_index":
+            return record_index.compact(self.table, retain_commits=1)
+        return secondary_index.compact(self.table, "score")
+
+
+def _record_index_answer(m):
+    """The lookup's keys, each with whether its location is the file
+    group holding the key, plus the store's (key, op) entries."""
+    from pyspark.sql import functions as F
+
+    from hoodie_spark import record_index
+    from hoodie_spark.config import FILE_NAME, PARTITION_PATH, RECORD_KEY
+    from hoodie_spark.fsview import file_id_of
+
+    held = m.table.snapshot().select(RECORD_KEY,
+                                     file_id_of(FILE_NAME).alias("fid"))
+    found = (record_index.lookup(m.table).join(held, RECORD_KEY, "left")
+             .select(RECORD_KEY, PARTITION_PATH,
+                     (F.col("file_id") == F.col("fid")).alias("at")))
+    entries = m.store.read("record_index", record_index.INDEX_SCHEMA)
+    return _rows(found), _rows(entries.select(RECORD_KEY, "op"))
+
+
+def _secondary_index_answer(m):
+    """Whether a lookup of every stored score names exactly the file
+    groups holding the rows, plus the values the store holds."""
+    from pyspark.sql import functions as F
+
+    from hoodie_spark import secondary_index
+    from hoodie_spark.config import FILE_NAME, PARTITION_PATH
+    from hoodie_spark.fsview import file_id_of
+
+    snap = m.table.snapshot()
+    groups = secondary_index.lookup_groups(
+        m.table, "score", snap.select(F.col("score").alias("value")))
+    held = {tuple(r) for r in snap.select(
+        PARTITION_PATH, file_id_of(FILE_NAME)).distinct().collect()}
+    values = secondary_index._read(m.table, "score", m.store)
+    return groups == held, _rows(values.select("value").distinct())
 
 
 def _maintained():
@@ -443,13 +561,21 @@ def _maintained():
         "reservoir": _Maintained(
             lambda t, p: ReservoirMaintainer(t, p, "doc_id", k=15),
             catch_up, lambda m: _rows(m.reservoir()), compacts=False),
+        "record_index": _Maintained(
+            lambda t, p: _TableIndex(t, "record_index"), lambda m, b: None,
+            _record_index_answer, compacts=True, folds=False),
+        "secondary_index": _Maintained(
+            lambda t, p: _TableIndex(t, "secondary_index"),
+            lambda m, b: None, _secondary_index_answer, compacts=True,
+            folds=False),
     }
 
 
 _CRASH_CASES = [(name, point)
                 for name, spec in _maintained().items()
                 for point in ("publish", "compact", "sweep")
-                if point != "compact" or spec.compacts]
+                if (point != "compact" or spec.compacts)
+                and (point != "publish" or spec.folds)]
 _CRASH_REFERENCE: dict[str, list] = {}
 
 
@@ -508,14 +634,16 @@ def _crash_reference(spark, spec, name, path):
 @pytest.mark.parametrize("name,point", _CRASH_CASES)
 def test_maintainer_crash_matrix(spark, tmp_table_path, request,
                                  monkeypatch, seam, name, point):
-    """Each generation-store maintainer survives a crash at each publish
-    point on every storage seam (local, mock S3, mock GCS): after a fold's appends/new generation
-    but before its publish, inside compact_state between the new
-    generation and the pointer swap, and mid-sweep. A fresh instance
-    reads the last published pointer (appends past it are visible
-    duplicates that the replay re-derives idempotently) and replaying
-    the crashed step yields exactly the crash-free state."""
-    from hoodie_spark.streaming.maintainer import GenerationStore
+    """Each generation-store maintainer, and the table's record and
+    secondary indexes, survive a crash at each publish point on every
+    storage seam (local, mock S3, mock GCS): after a fold's appends/new
+    generation but before its publish, inside compact_state (an index's
+    compaction) between the new generation and the pointer swap, and
+    mid-sweep. A fresh instance reads the last published pointer
+    (appends past it are visible duplicates that the replay re-derives
+    idempotently) and replaying the crashed step yields exactly the
+    crash-free state."""
+    from hoodie_spark.generation_store import GenerationStore
 
     spec = _maintained()[name]
     ref = _crash_reference(spark, spec, name,

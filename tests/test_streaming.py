@@ -660,3 +660,21 @@ def test_orc_dfs_source_ingest(spark, tmp_table_path):
     more.coalesce(1).write.orc(os.path.join(src_dir, "b0"), mode="append")
     assert ing.sync_once() is not None
     assert tbl.snapshot().count() == 3
+
+
+def test_debezium_tombstone_delete_dropped(spark):
+    """'d' events with before=null AND after=null (Kafka tombstone style)
+    carry no key columns — they must be dropped, not emitted as all-null
+    record keys into the downstream upsert."""
+    from hoodie_spark.streaming.transform import DebeziumTransformer
+
+    df = spark.createDataFrame(
+        [("c", None, {"id": 1, "v": "a"}, 10),
+         ("d", {"id": 1, "v": "a"}, None, 20),   # real delete: before image
+         ("d", None, None, 30)],                  # tombstone: no images
+        "op string, before struct<id:int,v:string>, "
+        "after struct<id:int,v:string>, ts_ms long")
+    out = DebeziumTransformer().apply(spark, df).collect()
+    assert len(out) == 2
+    assert all(r["id"] is not None for r in out)
+    assert {(r["id"], r["Op"]) for r in out} == {(1, "c"), (1, "d")}
