@@ -528,9 +528,14 @@ def _verify_hash_pairs(hp: DataFrame, reps: DataFrame, gate, score,
     content-hash pairs of two different texts; ``reps`` holds one
     ``(__ch, __p, __sz)`` row per distinct text (its md5, the payload the
     verifier reads and the payload's size). ``gate(sz1, sz2)`` prunes on
-    sizes alone, before any payload is joined (None: no gate);
-    ``score(p1, p2, sz1, sz2)`` returns ``(value, keep)``. Returns
-    ``(__h1, __h2, <name>)`` for the kept pairs."""
+    sizes alone, before any payload is joined (None: no gate).
+    ``score(p1, p2, sz1, sz2)`` returns ``(measure, verdict)``: the
+    expensive call, and ``verdict(m) -> (value, keep)`` over its result.
+    Returns ``(__h1, __h2, <name>)`` for the kept pairs. The measure comes
+    out of ``explode(array(measure))``: Catalyst would copy a projected
+    call into the join condition with the keep filter, but pushes no
+    filter below the generator its input comes from, so the call runs
+    once per pair."""
     def side(i, cols):
         return reps.select(F.col("__ch").alias(f"__h{i}"),
                            *[F.col(c).alias(f"{c}{i}") for c in cols])
@@ -541,9 +546,12 @@ def _verify_hash_pairs(hp: DataFrame, reps: DataFrame, gate, score,
               .join(side(2, ["__sz"]), "__h2")
               .filter(gate(F.col("__sz1"), F.col("__sz2"))))
         cols = ["__p"]
-    value, keep = score(F.col("__p1"), F.col("__p2"),
-                        F.col("__sz1"), F.col("__sz2"))
+    sz1, sz2 = F.col("__sz1"), F.col("__sz2")
+    measure, verdict = score(F.col("__p1"), F.col("__p2"), sz1, sz2)
+    value, keep = verdict(F.col("__m"))
     return (hp.join(side(1, cols), "__h1").join(side(2, cols), "__h2")
+            .select("__h1", "__h2", sz1, sz2,
+                    F.explode(F.array(measure)).alias("__m"))
             .filter(keep).select("__h1", "__h2", value.alias(name)))
 
 
@@ -648,9 +656,11 @@ def jaccard_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                 >= F.lit(float(threshold)) - F.lit(1e-9))
 
     def jaccard(sh1, sh2, n1, n2):
-        j = (F.size(F.array_intersect(sh1, sh2)).cast("double")
-             / F.size(F.array_union(sh1, sh2)).cast("double"))
-        return j, j >= threshold
+        def verdict(i):
+            # shingle arrays are distinct sets: |∪| = n1 + n2 - |∩|
+            j = i.cast("double") / (n1 + n2 - i).cast("double")
+            return j, j >= threshold
+        return F.size(F.array_intersect(sh1, sh2)), verdict
 
     sig = (minhash_sigs(df, id_col, text_col, num_hashes, ngram,
                         with_size=True).withColumnRenamed("__nsh", "__sz"))
@@ -742,9 +752,11 @@ def edit_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
         # levenshtein returns -1 past the budget
         budget = F.floor((F.lit(1.0) - F.lit(float(threshold))
                           + F.lit(1e-9)) * lmax).cast("int")
-        lev = F.call_function("levenshtein", t1, t2, budget)
-        sim = F.lit(1.0) - lev.cast("double") / lmax
-        return sim, (lev >= 0) & (sim >= threshold)
+
+        def verdict(lev):
+            sim = F.lit(1.0) - lev.cast("double") / lmax
+            return sim, (lev >= 0) & (sim >= threshold)
+        return F.call_function("levenshtein", t1, t2, budget), verdict
 
     sig = (minhash_sigs(df, id_col, text_col, num_hashes, ngram)
            .join(df.select(F.col(id_col), F.length(text_col).alias("__sz")),
@@ -1138,23 +1150,23 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     n_clusters ~ corpus/10k so clusters stay self-join-sized.
     """
     from .components import dedup_by_groups
-    from .similarity import _assign_centroids, _prep, dot
+    from .similarity import (_assign_centroids, _cos, _default_centroids,
+                             _prep)
 
-    c = _prep(df, id_col, vec_col, "c")
     if centroids is None:
-        centroids = df.orderBy(F.col(id_col)).limit(n_clusters)
-    cent = _prep(centroids, id_col, vec_col, "k")
+        centroids = _default_centroids(df, id_col, n_clusters)
     # pin: the self-join consumes the assignment twice (three times with
     # the census) — without the boundary the broadcast-centroid argmax
     # pass would re-run per branch
     cache = StageCache()
     assigned = cache.pin(
-        _assign_centroids(c, cent).withColumnRenamed("c_id", "__sid"))
+        _assign_centroids(_prep(df, id_col, vec_col, "c"),
+                          _prep(centroids, id_col, vec_col, "k"))
+        .withColumnRenamed("c_id", "__sid"))
     pairs = (
         bounded_self_pairs(assigned, ["centroid"], "__sid",
                            max_cluster_rows, carry=("c_v", "c_n"))
-        .filter((dot("c_v_a", "c_v_b")
-                 / (F.col("c_n_a") * F.col("c_n_b"))) >= threshold)
+        .filter(_cos("c_{}_a", "c_{}_b") >= threshold)
         .select(F.col("id_a"), F.col("id_b")))
     kept = dedup_by_groups(df, id_col, pairs)
     cache.release()  # duplicate_groups checkpointed the pairs
@@ -1402,10 +1414,12 @@ def containment_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
              .distinct())
 
     def containment(sh1, sh2, m1, m2):
-        i = F.size(F.array_intersect(sh1, sh2))
         mn = F.least(m1, m2)
         need = F.ceil(F.lit(threshold) * mn - F.lit(1e-9)).cast("int")
-        return F.round(i.cast("double") / mn.cast("double"), 6), i >= need
+
+        def verdict(i):
+            return F.round(i.cast("double") / mn.cast("double"), 6), i >= need
+        return F.size(F.array_intersect(sh1, sh2)), verdict
 
     verified = _verify_hash_pairs(cands, sh, None, containment, "containment")
     cross = (verified

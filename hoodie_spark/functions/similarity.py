@@ -1,22 +1,30 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Three tiers:
+Every top-k operator is one pipeline: **candidates → scorer → rank tail**.
 
-* :func:`brute_force_topk` — exact cosine top-k. The query set is
-  broadcast (it's small by definition); the corpus is scanned once,
-  map-side, and only ``(query, id, score)`` candidates reach the top-k
-  window. At 100 TB this is a single pass with no corpus shuffle — the
-  right baseline, and exact.
-* :func:`lsh_bucket_topk` — sign-LSH (random-hyperplane) bucketing: corpus
-  and queries hash to ``planes``-bit buckets; only same-bucket pairs are
-  scored. Sub-linear work per query, approximate recall.
-* :func:`ivf_topk` — IVF-style coarse quantization: a deterministic
-  centroid set (first ``n_centroids`` corpus vectors — no training step,
-  reproducible), every vector assigned to its nearest centroid (broadcast
-  join, map-side), queries probe the ``n_probe`` nearest centroid lists.
-  This is the 100 TB path: the inverted lists can be written as a
-  ``partitionBy(centroid)`` parquet layout so a probe reads only
-  ``n_probe/n_centroids`` of the data (partition pruning does the rest).
+* Candidate generation is where the operators differ:
+
+  - :func:`brute_force_topk` pairs every corpus vector with every query
+    (broadcast, map-side): exact, the recall baseline;
+  - :func:`lsh_bucket_topk` pairs only vectors that share a sign-LSH
+    (random-hyperplane) bucket;
+  - :func:`ivf_topk` and :func:`ivf_topk_from_index` pair each query with
+    the inverted lists of its ``n_probe`` nearest centroids; persisted as
+    a ``partitionBy(centroid)`` parquet layout (:func:`write_ivf_index`),
+    a probe reads only ``n_probe / n_centroids`` of the data;
+  - the PQ and int8 operators pair the queries with quantized codes.
+
+* One cosine scorer, :func:`_cos` over :func:`_prep`'s ``(id, v, n)``
+  columns, scores raw vectors; ADC (:func:`_pq_score_topk`) and the int8
+  scorer (:func:`_int8_topk`) are its quantized counterparts.
+* One rank tail, :func:`_top_k`, ranks every operator's candidates and
+  every nearest-centroid choice: score descending, then the smaller id.
+
+One probe planner (:func:`_probe_plan`) picks the lists for every IVF
+operator, and one writer (:func:`_write_lists`) writes every inverted-list
+index. Centroids default to the smallest-id corpus rows
+(:func:`_default_centroids`): no training step, reproducible by the SQL
+oracle.
 
 All math is double-precision Column expressions (``zip_with`` +
 left-to-right ``aggregate`` fold — reproducible, engine-portable).
@@ -25,9 +33,11 @@ Hyperplanes are derived from md5, so the DuckDB oracle replicates them.
 
 from __future__ import annotations
 
+import math
 import pandas as pd  # annotation resolution for the pandas UDF signature
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from ..frames import local_frame
 
@@ -110,9 +120,7 @@ def sign_lsh_key(vec, planes: int, dim: int | None = None) -> Column:
         mat = _plane_matrix(planes, dim)
         bits = []
         for p in range(planes):
-            row = F.array(*[F.lit(s) for s in mat[p]])
-            proj = F.aggregate(F.zip_with(vec, row, lambda x, s: x * s),
-                               F.lit(0.0), lambda acc, x: acc + x)
+            proj = dot(vec, F.array(*[F.lit(s) for s in mat[p]]))
             bits.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
         # zip_with null-pads on length mismatch, which would silently zero
         # every bit and collapse mismatched vectors into one bucket — fail
@@ -142,13 +150,59 @@ def sign_lsh_key(vec, planes: int, dim: int | None = None) -> Column:
     return F.concat_ws("", F.transform(F.sequence(F.lit(0), F.lit(planes - 1)), bit))
 
 
-def _prep(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
+def _prep(df: DataFrame, id_col: str, vec_col: str, prefix: str,
+          label_col: str | None = None) -> DataFrame:
+    """One side of a pipeline: ``(<p>_id, <p>_v, <p>_n[, <p>_lab])``, the
+    vector cast to doubles and its L2 norm computed once per row."""
     v = F.col(vec_col).cast("array<double>")
-    return df.select(
-        F.col(id_col).alias(f"{prefix}_id"),
-        v.alias(f"{prefix}_v"),
-        l2_norm(v).alias(f"{prefix}_n"),
-    )
+    cols = [F.col(id_col).alias(f"{prefix}_id"), v.alias(f"{prefix}_v"),
+            l2_norm(v).alias(f"{prefix}_n")]
+    if label_col is not None:
+        cols.append(F.col(label_col).alias(f"{prefix}_lab"))
+    return df.select(*cols)
+
+
+def _cos(a: str, b: str) -> Column:
+    """The family's one cosine: ``dot(v_a, v_b) / (n_a * n_b)`` over two
+    sides' :func:`_prep` columns. ``a`` and ``b`` name a side's columns
+    with ``{}`` standing for ``v`` and ``n``: ``"c_{}"`` reads ``c_v`` and
+    ``c_n``."""
+    return dot(a.format("v"), b.format("v")) / (
+        F.col(a.format("n")) * F.col(b.format("n")))
+
+
+def _scored(pairs: DataFrame, *carry) -> DataFrame:
+    """The scorer: corpus-side ``c_*`` x query-side ``q_*`` candidate pairs
+    become ``(query_id, neighbor_id, *carry, cos)``."""
+    return pairs.select(F.col("q_id").alias("query_id"),
+                        F.col("c_id").alias("neighbor_id"), *carry,
+                        _cos("c_{}", "q_{}").alias("cos"))
+
+
+def _check(name: str, value: int, least: int = 1) -> None:
+    """Counts are checked at entry: below ``least`` an operator would
+    silently return no rows, or fewer than ``k`` per query."""
+    if value < least:
+        raise ValueError(f"{name} must be at least {least}, got {value}")
+
+
+def _top_k(df: DataFrame, k: int, part: str = "query_id",
+           score: str = "cos", tie: str = "neighbor_id",
+           rank: str = "rank") -> DataFrame:
+    """The family's one rank tail: within each ``part``, number the rows
+    by ``score`` descending, then the smaller ``tie``, into ``rank`` and
+    keep ranks 1..``k``. Spark plans it as a WindowGroupLimit, so each
+    partition forwards at most ``k`` rows per key before the exchange."""
+    _check("k", k)
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(rank, F.row_number().over(w)) \
+        .filter(F.col(rank) <= k)
+
+
+def _default_centroids(corpus: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The ``n`` corpus rows with the smallest ids: the family's
+    no-training centroid set, exactly reproducible by the SQL oracle."""
+    return corpus.orderBy(F.col(id_col)).limit(n)
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -160,23 +214,22 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     |corpus|·|queries| rows of ~24 bytes. Exact — use as recall baseline;
     for large corpora prefer :func:`ivf_topk`.
     """
-    c = _prep(corpus, id_col, vec_col, "c")
-    q = _prep(queries, id_col, vec_col, "q")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            (dot("c_v", "q_v") / (F.col("c_n") * F.col("q_n"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    pairs = (_prep(corpus, id_col, vec_col, "c")
+             .crossJoin(F.broadcast(_prep(queries, id_col, vec_col, "q")))
+             .filter(F.col("c_id") != F.col("q_id")))
+    return _top_k(_scored(pairs), k).select("query_id", "neighbor_id",
+                                            "rank", "cos")
+
+
+def _mined(scored: DataFrame, k: int, min_cos: float | None,
+           max_cos: float | None) -> DataFrame:
+    """The hard-negative miners' tail: the cosine band, then the rank."""
+    if min_cos is not None:
+        scored = scored.filter(F.col("cos") >= min_cos)
+    if max_cos is not None:
+        scored = scored.filter(F.col("cos") <= max_cos)
+    return _top_k(scored, k).select("query_id", "neighbor_id",
+                                    "neighbor_label", "rank", "cos")
 
 
 def hard_negative_mine(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -202,32 +255,14 @@ def hard_negative_mine(corpus: DataFrame, queries: DataFrame, id_col: str,
     full-corpus mining at 100 TB, run per query-shard or use
     :func:`hard_negative_mine_ivf`, which probes inverted lists instead
     of scanning the corpus per query."""
-    def prep(df, p):
-        v = F.col(vec_col).cast("array<double>")
-        return (df.filter(F.col(label_col).isNotNull())
-                .select(F.col(id_col).alias(f"{p}_id"),
-                        v.alias(f"{p}_v"), l2_norm(v).alias(f"{p}_n"),
-                        F.col(label_col).alias(f"{p}_lab")))
+    def side(df, p):
+        return _prep(df.filter(F.col(label_col).isNotNull()), id_col,
+                     vec_col, p, label_col)
 
-    c, q = prep(corpus, "c"), prep(queries, "q")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("c_lab") != F.col("q_lab"))
-        .select(F.col("q_id").alias("query_id"),
-                F.col("c_id").alias("neighbor_id"),
-                F.col("c_lab").alias("neighbor_label"),
-                (dot("c_v", "q_v")
-                 / (F.col("c_n") * F.col("q_n"))).alias("cos")))
-    if min_cos is not None:
-        scored = scored.filter(F.col("cos") >= min_cos)
-    if max_cos is not None:
-        scored = scored.filter(F.col("cos") <= max_cos)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "neighbor_label",
-                    "rank", "cos"))
+    pairs = (side(corpus, "c").crossJoin(F.broadcast(side(queries, "q")))
+             .filter(F.col("c_lab") != F.col("q_lab")))
+    return _mined(_scored(pairs, F.col("c_lab").alias("neighbor_label")),
+                  k, min_cos, max_cos)
 
 
 def hard_negative_mine_ivf(corpus: DataFrame, queries: DataFrame,
@@ -244,6 +279,7 @@ def hard_negative_mine_ivf(corpus: DataFrame, queries: DataFrame,
     same-label candidates the filter removes; raise it if queries sit in
     single-label-dominated clusters. Same output schema and tie-break as
     :func:`hard_negative_mine` (the exact baseline for recall checks)."""
+    _check("oversample", oversample)
     lab = lambda df, name, out: df.select(  # noqa: E731
         F.col(id_col).alias(name), F.col(label_col).alias(out))
     cand = ivf_topk(corpus, queries, id_col, vec_col, k=k * oversample,
@@ -256,53 +292,31 @@ def hard_negative_mine_ivf(corpus: DataFrame, queries: DataFrame,
         .filter(F.col("neighbor_label").isNotNull()
                 & F.col("__qlab").isNotNull()
                 & (F.col("neighbor_label") != F.col("__qlab"))))
-    if min_cos is not None:
-        scored = scored.filter(F.col("cos") >= min_cos)
-    if max_cos is not None:
-        scored = scored.filter(F.col("cos") <= max_cos)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "neighbor_label",
-                    "rank", "cos"))
+    return _mined(scored, k, min_cos, max_cos)
 
 
 def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                     vec_col: str, k: int = 10, planes: int = 6,
                     dim: int | None = None) -> DataFrame:
     """Approximate top-k scoring only same-sign-LSH-bucket pairs."""
-    c = _prep(corpus, id_col, vec_col, "c").withColumn("bucket", sign_lsh_key("c_v", planes, dim))
-    q = _prep(queries, id_col, vec_col, "q").withColumn("bucket", sign_lsh_key("q_v", planes, dim))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            (dot("c_v", "q_v") / (F.col("c_n") * F.col("q_n"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    def side(df, p):
+        return _prep(df, id_col, vec_col, p).withColumn(
+            "bucket", sign_lsh_key(f"{p}_v", planes, dim))
+
+    pairs = (side(corpus, "c").join(F.broadcast(side(queries, "q")), "bucket")
+             .filter(F.col("c_id") != F.col("q_id")))
+    return _top_k(_scored(pairs), k).select("query_id", "neighbor_id",
+                                            "rank", "cos")
 
 
 def _assign_centroids(c: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest centroid per corpus vector (cosine argmax, ties → smaller
     centroid id): map-side broadcast loop, one pass over the corpus."""
-    assign_w = Window.partitionBy("c_id").orderBy(F.desc("aff"), F.asc("k_id"))
-    return (
-        c.crossJoin(F.broadcast(cent))
-        .select("c_id", "c_v", "c_n", F.col("k_id"),
-                (dot("c_v", "k_v") / (F.col("c_n") * F.col("k_n"))).alias("aff"))
-        .withColumn("rnk", F.row_number().over(assign_w))
-        .filter(F.col("rnk") == 1)
-        .select("c_id", "c_v", "c_n", F.col("k_id").alias("centroid"))
-    )
+    aff = (c.crossJoin(F.broadcast(cent))
+           .select("c_id", "c_v", "c_n", "k_id",
+                   _cos("c_{}", "k_{}").alias("aff")))
+    return (_top_k(aff, 1, part="c_id", score="aff", tie="k_id")
+            .select("c_id", "c_v", "c_n", F.col("k_id").alias("centroid")))
 
 
 def kmeans_centroids(corpus: DataFrame, id_col: str, vec_col: str,
@@ -328,8 +342,8 @@ def kmeans_centroids(corpus: DataFrame, id_col: str, vec_col: str,
         c = c.sample(False, sample_fraction, seed=seed)
     c = c.persist()
     try:
-        init = [r[0] for r in
-                c.orderBy("c_id").limit(n_centroids).select("c_v").collect()]
+        init = [r[0] for r in _default_centroids(c, "c_id", n_centroids)
+                .select("c_v").collect()]
         cents: list[list[float]] = [list(v) for v in init]
         for _ in range(max(0, iters)):
             cent_df = local_frame(
@@ -378,7 +392,7 @@ def cluster_balanced_sample(df: DataFrame, id_col: str, vec_col: str,
     """
     c = _prep(df, id_col, vec_col, "c")
     if centroids is None:
-        centroids = df.orderBy(F.col(id_col)).limit(n_clusters)
+        centroids = _default_centroids(df, id_col, n_clusters)
     cent = _prep(centroids, id_col, vec_col, "k")
     assigned = _assign_centroids(c, cent).select(
         F.col("c_id").alias(id_col), "centroid")
@@ -389,17 +403,98 @@ def cluster_balanced_sample(df: DataFrame, id_col: str, vec_col: str,
             .select(id_col, "centroid"))
 
 
+def _write_lists(corpus: DataFrame, centroids: DataFrame, id_col: str,
+                vec_col: str, path: str, mode: str, books=None) -> None:
+    """The one inverted-list writer: assign each vector to its nearest
+    centroid and write the lists as a ``partitionBy(centroid)`` parquet
+    layout in save ``mode``. Rows hold the raw vector and its norm
+    (``__norm``), or with ``books`` the PQ codes and the reconstruction
+    norm (``__rnorm``)."""
+    a = _assign_centroids(_prep(corpus, id_col, vec_col, "c"),
+                          _prep(centroids, id_col, vec_col, "k"))
+    if books is None:
+        rows = a.select(F.col("c_id").alias(id_col),
+                        F.col("c_v").alias(vec_col),
+                        F.col("c_n").alias("__norm"), "centroid")
+    else:
+        rows = _pq_encoded(a, F.col("c_id").alias(id_col), F.col("c_v"),
+                           books, "centroid")
+    rows.write.partitionBy("centroid").mode(mode).parquet(path)
+
+
 def write_ivf_index(corpus: DataFrame, centroids: DataFrame, id_col: str,
                     vec_col: str, path: str) -> None:
     """Persist the inverted lists as a ``partitionBy(centroid)`` parquet
     layout — the 100 TB serving shape: a probe then reads only
     ``n_probe / n_centroids`` of the data via partition pruning."""
-    c = _prep(corpus, id_col, vec_col, "c")
-    cent = _prep(centroids, id_col, vec_col, "k")
-    (_assign_centroids(c, cent)
-     .select(F.col("c_id").alias(id_col), F.col("c_v").alias(vec_col),
-             F.col("c_n").alias("__norm"), "centroid")
-     .write.partitionBy("centroid").mode("overwrite").parquet(path))
+    _write_lists(corpus, centroids, id_col, vec_col, path, "overwrite")
+
+
+def _dot(a, b) -> float:
+    """:func:`dot` on the driver: the same left-to-right fold."""
+    d = 0.0
+    for x, y in zip(a, b):
+        d = d + x * y
+    return d
+
+
+def _vec_rows(df: DataFrame, id_col: str, vec_col: str) -> list[tuple]:
+    """ONE collect of a broadcast-small vector set (queries, centroids):
+    ``[(id, vec, norm)]``, the norm equal to :func:`_prep`'s bit for bit:
+    the same fold, then ``math.sqrt``, correctly rounded like Spark's
+    ``sqrt`` (``** 0.5`` is not, and was 1 ULP off on ~0.1% of vectors).
+    A null vector, or one with a null element, has a null norm."""
+    return [(i, v, None if v is None or None in v else math.sqrt(_dot(v, v)))
+            for i, v in df.select(F.col(id_col), F.col(vec_col).cast(
+                "array<double>")).collect()]
+
+
+def _probe_key(q, c) -> tuple:
+    """Sort key of Spark's ``desc(cos), asc(centroid id)`` for a query and
+    a centroid row: NaN first, nulls last (a null side, or lengths that
+    ``zip_with`` pads with nulls). A zero norm raises, as Spark's ANSI
+    division does."""
+    (_, qv, qn), (kid, kv, kn) = q, c
+    if qn is None or kn is None or len(qv) != len(kv):
+        return (2, 0.0, kid)
+    cos = _dot(qv, kv) / (qn * kn)
+    return (0, 0.0, kid) if cos != cos else (1, -cos, kid)
+
+
+def _probe_plan(queries: DataFrame, centroids: DataFrame, id_col: str,
+                vec_col: str, n_probe: int) -> tuple:
+    """The family's one probe planner: each query probes the lists of its
+    ``n_probe`` nearest centroids, cosine descending, then the smaller
+    centroid id. Returns ``(query rows, centroids, probes, lists)``: the
+    :func:`_vec_rows` of the queries, every centroid row as ``(k_id, k_v,
+    k_n)``, one ``(q_id, q_v, q_n, centroid)`` row per probe, and the
+    sorted probed centroid ids.
+
+    The plan is DRIVER-side Python: the centroid table is bounded (it was
+    collected to train or pick it in the first place) and the query set is
+    broadcast-small, so nearest-centroid choice is a k×Q loop over one
+    collect of each. A Spark crossJoin+window costs jobs of its own to
+    plan a scan that then reads ``n_probe / n_centroids`` of the data. The
+    first row of a duplicated centroid id wins: a duplicate would probe
+    (and score) its list twice."""
+    _check("n_probe", n_probe)
+    crows = _vec_rows(centroids, id_col, vec_col)
+    seen: set = set()
+    first = [r for r in crows if r[0] not in seen and not seen.add(r[0])]
+    qrows = _vec_rows(queries, id_col, vec_col)
+    probes = [q + (c[0],) for q in qrows for c in sorted(
+        first, key=lambda c: _probe_key(q, c))[:n_probe]]
+    kt = centroids.schema[id_col].dataType
+    vec = lambda p: [StructField(f"{p}_v", ArrayType(DoubleType())),  # noqa: E731
+                     StructField(f"{p}_n", DoubleType())]
+    spark = queries.sparkSession
+    return (qrows,
+            local_frame(spark, crows,
+                        StructType([StructField("k_id", kt)] + vec("k"))),
+            local_frame(spark, probes, StructType(
+                [StructField("q_id", queries.schema[id_col].dataType)]
+                + vec("q") + [StructField("centroid", kt)])),
+            sorted({p[3] for p in probes}))
 
 
 def ivf_topk_from_index(spark, index_path: str, centroids: DataFrame,
@@ -408,34 +503,23 @@ def ivf_topk_from_index(spark, index_path: str, centroids: DataFrame,
     """Probe a persisted :func:`write_ivf_index` layout. The
     ``centroid IN (...)`` filter prunes at the partition-directory level,
     so only the probed inverted lists are scanned."""
-    cent = _prep(centroids, id_col, vec_col, "k")
-    q = _prep(queries, id_col, vec_col, "q")
-    probe_w = Window.partitionBy("q_id").orderBy(F.desc("aff"), F.asc("k_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("q_id", "q_v", "q_n", F.col("k_id"),
-                (dot("q_v", "k_v") / (F.col("q_n") * F.col("k_n"))).alias("aff"))
-        .withColumn("rnk", F.row_number().over(probe_w))
-        .filter(F.col("rnk") <= n_probe)
-        .select("q_id", "q_v", "q_n", F.col("k_id").alias("centroid")))
-    wanted = [r[0] for r in probes.select("centroid").distinct().collect()]
+    _, _, probes, lists = _probe_plan(queries, centroids, id_col, vec_col,
+                                      n_probe)
     index = (spark.read.parquet(index_path)
-             .filter(F.col("centroid").isin(wanted))
+             .filter(F.col("centroid").isin(lists))
              .select(F.col(id_col).alias("c_id"),
                      F.col(vec_col).alias("c_v"),
                      F.col("__norm").alias("c_n"), "centroid"))
-    scored = (
-        index.join(F.broadcast(probes), "centroid")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            (dot("c_v", "q_v") / (F.col("c_n") * F.col("q_n"))).alias("cos"))
-        .distinct())
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos"))
+    return _ivf_scored(index, probes, k)
+
+
+def _ivf_scored(lists: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Score the probed lists: a pair reached through two lists counts
+    once."""
+    pairs = (lists.join(F.broadcast(probes), "centroid")
+             .filter(F.col("c_id") != F.col("q_id")))
+    return _top_k(_scored(pairs).distinct(), k).select(
+        "query_id", "neighbor_id", "rank", "cos")
 
 
 def append_ivf_index(corpus_delta: DataFrame, centroids: DataFrame,
@@ -452,12 +536,7 @@ def append_ivf_index(corpus_delta: DataFrame, centroids: DataFrame,
     tests pin. Small files accumulate per list; fold them periodically
     with :func:`compact_ivf_index`.
     """
-    c = _prep(corpus_delta, id_col, vec_col, "c")
-    cent = _prep(centroids, id_col, vec_col, "k")
-    (_assign_centroids(c, cent)
-     .select(F.col("c_id").alias(id_col), F.col("c_v").alias(vec_col),
-             F.col("c_n").alias("__norm"), "centroid")
-     .write.partitionBy("centroid").mode("append").parquet(path))
+    _write_lists(corpus_delta, centroids, id_col, vec_col, path, "append")
 
 
 def delete_from_ivf_index(spark, index_path: str, ids: DataFrame,
@@ -527,45 +606,17 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
 
     Centroids default to the ``n_centroids`` corpus vectors with the
     smallest ids (deterministic; callers with a trained codebook pass
-    ``centroids``). Assignment and probing both broadcast the centroid set,
-    so corpus-side work is one map pass; the probe join hits only
-    ``n_probe`` of ``n_centroids`` inverted lists.
+    ``centroids``). Assignment broadcasts the centroid set, so corpus-side
+    work is one map pass; :func:`_probe_plan` picks each query's lists on
+    the driver, and the probe join hits only ``n_probe`` of
+    ``n_centroids`` inverted lists.
     """
-    c = _prep(corpus, id_col, vec_col, "c")
     if centroids is None:
-        centroids = corpus.orderBy(F.col(id_col)).limit(n_centroids)
-    cent = _prep(centroids, id_col, vec_col, "k")
-
-    assigned = _assign_centroids(c, cent)
-
-    # each query probes its n_probe nearest centroids
-    q = _prep(queries, id_col, vec_col, "q")
-    probe_w = Window.partitionBy("q_id").orderBy(F.desc("aff"), F.asc("k_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("q_id", "q_v", "q_n", F.col("k_id"),
-                (dot("q_v", "k_v") / (F.col("q_n") * F.col("k_n"))).alias("aff"))
-        .withColumn("rnk", F.row_number().over(probe_w))
-        .filter(F.col("rnk") <= n_probe)
-        .select("q_id", "q_v", "q_n", F.col("k_id").alias("centroid"))
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), "centroid")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            (dot("c_v", "q_v") / (F.col("c_n") * F.col("q_n"))).alias("cos"),
-        )
-        .distinct()  # a pair can surface via multiple probed lists
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+        centroids = _default_centroids(corpus, id_col, n_centroids)
+    _, cent, probes, _ = _probe_plan(queries, centroids, id_col, vec_col,
+                                     n_probe)
+    return _ivf_scored(_assign_centroids(_prep(corpus, id_col, vec_col, "c"),
+                                         cent), probes, k)
 
 
 def knn_classify(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -585,11 +636,8 @@ def knn_classify(corpus: DataFrame, queries: DataFrame, id_col: str,
     votes = (lab.join(F.broadcast(nb), "neighbor_id")
              .groupBy("query_id", "label")
              .agg(F.count(F.lit(1)).alias("votes")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("votes"),
-                                               F.asc("label"))
-    return (votes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("query_id", "label", "votes"))
+    return _top_k(votes, 1, score="votes", tie="label").select(
+        "query_id", "label", "votes")
 
 
 # --------------------------------------------------------------------- PQ
@@ -601,9 +649,9 @@ def pq_codebooks(corpus: DataFrame, id_col: str, vec_col: str,
     swap in per-subspace kmeans_centroids sub-vectors for trained books).
     Returns ``books[j][c] = list[ds floats]`` with ``ds = dim // m``.
     Driver data is k rows — bounded."""
-    rows = (corpus.select(F.col(id_col).alias("i"),
-                          F.col(vec_col).cast("array<double>").alias("v"))
-            .orderBy("i").limit(k).collect())
+    rows = (_default_centroids(corpus, id_col, k)
+            .select(F.col(vec_col).cast("array<double>").alias("v"))
+            .collect())
     if len(rows) < k:
         # pq_codebooks_trained indexes books[j][c] for c in range(k) — a
         # short book would IndexError later with no hint of the cause
@@ -697,11 +745,16 @@ def write_pq_index(corpus: DataFrame, books, id_col: str, vec_col: str,
     the corpus footprint and scoring scans never touch the raw embedding
     column. The reconstruction norm is query-independent, so it is paid
     ONCE here at encode time and read back by the ADC scorer."""
-    (corpus.select(F.col(id_col),
-                   pq_encode(F.col(vec_col).cast("array<double>"), books)
-                   .alias("codes"))
-     .withColumn("__rnorm", _pq_code_norm(books))
-     .write.mode("overwrite").parquet(path))
+    _pq_encoded(corpus, F.col(id_col), F.col(vec_col), books) \
+        .write.mode("overwrite").parquet(path)
+
+
+def _pq_encoded(df: DataFrame, id_col: Column, vec: Column, books,
+                *keep) -> DataFrame:
+    """A PQ index row, ``(id, codes, *keep, __rnorm)``: the codes and the
+    reconstruction norm, both paid once at encode time."""
+    return (df.select(id_col, pq_encode(vec, books).alias("codes"), *keep)
+            .withColumn("__rnorm", _pq_code_norm(books)))
 
 
 def _pq_code_norm(books) -> Column:
@@ -711,32 +764,18 @@ def _pq_code_norm(books) -> Column:
     ``m`` element_at lookups + adds: query-independent, evaluated ONCE per
     corpus row (never per pair), and baked into the persisted index by
     :func:`write_pq_index` / :func:`write_ivfpq_index` at encode time."""
-    k = len(books[0])
-    flat = [sum(x * x for x in code) for book in books for code in book]
-    lit = F.array(*[F.lit(v) for v in flat])
-    return F.sqrt(F.aggregate(
+    sq = [F.lit(_dot(code, code)) for book in books for code in book]
+    return F.sqrt(_lut_sum(F.array(*sq), len(books[0])))
+
+
+def _lut_sum(lut: Column, k: int) -> Column:
+    """``Σ_j lut[j·k + code_j]`` over the row's ``codes``: ``m``
+    element_at adds into a flat j-major table of ``k`` entries per
+    subspace."""
+    return F.aggregate(
         F.transform(F.col("codes"),
-                    lambda cd, j: F.element_at(lit, j * k + cd + 1)),
-        F.lit(0.0), lambda acc, x: acc + x))
-
-
-def _pq_query_rows(queries: DataFrame, id_col: str, vec_col: str):
-    """ONE collect of the query set (broadcast-small by definition):
-    ``[(id, vec, norm)]`` with the norm computed as a left-to-right fold —
-    identical IEEE-double op order to Spark's F.aggregate, so it matches
-    _prep's l2_norm bit-for-bit. Shared by the LUT build and the IVF
-    probe loop so the serving path pays a single driver job."""
-    rows = (queries.select(F.col(id_col).alias("i"),
-                           F.col(vec_col).cast("array<double>").alias("v"))
-            .collect())
-    out = []
-    for r in rows:
-        v = [float(x) for x in r["v"]]
-        n2 = 0.0
-        for x in v:
-            n2 = n2 + x * x
-        out.append((r["i"], v, n2 ** 0.5))
-    return out
+                    lambda cd, j: F.element_at(lut, j * k + cd + 1)),
+        F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _pq_luts(queries: DataFrame, id_col: str, vec_col: str, books,
@@ -749,20 +788,10 @@ def _pq_luts(queries: DataFrame, id_col: str, vec_col: str, books,
     (query, corpus) pair in interpreted HOFs."""
     m, k, ds = len(books), len(books[0]), len(books[0][0])
     if qrows is None:
-        qrows = _pq_query_rows(queries, id_col, vec_col)
-    out = []
-    for i, v, n in qrows:
-        lut = []
-        for j in range(m):
-            sub = v[j * ds:(j + 1) * ds]
-            for c in range(k):
-                d = 0.0
-                for a, b in zip(sub, books[j][c]):
-                    d = d + a * b
-                lut.append(d)
-        out.append((i, n, lut))
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
+        qrows = _vec_rows(queries, id_col, vec_col)
+    out = [(i, n, [_dot(v[j * ds:(j + 1) * ds], books[j][c])
+                   for j in range(m) for c in range(k)])
+           for i, v, n in qrows]
     id_type = queries.schema[id_col].dataType  # keep the caller's id dtype
     return local_frame(queries.sparkSession, out, StructType([
         StructField("q_id", id_type), StructField("q_n", DoubleType()),
@@ -771,27 +800,30 @@ def _pq_luts(queries: DataFrame, id_col: str, vec_col: str, books,
 
 def _pq_score_topk(codes_df: DataFrame, lut_df: DataFrame, books, k: int,
                    extra_join=None) -> DataFrame:
-    """Shared ADC scoring tail: broadcast the per-query LUTs against the
+    """The ADC scorer: broadcast the per-query LUTs against the
     (code, corpus-norm) rows; cos = Σ_j lut[j][code_j] / (q_n · c_rn) —
     ``m`` element_at adds per pair, every per-row quantity precomputed."""
-    kk = len(books[0])
-    dotp = F.aggregate(
-        F.transform(F.col("codes"),
-                    lambda cd, j: F.element_at(F.col("lut"), j * kk + cd + 1)),
-        F.lit(0.0), lambda acc, x: acc + x)
+    dotp = _lut_sum(F.col("lut"), len(books[0]))
     join_cond = F.col("c_id") != F.col("q_id")
     if extra_join is not None:
         join_cond = extra_join & join_cond
     scored = (codes_df.join(F.broadcast(lut_df), join_cond)
-              .select("q_id", "c_id",
+              .select(F.col("q_id").alias("query_id"),
+                      F.col("c_id").alias("neighbor_id"),
                       (dotp / (F.col("q_n") * F.col("c_rn"))).alias("cos")))
     if extra_join is not None:
         scored = scored.distinct()  # pair may surface via multiple lists
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("q_id").alias("query_id"),
-                    F.col("c_id").alias("neighbor_id"), "rank"))
+    return _top_k(scored, k).select("query_id", "neighbor_id", "rank")
+
+
+def _pq_rows(codes_df: DataFrame, id_col: str, books, *keep) -> DataFrame:
+    """``(c_id, codes, *keep, c_rn)`` of a PQ index. An index written
+    without the encode-time ``__rnorm`` column gets the norm computed from
+    its codes."""
+    cols = [F.col(id_col).alias("c_id"), "codes", *keep]
+    if "__rnorm" in codes_df.columns:
+        return codes_df.select(*cols, F.col("__rnorm").alias("c_rn"))
+    return codes_df.select(*cols).withColumn("c_rn", _pq_code_norm(books))
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -818,18 +850,10 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     if books is None:
         books = pq_codebooks(corpus, id_col, vec_col, m=m, k=n_codes)
     if codes_df is None:
-        codes_df = corpus.select(
-            F.col(id_col).alias("c_id"),
-            pq_encode(F.col(vec_col).cast("array<double>"), books)
-            .alias("codes")).withColumn("c_rn", _pq_code_norm(books))
-    elif "__rnorm" in codes_df.columns:
-        codes_df = codes_df.select(F.col(id_col).alias("c_id"), "codes",
-                                   F.col("__rnorm").alias("c_rn"))
-    else:  # legacy index without the encode-time norm column
-        codes_df = (codes_df.select(F.col(id_col).alias("c_id"), "codes")
-                    .withColumn("c_rn", _pq_code_norm(books)))
-    lut_df = _pq_luts(queries, id_col, vec_col, books)
-    return _pq_score_topk(codes_df, lut_df, books, k)
+        codes_df = _pq_encoded(corpus, F.col(id_col), F.col(vec_col), books)
+    return _pq_score_topk(_pq_rows(codes_df, id_col, books),
+                          _pq_luts(queries, id_col, vec_col, books),
+                          books, k)
 
 
 def pq_topk_rerank(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -854,6 +878,7 @@ def pq_topk_rerank(corpus: DataFrame, queries: DataFrame, id_col: str,
     Returns (query_id, neighbor_id, rank, cos) — rank 1..k per query by
     exact cosine, ties toward the smaller neighbor id.
     """
+    _check("shortlist", shortlist, k)
     short = pq_topk(corpus, queries, id_col, vec_col, k=shortlist, m=m,
                     n_codes=n_codes, books=books, codes_df=codes_df)
     return _exact_rerank(short, corpus, queries, id_col, vec_col, k)
@@ -869,19 +894,11 @@ def _exact_rerank(short: DataFrame, corpus: DataFrame, queries: DataFrame,
     regardless of corpus size."""
     cand = short.select(F.col("query_id").alias("q_id"),
                         F.col("neighbor_id").alias("c_id"))
-    c = _prep(corpus, id_col, vec_col, "c")
-    q = _prep(queries, id_col, vec_col, "q")
-    scored = (c.join(F.broadcast(cand), "c_id")
-              .join(F.broadcast(q), "q_id")
-              .select(F.col("q_id").alias("query_id"),
-                      F.col("c_id").alias("neighbor_id"),
-                      (dot("c_v", "q_v")
-                       / (F.col("c_n") * F.col("q_n"))).alias("cos")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos"))
+    pairs = (_prep(corpus, id_col, vec_col, "c")
+             .join(F.broadcast(cand), "c_id")
+             .join(F.broadcast(_prep(queries, id_col, vec_col, "q")), "q_id"))
+    return _top_k(_scored(pairs), k).select("query_id", "neighbor_id",
+                                            "rank", "cos")
 
 
 def pq_codebooks_trained(corpus: DataFrame, id_col: str, vec_col: str,
@@ -938,13 +955,8 @@ def write_ivfpq_index(corpus: DataFrame, centroids: DataFrame, books,
     inverted lists, and each list is ~8 small ints per vector (32-64x
     smaller scan than raw float64x64), so a probe's IO is
     (n_probe/n_centroids) x (1/32) of the corpus."""
-    c = _prep(corpus, id_col, vec_col, "c")
-    cent = _prep(centroids, id_col, vec_col, "k")
-    (_assign_centroids(c, cent)
-     .select(F.col("c_id").alias(id_col),
-             pq_encode(F.col("c_v"), books).alias("codes"), "centroid")
-     .withColumn("__rnorm", _pq_code_norm(books))
-     .write.partitionBy("centroid").mode("overwrite").parquet(path))
+    _write_lists(corpus, centroids, id_col, vec_col, path, "overwrite",
+                 books)
 
 
 def append_ivfpq_index(corpus_delta: DataFrame, centroids: DataFrame,
@@ -963,13 +975,8 @@ def append_ivfpq_index(corpus_delta: DataFrame, centroids: DataFrame,
     operate on the shared (id, centroid) layout and carry the code
     columns through untouched.
     """
-    c = _prep(corpus_delta, id_col, vec_col, "c")
-    cent = _prep(centroids, id_col, vec_col, "k")
-    (_assign_centroids(c, cent)
-     .select(F.col("c_id").alias(id_col),
-             pq_encode(F.col("c_v"), books).alias("codes"), "centroid")
-     .withColumn("__rnorm", _pq_code_norm(books))
-     .write.partitionBy("centroid").mode("append").parquet(path))
+    _write_lists(corpus_delta, centroids, id_col, vec_col, path, "append",
+                 books)
 
 
 def ivfpq_topk_from_index(spark, index_path: str, centroids: DataFrame,
@@ -988,45 +995,19 @@ def ivfpq_topk_from_index(spark, index_path: str, centroids: DataFrame,
     the index scan stays codes-only, the raw table is touched only at
     |queries| x shortlist point lookups.
 
-    The probe plan itself is DRIVER-side Python: the centroid table is
-    bounded (it was collected to train the codebook in the first place)
-    and the query set is broadcast-small, so nearest-centroid assignment
-    is a k×Q loop — doing it as a Spark crossJoin+window would cost two
-    jobs to plan a scan that then reads n_probe/n_centroids of the data.
-    The only cluster work is the pruned index scan + ADC scoring.
+    The probe plan is :func:`_probe_plan`'s, driver-side; the only
+    cluster work is the pruned index scan + ADC scoring.
     Returns (query_id, neighbor_id, rank)."""
-    crows = _pq_query_rows(centroids, id_col, vec_col)
-    seen_c = set()  # first entry wins a duplicated centroid id — a dup
-    crows = [r for r in crows  # would double-probe (and double-score) it
-             if r[0] not in seen_c and not seen_c.add(r[0])]
-    qrows = _pq_query_rows(queries, id_col, vec_col)  # the ONE query job
-    lut_df = _pq_luts(queries, id_col, vec_col, books, qrows=qrows)
-    probe_rows, wanted = [], set()
-    for qi, qv, qn in qrows:
-        affs = []
-        for ki, kv, kn in crows:
-            d = 0.0
-            for a, b in zip(qv, kv):
-                d = d + a * b
-            affs.append((-(d / (qn * kn)), ki))
-        for _, ki in sorted(affs)[:n_probe]:  # aff desc, centroid id asc
-            probe_rows.append((qi, ki))
-            wanted.add(ki)
-    from pyspark.sql.types import StructField, StructType
-    probes = local_frame(spark, probe_rows, StructType([
-        StructField("q_id", queries.schema[id_col].dataType),
-        StructField("p_centroid", centroids.schema[id_col].dataType)]))
-    index = spark.read.parquet(index_path) \
-        .filter(F.col("centroid").isin(sorted(wanted)))
-    if "__rnorm" in index.columns:
-        index = index.select(F.col(id_col).alias("c_id"), "codes",
-                             "centroid", F.col("__rnorm").alias("c_rn"))
-    else:  # legacy index without the encode-time norm column
-        index = (index.select(F.col(id_col).alias("c_id"), "codes",
-                              "centroid")
-                 .withColumn("c_rn", _pq_code_norm(books)))
-    lut_df = (lut_df.join(probes, "q_id")
-              .select("q_id", "q_n", "lut", "p_centroid"))
+    if rerank_corpus is not None:
+        _check("shortlist", shortlist, k)
+    qrows, _, probes, lists = _probe_plan(queries, centroids, id_col,
+                                          vec_col, n_probe)
+    lut_df = (_pq_luts(queries, id_col, vec_col, books, qrows=qrows)
+              .join(probes.select("q_id", F.col("centroid")
+                                  .alias("p_centroid")), "q_id"))
+    index = _pq_rows(spark.read.parquet(index_path)
+                     .filter(F.col("centroid").isin(lists)),
+                     id_col, books, "centroid")
     adc = _pq_score_topk(
         index, lut_df, books,
         shortlist if rerank_corpus is not None else k,
@@ -1074,6 +1055,28 @@ def quantize_embeddings(df: DataFrame, id_col: str,
                               + F.lit(0.5)).cast("int")).alias("codes"))
 
 
+def _int8_topk(cq: DataFrame, queries: DataFrame, id_col: str,
+               vec_col: str, k: int) -> DataFrame:
+    """The one int8 scorer: ``cq`` is a quantized corpus ``(id, scale,
+    codes)``; the queries quantize here and broadcast. The integer dot is
+    exact, and the two scale multiplies run in a fixed order."""
+    cq = cq.withColumnsRenamed(
+        {id_col: "c_id", "scale": "c_s", "codes": "c_c"})
+    qq = quantize_embeddings(queries, id_col, vec_col).withColumnsRenamed(
+        {id_col: "q_id", "scale": "q_s", "codes": "q_c"})
+    idot = F.aggregate(
+        F.zip_with("c_c", "q_c", lambda a, b: (a * b).cast("long")),
+        F.lit(0).cast("long"), lambda acc, x: acc + x)
+    scored = (cq.crossJoin(F.broadcast(qq))
+              .filter(F.col("c_id") != F.col("q_id"))
+              .select(F.col("q_id").alias("query_id"),
+                      F.col("c_id").alias("neighbor_id"),
+                      (idot.cast("double") * F.col("c_s") * F.col("q_s"))
+                      .alias("score")))
+    return _top_k(scored, k, score="score").select(
+        "query_id", "neighbor_id", "rank")
+
+
 def int8_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
               vec_col: str, k: int = 10) -> DataFrame:
     """Inner-product top-k over int8-quantized vectors (MIPS serving):
@@ -1087,24 +1090,8 @@ def int8_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     Same plan as :func:`brute_force_topk` (broadcast queries, per-query
     top-k window); compose with :func:`quantize_embeddings` persisted as
     the serving index for the 4× bandwidth win at scale."""
-    cq = quantize_embeddings(corpus, id_col, vec_col).withColumnsRenamed(
-        {id_col: "c_id", "scale": "c_s", "codes": "c_c"})
-    qq = quantize_embeddings(queries, id_col, vec_col).withColumnsRenamed(
-        {id_col: "q_id", "scale": "q_s", "codes": "q_c"})
-    idot = F.aggregate(
-        F.zip_with("c_c", "q_c", lambda a, b: (a * b).cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = (cq.crossJoin(F.broadcast(qq))
-              .filter(F.col("c_id") != F.col("q_id"))
-              .select(F.col("q_id").alias("query_id"),
-                      F.col("c_id").alias("neighbor_id"),
-                      (idot.cast("double") * F.col("c_s") * F.col("q_s"))
-                      .alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _int8_topk(quantize_embeddings(corpus, id_col, vec_col),
+                      queries, id_col, vec_col, k)
 
 
 def write_int8_index(corpus: DataFrame, id_col: str, vec_col: str,
@@ -1125,21 +1112,5 @@ def int8_topk_from_index(spark, index_path: str, queries: DataFrame,
     the query side quantizes at probe time (tiny by definition) and
     broadcasts; the index side is a pure parquet scan of codes. Identical
     results to :func:`int8_topk` over the same corpus (test-pinned)."""
-    cq = spark.read.parquet(index_path).withColumnsRenamed(
-        {id_col: "c_id", "scale": "c_s", "codes": "c_c"})
-    qq = quantize_embeddings(queries, id_col, vec_col).withColumnsRenamed(
-        {id_col: "q_id", "scale": "q_s", "codes": "q_c"})
-    idot = F.aggregate(
-        F.zip_with("c_c", "q_c", lambda a, b: (a * b).cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = (cq.crossJoin(F.broadcast(qq))
-              .filter(F.col("c_id") != F.col("q_id"))
-              .select(F.col("q_id").alias("query_id"),
-                      F.col("c_id").alias("neighbor_id"),
-                      (idot.cast("double") * F.col("c_s") * F.col("q_s"))
-                      .alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _int8_topk(spark.read.parquet(index_path), queries, id_col,
+                      vec_col, k)

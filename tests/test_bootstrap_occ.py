@@ -325,3 +325,189 @@ def test_occ_two_process_stress(spark, tmp_table_path):
                        (F.col("o_orderstatus") == f"B{rounds-1}")).count() > 0
     assert tbl.timeline.pending() == []
     snap.unpersist()
+
+
+def test_compaction_conflicts_with_commit_during_planning(
+        spark, orders, tmp_table_path, monkeypatch):
+    """A delta commit landing DURING compaction planning must abort the
+    compaction (WriteConflictError), not be silently shadowed by the new
+    base: the compacted base's instant sorts above the delta's
+    base_instant, so committing anyway would drop the delta's rows.
+    Before the round-11 fix, compact() planned BEFORE writer._begin, so
+    such a commit sorted at-or-below the conflict baseline and escaped
+    the check — this test pins plan-after-begin."""
+    from hoodie_spark import (HoodieTable, TableType, WriteConfig,
+                              WriteConflictError)
+    from hoodie_spark.config import WriteConcurrencyMode
+    import importlib
+    compact_mod = importlib.import_module(
+        'hoodie_spark.services.compact')
+
+    cfg = WriteConfig(concurrency_mode=WriteConcurrencyMode.OPTIMISTIC)
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "svc_race", ["o_orderkey"], "o_orderdate",
+        table_type=TableType.MERGE_ON_READ, write_config=cfg)
+    tbl.bulk_insert(orders.limit(300))
+    tbl.upsert(orders.limit(20).withColumn("o_orderstatus", F.lit("A")))
+
+    other = HoodieTable.load(spark, tmp_table_path, write_config=cfg)
+    real_plan = compact_mod.schedule_compaction
+
+    def plan_with_concurrent_commit(table, strategy=None, **kw):
+        plan = real_plan(table, strategy, **kw)
+        # a second writer commits a delta to the same file groups while
+        # this compaction is planning (i.e. after its _begin)
+        other.upsert(orders.limit(5).withColumn("o_orderstatus",
+                                                F.lit("B")))
+        return plan
+
+    monkeypatch.setattr(compact_mod, "schedule_compaction",
+                        plan_with_concurrent_commit)
+    with pytest.raises(WriteConflictError):
+        tbl.compact()
+    monkeypatch.setattr(compact_mod, "schedule_compaction", real_plan)
+    # the concurrent writer's rows are intact; no dangling instants
+    tbl2 = HoodieTable.load(spark, tmp_table_path)
+    assert tbl2.snapshot().filter("o_orderstatus = 'B'").count() == 5
+    assert tbl2.timeline.pending() == []
+    # and a retry (now planning over the new delta) succeeds and keeps it
+    assert tbl2.compact() is not None
+    assert tbl2.snapshot().filter("o_orderstatus = 'B'").count() == 5
+
+
+def test_clustering_conflicts_with_commit_during_planning(
+        spark, orders, tmp_table_path, monkeypatch):
+    """Same plan-after-begin rule for clustering: a commit landing during
+    the plan must conflict, or its file group would be marked replaced
+    with its rows absent from the rewrite."""
+    from hoodie_spark import (HoodieTable, WriteConfig, WriteConflictError)
+    from hoodie_spark.config import WriteConcurrencyMode
+    import importlib
+    cluster_mod = importlib.import_module(
+        'hoodie_spark.services.cluster')
+
+    cfg = WriteConfig(concurrency_mode=WriteConcurrencyMode.OPTIMISTIC)
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "cl_race", ["o_orderkey"], "o_orderdate",
+        partition_expr="cast(year(o_orderdate) as string)",
+        write_config=cfg)  # one small file group per year partition
+    tbl.bulk_insert(orders.limit(300))
+
+    other = HoodieTable.load(spark, tmp_table_path, write_config=cfg)
+    real_plan = cluster_mod.plan_clustering
+
+    def plan_with_concurrent_commit(table, *a, **kw):
+        plan = real_plan(table, *a, **kw)
+        other.upsert(orders.limit(5).withColumn("o_orderstatus",
+                                                F.lit("B")))
+        return plan
+
+    monkeypatch.setattr(cluster_mod, "plan_clustering",
+                        plan_with_concurrent_commit)
+    with pytest.raises(WriteConflictError):
+        tbl.cluster(sort_cols=["o_orderkey"])
+    monkeypatch.setattr(cluster_mod, "plan_clustering", real_plan)
+    tbl2 = HoodieTable.load(spark, tmp_table_path)
+    assert tbl2.snapshot().filter("o_orderstatus = 'B'").count() == 5
+    assert tbl2.timeline.pending() == []
+    assert tbl2.cluster(sort_cols=["o_orderkey"]) is not None
+    assert tbl2.snapshot().filter("o_orderstatus = 'B'").count() == 5
+
+
+_SVC_RACER = f"""
+import os, sys, time
+from pyspark.sql import SparkSession, functions as F
+from hoodie_spark import HoodieTable, WriteConfig, WriteConflictError
+from hoodie_spark.config import WriteConcurrencyMode
+
+path, sync_dir, me, other, role = sys.argv[1:6]
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+cfg = WriteConfig(concurrency_mode=WriteConcurrencyMode.OPTIMISTIC,
+                  lock_timeout_s=120.0)
+tbl = HoodieTable.load(spark, path, write_config=cfg)
+writer = tbl._writer
+orig_begin = writer._begin
+
+def begin_with_barrier(action):
+    inst = orig_begin(action)
+    open(os.path.join(sync_dir, "ready_" + me), "w").close()
+    deadline = time.time() + 120
+    while not os.path.exists(os.path.join(sync_dir, "ready_" + other)):
+        if time.time() > deadline:
+            print("BARRIER_TIMEOUT"); sys.exit(3)
+        time.sleep(0.05)
+    return inst
+
+writer._begin = begin_with_barrier
+try:
+    if role == "writer":
+        orders = spark.read.parquet("{SF_DIR}/orders.parquet")
+        tbl.upsert(orders.filter(F.col("o_orderkey") % 10 == 0)
+                   .withColumn("o_orderstatus", F.lit("W")))
+    else:
+        assert tbl.compact() is not None
+    print("COMMITTED")
+except WriteConflictError:
+    print("CONFLICT")
+"""
+
+
+def test_two_process_writer_vs_compaction_race(spark, orders,
+                                               tmp_table_path):
+    """REAL two-driver race between an upsert and a compaction on the
+    same file groups (both transactions provably begun before either
+    commits): exactly one wins, the loser aborts with WriteConflictError,
+    and the table stays consistent either way — the cross-process e2e
+    proof of the plan-after-begin fix."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from hoodie_spark import TableType, WriteConfig
+    from hoodie_spark.config import WriteConcurrencyMode
+
+    cfg = WriteConfig(concurrency_mode=WriteConcurrencyMode.OPTIMISTIC)
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "svc2p", ["o_orderkey"], "o_orderdate",
+        table_type=TableType.MERGE_ON_READ, write_config=cfg)
+    tbl.bulk_insert(orders)
+    n = orders.count()
+    # a delta so the compactor has a plan
+    tbl.upsert(orders.limit(20).withColumn("o_orderstatus", F.lit("A")))
+
+    sync_dir = tempfile.mkdtemp(prefix="svc_sync_")
+    script = tempfile.NamedTemporaryFile("w", suffix=".py", delete=False)
+    script.write(_SVC_RACER)
+    script.close()
+    env = dict(os.environ,
+               PYTHONPATH=os.path.dirname(os.path.dirname(
+                   os.path.abspath(__file__))))
+    procs = [subprocess.Popen(
+        [sys.executable, script.name, tmp_table_path, sync_dir, m, o, role],
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+        env=env)
+        for m, o, role in (("A", "B", "writer"), ("B", "A", "service"))]
+    outs = [p.communicate(timeout=600)[0] for p in procs]
+    assert all(p.returncode == 0 for p in procs), outs
+    results = sorted(o.strip().splitlines()[-1] for o in outs)
+    assert results == ["COMMITTED", "CONFLICT"], outs
+
+    tbl2 = HoodieTable.load(spark, tmp_table_path)
+    snap = tbl2.snapshot().cache()
+    assert snap.count() == n  # neither outcome changes the key set
+    assert snap.groupBy("o_orderkey").count() \
+        .filter("count > 1").count() == 0
+    writer_out = outs[0].strip().splitlines()[-1]
+    if writer_out == "COMMITTED":
+        # the writer won: its rows must be durable (not shadowed)
+        assert snap.filter("o_orderstatus = 'W'").count() > 0
+    else:
+        # the compaction won: the setup delta must still be readable
+        assert snap.filter("o_orderstatus = 'A'").count() == 20
+    assert tbl2.timeline.pending() == []
+    snap.unpersist()

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from hoodie_spark import functions as HF
 from hoodie_spark.functions.components import (_is_star_forest,
                                                duplicate_groups)
-from hoodie_spark.functions.dedup import exact_text_pairs
+from hoodie_spark.functions.dedup import exact_text_pairs, lsh_plan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -939,6 +939,25 @@ def test_pair_operators_reject_out_of_range_threshold(spark, op, threshold):
         getattr(HF, op)(df, "doc_id", "text", threshold=threshold)
 
 
+@pytest.mark.parametrize("op,call", [
+    ("edit_dedup_pairs", "levenshtein("),
+    ("jaccard_dedup_pairs", "array_intersect("),
+    ("containment_dedup_pairs", "array_intersect(")])
+def test_verifier_runs_its_expensive_call_once(spark, op, call):
+    """Each verified pair pays the verifier's expensive call once: the
+    keep filter must not be copied into the join condition next to the
+    projected score."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy cat"),
+         (3, "a different sentence entirely about spark plans")],
+        "doc_id long, text string")
+    out = getattr(HF, op)(df, "doc_id", "text", threshold=0.5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(call) == 1
+    assert {(r[0], r[1]) for r in out.collect()} == {(1, 2)}
+
+
 # ------------------------------------- LSH pair operators vs brute force
 # A pure-Python model of the whole LSH pipeline (the same md5 minhash,
 # band hashes, size gates and verifiers), so the expected pair set is
@@ -1275,3 +1294,217 @@ def test_containment_df_guard_unchanged_on_dup_heavy(spark):
     assert all(99 not in p for p in tight)
     assert {(a, b) for (a, b) in tight} == \
         {(a, b) for (a, b) in loose if 99 not in (a, b)}
+
+
+def test_lsh_plan_low_threshold_falls_back_to_flattest():
+    assert lsh_plan(0.03, 16) == (16, 1)  # below every curve's waterline
+    assert lsh_plan(0.8, 16) == (4, 4)  # the documented default unchanged
+    b, r = lsh_plan(0.5, 16)
+    assert b * r == 16
+    assert 1.0 - (1.0 - 0.5 ** r) ** b >= 0.5  # floor holds when satisfiable
+
+
+def _docs(spark, n=200):
+    return (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+            .select("doc_id", "text").filter(F.col("doc_id") < n))
+
+
+def test_keep_best_exact_cluster_keeps_highest_score(spark):
+    rows = [(1, "identical content here", 10.0),
+            (2, "identical content here", 30.0),
+            (3, "identical content here", 30.0),   # score tie → min id
+            (4, "a different document entirely", 5.0)]
+    out = HF.dedup_keep_best(
+        spark.createDataFrame(rows, "id long, text string, score double"),
+        "id", "text", "score")
+    got = {r["id"]: r["n_dups"] for r in out.collect()}
+    assert got == {2: 3, 4: 1}
+
+
+def test_keep_best_near_cluster_and_null_scores(spark):
+    base = "the quick brown fox jumps over the lazy dog again and again "
+    rows = [(1, base * 4, None),          # NULL score sorts below all
+            (2, base * 4 + "tail", 1.0),  # near-dup of 1, wins
+            (3, "completely unrelated text about other things", None)]
+    out = HF.dedup_keep_best(
+        spark.createDataFrame(rows, "id long, text string, score double"),
+        "id", "text", "score", threshold=0.5)
+    got = {r["id"]: r["n_dups"] for r in out.collect()}
+    assert got == {2: 2, 3: 1}
+    # all-NULL cluster: min id wins, cluster never vanishes
+    rows2 = [(7, "identical text body", None),
+             (8, "identical text body", None)]
+    out2 = HF.dedup_keep_best(
+        spark.createDataFrame(rows2, "id long, text string, score double"),
+        "id", "text", "score")
+    assert {r["id"]: r["n_dups"] for r in out2.collect()} == {7: 2}
+
+
+def test_keep_best_vs_seen_dedup_same_clusters(spark):
+    """With score = -id the best member IS the smallest id, so the
+    winner set must equal arrival-order dedup over the same relation
+    (exact edges; sub-shingle docs have no near edges)."""
+    # texts under 5 chars carry no shingle signature → exact edges only
+    rows = [(i, f"d{i % 7}") for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, text string") \
+        .withColumn("score", -F.col("id").cast("double"))
+    out = HF.dedup_keep_best(df, "id", "text", "score")
+    assert sorted(r["id"] for r in out.collect()) == list(range(7))
+    assert {r["n_dups"] for r in out.collect()} == {6, 5}  # 40 = 7*5+5
+
+
+def test_keep_best_no_window_in_plan(spark):
+    docs = _docs(spark).withColumn("score",
+                                   F.length("text").cast("double"))
+    out = HF.dedup_keep_best(docs, "doc_id", "text", "score")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    # winners ⊆ input, n_dups ≥ 1, total cluster mass = corpus size
+    agg = out.agg(F.sum("n_dups").alias("m"),
+                  F.min("n_dups").alias("lo")).collect()[0]
+    assert agg["m"] == docs.count() and agg["lo"] >= 1
+
+
+def test_keep_best_partitioning_invariant(spark):
+    docs = _docs(spark).withColumn("score",
+                                   F.length("text").cast("double"))
+    a = HF.dedup_keep_best(docs.repartition(1), "doc_id", "text", "score")
+    b = HF.dedup_keep_best(docs.repartition(13, "doc_id"),
+                           "doc_id", "text", "score")
+    assert sorted(map(tuple, a.select("doc_id", "n_dups").collect())) == \
+        sorted(map(tuple, b.select("doc_id", "n_dups").collect()))
+
+
+def test_token_budget_prefix_semantics(spark):
+    rows = [(1, 10, 100), (2, 20, 200), (3, 30, 300), (4, 40, 400)]
+    df = spark.createDataFrame(rows, "id long, rank int, w long")
+    out = HF.token_budget_select(df, "w", 650, ["rank", "id"])
+    got = {r["id"]: r["cum_tokens"] for r in out.collect()}
+    # 100, 300, 600 fit; 1000 > 650 cut
+    assert got == {1: 100, 2: 300, 3: 600}
+    # exact-budget boundary row is KEPT (≤, not <)
+    out2 = HF.token_budget_select(df, "w", 600, ["rank", "id"])
+    assert {r["id"] for r in out2.collect()} == {1, 2, 3}
+
+
+def test_token_budget_null_and_zero_weights(spark):
+    rows = [(1, 1, None), (2, 2, 0), (3, 3, 5), (4, 4, 10)]
+    df = spark.createDataFrame(rows, "id long, rank int, w int")
+    out = HF.token_budget_select(df, "w", 5, ["rank", "id"])
+    # NULL/zero-weight rows cost nothing and are kept inside the prefix
+    assert {r["id"]: r["cum_tokens"] for r in out.collect()} == \
+        {1: 0, 2: 0, 3: 5}
+
+
+def test_token_budget_empty_and_overbudget(spark):
+    df = spark.createDataFrame([], "id long, rank int, w int")
+    assert HF.token_budget_select(df, "w", 10, ["rank", "id"]).count() == 0
+    one = spark.createDataFrame([(1, 1, 99)], "id long, rank int, w int")
+    assert HF.token_budget_select(one, "w", 10,
+                                  ["rank", "id"]).count() == 0
+
+
+def test_token_budget_matches_single_bucket_and_repartition(spark):
+    docs = (_docs(spark, n=500)
+            .withColumn("n_tokens", HF.token_count(F.col("text"))
+                        .cast("long"))
+            .withColumn("n_chars", F.length("text")))
+    kw = dict(weight_col="n_tokens", budget=8000,
+              order_cols=["n_chars", "doc_id"])
+    a = sorted(map(tuple, HF.token_budget_select(docs, **kw)
+                   .select("doc_id", "cum_tokens").collect()))
+    b = sorted(map(tuple, HF.token_budget_select(
+        docs.repartition(17), num_buckets=1, **kw)
+        .select("doc_id", "cum_tokens").collect()))
+    assert a == b and len(a) > 0
+    # no single-task global sort: every Exchange is keyed, the prefix
+    # sum runs per order-contiguous bucket
+    plan = HF.token_budget_select(docs, **kw) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition" not in plan
+
+
+def test_excess_ppl_select_zero_when_ref_is_corpus(spark):
+    docs = _docs(spark, n=80)
+    out = HF.excess_perplexity_select(docs, "doc_id", "text", docs, k=80)
+    rows = out.collect()
+    assert len(rows) == 80
+    for r in rows:
+        assert r["excess"] == 0.0 and r["nll_self"] == r["nll_ref"]
+
+
+def test_excess_ppl_select_prefers_reference_style(spark):
+    """Docs written in the reference's style but rare in the corpus are
+    exactly what excess loss surfaces: hard under the corpus self-LM,
+    easy under the reference LM."""
+    a = [(i, "the common corpus style sentence repeats the same words "
+             "over and over in the corpus")
+         for i in range(50)]
+    b = [(100, "zephyr quills jolt vexed gnome wizards bright"),
+         (101, "zephyr quills jolt vexed gnome wizards bright")]
+    corpus = spark.createDataFrame(a + b, "doc_id long, text string")
+    ref = spark.createDataFrame(
+        [(0, "zephyr quills jolt vexed gnome wizards bright")] * 3,
+        "doc_id long, text string")
+    top = HF.excess_perplexity_select(corpus, "doc_id", "text", ref, k=2)
+    assert sorted(r["doc_id"] for r in top.collect()) == [100, 101]
+
+
+def test_excess_ppl_select_deterministic_and_layout_invariant(spark):
+    docs = _docs(spark, n=200)
+    ref = docs.filter(F.col("doc_id") % 10 == 0)
+    a = [(r["doc_id"], r["excess"]) for r in
+         HF.excess_perplexity_select(docs, "doc_id", "text", ref, k=30)
+         .collect()]
+    b = [(r["doc_id"], r["excess"]) for r in
+         HF.excess_perplexity_select(docs.repartition(13), "doc_id",
+                                     "text", ref.repartition(3), k=30)
+         .collect()]
+    assert a == b and len(a) == 30
+    # excess is exactly the round-6 difference of the returned NLLs
+    full = HF.excess_perplexity_select(docs, "doc_id", "text", ref, k=30)
+    for r in full.collect():
+        assert r["excess"] == round(r["nll_self"] - r["nll_ref"], 6)
+
+
+def test_exact_dedup_no_window_and_min_id_kept(spark):
+    df = spark.createDataFrame(
+        [(5, "same"), (2, "same"), (9, "same"), (7, "other")],
+        "id long, text string")
+    out = HF.exact_dedup(df, ["text"], "id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert sorted(r["id"] for r in out.collect()) == [2, 7]
+
+
+def test_seen_dedup_exact_pass_no_window(spark):
+    docs = _docs(spark, n=200)
+    out = HF.seen_dedup(docs.unionByName(
+        docs.withColumn("doc_id", F.col("doc_id") + 10_000)),
+        "doc_id", "text")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    # every +10k copy has an exact duplicate earlier (its original) —
+    # all drop; the originals' keep-set is the single-corpus one (the sf
+    # docs carry duplicates among THEMSELVES, so compare, don't count)
+    assert out.filter(F.col("doc_id") >= 10_000).count() == 0
+    want = {r["doc_id"] for r in
+            HF.seen_dedup(docs, "doc_id", "text").select("doc_id").collect()}
+    got = {r["doc_id"] for r in out.select("doc_id").collect()}
+    assert got == want
+
+
+def test_bigram_lm_unpersist_releases_distributed_model(spark):
+    docs = _docs(spark, n=60)
+    lm = HF.train_bigram_lm(docs, "text", vocab_size=32,
+                            broadcast_model_rows=0)  # force distributed
+    assert not lm.broadcast
+    # r16: the persisted frame is the shared (w1, w2, cb, cw) census both
+    # model tables project from — that is what holds executor storage
+    assert lm._census is not None and lm._census.is_cached
+    lm.unpersist()
+    assert not lm._census.is_cached
+    # broadcast model: no-op, nothing persisted
+    small = HF.train_bigram_lm(docs, "text", vocab_size=32)
+    assert small.broadcast
+    small.unpersist()

@@ -719,3 +719,37 @@ def test_restore_past_eviction_horizon_rebuilds_to_table(
     # and the rebuilt snapshot really is b0-only
     assert {r.doc_id for r in tbl.snapshot().select("doc_id").collect()} \
         == {i for i in range(len(_BODIES))}
+
+
+def test_retention_window_counts_data_instants_only(
+        spark, tmp_table_path, monkeypatch):
+    """A savepoint between batches must NOT consume a slot of the
+    'N completed data instants' retention window: retain_after is the
+    N-th-newest DATA instant, not the N-th-newest instant of any kind."""
+    tbl = HoodieTable.create(spark, tmp_table_path, "ret12", ["doc_id"], None)
+    dd = IncrementalDeduper(tbl, "doc_id", "text", threshold=0.8)
+    captured = []
+    real = dd.compact_state
+    monkeypatch.setattr(
+        dd, "compact_state",
+        lambda retain_after=None: (captured.append(retain_after),
+                                   real(retain_after=retain_after))[1])
+    batches = [_bodies(spark, _BODIES, 0), _bodies(spark, _BODIES2, 100),
+               _bodies(spark, [b + " tail variant" for b in _BODIES], 200)]
+    ing = Ingestor(tbl, _ListSource(batches), operation="insert",
+                   deduper=dd, compact_state_every=1,
+                   state_retention_instants=2)
+    ing.sync_once()
+    ing.sync_once()
+    assert captured[-1] is None  # only 2 data instants: window not exceeded
+    tbl.savepoint()  # non-data instant lands between i2 and i3
+    ing.sync_once()
+    from hoodie_spark import timeline as tl
+    data = tbl.timeline.completed(tl.DATA_ACTIONS)
+    every = tbl.timeline.completed()
+    assert len(data) == 3 and len(every) == 4
+    # window of 2 over DATA instants -> retain from the 2nd-newest data
+    # instant; the buggy all-actions version would return the savepoint's
+    # timestamp here (one instant too new -> window silently shrinks)
+    assert captured[-1] == data[-2].timestamp
+    assert captured[-1] != every[-2].timestamp

@@ -847,3 +847,52 @@ def test_leakage_safe_split_validates_fractions(spark):
     with _pt.raises(ValueError):
         HF.leakage_safe_split(docs, "doc_id", "text",
                               {"train": 0.7, "val": 0.1})
+
+
+_BODIES = [
+    "the quick brown fox jumps over the lazy dog near the riverbank",
+    "pack my box with five dozen liquor jugs before the long journey",
+    "sphinx of black quartz judge my vow under the desert moonlight",
+    "how vexingly quick daft zebras jump across the frozen meadow",
+    "crazy fredrick bought many very exquisite opal jewels yesterday",
+    "we promptly judged antique ivory buckles for the next big prize",
+]
+
+
+_BODIES2 = [
+    "distributed query engines shuffle partitioned data between stages",
+    "columnar storage formats prune row groups with min max statistics",
+    "broadcast joins ship the small dimension to every executor core",
+    "watermarks bound state retention for late arriving event streams",
+    "vectorized readers decode parquet pages straight into arrow arrays",
+    "adaptive execution replans skewed joins at shuffle boundaries",
+]
+
+
+def _docs(spark, bodies, start=0):
+    rows = [(start + i, b) for i, b in enumerate(bodies)]
+    return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def test_dsir_tokenizes_corpus_exactly_once(spark):
+    """The exploded corpus grams are persisted across the census and
+    scoring passes: each corpus row's text is read exactly once."""
+    from hoodie_spark import functions as HF
+
+    taps = spark.sparkContext.accumulator(0)
+
+    def tap(s):
+        taps.add(1)
+        return s
+
+    tap_udf = F.udf(tap, "string")
+    base = _docs(spark, _BODIES + _BODIES2)
+    corpus = base.withColumn("text", tap_udf("text"))
+    target = base.filter(F.col("doc_id") % 3 == 0)  # untapped side
+    out = HF.dsir_select(corpus, target, "doc_id", "text", k=5)
+    rows = out.collect()
+    assert len(rows) == 5
+    n = base.count()
+    assert taps.value == n, (
+        f"corpus text evaluated {taps.value} times for {n} rows — the "
+        "census and scoring passes are not sharing the grams frame")

@@ -710,3 +710,134 @@ def test_ivfpq_probe_string_ids(spark, tmp_table_path):
     assert len(out) == 15
     assert all(isinstance(r["query_id"], str) and
                isinstance(r["neighbor_id"], str) for r in out)
+
+
+def test_driver_norm_equals_spark_norm(spark):
+    """The driver-side query norm (PQ lookup tables, IVF probe plan) must
+    equal _prep's l2_norm bit for bit. ``n2 ** 0.5`` is not correctly
+    rounded and was 1 ULP off on a few of these vectors (Spark's sqrt
+    is, like math.sqrt)."""
+    import random
+
+    from hoodie_spark.functions import similarity as S
+
+    random.seed(1)
+    rows = [(i, [random.uniform(-1, 1) for _ in range(8)])
+            for i in range(2000)]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    spark_n = {r[0]: r[2] for r in
+               S._prep(df, "vec_id", "embedding", "q").collect()}
+    books = [[[0.0] * 8]]  # m=1, one code: the LUTs carry the query norm
+    driver_n = {r["q_id"]: r["q_n"] for r in
+                S._pq_luts(df, "vec_id", "embedding", books).collect()}
+    off = [i for i in spark_n if spark_n[i] != driver_n[i]]
+    assert not off, f"{len(off)} norms differ, e.g. vec_id {off[0]}"
+
+
+def _ties(spark):
+    """Query 0 has cosine 1.0 to the five copies of its vector (ids 12, 3,
+    7, 5, 9, inserted in that order) and a lower one to everything else;
+    labels make every copy a negative of the query."""
+    q = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
+    others = [[8.0, 1.0, 0.5, 0.0, 0.0, 0.5, 1.0, 0.0],
+              [0.0, 0.0, 1.0, -2.0, 0.5, 0.0, 0.0, 1.0],
+              [2.0, -1.0, 0.0, 0.0, 3.0, -1.0, 0.0, 0.0],
+              [-1.0, 0.5, 0.0, 1.0, 0.0, 0.0, -2.0, 0.5]]
+    rows = ([(0, q, "a")] + [(i, q, "b") for i in (12, 3, 7, 5, 9)]
+            + [(20 + j, v, "b") for j, v in enumerate(others)])
+    return spark.createDataFrame(
+        rows, "vec_id int, embedding array<double>, label string")
+
+
+def test_every_topk_operator_breaks_ties_toward_the_smaller_id(
+        spark, tmp_table_path):
+    from hoodie_spark.functions import similarity as S
+
+    corpus = _ties(spark)
+    qs = corpus.filter("vec_id = 0")
+    args = ("vec_id", "embedding")
+    books = S.pq_codebooks(corpus, *args, m=2, k=4)
+    cents = corpus.orderBy("vec_id").limit(2)
+    S.write_ivf_index(corpus, cents, *args, tmp_table_path + "/ivf")
+    S.write_ivfpq_index(corpus, cents, books, *args,
+                        tmp_table_path + "/ivfpq")
+    S.write_int8_index(corpus, *args, tmp_table_path + "/i8")
+    ops = {
+        "brute_force": lambda: S.brute_force_topk(corpus, qs, *args, k=3),
+        "lsh": lambda: S.lsh_bucket_topk(corpus, qs, *args, k=3, dim=8),
+        "ivf": lambda: S.ivf_topk(corpus, qs, *args, k=3, n_centroids=2,
+                                  n_probe=1),
+        "ivf_from_index": lambda: S.ivf_topk_from_index(
+            spark, tmp_table_path + "/ivf", cents, qs, *args, k=3,
+            n_probe=1),
+        "pq": lambda: S.pq_topk(corpus, qs, *args, k=3, books=books),
+        "pq_rerank": lambda: S.pq_topk_rerank(corpus, qs, *args, k=3,
+                                              shortlist=6, books=books),
+        "int8": lambda: S.int8_topk(corpus, qs, *args, k=3),
+        "int8_from_index": lambda: S.int8_topk_from_index(
+            spark, tmp_table_path + "/i8", qs, *args, k=3),
+        "ivfpq_from_index": lambda: S.ivfpq_topk_from_index(
+            spark, tmp_table_path + "/ivfpq", cents, books, qs, *args,
+            k=3, n_probe=1),
+        "hard_negatives": lambda: S.hard_negative_mine(
+            corpus, qs, *args, "label", k=3),
+        "hard_negatives_ivf": lambda: S.hard_negative_mine_ivf(
+            corpus, qs, *args, "label", k=3, oversample=2, n_centroids=2,
+            n_probe=1),
+    }
+    for name, op in ops.items():
+        got = sorted((r["rank"], r["neighbor_id"]) for r in op().collect())
+        assert got == [(1, 3), (2, 5), (3, 7)], name
+
+
+@pytest.mark.parametrize("case", [
+    "brute_force_k", "lsh_k", "int8_k", "hard_negatives_k",
+    "knn_classify_k", "ivf_n_probe", "ivf_from_index_n_probe",
+    "ivfpq_n_probe", "pq_rerank_shortlist", "ivfpq_rerank_shortlist",
+    "hard_negatives_ivf_oversample"])
+def test_ann_operators_reject_bad_counts(spark, emb, case):
+    """k, n_probe, oversample below 1 and a shortlist shorter than k used
+    to return no rows, or fewer than k per query, without a word."""
+    from hoodie_spark.functions import similarity as S
+
+    args = ("vec_id", "embedding")
+    qs = emb.filter("vec_id < 3")
+    missing = "/nonexistent/index"  # the check runs before any read
+    calls = {
+        "brute_force_k": lambda: S.brute_force_topk(emb, qs, *args, k=0),
+        "lsh_k": lambda: S.lsh_bucket_topk(emb, qs, *args, k=0),
+        "int8_k": lambda: S.int8_topk(emb, qs, *args, k=0),
+        "hard_negatives_k": lambda: S.hard_negative_mine(
+            emb, qs, *args, "label", k=0),
+        "knn_classify_k": lambda: S.knn_classify(emb, qs, *args, "label",
+                                                 k=0),
+        "ivf_n_probe": lambda: S.ivf_topk(emb, qs, *args, n_probe=0),
+        "ivf_from_index_n_probe": lambda: S.ivf_topk_from_index(
+            spark, missing, emb, qs, *args, n_probe=0),
+        "ivfpq_n_probe": lambda: S.ivfpq_topk_from_index(
+            spark, missing, emb, None, qs, *args, n_probe=0),
+        "pq_rerank_shortlist": lambda: S.pq_topk_rerank(
+            emb, qs, *args, k=10, shortlist=5),
+        "ivfpq_rerank_shortlist": lambda: S.ivfpq_topk_from_index(
+            spark, missing, emb, None, qs, *args, k=10,
+            rerank_corpus=emb, shortlist=5),
+        "hard_negatives_ivf_oversample": lambda: S.hard_negative_mine_ivf(
+            emb, qs, *args, "label", oversample=0),
+    }
+    with pytest.raises(ValueError, match="must be at least"):
+        calls[case]()
+
+
+def test_ann_ranks_and_centroid_choices_share_one_tail():
+    """Every top-k tail and nearest-centroid window goes through _top_k;
+    the only other row_number is cluster_balanced_sample's md5-order
+    quota."""
+    import inspect
+
+    from hoodie_spark.functions import similarity as S
+
+    src = inspect.getsource(S)
+    assert src.count("row_number().over") == 2
+    assert "row_number().over" in inspect.getsource(S._top_k)
+    assert "row_number().over" in inspect.getsource(
+        S.cluster_balanced_sample)

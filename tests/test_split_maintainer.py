@@ -347,3 +347,30 @@ def test_assign_and_register_returns_pinned_frame(spark, tmp_table_path):
     assert not pin2.is_cached
     assert out2 is not None
     sm.release()
+
+
+def test_leakage_split_hot_exact_dup_no_window(spark):
+    """≥100k byte-identical docs — the exact population the split's
+    exact-text edges exist for (boilerplate clusters). The docs are too
+    short to carry a shingle signature, so the ONLY duplicate relation
+    is the exact-edge path: it must be a groupBy(hash) min + join back,
+    never a window that sorts the whole cluster in one task."""
+    n = 100_000
+    # 3 chars < the 5-char shingle width → no MinHash signature, no LSH
+    # bands: the exact-edge path is isolated (and the probe doesn't pay
+    # the separately-guarded hot-band self-join on 100k identical sigs)
+    dup = spark.range(0, n).select(
+        F.col("id").alias("doc_id"), F.lit("abc").alias("text"))
+    clean = spark.range(n, n + 50).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("unique "), F.col("id").cast("string")).alias("text"))
+    out = HF.leakage_safe_split(dup.unionByName(clean), "doc_id", "text",
+                                SPLITS)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, \
+        "exact-duplicate edges regressed to a window over the text hash"
+    agg = (out.filter(F.col("doc_id") < n)
+           .agg(F.count_distinct("split").alias("k"),
+                F.count(F.lit(1)).alias("n")).collect()[0])
+    assert agg["n"] == n
+    assert agg["k"] == 1, "byte-identical cluster split across splits"

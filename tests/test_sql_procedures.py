@@ -281,3 +281,20 @@ def test_show_table_properties(spark, tmp_table_path):
     assert out["precombine_field"] == "o_orderdate"
     assert "year" in out["partition_expr"]
     assert out["base_path"] == tmp_table_path
+
+
+def test_filesizes_percentile_nearest_rank(spark, orders, tmp_table_path):
+    tbl = HoodieTable.create(
+        spark, tmp_table_path, "orders_fs12", ["o_orderkey"], None,
+        partition_expr="cast(pmod(o_orderkey, 10) as string)")
+    tbl.bulk_insert(orders)
+    sizes = sorted(sl.base_file.size for sl in tbl.view().latest_slices()
+                   if sl.base_file is not None)
+    assert len(sizes) == 10  # one base file per pmod partition
+    row = run_sql(spark, "CALL show_stats_filesizes(table => 'orders_fs12')",
+                  {"orders_fs12": tbl}).first()
+    # nearest-rank: ceil(p*n)-th smallest -> p50 = 5th value, p90 = 9th
+    assert row.p50 == sizes[4]
+    assert row.p90 == sizes[8]
+    assert (row.num_files, row.min, row.max, row.total) == \
+        (10, sizes[0], sizes[-1], sum(sizes))

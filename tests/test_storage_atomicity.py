@@ -313,3 +313,54 @@ def test_lock_release_failure_does_not_mask_body_exception(tmp_table_path):
     finally:
         storage.ATOMIC.delete_if_exists = orig
     os.remove(os.path.join(tmp_table_path, ".hoodie", ".lock"))
+
+
+def test_put_atomic_fsyncs_before_rename(tmp_table_path, monkeypatch):
+    calls = []
+    real_fsync = os.fsync
+    real_replace = os.replace
+    monkeypatch.setattr(os, "fsync",
+                        lambda fd: (calls.append("fsync"), real_fsync(fd)))
+    monkeypatch.setattr(
+        os, "replace",
+        lambda a, b: (calls.append("rename"), real_replace(a, b)))
+    os.makedirs(tmp_table_path)
+    p = os.path.join(tmp_table_path, "x.json")
+    st.LocalAtomicStorage().put_atomic(p, b"payload")
+    with open(p, "rb") as f:
+        assert f.read() == b"payload"
+    # data fsync happens BEFORE the rename publish
+    assert "fsync" in calls and calls.index("fsync") < calls.index("rename")
+
+
+_BODIES = [
+    "the quick brown fox jumps over the lazy dog near the riverbank",
+    "pack my box with five dozen liquor jugs before the long journey",
+    "sphinx of black quartz judge my vow under the desert moonlight",
+    "how vexingly quick daft zebras jump across the frozen meadow",
+    "crazy fredrick bought many very exquisite opal jewels yesterday",
+    "we promptly judged antique ivory buckles for the next big prize",
+]
+
+
+def _docs(spark, n=6):
+    rows = [(i, _BODIES[i % len(_BODIES)]) for i in range(n)]
+    return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def test_per_table_storage_from_other_backend_rejected(spark,
+                                                       tmp_table_path):
+    class NotTheGlobalBackend(st.Storage):
+        pass
+
+    with pytest.raises(ValueError, match="module-global"):
+        HoodieTable.create(spark, tmp_table_path, "sb", ["doc_id"], None,
+                           storage=NotTheGlobalBackend())
+    # instrumentation wrappers (subclasses of the global backend) still work
+    class Wrapper(type(st.FS)):
+        pass
+
+    tbl = HoodieTable.create(spark, tmp_table_path, "sb", ["doc_id"], None,
+                             storage=Wrapper())
+    tbl.upsert(_docs(spark, 3))
+    assert tbl.snapshot().count() == 3

@@ -360,3 +360,17 @@ def test_control_plane_services_through_gcs_seam(spark, orders,
     assert compact_sidecars(tbl) > 0
     assert any(op == "list" and "col_stats" in k
                for (op, k, *_) in gcs_seams.calls)
+
+
+def test_gcs_remove_maps_404_to_filenotfound():
+    from test_storage_gcs import FakeGCSClient
+
+    c = FakeGCSClient()
+    fs = GCSStorage(client=c)
+    with pytest.raises(FileNotFoundError):
+        fs.remove("gs://b/never/was/here")
+    # and an `except OSError` guard (the engine's tolerant callers) works
+    try:
+        fs.remove("gs://b/also/missing")
+    except OSError:
+        pass

@@ -3,6 +3,7 @@
 duplicate/late events across batches, streaming-replay == snapshot)."""
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -11,6 +12,9 @@ from hoodie_spark import HoodieTable, TableType
 from hoodie_spark.streaming import (HoodieIncrSource, Ingestor,
                                     ParquetDFSSource, foreach_batch_writer,
                                     incremental_batches)
+from hoodie_spark.streaming.ingest import JdbcSource
+from hoodie_spark.streaming.schema import (JdbcBasedSchemaProvider,
+                                           resolve_schema)
 
 
 def make_events_table(spark, path, table_type=TableType.COPY_ON_WRITE):
@@ -678,3 +682,73 @@ def test_debezium_tombstone_delete_dropped(spark):
     assert len(out) == 2
     assert all(r["id"] is not None for r in out)
     assert {(r["id"], r["Op"]) for r in out} == {(1, "c"), (1, "d")}
+
+
+def test_jdbc_schema_provider(spark):
+    probe_schema = "a int, b string, ts timestamp"
+
+    def loader(sp):
+        return sp.createDataFrame([], probe_schema)
+
+    prov = JdbcBasedSchemaProvider("jdbc:fake://db", "t", loader=loader)
+    got = prov.source_schema(spark)
+    assert [f.name for f in got.fields] == ["a", "b", "ts"]
+    assert resolve_schema(prov, spark) == got
+
+    # the default loader builds a zero-row (WHERE 1=0) metadata probe —
+    # verified structurally against a recording reader (no JDBC db here)
+    class Reader:
+        def __init__(self):
+            self.opts = {}
+
+        def format(self, f):
+            self.fmt = f
+            return self
+
+        def option(self, k, v):
+            self.opts[k] = v
+            return self
+
+        def load(self):
+            return loader(spark)
+
+    class FakeSpark:
+        read = Reader()
+
+    real = JdbcBasedSchemaProvider("jdbc:fake://db", "t",
+                                   options={"user": "u"})
+    assert [f.name for f in real.source_schema(FakeSpark).fields] == \
+        ["a", "b", "ts"]
+    assert FakeSpark.read.fmt == "jdbc"
+    assert "WHERE 1=0" in FakeSpark.read.opts["dbtable"]
+    assert FakeSpark.read.opts["user"] == "u"
+
+
+class _FakeJdbc(JdbcSource):
+    def __init__(self, path):
+        super().__init__(url="jdbc:fake://db", table="t", incr_column="id")
+        self._path = path
+
+    def _load(self, spark):
+        return spark.read.parquet(self._path)
+
+
+def test_jdbc_source_single_scan_and_checkpoint(spark, tmp_table_path):
+    os.makedirs(tmp_table_path)
+    p = os.path.join(tmp_table_path, "src")
+    spark.range(1, 11).toDF("id").write.parquet(p)
+    src = _FakeJdbc(p)
+    df, ck = src.fetch(spark, None)
+    assert ck == "10"
+    # the batch was materialized into the cache by the checkpoint agg:
+    # deleting the source proves the downstream "write" never re-scans it
+    shutil.rmtree(p)
+    assert df.count() == 10
+    # next round: new data, incremental filter, previous pin released
+    spark.range(1, 16).toDF("id").write.parquet(p)
+    df2, ck2 = src.fetch(spark, ck)
+    assert ck2 == "15" and df2.count() == 5
+    assert not df.storageLevel.useMemory  # round-1 cache released
+    # empty round: checkpoint unchanged, nothing pinned
+    got = src.fetch(spark, ck2)
+    assert got == (None, ck2)
