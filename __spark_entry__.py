@@ -1819,7 +1819,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         load_table(s, d, "documents").select("doc_id", "text"),
         "doc_id", "text", vocab_size=64)
     # CCNet head/middle/tail: exact equal-population perplexity terciles
-    # via the pack_shards distributed-rank recipe (no single-task window)
+    # via the budget family's distributed running total (no single-task
+    # window)
     q["ppl_buckets"] = lambda s, d: HF.perplexity_buckets(
         load_table(s, d, "documents").select("doc_id", "text"),
         "doc_id", "text", n_buckets=3)
@@ -1930,7 +1931,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- greedy selection under a token budget (round 14): rank by
     # (n_chars, doc_id), keep while the running whitespace-token total
     # stays ≤ 15000 (functions/pipeline.token_budget_select — the
-    # pack_shards distributed prefix-sum shape, then a map-only cut).
+    # budget family's distributed prefix sum, then a map-only cut).
     # Declared past the window; verified via tools/check_oracle.py.
     q["token_budget_select"] = lambda s, d: HF.token_budget_select(
         load_table(s, d, "documents").withColumn(

@@ -407,18 +407,20 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
                        num_bins: int = 256) -> DataFrame:
     """CCNet's head/middle/tail split: exact equal-population perplexity
     buckets — ``(id_col, ppl, bucket)`` with bucket 0 = head (most fluent
-    under the LM) through ``n_buckets - 1`` = tail.
+    under the LM) through ``n_buckets - 1`` = tail; ``n_buckets`` must be
+    at least 1.
 
     ``bucket = (rank * n_buckets) DIV N`` over the global (ppl, id) order
     — exact integer arithmetic, so any engine reproduces it. The global
-    rank uses the pack_shards recipe instead of a single-task window:
-    equal-width ppl bins (min/max from one aggregate), per-bin
-    row-counting windows in parallel, driver folds ONE count per bin into
-    broadcast integer offsets. Documents with no bigrams are dropped
-    (bigram_perplexity's contract).
+    rank is a running count from
+    :func:`~hoodie_spark.functions.pipeline._running_total` over
+    ``num_bins`` equal-width ppl bins, never a single-task window.
+    Documents with no bigrams are dropped (bigram_perplexity's contract).
     """
-    from pyspark.sql import Window
+    from .pipeline import _running_total
 
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     # pinned: the doc-grain scored frame (one row per document — model-
     # sized, never corpus-row-sized) feeds THREE actions below (min/max,
     # bin census, the caller's final action); without the pin each one
@@ -426,37 +428,9 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     cache = StageCache()
     scored = cache.pin(bigram_perplexity(df, id_col, text_col, lm=lm,
                                          vocab_size=vocab_size))
-    lo, hi = scored.agg(F.min("ppl"), F.max("ppl")).first()
-    if lo is None:
-        return cache.attach(scored.select(
-            id_col, "ppl", F.lit(None).cast("long").alias("bucket")))
-    span = float(hi) - float(lo)
-    if span <= 0 or num_bins <= 1:
-        binc = F.lit(0)
-    else:
-        binc = F.least(
-            F.lit(num_bins - 1),
-            F.floor((F.col("ppl") - F.lit(float(lo)))
-                    / F.lit(span) * F.lit(num_bins)).cast("int"))
-    staged = scored.withColumn("__bin", binc)
-    counts = {r["__bin"]: r["__c"] for r in
-              staged.groupBy("__bin").agg(F.count(F.lit(1)).alias("__c"))
-              .collect()}
-    total = sum(counts.values())
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    off_df = F.broadcast(local_frame(
-        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
-        "__bin int, __off long"))
-    win = (Window.partitionBy("__bin").orderBy("ppl", id_col)
-           .rowsBetween(Window.unboundedPreceding, -1))
-    rank = F.col("__off") + F.coalesce(
-        F.count(F.lit(1)).over(win), F.lit(0))
-    return cache.attach(
-        staged.join(off_df, "__bin")
-        .withColumn("__rank", rank)
-        .withColumn("bucket", F.expr(
-            f"CAST(__rank * {int(n_buckets)} DIV {int(total)} AS BIGINT)"))
-        .select(id_col, "ppl", "bucket"))
+    ranked, total = _running_total(scored, F.lit(1), ["ppl", id_col],
+                                   num_bins)
+    # an empty corpus has no rows to divide; 1 keeps the literal nonzero
+    return cache.attach(ranked.select(id_col, "ppl", F.expr(
+        f"CAST(__before * {int(n_buckets)} DIV {max(int(total), 1)}"
+        " AS BIGINT)").alias("bucket")))

@@ -5,12 +5,15 @@ Design notes for 100 TB:
 
 * :func:`redact_pii` and :func:`deterministic_sample` are pure Column
   expressions — map-only, whole-stage-codegen, zero shuffles.
-* :func:`pack_shards` needs a GLOBAL running sum; the naive
-  ``Window.orderBy`` with no partition key collapses to one task. This
-  implementation uses the classic two-pass distributed prefix sum:
-  range-repartition on the order key, per-partition window cumsum, then a
-  driver-side fold of the (num_partitions)-row per-partition totals into
-  broadcast offsets. The only driver data is one row per partition.
+* :func:`pack_shards`, :func:`pack_sequences`, :func:`token_budget_select`
+  and ``lm.perplexity_buckets`` need a GLOBAL running sum; the naive
+  ``Window.orderBy`` with no partition key collapses to one task. They
+  share one two-pass distributed prefix sum, :func:`_running_total`:
+  equal-width order-contiguous buckets on the first order column, a
+  driver-side fold of one total per bucket into broadcast offsets, and a
+  per-bucket window cumsum. The only driver data is one row per bucket. A
+  NULL in the first order column bins with the smallest values, where the
+  ascending window sorts it.
 * :func:`top_ngrams` explodes shingles but aggregates with map-side partial
   counts; only the (k)-row result reaches the driver.
 
@@ -23,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..frames import local_frame
 from .dedup import StageCache
@@ -34,7 +38,11 @@ __all__ = ["redact_pii", "pii_hits", "deterministic_sample", "sample_hash",
            "corpus_pipeline", "chunk_documents", "unigram_logprob",
            "source_weighted_sample", "temperature_mix", "column_histogram",
            "epoch_shuffle", "token_budget_select", "priority_sample",
-           "priority_hash"]
+           "priority_hash", "pack_sequences", "weighted_priority",
+           "weighted_priority_sample", "ngram_novelty",
+           "decontaminate_near", "dsir_logweights", "dsir_select",
+           "tfidf_terms", "tfidf_vectors", "corpus_report",
+           "domain_mixture_weights", "leakage_safe_split"]
 
 
 # Plain character-class regexes only, so Java regex and DuckDB's RE2 agree.
@@ -175,6 +183,58 @@ def weighted_priority_sample(df: DataFrame, key_col: str, weight_col: str,
             .orderBy(e.asc(), F.col(key_col).asc()).limit(k))
 
 
+def _running_total(df: DataFrame, weight: Column, order_cols: list[str],
+                   num_buckets: int) -> tuple[DataFrame, int | float]:
+    """The budget family's one distributed prefix sum: ``df`` plus ``__w``
+    (``weight``) and ``__before`` (the ``__w`` total of every row before
+    this one in ``order_cols`` order; NULL weights count 0), and the grand
+    total of ``__w``.
+
+    No global single-task window: rows are binned into ``num_buckets``
+    order-contiguous buckets by EQUAL-WIDTH ranges of the first order
+    column (min/max from one aggregate, NOT sampled partitioning, so the
+    binning is a pure function of the data), one total per bucket is
+    collected and folded on the driver into broadcast offsets, and each
+    bucket's cumsum runs as its own window. Three passes, and driver data
+    of one row per bucket. Equal-width bins can skew with pathological key
+    distributions; that costs balance in the window stage, never
+    correctness.
+
+    The first order column must be numeric. A NULL in it bins with the
+    smallest values, because the ascending window sorts NULLs first. The
+    window is an explicit ROWS frame, so rows tied on ``order_cols``
+    accumulate one at a time, never as a peer group; end ``order_cols`` in
+    a unique key for a bit-reproducible order across engines.
+    """
+    lead = order_cols[0]
+    ltype = df.select(lead).schema[0].dataType
+    if not isinstance(ltype, T.NumericType):
+        raise ValueError(f"the first order column {lead!r} must be "
+                         f"numeric, got {ltype.simpleString()}")
+    lo, hi = df.agg(F.min(lead), F.max(lead)).first()
+    if lo is None or num_buckets <= 1 or float(hi) <= float(lo):
+        bucket = F.lit(0)
+    else:
+        x = F.coalesce(F.col(lead).cast("double"), F.lit(float(lo)))
+        bucket = F.least(
+            F.lit(num_buckets - 1),
+            F.floor((x - F.lit(float(lo))) / F.lit(float(hi) - float(lo))
+                    * F.lit(num_buckets)).cast("int"))
+    staged = df.withColumn("__bkt", bucket).withColumn("__w", weight)
+    offsets, total = [], 0
+    for b, t in sorted(staged.groupBy("__bkt").agg(F.sum("__w")).collect()):
+        offsets.append((b, total))
+        total += t or 0
+    sum_type = staged.select(F.sum("__w")).schema[0].dataType.simpleString()
+    off = F.broadcast(local_frame(df.sparkSession, offsets,
+                                  f"__bkt int, __off {sum_type}"))
+    win = (Window.partitionBy("__bkt").orderBy(*order_cols)
+           .rowsBetween(Window.unboundedPreceding, -1))
+    before = F.col("__off") + F.coalesce(F.sum("__w").over(win), F.lit(0))
+    return (staged.join(off, "__bkt").withColumn("__before", before)
+            .drop("__bkt", "__off"), total)
+
+
 def pack_shards(df: DataFrame, weight_col: str, budget: float,
                 order_cols: list[str], num_buckets: int = 256) -> DataFrame:
     """Assign each row a ``shard_id`` so consecutive rows (in ``order_cols``
@@ -184,56 +244,22 @@ def pack_shards(df: DataFrame, weight_col: str, budget: float,
     Semantics (deterministic, SQL-expressible): rows are globally ordered by
     ``order_cols``; ``shard_id = floor(prefix_sum_before_row / budget)`` —
     a shard may overshoot the budget by at most one row, and a row heavier
-    than the budget gets a shard of its own.
+    than the budget gets a shard of its own. ``budget`` must be positive.
 
-    Distributed prefix sum without a global single-task window: rows are
-    binned into order-contiguous buckets by EQUAL-WIDTH ranges of the first
-    order column (min/max from one aggregate — NOT sampled partitioning,
-    so the binning is a pure function of the data and identical across the
-    two passes); cumsum runs per bucket in parallel, and the driver folds
-    one total per bucket into broadcast offsets. Driver data = one row per
-    bucket. Equal-width bins can skew with pathological key distributions —
-    that costs balance in the window stage, never correctness.
-
-    The first entry of ``order_cols`` must be numeric. The prefix sum uses
-    an explicit ROWS frame (ties on ``order_cols`` accumulate one row at a
-    time, never as a peer group); pass a unique key for bit-reproducible
-    shard assignment across engines.
+    The prefix sum is :func:`_running_total`: ``num_buckets``
+    order-contiguous buckets on the first order column (numeric, required;
+    a NULL there sorts first), never a global single-task window. Pass a
+    unique key last in ``order_cols`` for bit-reproducible shard
+    assignment across engines.
     """
-    lead = order_cols[0]
-    lo, hi = df.agg(F.min(lead), F.max(lead)).first()
-    if lo is None:
-        return df.withColumn("shard_id", F.lit(None).cast("long"))
-    span = float(hi) - float(lo)
-    if span <= 0 or num_buckets <= 1:
-        bucket = F.lit(0)
-    else:
-        bucket = F.least(
-            F.lit(num_buckets - 1),
-            F.floor((F.col(lead).cast("double") - F.lit(float(lo)))
-                    / F.lit(span) * F.lit(num_buckets)).cast("int"))
+    if not budget > 0:
+        raise ValueError(f"budget must be positive, got {budget}")
     w = (F.col(weight_col) if isinstance(weight_col, str)
          else weight_col).cast("double")
-    staged = df.withColumn("__bkt", bucket).withColumn("__w", w)
-    # one row per bucket — bounded driver data
-    totals = {r["__bkt"]: r["__t"] for r in
-              staged.groupBy("__bkt").agg(F.sum("__w").alias("__t"))
-              .collect()}
-    offsets, acc = {}, 0.0
-    for b in sorted(totals):
-        offsets[b] = acc
-        acc += totals[b]
-    off_df = F.broadcast(local_frame(
-        df.sparkSession, [(int(b), float(o)) for b, o in offsets.items()],
-        "__bkt int, __off double"))
-    win = (Window.partitionBy("__bkt").orderBy(*order_cols)
-           .rowsBetween(Window.unboundedPreceding, -1))
-    local_cum = F.coalesce(F.sum("__w").over(win), F.lit(0.0))
-    return (staged.join(off_df, "__bkt")
-            .withColumn("shard_id",
-                        F.floor((F.col("__off") + local_cum)
-                                / F.lit(float(budget))))
-            .drop("__bkt", "__w", "__off"))
+    ranked, _ = _running_total(df, w, order_cols, num_buckets)
+    return (ranked.withColumn("shard_id", F.floor(
+        F.col("__before") / F.lit(float(budget))))
+        .drop("__w", "__before"))
 
 
 def pack_sequences(df: DataFrame, weight_col, seq_len: int,
@@ -250,67 +276,39 @@ def pack_sequences(df: DataFrame, weight_col, seq_len: int,
     non-positive weight are dropped (no tokens to place). Exact integer
     semantics, reproducible across engines: with o = total tokens before
     the doc and w its token count, the doc spans global tokens [o, o+w)
-    and lands in sequences floor(o/L) .. floor((o+w-1)/L).
+    and lands in sequences floor(o/L) .. floor((o+w-1)/L). ``seq_len``
+    must be at least 1.
 
-    Scale shape: the global offset is the same distributed two-pass prefix
-    sum as :func:`pack_shards` (order-contiguous equal-width buckets,
-    per-bucket cumsum, one broadcast offset row per bucket — never an
-    `Exchange SinglePartition`); the piece fan-out is an in-row
-    ``sequence()`` explode, ceil(w/L)+1 rows max per doc, no shuffle.
-    The first entry of ``order_cols`` must be numeric. The running offset
-    uses an explicit ROWS frame, so rows TIED on ``order_cols`` still get
-    disjoint token ranges (no overlapping pieces); which tied row comes
-    first is engine-arbitrary, so pass a unique key (e.g. append the id
-    column) when bit-reproducible assignment across engines matters.
+    Scale shape: the global offset is :func:`_running_total`
+    (order-contiguous buckets on the first order column, numeric and
+    required — never an `Exchange SinglePartition`); the piece fan-out is
+    an in-row ``sequence()`` explode, ceil(w/L)+1 rows max per doc, no
+    shuffle. Rows TIED on ``order_cols`` still get disjoint token ranges;
+    which tied row comes first is engine-arbitrary, so pass a unique key
+    (e.g. append the id column) when bit-reproducible assignment across
+    engines matters.
     """
-    lead = order_cols[0]
-    lo, hi = df.agg(F.min(lead), F.max(lead)).first()
-    if lo is None:
-        return (df.withColumn("seq_id", F.lit(None).cast("long"))
-                .withColumn("piece_start", F.lit(None).cast("long"))
-                .withColumn("piece_len", F.lit(None).cast("long")))
-    span = float(hi) - float(lo)
-    if span <= 0 or num_buckets <= 1:
-        bucket = F.lit(0)
-    else:
-        bucket = F.least(
-            F.lit(num_buckets - 1),
-            F.floor((F.col(lead).cast("double") - F.lit(float(lo)))
-                    / F.lit(span) * F.lit(num_buckets)).cast("int"))
+    if seq_len < 1:
+        raise ValueError(f"seq_len must be at least 1, got {seq_len}")
     w = (F.col(weight_col) if isinstance(weight_col, str)
          else weight_col).cast("long")
-    staged = (df.withColumn("__w", w).filter(F.col("__w") > 0)
-              .withColumn("__bkt", bucket))
-    totals = {r["__bkt"]: r["__t"] for r in
-              staged.groupBy("__bkt").agg(F.sum("__w").alias("__t"))
-              .collect()}
-    offsets, acc = {}, 0
-    for b in sorted(totals):
-        offsets[b] = acc
-        acc += int(totals[b])
-    off_df = F.broadcast(local_frame(
-        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
-        "__bkt int, __boff long"))
-    win = (Window.partitionBy("__bkt").orderBy(*order_cols)
-           .rowsBetween(Window.unboundedPreceding, -1))
-    local_cum = F.coalesce(F.sum("__w").over(win), F.lit(0).cast("long"))
+    # a non-positive weight becomes NULL (0 in the running total) and its
+    # row is dropped after the prefix sum, so the min/max pass never
+    # computes the weight
+    ranked, _ = _running_total(df, F.when(w > 0, w), order_cols,
+                               num_buckets)
     L = F.lit(int(seq_len))
-    off = (F.col("__boff") + local_cum).alias("__off")
-    pieced = (staged.join(off_df, "__bkt")
-              .withColumn("__off", off)
+    o, end = F.col("__before"), F.col("__before") + F.col("__w")
+    pieced = (ranked.filter(F.col("__w").isNotNull())
               .withColumn("seq_id", F.explode(F.sequence(
-                  F.floor(F.col("__off") / L).cast("long"),
-                  F.floor((F.col("__off") + F.col("__w") - 1) / L)
-                  .cast("long"))))
-              .withColumn("__gs", F.greatest(F.col("__off"),
-                                             F.col("seq_id") * L))
-              .withColumn("__ge", F.least(F.col("__off") + F.col("__w"),
-                                          (F.col("seq_id") + 1) * L))
-              .withColumn("piece_start",
-                          (F.col("__gs") - F.col("__off")).cast("long"))
+                  F.floor(o / L).cast("long"),
+                  F.floor((end - 1) / L).cast("long"))))
+              .withColumn("__gs", F.greatest(o, F.col("seq_id") * L))
+              .withColumn("__ge", F.least(end, (F.col("seq_id") + 1) * L))
+              .withColumn("piece_start", (F.col("__gs") - o).cast("long"))
               .withColumn("piece_len",
                           (F.col("__ge") - F.col("__gs")).cast("long")))
-    return pieced.drop("__bkt", "__w", "__boff", "__off", "__gs", "__ge")
+    return pieced.drop("__w", "__before", "__gs", "__ge")
 
 
 def token_budget_select(df: DataFrame, weight_col, budget: int,
@@ -328,48 +326,19 @@ def token_budget_select(df: DataFrame, weight_col, budget: int,
     Returns the kept rows with ``cum_tokens`` (the running total through
     the row). Rows with NULL weight count 0 tokens.
 
-    Scale shape (100 TB): the same distributed two-pass prefix sum as
-    :func:`pack_shards` / :func:`pack_sequences` — order-contiguous
-    equal-width buckets on the first order column (numeric, required),
-    per-bucket cumsum in parallel, one broadcast offset row per bucket —
-    never a global single-task window; the budget cut is then a map-only
-    filter. Driver data = one row per bucket.
+    Scale shape (100 TB): the running total is :func:`_running_total`
+    (order-contiguous buckets on the first order column, numeric and
+    required; one broadcast offset row per bucket), never a global
+    single-task window; the budget cut is then a map-only filter.
     """
-    lead = order_cols[0]
-    lo, hi = df.agg(F.min(lead), F.max(lead)).first()
-    if lo is None:
-        return (df.withColumn("cum_tokens", F.lit(None).cast("long"))
-                .limit(0))
-    span = float(hi) - float(lo)
-    if span <= 0 or num_buckets <= 1:
-        bucket = F.lit(0)
-    else:
-        bucket = F.least(
-            F.lit(num_buckets - 1),
-            F.floor((F.col(lead).cast("double") - F.lit(float(lo)))
-                    / F.lit(span) * F.lit(num_buckets)).cast("int"))
     w = F.coalesce((F.col(weight_col) if isinstance(weight_col, str)
                     else weight_col).cast("long"), F.lit(0))
-    staged = df.withColumn("__bkt", bucket).withColumn("__w", w)
-    totals = {r["__bkt"]: r["__t"] for r in
-              staged.groupBy("__bkt").agg(F.sum("__w").alias("__t"))
-              .collect()}
-    offsets, acc = {}, 0
-    for b in sorted(totals):
-        offsets[b] = acc
-        acc += int(totals[b])
-    off_df = F.broadcast(local_frame(
-        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()],
-        "__bkt int, __off long"))
-    win = (Window.partitionBy("__bkt").orderBy(*order_cols)
-           .rowsBetween(Window.unboundedPreceding, -1))
-    local_cum = F.coalesce(F.sum("__w").over(win), F.lit(0).cast("long"))
-    return (staged.join(off_df, "__bkt")
-            .withColumn("cum_tokens",
-                        (F.col("__off") + local_cum + F.col("__w"))
-                        .cast("long"))
+    ranked, _ = _running_total(df, w, order_cols, num_buckets)
+    return (ranked.withColumn("cum_tokens",
+                              (F.col("__before") + F.col("__w"))
+                              .cast("long"))
             .filter(F.col("cum_tokens") <= F.lit(int(budget)))
-            .drop("__bkt", "__w", "__off"))
+            .drop("__w", "__before"))
 
 
 def filter_corpus(df: DataFrame, text_col: str,

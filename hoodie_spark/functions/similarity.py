@@ -626,14 +626,15 @@ def knn_classify(corpus: DataFrame, queries: DataFrame, id_col: str,
     neighbors (vote-count ties break toward the smaller label). Returns
     ``(query_id, label, votes)``.
 
-    Scale: the top-k table is Q×k rows — broadcast INTO the corpus label
-    join, so labeling costs one map-side hash join over the corpus scan,
-    then a Q×k-row aggregation; swap :func:`brute_force_topk` for
-    :func:`ivfpq_topk_from_index` at serving scale."""
-    nb = brute_force_topk(corpus, queries, id_col, vec_col, k=k)
-    lab = corpus.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(label_col).alias("label"))
-    votes = (lab.join(F.broadcast(nb), "neighbor_id")
+    Scale: one pass over the corpus. The scorer carries each neighbor's
+    label through with its cosine (as :func:`hard_negative_mine` does), so
+    no label join reads the corpus again; the vote is a Q×k-row
+    aggregation. Swap the exact scan for :func:`ivfpq_topk_from_index` at
+    serving scale."""
+    pairs = (_prep(corpus, id_col, vec_col, "c", label_col)
+             .crossJoin(F.broadcast(_prep(queries, id_col, vec_col, "q")))
+             .filter(F.col("c_id") != F.col("q_id")))
+    votes = (_top_k(_scored(pairs, F.col("c_lab").alias("label")), k)
              .groupBy("query_id", "label")
              .agg(F.count(F.lit(1)).alias("votes")))
     return _top_k(votes, 1, score="votes", tie="label").select(

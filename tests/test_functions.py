@@ -1404,26 +1404,6 @@ def test_token_budget_empty_and_overbudget(spark):
                                   ["rank", "id"]).count() == 0
 
 
-def test_token_budget_matches_single_bucket_and_repartition(spark):
-    docs = (_docs(spark, n=500)
-            .withColumn("n_tokens", HF.token_count(F.col("text"))
-                        .cast("long"))
-            .withColumn("n_chars", F.length("text")))
-    kw = dict(weight_col="n_tokens", budget=8000,
-              order_cols=["n_chars", "doc_id"])
-    a = sorted(map(tuple, HF.token_budget_select(docs, **kw)
-                   .select("doc_id", "cum_tokens").collect()))
-    b = sorted(map(tuple, HF.token_budget_select(
-        docs.repartition(17), num_buckets=1, **kw)
-        .select("doc_id", "cum_tokens").collect()))
-    assert a == b and len(a) > 0
-    # no single-task global sort: every Exchange is keyed, the prefix
-    # sum runs per order-contiguous bucket
-    plan = HF.token_budget_select(docs, **kw) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-
-
 def test_excess_ppl_select_zero_when_ref_is_corpus(spark):
     docs = _docs(spark, n=80)
     out = HF.excess_perplexity_select(docs, "doc_id", "text", docs, k=80)

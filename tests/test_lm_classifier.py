@@ -216,15 +216,6 @@ def test_perplexity_buckets_matches_global_rank(spark):
         assert out[r["doc_id"]] == rank * 4 // n
 
 
-def test_perplexity_buckets_partitioning_invariant(spark):
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text"))
-    a = HF.perplexity_buckets(docs.repartition(1), "doc_id", "text")
-    b = HF.perplexity_buckets(docs.repartition(11, "doc_id"),
-                              "doc_id", "text")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_bigram_lm_distributed_model_path_identical(spark):
     """A model above the broadcast-rows threshold stays distributed and
     scoring shuffle-joins it — scores must be bit-identical to the

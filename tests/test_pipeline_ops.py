@@ -104,6 +104,83 @@ def test_pack_shards_single_value_order_key(spark):
     assert out.count() == 5  # degenerate span: single bucket, still packs
 
 
+# The budget family shares one distributed prefix sum (pipeline.
+# _running_total): each operator's answer must not depend on the bucket
+# count or the input partitioning. A case is its (k, w) rows and its
+# budget: sf0.001 documents, a NULL first order key (it sorts first, so it
+# bins with the smallest keys) and a bucket whose weights are all NULL.
+_BUDGET_CASES = {
+    "corpus": (None, 8000),
+    "null_lead": ([(1, 10), (2, 5), (None, 3), (4, 7)], 15),
+    "null_bin": ([(1, 2), (150, None), (300, 4)], 3),
+}
+_BUDGET_OPS = {
+    "pack_shards": lambda df, n, b: HF.pack_shards(
+        df, "w", float(b), ["k", "doc_id"], num_buckets=n),
+    "pack_sequences": lambda df, n, b: HF.pack_sequences(
+        df, "w", 4, ["k", "doc_id"], num_buckets=n),
+    "token_budget_select": lambda df, n, b: HF.token_budget_select(
+        df, "w", b, ["k", "doc_id"], num_buckets=n),
+    "perplexity_buckets": lambda df, n, b: HF.perplexity_buckets(
+        df, "doc_id", "text", num_bins=n),
+}
+
+
+@pytest.mark.parametrize("num_buckets", [1, 3, 256])
+@pytest.mark.parametrize("op,case", [
+    *((op, case) for op in _BUDGET_OPS if op != "perplexity_buckets"
+      for case in _BUDGET_CASES),
+    ("perplexity_buckets", "corpus")])
+def test_budget_family_matches_single_bucket(spark, op, case, num_buckets):
+    rows, budget = _BUDGET_CASES[case]
+    if rows is None:
+        df = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+              .select("doc_id", "text", F.length("text").alias("k"),
+                      HF.token_count(F.col("text")).cast("long")
+                      .alias("w")))
+    else:
+        df = spark.createDataFrame(
+            [(i, k, w) for i, (k, w) in enumerate(rows)],
+            "doc_id long, k long, w long")
+    run = _BUDGET_OPS[op]
+    want = sorted(map(tuple, run(df.repartition(1), 1, budget).collect()),
+                  key=repr)
+    got = run(df.repartition(17), num_buckets, budget)
+    assert sorted(map(tuple, got.collect()), key=repr) == want
+    assert len(want) > 0
+    # no single-task global sort: every Exchange is keyed, the prefix
+    # sum runs per order-contiguous bucket (one bucket is one task)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange SinglePartition" in plan) == (num_buckets == 1)
+
+
+@pytest.mark.parametrize("call,match", [
+    (lambda df: HF.pack_shards(df, "w", 0, ["k"]), "budget"),
+    (lambda df: HF.pack_sequences(df, "w", 0, ["k"]), "seq_len"),
+    (lambda df: HF.perplexity_buckets(df, "doc_id", "text", n_buckets=0),
+     "n_buckets"),
+    (lambda df: HF.token_budget_select(df, "w", 10, ["text"]), "numeric"),
+    (lambda df: HF.pack_shards(df, "w", 10.0, ["text"]), "numeric"),
+    (lambda df: HF.pack_sequences(df, "w", 4, ["text"]), "numeric"),
+], ids=["pack_shards_budget", "pack_sequences_seq_len",
+        "perplexity_buckets_n_buckets", "token_budget_select_lead",
+        "pack_shards_lead", "pack_sequences_lead"])
+def test_budget_family_checks_arguments_at_entry(spark, call, match):
+    """Bad arguments raise ValueError before any Spark job runs, not a
+    lazy [DIVIDE_BY_ZERO] or a silent one-bucket answer."""
+    df = spark.createDataFrame([(1, 3, "a b c")],
+                               "doc_id long, w long, text string")
+    df = df.withColumn("k", F.col("doc_id"))
+    sc = spark.sparkContext
+    sc.setJobGroup("budget_family_args", "argument checks")
+    try:
+        with pytest.raises(ValueError, match=match):
+            call(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("budget_family_args") == []
+
+
 # ------------------------------------------------------------- filter corpus
 def test_filter_corpus_gates_compose(docs):
     kept = HF.filter_corpus(docs, "text", langs=["en", "und"],
@@ -322,6 +399,18 @@ def test_knn_classify_majority_and_ties(spark):
     out2 = HF.knn_classify(tiny, tiny.filter("vec_id = 100"),
                            "vec_id", "embedding", "label", k=2).collect()
     assert len(out2) == 1 and out2[0]["label"] == 2  # tie -> smaller label
+
+
+def test_knn_classify_scans_corpus_once(spark):
+    """The scorer carries each neighbor's label, so the plan reads the
+    corpus once and the queries once, with no label join back onto the
+    corpus."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    out = HF.knn_classify(emb, emb.filter("vec_id < 10"), "vec_id",
+                          "embedding", "label", k=10)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2
+    assert out.count() == 10
 
 
 def test_chunk_documents_random_model(spark):

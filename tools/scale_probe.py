@@ -178,6 +178,7 @@ def probe_once(spark, sf_dir: str, only: set | None = None) -> dict:
             "substring_dedup", "ppl_buckets", "corpus_report",
             "decontaminate_near", "lm_perplexity_64k", "domain_mixture",
             "leakage_split", "dedup_keep_best", "token_budget_select",
+            "pack_shards", "pack_sequences",
             "dedup_jaccard", "dedup_edit", "line_dedup", "ngram_novelty"):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text")
@@ -309,16 +310,26 @@ def probe_once(spark, sf_dir: str, only: set | None = None) -> dict:
                 docs.withColumn("score", F.length("text")),
                 "doc_id", "text", "score")
                 .agg(F.sum("n_dups"), F.count(F.lit(1))).collect())
+        if want("pack_shards", "pack_sequences", "token_budget_select"):
+            # the budget family's one input: documents ranked by
+            # (n_chars, doc_id), each weighing its token count
+            sized = (docs.withColumn("n_chars", F.length("text"))
+                     .withColumn("n_tokens", HF.token_count(F.col("text"))
+                                 .cast("long")))
+            order = ["n_chars", "doc_id"]
+            timed("pack_shards", lambda: HF.pack_shards(
+                sized, "n_tokens", 2048.0, order)
+                .agg(F.count(F.lit(1)), F.max("shard_id")).collect())
+            timed("pack_sequences", lambda: HF.pack_sequences(
+                sized, "n_tokens", 2048, order)
+                .agg(F.count(F.lit(1)), F.max("seq_id")).collect())
         if want("token_budget_select"):
             # budget scales with the corpus so the cut stays mid-corpus
             # (a fixed budget at x100 would measure the aggregate pass
             # only; the filter itself is map-only either way)
             n_docs = docs.count()
             timed("token_budget_select", lambda: HF.token_budget_select(
-                docs.withColumn("n_chars", F.length("text")).withColumn(
-                    "n_tokens",
-                    HF.token_count(F.col("text")).cast("long")),
-                "n_tokens", 30 * n_docs, ["n_chars", "doc_id"])
+                sized, "n_tokens", 30 * n_docs, order)
                 .agg(F.count(F.lit(1)), F.max("cum_tokens")).collect())
         # round-14 rows: the distinct-text-grain exact verifiers and the
         # line/novelty censuses. The exact pairwise verifiers run with a
